@@ -285,8 +285,6 @@ def sample_video_frames(videos: DataFrame, every: int = 2) -> DataFrame:
             if pdf.empty:
                 continue
             rows = []
-            import struct
-
             for doc_id, blob in zip(pdf["doc_id"], pdf["video"]):
                 for i, fps, frame in iter_video_frames(bytes(blob)):
                     if i % every:
@@ -294,7 +292,7 @@ def sample_video_frames(videos: DataFrame, every: int = 2) -> DataFrame:
                     # frame dimensions live in the codec header (the
                     # container-metadata read a real demuxer does) — no
                     # need to inflate the pixel payload for them
-                    fh, fw = struct.unpack("<II", frame[5:13])
+                    fh, fw = imaging.peek_dims(frame)
                     rows.append({
                         "doc_id": int(doc_id), "frame_idx": i,
                         "t_ms": i * 1000 // fps,

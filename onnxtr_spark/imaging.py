@@ -144,10 +144,22 @@ def encode_image_gray_scaled(ch: np.ndarray, factor: int) -> bytes:
     )
 
 
+def peek_dims(blob: bytes) -> tuple[int, int]:
+    """Full-resolution (height, width) from a frame's codec header,
+    without inflating the pixels. The magic and the header length are
+    checked first: anything that is not a complete header of a known
+    frame kind raises ``ValueError("bad image magic")``."""
+    magic = blob[:5]
+    if magic not in (MAGIC, MAGIC_Z, MAGIC_S, MAGIC_G) or len(blob) < (17 if magic == MAGIC_S else 13):
+        raise ValueError("bad image magic")
+    h, w = struct.unpack("<II", blob[5:13])
+    return h, w
+
+
 def decode_image(blob: bytes) -> np.ndarray:
     """Deserialize bytes produced by ``encode_image`` (either frame kind)."""
+    h, w = peek_dims(blob)
     magic = blob[:5]
-    h, w = struct.unpack("<II", blob[5:13])
     if magic == MAGIC_G:
         ch = np.frombuffer(zlib.decompress(blob[13:]), dtype=np.uint8).reshape(h, w)
         # read-only zero-copy RGB view (channel stride 0)
@@ -158,12 +170,8 @@ def decode_image(blob: bytes) -> np.ndarray:
         # the exact np.repeat upscale the encoder elided
         ch = np.repeat(np.repeat(small, f, axis=0), f, axis=1)
         return np.broadcast_to(ch[:, :, None], (h, w, 3))
-    if magic == MAGIC_Z:
-        raw = zlib.decompress(blob[13:])
-    elif magic == MAGIC:
-        raw = blob[13:]
-    else:
-        raise ValueError("bad image magic")
+    # MAGIC_Z, or the legacy uncompressed MAGIC
+    raw = zlib.decompress(blob[13:]) if magic == MAGIC_Z else blob[13:]
     return np.frombuffer(raw, dtype=np.uint8).reshape(h, w, 3)
 
 
@@ -182,7 +190,11 @@ def render_page(
     cell_w: int = CELL_W,
     gap_w: int = GAP_W,
 ) -> np.ndarray:
-    """Render lines of words onto a white page (H×W×3 uint8).
+    """Render lines of words onto a white page: an H×W×3 uint8 frame
+    that is a READ-ONLY stride-0 broadcast of one grayscale plane
+    (writes raise ValueError). Callers that mutate the page must
+    ``.copy()`` it first, which gives a writable frame with the same
+    values.
 
     ``para_breaks``: set of (line_idx, word_idx) positions that get a
     paragraph-sized gap *before* the word (exercises resolve_sub_lines).

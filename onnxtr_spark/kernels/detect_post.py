@@ -29,6 +29,25 @@ onnxtr/models/detection/core.py:33-90) without cv2/pyclipper:
 - P8 padding removal for aspect-preserving resize
   (onnxtr/models/detection/_utils/base.py:12-62), symmetric and
   asymmetric, straight path.
+
+D1-D6 run once per GROUP of pages (``postprocess_pixel_maps`` /
+``postprocess_prob_maps``; the one-page calls are groups of one), so the
+~30 NumPy calls of opening and labeling and the box stage are paid per
+group, not per page. The group's maps are stacked vertically, each page
+right-padded to the widest one, with one separator row above, between
+and below the pages, and the binary stack is kept as packed bits.
+Border rule: separator rows and pad columns count as foreground during
+erosion and are cleared before dilation and before labeling. A page
+pixel's 3x3 neighbourhood reaches at most one row or column past its
+page, and there it meets a separator row or a pad column (or the stack
+edge, which the shifts treat the same way), so every page sees exactly
+cv2's per-page border semantics. The zero separator rows keep
+8-connected components inside their page; components map back to
+their page by row offset, in per-page raster order. The uint8 path's D4
+score is an exact int64 sum over the rect (gather + ``np.add.reduceat``;
+integer sums are exact in float64, so it equals the per-box
+``.mean()`` bit for bit). The prob-map path keeps a per-box float32
+``.mean()``: its pairwise float32 sum has no exact vectorized twin.
 """
 
 from __future__ import annotations
@@ -54,13 +73,22 @@ def binary_open_3x3(bitmap: np.ndarray) -> np.ndarray:
 def _open_3x3_packed(bitmap: np.ndarray) -> np.ndarray:
     """``binary_open_3x3`` in packed-bit form (pad bits beyond ``w``
     CLEARED, so ``_label_runs_packed`` can consume it directly without
-    the unpack/repack roundtrip)."""
-    h, w = bitmap.shape
+    the unpack/repack roundtrip): the stacked opening over a group of
+    one page."""
+    stack, _, inside = _stack([bitmap], False, np.bool_)
+    return _open_packed(np.packbits(stack, axis=1), inside)[1:-1]
+
+
+def _open_packed(bits: np.ndarray, inside: np.ndarray) -> np.ndarray:
+    """3x3 opening of a packed page stack (``_stack``): bits outside
+    ``inside`` (separator rows, pad columns) are foreground for erosion
+    and cleared before dilation and in the result — the module
+    docstring's border rule."""
     # Bit-packed separable 3x3 (the ones-kernel factorizes into
     # rows×cols): the map lives as h×(w/8) bytes (~32 KB for 512²), so
-    # the 12 shift/AND/OR passes touch 8× less memory than byte-per-
-    # pixel — this kernel is DRAM-bound at high core counts.
-    bits = np.packbits(bitmap if bitmap.dtype == np.bool_ else bitmap.astype(bool), axis=1)  # big-endian: col 0 = bit 7
+    # the shift/AND/OR passes touch 8× less memory than byte-per-pixel
+    # — this kernel is DRAM-bound at high core counts. Big-endian
+    # packing: col 0 = bit 7.
 
     def sh_hi(a: np.ndarray, border: int) -> np.ndarray:
         """Pattern shifted one column toward higher col index."""
@@ -78,26 +106,21 @@ def _open_3x3_packed(bitmap: np.ndarray) -> np.ndarray:
             out[:, -1] |= 0x01
         return out
 
-    # Column padding bits beyond w must act as foreground for erosion
-    # (cv2 border semantics); packbits already zero-fills them.
-    pad_bits = (-w) % 8
-    if pad_bits:
-        edge = np.uint8(((1 << pad_bits) - 1))
-        bits_er = bits.copy()
-        bits_er[:, -1] |= edge
-    else:
-        bits_er = bits
-
-    er = bits_er & sh_hi(bits_er, 1) & sh_lo(bits_er, 1)
-    er = er & np.vstack([np.full((1, er.shape[1]), 0xFF, np.uint8), er[:-1]]) \
-             & np.vstack([er[1:], np.full((1, er.shape[1]), 0xFF, np.uint8)])
-    if pad_bits:
-        er[:, -1] &= np.uint8(0xFF ^ edge)  # pad cols must not survive into dilation
+    outside = ~inside
+    er = bits | outside
+    er &= sh_hi(er, 1) & sh_lo(er, 1)
+    # vertical pass in place: the first and last stack rows are
+    # separators, cleared below, so the stack edges need no fill. The
+    # second line reads rows the first already combined with their
+    # upper neighbour; AND (and OR below) is idempotent, so each row
+    # ends as the AND of itself and both neighbours.
+    er[1:] &= er[:-1].copy()
+    er[:-1] &= er[1:].copy()
+    er &= inside
     di = er | sh_hi(er, 0) | sh_lo(er, 0)
-    di = di | np.vstack([np.zeros((1, di.shape[1]), np.uint8), di[:-1]]) \
-            | np.vstack([di[1:], np.zeros((1, di.shape[1]), np.uint8)])
-    if pad_bits:
-        di[:, -1] &= np.uint8(0xFF ^ edge)  # dilation spills into pad cols: clear
+    di[1:] |= di[:-1].copy()
+    di[:-1] |= di[1:].copy()
+    di &= inside
     return di
 
 
@@ -198,24 +221,14 @@ def connected_components(bitmap: np.ndarray) -> list[tuple[int, int, int, int]]:
     raster order of the component's topmost-leftmost run (deterministic,
     identical to the previous union-find implementation).
     """
-    return _rects_from_runs(*label_runs(bitmap))
+    return [tuple(r) for r in _rects_from_runs(*label_runs(bitmap)).tolist()]
 
 
-def _components_packed(binmap: np.ndarray, morph_open: bool) -> list[tuple[int, int, int, int]]:
-    """``connected_components`` of (optionally opened) ``binmap``
-    through the packed-bit pipeline — the opened bit map goes straight
-    into run labeling without the unpack/repack roundtrip."""
-    if morph_open:
-        h, w = binmap.shape
-        return _rects_from_runs(*_label_runs_packed(_open_3x3_packed(binmap), h, w))
-    return _rects_from_runs(*label_runs(binmap))
-
-
-def _rects_from_runs(
-    ys: np.ndarray, xs: np.ndarray, xe: np.ndarray, lab: np.ndarray
-) -> list[tuple[int, int, int, int]]:
+def _rects_from_runs(ys: np.ndarray, xs: np.ndarray, xe: np.ndarray, lab: np.ndarray) -> np.ndarray:
+    """(k, 4) int64 bounding rects [x, y, w, h] of the labeled
+    components, in ascending label (= raster) order."""
     if len(ys) == 0:
-        return []
+        return np.zeros((0, 4), dtype=np.int64)
     roots, inv = np.unique(lab, return_inverse=True)  # ascending = raster order
     k = len(roots)
     x0 = np.full(k, np.iinfo(np.int64).max)
@@ -226,42 +239,125 @@ def _rects_from_runs(
     np.minimum.at(y0, inv, ys)
     np.maximum.at(x1, inv, xe)
     np.maximum.at(y1, inv, ys + 1)
-    return list(zip((x0).tolist(), (y0).tolist(), (x1 - x0).tolist(), (y1 - y0).tolist()))
+    return np.stack([x0, y0, x1 - x0, y1 - y0], axis=1)
 
 
-def box_score(pred: np.ndarray, xmin: float, ymin: float, xmax: float, ymax: float) -> float:
-    """Mean probability over the clipped integer bounding rect
-    (reference core.py:46-52, straight path)."""
-    import math
-
-    h, w = pred.shape[:2]
-    x0 = min(max(math.floor(xmin), 0), w - 1)
-    x1 = min(max(math.ceil(xmax), 0), w - 1)
-    y0 = min(max(math.floor(ymin), 0), h - 1)
-    y1 = min(max(math.ceil(ymax), 0), h - 1)
-    return float(pred[y0 : y1 + 1, x0 : x1 + 1].mean())
-
-
-def unclip_rect(x: int, y: int, w: int, h: int, unclip_ratio: float = UNCLIP_RATIO) -> tuple[int, int, int, int]:
-    """Analytic unclip of an axis-aligned rect (reference
+def unclip_rect(x, y, w, h, unclip_ratio: float = UNCLIP_RATIO):
+    """Analytic unclip of axis-aligned rects (reference
     postprocessor/base.py:38-81 for the straight path): grow by
     ``distance = area * ratio / perimeter`` on each side, then integer
     bounding rect (floor origin, ceil extent — cv2.boundingRect on the
-    offset polygon's float points)."""
-    import math
-
-    area = float(w * h)
+    offset polygon's float points). Elementwise over int arrays (or
+    ints); the float ops and their order are those of the scalar
+    formula, so every rect is bit-identical to it."""
+    x, y, w, h = (np.asarray(v, dtype=np.int64) for v in (x, y, w, h))
     length = 2.0 * (w + h)
-    if length == 0:
-        return x, y, w, h
-    d = area * unclip_ratio / length
-    # math.floor/ceil are the identical IEEE operations np.floor/np.ceil
-    # perform, without the per-box ufunc dispatch (hot: once per box)
-    x0 = math.floor(x - d)
-    y0 = math.floor(y - d)
-    x1 = math.ceil(x + w + d)
-    y1 = math.ceil(y + h + d)
+    # a 0x0 rect has no perimeter and stays as it is (d = 0)
+    d = np.divide((w * h) * unclip_ratio, length, out=np.zeros(length.shape), where=length != 0)
+    x0 = np.floor(x - d).astype(np.int64)
+    y0 = np.floor(y - d).astype(np.int64)
+    x1 = np.ceil((x + w) + d).astype(np.int64)
+    y1 = np.ceil((y + h) + d).astype(np.int64)
     return x0, y0, x1 - x0, y1 - y0
+
+
+def _stack(maps: list[np.ndarray], fill, dtype) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Stack 2-D page maps for the group kernel.
+
+    Returns ``(stack, row0, inside)``: ``stack`` is (R, W) ``dtype``
+    with page p at rows ``row0[p]`` .. ``row0[p] + h_p - 1``, columns
+    0 .. ``w_p - 1``; one separator row above, between and below the
+    pages; W the widest page rounded up to whole bytes; separator rows
+    and pad columns hold ``fill``. ``inside`` is the packed-bit mask of
+    page pixels (R, W / 8)."""
+    hs = [m.shape[0] for m in maps]
+    ws = [m.shape[1] for m in maps]
+    row0 = np.cumsum([1] + [h + 1 for h in hs[:-1]])
+    width = -(-max(ws) // 8) * 8
+    stack = np.full((int(row0[-1]) + hs[-1] + 1, width), fill, dtype=dtype)
+    inside = np.zeros((stack.shape[0], width // 8), dtype=np.uint8)
+    cols = np.arange(width)
+    for m, r, h, w in zip(maps, row0, hs, ws):
+        stack[r : r + h, :w] = m
+        inside[r : r + h] = np.packbits(cols < w)
+    return stack, row0, inside
+
+
+def _group_rects(
+    fg: np.ndarray, row0: np.ndarray, inside: np.ndarray, morph_open: bool
+) -> tuple[np.ndarray, np.ndarray]:
+    """D2 + D3 over a stacked foreground map (``_stack``): one packed
+    opening and one labeling for the whole group. Returns the page index
+    and page-local (x, y, w, h) rect of every component, pages in order
+    and each page's components in raster order."""
+    bits = np.packbits(fg, axis=1) & inside  # separators, pad: never foreground
+    if morph_open:
+        bits = _open_packed(bits, inside)
+    rects = _rects_from_runs(*_label_runs_packed(bits, *fg.shape))
+    page = np.searchsorted(row0, rects[:, 1], side="right") - 1
+    rects[:, 1] -= row0[page]
+    return page, rects
+
+
+def _rect_bounds(rects: np.ndarray, heights: np.ndarray, widths: np.ndarray):
+    """D4's inclusive clipped integer rect (core.py:46-52) of each
+    component: rows y0..y1, cols x0..x1. The labeling's x, y, w, h are
+    exact ints, so the reference's floor/ceil are identities."""
+    x, y, w, h = rects.T
+    x0 = np.minimum(np.maximum(x, 0), widths - 1)
+    x1 = np.minimum(np.maximum(x + w, 0), widths - 1)
+    y0 = np.minimum(np.maximum(y, 0), heights - 1)
+    y1 = np.minimum(np.maximum(y + h, 0), heights - 1)
+    return x0, y0, x1, y1
+
+
+def _rect_sums(stack: np.ndarray, rows: np.ndarray, x0: np.ndarray, x1: np.ndarray, nr: np.ndarray) -> np.ndarray:
+    """Exact int64 sums of integer ``stack`` over rects whose first
+    stack row is ``rows``, spanning ``nr`` rows and cols ``x0`` .. ``x1``:
+    one gather of every rect pixel (rect after rect, row-major) and one
+    ``np.add.reduceat`` at the rect starts."""
+    width = stack.shape[1]
+    nc = x1 - x0 + 1
+    # flat start of every rect row, then of every pixel (ragged aranges)
+    seg = np.repeat(rows * width + x0 - (np.cumsum(nr) - nr) * width, nr)
+    seg += np.arange(len(seg)) * width
+    seg_len = np.repeat(nc, nr)
+    idx = np.repeat(seg - (np.cumsum(seg_len) - seg_len), seg_len)
+    idx += np.arange(len(idx))
+    area = nr * nc
+    return np.add.reduceat(stack.ravel()[idx], np.cumsum(area) - area, dtype=np.int64)
+
+
+def _page_boxes(
+    page: np.ndarray,
+    rects: np.ndarray,
+    scores: np.ndarray,
+    heights: np.ndarray,
+    widths: np.ndarray,
+    dtypes: list,
+    box_thresh: float,
+    unclip_ratio: float,
+) -> list[np.ndarray]:
+    """D4 threshold, D5 unclip and D6 relative coords + clip for a
+    group's size-filtered components, split back into one (N, 5)
+    [xmin, ymin, xmax, ymax, score] array per page."""
+    ok = scores >= box_thresh
+    page, rects, scores = page[ok], rects[ok], scores[ok]
+    heights, widths = heights[ok], widths[ok]
+    ex, ey, ew, eh = unclip_rect(*rects.T, unclip_ratio)
+    boxes = np.stack(
+        [ex / widths, ey / heights, (ex + ew) / widths, (ey + eh) / heights, scores], axis=1
+    )
+    cuts = np.searchsorted(page, np.arange(1, len(dtypes)))
+    return [np.clip(b.astype(dt), 0, 1) for b, dt in zip(np.split(boxes, cuts), dtypes)]
+
+
+def _size_filter(page: np.ndarray, rects: np.ndarray):
+    # Small-extent filter (postprocessor/base.py:106): the reference
+    # drops contours whose coordinate span (max - min) < 2 in either
+    # axis; pixel-count extent = span + 1, so drop w < 3 or h < 3.
+    keep = (rects[:, 2] >= 3) & (rects[:, 3] >= 3)
+    return page[keep], rects[keep]
 
 
 def bitmap_to_boxes(
@@ -273,37 +369,7 @@ def bitmap_to_boxes(
     """Binary map -> (N, 5) array of [xmin, ymin, xmax, ymax, score],
     relative coords clipped to [0,1] (reference postprocessor/base.py:83-139,
     straight path)."""
-    height, width = bitmap.shape[:2]
-    return _boxes_from_components(
-        pred, connected_components(bitmap), height, width, box_thresh, unclip_ratio
-    )
-
-
-def _boxes_from_components(
-    pred: np.ndarray,
-    comps: list[tuple[int, int, int, int]],
-    height: int,
-    width: int,
-    box_thresh: float,
-    unclip_ratio: float,
-) -> np.ndarray:
-    boxes: list[list[float]] = []
-    for x, y, w, h in comps:
-        # Small-extent filter (postprocessor/base.py:106): the reference
-        # drops contours whose coordinate span (max - min) < 2 in either
-        # axis; pixel-count extent = span + 1, so drop w < 3 or h < 3.
-        if w < 3 or h < 3:
-            continue
-        score = box_score(pred, x, y, x + w, y + h)
-        if score < box_thresh:
-            continue
-        ex, ey, ew, eh = unclip_rect(x, y, w, h, unclip_ratio)
-        xmin, ymin = ex / width, ey / height
-        xmax, ymax = (ex + ew) / width, (ey + eh) / height
-        boxes.append([xmin, ymin, xmax, ymax, score])
-    if not boxes:
-        return np.zeros((0, 5), dtype=pred.dtype)
-    return np.clip(np.asarray(boxes, dtype=pred.dtype), 0, 1)
+    return _prob_boxes([pred], [bitmap], box_thresh, unclip_ratio, False)[0]
 
 
 def remove_padding(
@@ -335,6 +401,54 @@ def remove_padding(
     return out
 
 
+def _prob_boxes(
+    preds: list[np.ndarray],
+    binmaps: list[np.ndarray],
+    box_thresh: float,
+    unclip_ratio: float,
+    morph_open: bool,
+) -> list[np.ndarray]:
+    """D2-D6 for a group of binary maps scored on their float maps
+    ``preds`` (the prob-map path and ``bitmap_to_boxes``)."""
+    stack, row0, inside = _stack(binmaps, False, np.bool_)
+    page, rects = _size_filter(*_group_rects(stack, row0, inside, morph_open))
+    x0, y0, x1, y1 = _rect_bounds(
+        rects, np.array([p.shape[0] for p in preds])[page], np.array([p.shape[1] for p in preds])[page]
+    )
+    # float32 pairwise means: one .mean() per box (module docstring)
+    scores = np.array(
+        [
+            float(preds[p][a : b + 1, c : d + 1].mean())
+            for p, a, b, c, d in zip(page.tolist(), y0.tolist(), y1.tolist(), x0.tolist(), x1.tolist())
+        ],
+        dtype=np.float64,
+    )
+    return _page_boxes(
+        page,
+        rects,
+        scores,
+        np.array([b.shape[0] for b in binmaps])[page],
+        np.array([b.shape[1] for b in binmaps])[page],
+        [p.dtype for p in preds],
+        box_thresh,
+        unclip_ratio,
+    )
+
+
+def postprocess_prob_maps(
+    prob_maps: list[np.ndarray],
+    bin_thresh: float = BIN_THRESH,
+    box_thresh: float = BOX_THRESH,
+    unclip_ratio: float = UNCLIP_RATIO,
+    morph_open: bool = True,
+) -> list[np.ndarray]:
+    """Full D1-D6 chain for a group of (H, W) probability maps: one
+    (N, 5) box array per map, in order."""
+    return _prob_boxes(
+        prob_maps, [p >= bin_thresh for p in prob_maps], box_thresh, unclip_ratio, morph_open
+    )
+
+
 def postprocess_prob_map(
     prob_map: np.ndarray,
     bin_thresh: float = BIN_THRESH,
@@ -343,10 +457,42 @@ def postprocess_prob_map(
     morph_open: bool = True,
 ) -> np.ndarray:
     """Full D1-D6 chain for one page's (H, W) probability map."""
-    binmap = prob_map >= bin_thresh
-    height, width = binmap.shape[:2]
-    return _boxes_from_components(
-        prob_map, _components_packed(binmap, morph_open), height, width, box_thresh, unclip_ratio
+    return postprocess_prob_maps([prob_map], bin_thresh, box_thresh, unclip_ratio, morph_open)[0]
+
+
+def postprocess_pixel_maps(
+    px_maps: list[np.ndarray],
+    bin_thresh: float = BIN_THRESH,
+    box_thresh: float = BOX_THRESH,
+    unclip_ratio: float = UNCLIP_RATIO,
+    morph_open: bool = True,
+) -> list[np.ndarray]:
+    """D1-D6 folded through an affine prob model, directly on a group
+    of uint8 maps (prob = (255 - px)/255, engine.py DetectionEngine):
+    one (N, 5) float32 box array per map, in order.
+
+    The stub model is linear in pixel value, so D1's threshold and D4's
+    rect-mean commute through it: ``prob >= t  <=>  px <= 255 - 255t``
+    and ``mean(prob) = (255 - mean(px))/255``. This skips materializing
+    the HxW float32 map entirely — whole-stage-codegen-style fusion
+    across the model boundary; a real CNN can't be folded, in which case
+    the caller materializes prob and uses ``postprocess_prob_maps``.
+    Box geometry is bit-identical; only the objectness score can differ
+    in the last float ulps (float64 rect mean vs float32 map mean).
+    """
+    pix_thresh = float(np.floor(255.0 - 255.0 * bin_thresh))
+    stack, row0, inside = _stack(px_maps, 255, np.uint8)
+    page, rects = _size_filter(*_group_rects(stack <= pix_thresh, row0, inside, morph_open))
+    heights = np.array([m.shape[0] for m in px_maps])[page]
+    widths = np.array([m.shape[1] for m in px_maps])[page]
+    x0, y0, x1, y1 = _rect_bounds(rects, heights, widths)
+    nr = y1 - y0 + 1
+    # exact integer rect sums: float64(sum) / count is the value the
+    # uint8 .mean() returns (its float64 accumulation is exact too)
+    means = _rect_sums(stack, row0[page] + y0, x0, x1, nr) / (nr * (x1 - x0 + 1))
+    scores = (255.0 - means) / 255.0
+    return _page_boxes(
+        page, rects, scores, heights, widths, [np.float32] * len(px_maps), box_thresh, unclip_ratio
     )
 
 
@@ -357,37 +503,5 @@ def postprocess_pixel_map(
     unclip_ratio: float = UNCLIP_RATIO,
     morph_open: bool = True,
 ) -> np.ndarray:
-    """D1-D6 folded through an affine prob model, directly on the uint8
-    map (prob = (255 - px)/255, engine.py DetectionEngine).
-
-    The stub model is linear in pixel value, so D1's threshold and D4's
-    rect-mean commute through it: ``prob >= t  <=>  px <= 255 - 255t``
-    and ``mean(prob) = (255 - mean(px))/255``. This skips materializing
-    the HxW float32 map entirely — whole-stage-codegen-style fusion
-    across the model boundary; a real CNN can't be folded, in which case
-    the caller materializes prob and uses ``postprocess_prob_map``.
-    Box geometry is bit-identical; only the objectness score can differ
-    in the last float ulps (float64 rect mean vs float32 map mean).
-    """
-    pix_thresh = float(np.floor(255.0 - 255.0 * bin_thresh))
-    binmap = px_map <= pix_thresh
-
-    height, width = binmap.shape[:2]
-    boxes: list[list[float]] = []
-    for x, y, w, h in _components_packed(binmap, morph_open):
-        if w < 3 or h < 3:  # contour-span < 2 (see bitmap_to_boxes)
-            continue
-        # x, y, w, h are exact ints from the labeling: floor/ceil are
-        # identities and the clip is two int comparisons
-        x0 = min(max(x, 0), width - 1)
-        x1 = min(max(x + w, 0), width - 1)
-        y0 = min(max(y, 0), height - 1)
-        y1 = min(max(y + h, 0), height - 1)
-        score = (255.0 - float(px_map[y0 : y1 + 1, x0 : x1 + 1].mean())) / 255.0
-        if score < box_thresh:
-            continue
-        ex, ey, ew, eh = unclip_rect(x, y, w, h, unclip_ratio)
-        boxes.append([ex / width, ey / height, (ex + ew) / width, (ey + eh) / height, score])
-    if not boxes:
-        return np.zeros((0, 5), dtype=np.float32)
-    return np.clip(np.asarray(boxes, dtype=np.float32), 0, 1)
+    """``postprocess_pixel_maps`` for one page's (H, W) uint8 map."""
+    return postprocess_pixel_maps([px_map], bin_thresh, box_thresh, unclip_ratio, morph_open)[0]

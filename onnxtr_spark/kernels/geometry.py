@@ -55,8 +55,25 @@ def _nn_indices(h: int, w: int, target_h: int, target_w: int) -> tuple[np.ndarra
         xs = np.minimum((np.arange(new_w) / scale).astype(np.int64), w - 1)
         if len(_NN_IDX_CACHE) >= 4096:
             _NN_IDX_CACHE.clear()
-        hit = _NN_IDX_CACHE[key] = (ys[:, None], xs, new_h, new_w)
+        hit = _NN_IDX_CACHE[key] = (ys, xs, new_h, new_w)
     return hit
+
+
+def _gather(img: np.ndarray, ys: np.ndarray, xs: np.ndarray) -> np.ndarray:
+    """``img[ys[:, None], xs]`` as two ``take`` calls: whole rows first
+    (one memcpy each), then columns on the row-reduced plane. Same
+    values as the fancy index at 1/3 of its cost (the 2-D fancy index
+    walks a broadcast index pair per pixel; the ndarray method skips
+    the ``np.take`` wrapper, which is most of a word crop's cost).
+
+    A grayscale page stored as a stride-0 RGB broadcast
+    (imaging.decode_image) gathers ONE plane and re-broadcasts it
+    read-only — all three channels alias the same memory, so the
+    values are identical."""
+    if img.ndim == 3 and img.shape[2] == 3 and img.strides[2] == 0:
+        out0 = img[:, :, 0].take(ys, axis=0).take(xs, axis=1)
+        return np.broadcast_to(out0[:, :, None], out0.shape + (3,))
+    return img.take(ys, axis=0).take(xs, axis=1)
 
 
 def resize_preserve(
@@ -74,7 +91,7 @@ def resize_preserve(
     """
     h, w = img.shape[:2]
     ys, xs, new_h, new_w = _nn_indices(h, w, target_h, target_w)
-    resized = img[ys, xs]  # single gather, one copy
+    resized = _gather(img, ys, xs)
 
     out_shape = (target_h, target_w) + img.shape[2:]
     out = np.full(out_shape, pad_value, dtype=img.dtype)
@@ -93,11 +110,13 @@ def resize_stretch(img: np.ndarray, target_h: int, target_w: int) -> np.ndarray:
     (transforms/base.py:41-50 — a plain cv2.resize to output_size).
     Nearest-neighbor gather like the other resize kernels; relative
     box coordinates on the stretched map equal page-relative
-    coordinates directly, so no padding removal applies."""
+    coordinates directly, so no padding removal applies. A stride-0
+    RGB page comes back as a read-only broadcast (``_gather``), like
+    ``resize_unpadded``'s."""
     h, w = img.shape[:2]
     ys = np.minimum((np.arange(target_h) * (h / target_h)).astype(np.int64), h - 1)
     xs = np.minimum((np.arange(target_w) * (w / target_w)).astype(np.int64), w - 1)
-    return img[np.ix_(ys, xs)]
+    return _gather(img, ys, xs)
 
 
 def resize_unpadded(img: np.ndarray, target_h: int, target_w: int) -> np.ndarray:
@@ -110,10 +129,4 @@ def resize_unpadded(img: np.ndarray, target_h: int, target_w: int) -> np.ndarray
     padding columns are pure waste in the T axis of the logits)."""
     h, w = img.shape[:2]
     ys, xs, _, _ = _nn_indices(h, w, target_h, target_w)
-    if img.ndim == 3 and img.shape[2] == 3 and img.strides[2] == 0:
-        # grayscale page stored as a stride-0 RGB broadcast
-        # (imaging.decode_image): gather ONE plane and re-broadcast —
-        # value-identical (all three channels alias the same memory)
-        out0 = img[:, :, 0][ys, xs]
-        return np.broadcast_to(out0[:, :, None], out0.shape + (3,))
-    return img[ys, xs]
+    return _gather(img, ys, xs)

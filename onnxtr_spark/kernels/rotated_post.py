@@ -685,7 +685,7 @@ def postprocess_pixel_map_rotated(
     morph_open: bool = True,
 ) -> np.ndarray:
     """Full rotated D1-D6 chain folded through the affine stub model,
-    directly on the uint8 map (see detect_post.postprocess_pixel_map for
+    directly on the uint8 map (see detect_post.postprocess_pixel_maps for
     the folding argument — identical here, geometry is bit-identical)."""
     pix_thresh = float(np.floor(255.0 - 255.0 * bin_thresh))
     return _postprocess_binmap_rotated(

@@ -14,6 +14,18 @@ one process (models/predictor/predictor.py:72-154).
 
 Recognition model batches are flattened across all pages in the Arrow
 chunk (reference flattens across pages too, predictor.py:132).
+
+Detection is staged in groups of at most ``GROUP_PAGES`` pages of the
+Arrow chunk: every page of a group is decoded, straightened if
+configured, and map-resized (plus the float model's forward); then one
+batched straight D1-D6 call covers the whole group. That call stacks
+the group's maps with a separator row between pages, and separator rows
+and pad columns obey cv2's border rule (foreground for erosion, cleared
+before dilation and labeling — kernels/detect_post.py), so every page
+gets exactly the boxes a one-page call gives it. The group's crops are
+cut, and its pages and maps dropped, before the next group starts. The
+rotated path has no group kernel and runs page at a time (groups of
+one).
 """
 
 from __future__ import annotations
@@ -44,6 +56,12 @@ from onnxtr_spark.kernels.rotated import (
 )
 from onnxtr_spark.stages.detect import DetectConfig
 from onnxtr_spark.stages.recognize import RECOGNIZE_SCHEMA, RecognizeConfig
+
+# Pages staged per detection group (one batched D1-D6 call each). A
+# group's decoded pages and maps are alive together, so this bounds the
+# memory staging adds: 16 pages amortize the per-call NumPy overhead
+# while the worker's peak RSS stays at the page-at-a-time level.
+GROUP_PAGES = 16
 
 OUT_COLS = [
     "doc_id", "offset", "media_ref", "word_id", "rank", "line_id", "block_id",
@@ -86,6 +104,9 @@ def detect_recognize_pages(
             )
     float_det = det_cfg.engine.input_contract.startswith("float")
     float_reco = reco_cfg.engine.input_contract.startswith("float")
+    # the rotated postprocess has no group kernel: its pages go one at a
+    # time, so staging would only hold their maps longer
+    group_pages = GROUP_PAGES if det_cfg.assume_straight_pages else 1
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from time import perf_counter
@@ -126,174 +147,187 @@ def detect_recognize_pages(
                     resize_unpadded(s, reco_cfg.crop_h, reco_cfg.crop_w) for s in splits
                 )
 
-            for doc_id, offset, media_ref, png, height, width in zip(
-                pdf["doc_id"], pdf["offset"], pdf["media_ref"], pdf["png"], pdf["height"], pdf["width"]
-            ):
-                # Single-channel fast path (uint8 stub engines only):
-                # both stub models read channel 0, so slice a (H, W, 1)
-                # view once — 3× less memory traffic through
-                # resize/crop/model (this kernel chain is DRAM-bound at
-                # high core counts). Float-contract engines (a real CNN)
-                # keep the full channel axis — P2 normalize is
-                # per-channel and the model consumes every plane.
-                t_dec = perf_counter()
-                img = imaging.decode_image(png)
-                if not (float_det or float_reco):
-                    img = img[:, :, :1]
-                m_decode_s += perf_counter() - t_dec
-                m_pages += 1
-                if det_cfg.straighten_pages:
-                    # I5 orientation classify + G4 rectification
-                    # (reference predictor.py:100-106 + base.py:102-124):
-                    # undo the stored 90°-multiple rotation, then the
-                    # arbitrary-angle pass — first detection pass gives
-                    # the seg bitmap, estimate_orientation measures the
-                    # residual skew from line-like contours, the page is
-                    # rotated straight, and detection runs again on the
-                    # straightened page (the code below IS that second
-                    # pass). General orientation is (0, 1.0) here because
-                    # the classifier just rectified the 90° component.
-                    k = get_orientation_engine(det_cfg.orient_engine).run_one(img)
-                    if k:
-                        img = np.ascontiguousarray(np.rot90(img, -k))
-                    pix_thresh = float(np.floor(255.0 - 255.0 * det_cfg.bin_thresh))
-                    seg = (img[:, :, 0] <= pix_thresh).astype(np.uint8)
-                    angle = estimate_orientation(seg, (0, 1.0))
-                    if angle:
-                        if img.shape[2] == 1:
-                            # rotate the single channel 2-D (the (H,W,1)
-                            # slice pays a per-pixel trailing-dim gather)
-                            img = imaging.rotate_image_nearest(
-                                np.ascontiguousarray(img[:, :, 0]), angle
-                            )[:, :, None]
-                        else:
-                            img = imaging.rotate_image_nearest(img, angle)
-                # --- detect (D1-D6): the stub model is affine in pixel
-                # value, so it folds through the postprocess and runs on
-                # the uint8 map (postprocess_pixel_map docstring); `det`
-                # (the session) defines that affine contract and runs
-                # unfolded in the standalone stage. The map is resized
-                # WITHOUT padding — content-exact AND isotropic (one
-                # scale = min ratio for both axes), so relative coords
-                # are page-relative directly, rotation angles survive,
-                # and P8 padding removal is the identity (it stays real
-                # in the standalone stage); map passes skip the ~30% pad
-                # rows a square map carries.
-                if det_cfg.preserve_aspect_ratio and det_cfg.symmetric_pad:
-                    # default contract: content-exact isotropic map, no
-                    # pad rows at all — P8 removal is the identity (the
-                    # padded-symmetric algebra is exercised standalone,
-                    # stages/detect.py)
-                    resized = resize_unpadded(img, det_cfg.map_size, det_cfg.map_size)
-                    unpad = None
-                elif det_cfg.preserve_aspect_ratio:
-                    # asymmetric pad (bottom/right, transforms/base.py:
-                    # 72-76): boxes come back map-relative; the
-                    # asymmetric remove_padding branch rescales them to
-                    # page-relative (_utils/base.py:12-62). White pad:
-                    # the stub reads pixel value as text evidence.
-                    resized = resize_preserve(
-                        img, det_cfg.map_size, det_cfg.map_size, symmetric_pad=False, pad_value=255
-                    )
-                    unpad = "asym"
-                else:
-                    # preserve_aspect_ratio=False: anisotropic stretch;
-                    # map-relative coords ARE page-relative, no unpad
-                    resized = resize_stretch(img, det_cfg.map_size, det_cfg.map_size)
-                    unpad = None
-                if float_det:
-                    # real-CNN contract: P2-P4 on the unpadded map, one
-                    # forward per page (dynamic spatial dims — unpadded
-                    # maps are content-exact, so pages don't stack),
-                    # then the prob-map D1-D6 chain. Cost emulation runs
-                    # inside the engine's run().
-                    x = preprocess.cast_normalize(
-                        resized, det_cfg.engine.mean, det_cfg.engine.std
-                    )[None]
-                    if det_cfg.engine.input_contract == "float_bchw":
-                        x = np.moveaxis(x, -1, 1)
-                    prob = det.run(x)[0]
-                else:
-                    det.simulate_model_cost(1)  # no-op unless SPARK_GRAFT_MODEL_ITERS set
-                    prob = None
+            # detection groups (module docstring); `staged` is rebound per
+            # group, dropping the last group's pages and maps before the
+            # next one decodes
+            keys = list(zip(pdf["doc_id"], pdf["offset"], pdf["media_ref"]))
+            pngs = pdf["png"].tolist()
+            for g in range(0, len(pngs), group_pages):
+                staged: list[tuple] = []  # (img, resized, prob, unpad) per page
+                for png in pngs[g : g + group_pages]:
+                    # Single-channel fast path (uint8 stub engines only):
+                    # both stub models read channel 0, so slice a (H, W, 1)
+                    # view once — 3× less memory traffic through
+                    # resize/crop/model (this kernel chain is DRAM-bound at
+                    # high core counts). Float-contract engines (a real CNN)
+                    # keep the full channel axis — P2 normalize is
+                    # per-channel and the model consumes every plane.
+                    t_dec = perf_counter()
+                    img = imaging.decode_image(png)
+                    if not (float_det or float_reco):
+                        img = img[:, :, :1]
+                    m_decode_s += perf_counter() - t_dec
+                    m_pages += 1
+                    if det_cfg.straighten_pages:
+                        # I5 orientation classify + G4 rectification
+                        # (reference predictor.py:100-106 + base.py:102-124):
+                        # undo the stored 90°-multiple rotation, then the
+                        # arbitrary-angle pass — first detection pass gives
+                        # the seg bitmap, estimate_orientation measures the
+                        # residual skew from line-like contours, the page is
+                        # rotated straight, and detection runs again on the
+                        # straightened page (the code below IS that second
+                        # pass). General orientation is (0, 1.0) here because
+                        # the classifier just rectified the 90° component.
+                        k = get_orientation_engine(det_cfg.orient_engine).run_one(img)
+                        if k:
+                            img = np.ascontiguousarray(np.rot90(img, -k))
+                        pix_thresh = float(np.floor(255.0 - 255.0 * det_cfg.bin_thresh))
+                        seg = (img[:, :, 0] <= pix_thresh).astype(np.uint8)
+                        angle = estimate_orientation(seg, (0, 1.0))
+                        if angle:
+                            if img.shape[2] == 1:
+                                # rotate the single channel 2-D (the (H,W,1)
+                                # slice pays a per-pixel trailing-dim gather)
+                                img = imaging.rotate_image_nearest(
+                                    np.ascontiguousarray(img[:, :, 0]), angle
+                                )[:, :, None]
+                            else:
+                                img = imaging.rotate_image_nearest(img, angle)
+                    # --- detect (D1-D6): the stub model is affine in pixel
+                    # value, so it folds through the postprocess and runs on
+                    # the uint8 map (postprocess_pixel_maps docstring); `det`
+                    # (the session) defines that affine contract and runs
+                    # unfolded in the standalone stage. The map is resized
+                    # WITHOUT padding — content-exact AND isotropic (one
+                    # scale = min ratio for both axes), so relative coords
+                    # are page-relative directly, rotation angles survive,
+                    # and P8 padding removal is the identity (it stays real
+                    # in the standalone stage); map passes skip the ~30% pad
+                    # rows a square map carries.
+                    if det_cfg.preserve_aspect_ratio and det_cfg.symmetric_pad:
+                        # default contract: content-exact isotropic map, no
+                        # pad rows at all — P8 removal is the identity (the
+                        # padded-symmetric algebra is exercised standalone,
+                        # stages/detect.py)
+                        resized = resize_unpadded(img, det_cfg.map_size, det_cfg.map_size)
+                        unpad = None
+                    elif det_cfg.preserve_aspect_ratio:
+                        # asymmetric pad (bottom/right, transforms/base.py:
+                        # 72-76): boxes come back map-relative; the
+                        # asymmetric remove_padding branch rescales them to
+                        # page-relative (_utils/base.py:12-62). White pad:
+                        # the stub reads pixel value as text evidence.
+                        resized = resize_preserve(
+                            img, det_cfg.map_size, det_cfg.map_size, symmetric_pad=False, pad_value=255
+                        )
+                        unpad = "asym"
+                    else:
+                        # preserve_aspect_ratio=False: anisotropic stretch;
+                        # map-relative coords ARE page-relative, no unpad
+                        resized = resize_stretch(img, det_cfg.map_size, det_cfg.map_size)
+                        unpad = None
+                    if float_det:
+                        # real-CNN contract: P2-P4 on the unpadded map, one
+                        # forward per page (dynamic spatial dims — unpadded
+                        # maps are content-exact, so pages don't stack),
+                        # then the prob-map D1-D6 chain. Cost emulation runs
+                        # inside the engine's run().
+                        x = preprocess.cast_normalize(
+                            resized, det_cfg.engine.mean, det_cfg.engine.std
+                        )[None]
+                        if det_cfg.engine.input_contract == "float_bchw":
+                            x = np.moveaxis(x, -1, 1)
+                        prob = det.run(x)[0]
+                    else:
+                        det.simulate_model_cost(1)  # no-op unless SPARK_GRAFT_MODEL_ITERS set
+                        prob = None
+                    staged.append((img, resized, prob, unpad))
                 if det_cfg.assume_straight_pages:
-                    boxes = (
-                        detect_post.postprocess_prob_map(
-                            prob, det_cfg.bin_thresh, det_cfg.box_thresh, det_cfg.unclip_ratio
+                    group_boxes = (
+                        detect_post.postprocess_prob_maps(
+                            [prob for _, _, prob, _ in staged],
+                            det_cfg.bin_thresh, det_cfg.box_thresh, det_cfg.unclip_ratio,
                         )
                         if float_det
-                        else detect_post.postprocess_pixel_map(
-                            resized[:, :, 0], det_cfg.bin_thresh, det_cfg.box_thresh, det_cfg.unclip_ratio
+                        else detect_post.postprocess_pixel_maps(
+                            [resized[:, :, 0] for _, resized, _, _ in staged],
+                            det_cfg.bin_thresh, det_cfg.box_thresh, det_cfg.unclip_ratio,
                         )
                     )
-                    if unpad == "asym":
-                        boxes = detect_post.remove_padding(
-                            boxes, img.shape[0], img.shape[1],
-                            preserve_aspect_ratio=True, symmetric_pad=False,
+                for i, ((doc_id, offset, media_ref), (img, resized, prob, unpad)) in enumerate(
+                    zip(keys[g : g + group_pages], staged)
+                ):
+                    if det_cfg.assume_straight_pages:
+                        boxes = group_boxes[i]
+                        if unpad == "asym":
+                            boxes = detect_post.remove_padding(
+                                boxes, img.shape[0], img.shape[1],
+                                preserve_aspect_ratio=True, symmetric_pad=False,
+                            )
+                        for hook in det_cfg.hooks:  # loc_preds hooks (detect.py DetectConfig)
+                            boxes = hook(boxes)
+                        # --- crop + split (G1, P5, W1). Mixed-contract case
+                        # (float detection + uint8 recognition, e.g. the
+                        # db-float arch): the reco stub reads channel 0 only,
+                        # so crops slice a (H, W, 1) view exactly like the
+                        # all-uint8 fast path — 3× less resize/pad traffic.
+                        crop_src = img[:, :, :1] if (img.shape[2] == 3 and not float_reco) else img
+                        crops = (
+                            extract_crops(crop_src, boxes[:, :4].astype(np.float64))
+                            if boxes.shape[0]
+                            else []
                         )
-                    for hook in det_cfg.hooks:  # loc_preds hooks (detect.py DetectConfig)
-                        boxes = hook(boxes)
-                    # --- crop + split (G1, P5, W1). Mixed-contract case
-                    # (float detection + uint8 recognition, e.g. the
-                    # db-float arch): the reco stub reads channel 0 only,
-                    # so crops slice a (H, W, 1) view exactly like the
-                    # all-uint8 fast path — 3× less resize/pad traffic.
-                    crop_src = img[:, :, :1] if (img.shape[2] == 3 and not float_reco) else img
-                    crops = (
-                        extract_crops(crop_src, boxes[:, :4].astype(np.float64))
-                        if boxes.shape[0]
-                        else []
-                    )
-                    polys = None
-                else:
-                    # Rotated-word path (assume_straight_pages=False,
-                    # reference predictor.py:91-129): (N,5,2) polygons,
-                    # G2 rotated crop extract, B7 enclosing-box export.
-                    polys5 = (
-                        rotated_post.postprocess_prob_map_rotated(
-                            prob, det_cfg.bin_thresh, det_cfg.box_thresh, det_cfg.unclip_ratio
+                        polys = None
+                    else:
+                        # Rotated-word path (assume_straight_pages=False,
+                        # reference predictor.py:91-129): (N,5,2) polygons,
+                        # G2 rotated crop extract, B7 enclosing-box export.
+                        polys5 = (
+                            rotated_post.postprocess_prob_map_rotated(
+                                prob, det_cfg.bin_thresh, det_cfg.box_thresh, det_cfg.unclip_ratio
+                            )
+                            if float_det
+                            else rotated_post.postprocess_pixel_map_rotated(
+                                resized[:, :, 0], det_cfg.bin_thresh, det_cfg.box_thresh, det_cfg.unclip_ratio
+                            )
                         )
-                        if float_det
-                        else rotated_post.postprocess_pixel_map_rotated(
-                            resized[:, :, 0], det_cfg.bin_thresh, det_cfg.box_thresh, det_cfg.unclip_ratio
+                        if unpad == "asym":
+                            # P8 rotated branch (reference _utils/base.py
+                            # 12-62, loc_pred[:, :, c] rescale incl. the
+                            # score-row quirk — kernels/rotated_post.py)
+                            polys5 = rotated_post.remove_padding_rotated(
+                                polys5, img.shape[0], img.shape[1],
+                                preserve_aspect_ratio=True, symmetric_pad=False,
+                            )
+                        for hook in det_cfg.hooks:
+                            polys5 = hook(polys5)
+                        polys = polys5[:, :4, :].astype(np.float64)
+                        scores = polys5[:, 4, 1].astype(np.float64)  # detach_scores, geometry.py:119-122
+                        crop_src = img[:, :, :1] if (img.shape[2] == 3 and not float_reco) else img
+                        crops = extract_rcrops_nearest(crop_src, polys) if polys.shape[0] else []
+                        # B7 straight-box export carried in the output cols
+                        boxes = (
+                            np.concatenate([rotated_post.polys_to_straight(polys), scores[:, None]], axis=1)
+                            if polys.shape[0]
+                            else np.zeros((0, 5), dtype=np.float64)
                         )
-                    )
-                    if unpad == "asym":
-                        # P8 rotated branch (reference _utils/base.py
-                        # 12-62, loc_pred[:, :, c] rescale incl. the
-                        # score-row quirk — kernels/rotated_post.py)
-                        polys5 = rotated_post.remove_padding_rotated(
-                            polys5, img.shape[0], img.shape[1],
-                            preserve_aspect_ratio=True, symmetric_pad=False,
-                        )
-                    for hook in det_cfg.hooks:
-                        polys5 = hook(polys5)
-                    polys = polys5[:, :4, :].astype(np.float64)
-                    scores = polys5[:, 4, 1].astype(np.float64)  # detach_scores, geometry.py:119-122
-                    crop_src = img[:, :, :1] if (img.shape[2] == 3 and not float_reco) else img
-                    crops = extract_rcrops_nearest(crop_src, polys) if polys.shape[0] else []
-                    # B7 straight-box export carried in the output cols
-                    boxes = (
-                        np.concatenate([rotated_post.polys_to_straight(polys), scores[:, None]], axis=1)
-                        if polys.shape[0]
-                        else np.zeros((0, 5), dtype=np.float64)
-                    )
-                keep = [i for i, c in enumerate(crops) if c.shape[0] > 0 and c.shape[1] > 0]
-                crops = [crops[i] for i in keep]
-                boxes = boxes[keep] if keep else boxes[:0]
-                if polys is not None:
-                    polys = polys[keep] if keep else polys[:0]
-                m_boxes += int(boxes.shape[0])
-                meta = {
-                    "key": (doc_id, int(offset), media_ref),
-                    "boxes": boxes,
-                    "polys": polys,
-                }
-                page_meta.append(meta)
-                if polys is not None and crops and not det_cfg.disable_crop_orientation:
-                    pending.append((meta, crops))  # classify across the chunk below
-                else:
-                    _finalize(meta, crops)
+                    keep = [i for i, c in enumerate(crops) if c.shape[0] > 0 and c.shape[1] > 0]
+                    crops = [crops[i] for i in keep]
+                    boxes = boxes[keep] if keep else boxes[:0]
+                    if polys is not None:
+                        polys = polys[keep] if keep else polys[:0]
+                    m_boxes += int(boxes.shape[0])
+                    meta = {
+                        "key": (doc_id, int(offset), media_ref),
+                        "boxes": boxes,
+                        "polys": polys,
+                    }
+                    page_meta.append(meta)
+                    if polys is not None and crops and not det_cfg.disable_crop_orientation:
+                        pending.append((meta, crops))  # classify across the chunk below
+                    else:
+                        _finalize(meta, crops)
 
             if pending:
                 # G3 crop rectification (reference enables the crop-

@@ -48,6 +48,29 @@ def test_video_container_roundtrip_and_lazy_demux():
         list(M.iter_video_frames(b"not a container"))
 
 
+def test_peek_dims_reads_every_frame_kind_and_rejects_bad_headers():
+    """Frame dimensions come from the codec header of every frame kind;
+    a wrong magic or a header cut short fails loudly in one place, for
+    the demuxer's dimension read and for decode_image alike."""
+    rgb = np.arange(6 * 9 * 3, dtype=np.uint8).reshape(6, 9, 3)
+    gray = np.broadcast_to(rgb[:, :, :1], (6, 9, 3))
+    blobs = [
+        imaging.encode_image(rgb),
+        imaging.encode_image(gray),
+        imaging.encode_image_gray_scaled(rgb[:, :, 0], 3),
+        imaging.MAGIC + (6).to_bytes(4, "little") + (9).to_bytes(4, "little") + rgb.tobytes(),
+    ]
+    assert [b[:5] for b in blobs] == [imaging.MAGIC_Z, imaging.MAGIC_G, imaging.MAGIC_S, imaging.MAGIC]
+    for blob in blobs:
+        assert imaging.peek_dims(blob) == imaging.decode_image(blob).shape[:2]
+    wrong = b"PNG\r\n" + blobs[0][5:]
+    for bad in (wrong, blobs[0][:12], blobs[2][:16], b"NP"):
+        with pytest.raises(ValueError, match="bad image magic"):
+            imaging.peek_dims(bad)
+        with pytest.raises(ValueError, match="bad image magic"):
+            imaging.decode_image(bad)
+
+
 def test_sample_video_frames_every_n(spark):
     docs = spark.createDataFrame(
         pd.DataFrame({"doc_id": [1], "text": [" ".join(f"w{i}" for i in range(125))]})

@@ -12,6 +12,7 @@ without stage changes (see engine.EngineConfig.input_contract).
 
 from __future__ import annotations
 
+import functools
 import math
 
 import numpy as np
@@ -58,22 +59,63 @@ def normalize(x: np.ndarray, mean=MEAN_DEFAULT, std=STD_DEFAULT) -> np.ndarray:
 
 
 def cast_normalize(x: np.ndarray, mean=MEAN_DEFAULT, std=STD_DEFAULT) -> np.ndarray:
-    """``normalize(cast_scale(x))`` in ONE output buffer: the identical
-    IEEE op sequence (/255 cast, broadcast -mean, broadcast /std)
-    applied in place, so the values are bit-equal to the composed P2∘P3
-    while the three intermediate full-frame allocations the composition
-    pays (each a page-sized float32 tensor in the per-page model loop)
-    disappear. Pinned equal by test_preprocess_registry."""
-    if x.dtype == np.uint8:
-        out = x.astype(np.float32)
-        out /= np.float32(255.0)
-    else:
+    """``normalize(cast_scale(x))`` in ONE output buffer, bit-equal to
+    the composed P2∘P3 (pinned by tests/test_cast_normalize_lut.py).
+
+    uint8 input goes through a table: a uint8 channel value v can only
+    map to 256 outputs, and ``_channel_tables`` computes each one with
+    the composition's own float32 op sequence (cast, /255, -mean_c,
+    /std_c). IEEE ops are deterministic, so the same ops on the same v
+    give the same bits whether they run once per table entry or once
+    per pixel; one ``take`` per channel then fills the output, where
+    the arithmetic made four full float32 passes over the frame.
+    float32 input runs the arithmetic (copy, -mean, /std). Shapes that
+    mean/std do not broadcast into raise ValueError on both branches;
+    for uint8, mean/std hold one value per channel or one for all.
+    """
+    mean = np.asarray(mean, dtype=np.float32)
+    std = np.asarray(std, dtype=np.float32)
+    if x.dtype != np.uint8:
         if x.dtype != np.float32:
             raise TypeError("cast_normalize expects uint8 or float32")
         out = x.copy()
-    out -= np.asarray(mean, dtype=np.float32)
-    out /= np.asarray(std, dtype=np.float32)
+        out -= mean
+        out /= std
+        return out
+    shape = np.broadcast_shapes(x.shape, mean.shape, std.shape)
+    if shape != x.shape:
+        raise ValueError(
+            f"non-broadcastable output operand with shape {x.shape} "
+            f"doesn't match the broadcast shape {shape}"
+        )
+    if any(p.size != 1 and p.shape[-1] != p.size for p in (mean, std)):
+        # e.g. a (3, 1) mean would vary along rows, not channels
+        raise ValueError("cast_normalize takes one mean/std value per channel")
+    n_ch = x.shape[-1] if x.ndim else 1
+    tables = _channel_tables(
+        tuple(np.broadcast_to(mean.ravel(), (n_ch,)).tolist()),
+        tuple(np.broadcast_to(std.ravel(), (n_ch,)).tolist()),
+    )
+    out = np.empty(x.shape, dtype=np.float32)
+    xv, ov = np.atleast_1d(x, out)
+    for c in range(n_ch):
+        # uint8 indices are always in range, so "clip" only skips the
+        # bounds check. The take fills a contiguous plane, then one
+        # strided copy interleaves it; take(out=<strided view>) measured
+        # about twice as slow per page map.
+        ov[..., c] = tables[c].take(xv[..., c], mode="clip")
     return out
+
+
+@functools.lru_cache(maxsize=16)
+def _channel_tables(mean: tuple[float, ...], std: tuple[float, ...]) -> np.ndarray:
+    """Read-only (C, 256) float32 table: row c holds
+    ``((v as float32) / 255 - mean[c]) / std[c]`` for v = 0..255."""
+    tab = np.arange(256, dtype=np.uint8).astype(np.float32)[None, :]
+    tab = tab / np.float32(255.0) - np.asarray(mean, dtype=np.float32)[:, None]
+    tab /= np.asarray(std, dtype=np.float32)[:, None]
+    tab.flags.writeable = False
+    return tab
 
 
 def batch_inputs(samples: list[np.ndarray], batch_size: int) -> list[np.ndarray]:

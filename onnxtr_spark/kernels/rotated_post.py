@@ -92,11 +92,6 @@ def _hull_points(points: np.ndarray) -> list[tuple[float, float]]:
     return _half(pts)[:-1] + _half(pts[::-1])[:-1]
 
 
-def convex_hull(points: np.ndarray) -> np.ndarray:
-    """Monotone-chain convex hull; returns hull vertices in CCW order."""
-    return np.asarray(_hull_points(points), dtype=np.float64)
-
-
 def min_area_rect(points: np.ndarray) -> tuple[float, float, float, float, float]:
     """Minimum-area oriented bounding rectangle (cv2.minAreaRect analog).
 
@@ -465,7 +460,7 @@ def unclip_rotated(
 
     Plain-float corner math + ``order_points`` semantics inlined on the
     4 tuples (this runs once per component per page — same hot-path
-    rationale as convex_hull; semantics pinned equal to
+    rationale as _hull_points; semantics pinned equal to
     order_points(box_points(...)) by test).
     """
     return np.asarray(_unclip_pts(cx, cy, w, h, angle_rad, unclip_ratio), dtype=np.float64)

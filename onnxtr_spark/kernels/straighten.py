@@ -3,10 +3,11 @@ contours (reference models/_utils.py:33-151 ``estimate_orientation``).
 
 Re-derivation without cv2:
 
-- contours → 8-connected components as row runs (rotated_post.
-  component_runs); contour area → the component's pixel count (a solid
+- contours → 8-connected components as row runs (detect_post.
+  label_runs); contour area → the component's pixel count (a solid
   blob's cv2.contourArea is the same quantity up to the boundary ring);
-- cv2.minAreaRect → rotating calipers (rotated_post.min_area_rect),
+- cv2.minAreaRect → rotating calipers (rotated_post.
+  _rects_for_components),
   with the reference's version-proof normalization: force w to be the
   long side (w < h → swap + angle−90), then fold the angle into
   (−90, 90] (reference _utils.py:96-106);
@@ -37,8 +38,6 @@ from statistics import median_low
 
 import numpy as np
 
-from onnxtr_spark.kernels.rotated_post import component_runs, min_area_rect
-
 
 def binary_dilate_rect(bitmap: np.ndarray, kx: int, ky: int) -> np.ndarray:
     """Binary dilation with a kx×ky rect kernel, separable sliding-max
@@ -67,33 +66,15 @@ def binary_dilate_rect(bitmap: np.ndarray, kx: int, ky: int) -> np.ndarray:
     return out
 
 
-def _component_rect_stats(runs: list[tuple[int, int, int]]) -> tuple[int, float, float, float]:
-    """(pixel_area, w_long, h_short, major_axis_angle_deg) of one
-    component — min-area rect over the run endpoints, normalized per
-    the reference convention (w is the long side, angle in (−90, 90])."""
-    area = sum(xe - xs for _, xs, xe in runs)
-    pts = [(float(x), float(y)) for y, xs, xe in runs for x in (xs, xe - 1)]
-    _, _, w, h, a = min_area_rect(pts)
-    deg = math.degrees(a)
-    if w < h:
-        w, h = h, w
-        deg -= 90
-    while deg <= -90:
-        deg += 180
-    while deg > 90:
-        deg -= 180
-    return area, w, h, deg
-
-
 def _component_stats_arrays(work: np.ndarray, lower_area: int) -> list[tuple[float, float, float, float]]:
     """(ratio, w_long, h_short, angle_deg) per component with
-    area > lower_area, in raster component order — the array-native
-    equivalent of looping ``_component_rect_stats`` over
-    ``component_runs`` (bit-identical: areas are exact integer
-    reduceats; the min-area rect consumes each row's (min-x, max-x)
-    endpoints, whose hull — and hence rect — equals the full
-    endpoint-set hull because interior run endpoints are never strict
-    hull vertices; the normalization math is unchanged)."""
+    area > lower_area, in raster component order. Areas are exact
+    integer reduceats over the component's runs; the min-area rect
+    (``rotated_post._rects_for_components``) consumes each row's
+    (min-x, max-x) endpoints, whose hull — and hence rect — equals the
+    full run-endpoint hull because interior run endpoints are never
+    strict hull vertices. The rect is then normalized as the module
+    docstring describes."""
     from onnxtr_spark.kernels.detect_post import label_runs
 
     ys, xs, xe, lab = label_runs(work)

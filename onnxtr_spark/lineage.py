@@ -17,6 +17,19 @@ per-partition lineage + metrics. Strategy (SURVEY.md §7 step 7):
   (overwrite makes re-processing idempotent).
 - resume: groups present in the lineage table are skipped.
 
+Jobs per group, in order (``tests/test_lineage_resume.py`` pins the
+count):
+
+1. one pre-count aggregate over the group's docs gives ``n_docs`` and
+   ``n_pages`` (the docs' media spans);
+2. the OCR write of the group's spans (an empty group skips it). It
+   carries an ``Observation`` of the written rows, which gives
+   ``n_spans`` and ``n_words`` (spans with a media_ref) without reading
+   the group back;
+3. the partition-metrics append, then the lineage append. Both one-off
+   row sets are built from Arrow tables, so Spark reads them in the JVM
+   and the commits start no Python worker.
+
 A driver-side loop over groups (not ``collect()`` of data — only of the
 already-done group ids) is the deliberate checkpoint grain: group count
 is small and fixed (e.g. 256 at production scale), each group is a full
@@ -50,8 +63,9 @@ import time
 import uuid
 
 from pyspark import AccumulatorParam
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from onnxtr_spark.stages.pipeline import extract_spans
 
@@ -125,42 +139,59 @@ def run_checkpointed(
             continue
         t0 = time.time()
         gdocs = grouped.where(F.col("group") == g).drop("group")
-        n_docs = gdocs.count()
+        pre = gdocs.agg(
+            F.count("*").alias("docs"),
+            # a doc's pages are its media spans (array_size: NULL, not
+            # -1, for a doc without spans, whatever sizeOfNull says)
+            F.coalesce(
+                F.sum(F.array_size(F.filter("spans", lambda s: s["kind"] == "media"))), F.lit(0)
+            ).alias("pages"),
+        ).collect()[0]
+        n_docs = int(pre["docs"])
+        n_pages = int(pre["pages"])
         n_spans = 0
-        n_pages = 0
         n_words = 0
         acc = metrics_accumulator(spark) if partition_metrics else None
         if n_docs:
             kw = {"det_cfg": det_cfg} if det_cfg is not None else {}
-            flat = extract_spans(gdocs, media, metrics_acc=acc, **kw).withColumn("group", F.lit(g))
-            flat.write.mode("overwrite").partitionBy("group").parquet(f"{out_path}/spans")
-            written = spark.read.parquet(f"{out_path}/spans").where(F.col("group") == g)
-            counts = written.agg(
+            obs = Observation()
+            flat = extract_spans(gdocs, media, metrics_acc=acc, **kw).observe(
+                obs,
                 F.count("*").alias("spans"),
                 # OCR'd word spans carry their source page's media_ref
                 F.sum(F.when(F.col("media_ref") != "", 1).otherwise(0)).alias("words"),
-            ).collect()[0]
+            )
+            flat.withColumn("group", F.lit(g)).write.mode("overwrite").partitionBy("group").parquet(
+                f"{out_path}/spans"
+            )
+            counts = obs.get
             n_spans = int(counts["spans"])
             n_words = int(counts["words"] or 0)
-            n_pages = (
-                gdocs.select(F.explode("spans").alias("s"))
-                .where(F.col("s.kind") == "media")
-                .count()
-            )
         if partition_metrics and acc is not None and acc.value:
             rows = [(run_id, g, *tup) for tup in acc.value]
-            spark.createDataFrame(rows, schema=PARTITION_METRICS_SCHEMA).write.mode("append").parquet(
+            _local_frame(spark, rows, PARTITION_METRICS_SCHEMA).write.mode("append").parquet(
                 f"{out_path}/partition_metrics"
             )
-        lineage_row = spark.createDataFrame(
+        lineage_row = _local_frame(
+            spark,
             [(run_id, g, n_docs, n_pages, n_words, n_spans, (time.time() - t0) * 1000.0, time.time())],
-            schema=LINEAGE_SCHEMA,
+            LINEAGE_SCHEMA,
         )
         lineage_row.write.mode("append").parquet(f"{out_path}/lineage")
         processed.append(g)
         if fail_after is not None and len(processed) >= fail_after:
             break
     return processed
+
+
+def _local_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
+    """A few driver-side rows as a DataFrame built from an Arrow table:
+    Spark reads the batch in the JVM, so writing it starts no Python
+    worker (a DataFrame from a Python list does)."""
+    import pyarrow as pa
+
+    names = StructType.fromDDL(schema).fieldNames()
+    return spark.createDataFrame(pa.table(list(zip(*rows)), names=names), schema=schema)
 
 
 def read_spans(spark: SparkSession, out_path: str) -> DataFrame:

@@ -86,57 +86,49 @@ class StubSynthRasterizer:
     def __init__(self, cfg: RasterizerConfig):
         self.factor = max(1, int(round(cfg.scale)))
 
-    def rasterize(self, blob: bytes) -> list[np.ndarray]:
+    def _pages(self, blob: bytes) -> Iterator[np.ndarray]:
+        """The 1× page per PDF page: its content-stream text in lines of
+        ``WORDS_PER_LINE`` words, rendered by ``imaging.render_page``.
+        Both render paths scale one grayscale plane, so a page that is
+        not a stride-0 broadcast of one raises."""
         from onnxtr_spark import imaging
         from onnxtr_spark.sources.pdf import decode_pdf_texts
 
-        pages = []
         for text in decode_pdf_texts(blob):
             words = [w for w in text.split() if w]
             lines = [words[i : i + WORDS_PER_LINE] for i in range(0, len(words), WORDS_PER_LINE)] or [[]]
             img = imaging.render_page(lines)
-            if self.factor > 1:
+            if img.strides[2] != 0:
+                raise ValueError("render_page returned a page that is not a grayscale broadcast")
+            yield img
+
+    def rasterize(self, blob: bytes) -> list[np.ndarray]:
+        pages = []
+        f = self.factor
+        for img in self._pages(blob):
+            if f > 1:
                 # np.repeat == kron with a ones block (each pixel tiles
-                # into an f×f block) at ~10x less cost; rendered pages
-                # are grayscale (3 equal channels), so upscale ONE plane
-                # and re-broadcast — encode_image stores that plane
-                f = self.factor
-                ch0 = img[:, :, 0]
-                if (img[:, :, 1] == ch0).all() and (img[:, :, 2] == ch0).all():
-                    up0 = np.repeat(np.repeat(ch0, f, axis=0), f, axis=1)
-                    img = np.broadcast_to(up0[:, :, None], up0.shape + (3,))
-                else:
-                    img = np.repeat(np.repeat(img, f, axis=0), f, axis=1)
+                # into an f×f block) at ~10x less cost; upscale the one
+                # plane and re-broadcast it
+                up0 = np.repeat(np.repeat(img[:, :, 0], f, axis=0), f, axis=1)
+                img = np.broadcast_to(up0[:, :, None], up0.shape + (3,))
             pages.append(img)
         return pages
 
     def rasterize_encoded(self, blob: bytes) -> list[tuple[bytes, int, int]]:
         """(png, height, width) per page with the upscale elided: the
-        2× replication is pure pixel repetition, so the encoder stores
+        f× replication is pure pixel repetition, so the encoder stores
         the 1× plane + factor (imaging.encode_image_gray_scaled) and
         ``decode_image`` reproduces the exact full-resolution frame —
-        compress/decompress and the upscale materialization drop f²×.
-        Pages whose channels differ (never produced by the synth
-        renderer, kept for safety) fall back to the full-frame path."""
+        compress/decompress and the upscale materialization drop f²×."""
         from onnxtr_spark import imaging
-        from onnxtr_spark.sources.pdf import decode_pdf_texts
 
-        out = []
         f = self.factor
-        for text in decode_pdf_texts(blob):
-            words = [w for w in text.split() if w]
-            lines = [words[i : i + WORDS_PER_LINE] for i in range(0, len(words), WORDS_PER_LINE)] or [[]]
-            img = imaging.render_page(lines)
-            ch0 = img[:, :, 0]
-            if f > 1 and not ((img[:, :, 1] == ch0).all() and (img[:, :, 2] == ch0).all()):
-                up = np.repeat(np.repeat(img, f, axis=0), f, axis=1)
-                out.append((imaging.encode_image(up), up.shape[0], up.shape[1]))
-                continue
-            out.append(
-                (imaging.encode_image_gray_scaled(np.ascontiguousarray(ch0), f),
-                 img.shape[0] * f, img.shape[1] * f)
-            )
-        return out
+        return [
+            (imaging.encode_image_gray_scaled(np.ascontiguousarray(img[:, :, 0]), f),
+             img.shape[0] * f, img.shape[1] * f)
+            for img in self._pages(blob)
+        ]
 
 
 register_rasterizer("stub_synth", StubSynthRasterizer)

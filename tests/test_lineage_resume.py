@@ -152,3 +152,69 @@ def test_lineage_gated_read_never_sees_uncommitted_group(spark, corpus, tmp_path
     gated = spark.read.parquet(f"{out}/spans").where(F.col("group").isin(list(committed)))
     raw = spark.read.parquet(f"{out}/spans")
     assert gated.count() < raw.count()  # uncommitted group's rows filtered
+
+
+# Spark jobs one group starts (AQE on, as in the session fixture): an
+# empty group runs the pre-count and the lineage commit; a non-empty
+# one adds the OCR write (its query stages) and the partition-metrics
+# commit. Another per-group count or read-back job fails the pin.
+JOBS_EMPTY_GROUP = 2
+JOBS_GROUP = 8
+
+
+def test_group_counters_and_job_count(spark, corpus, tmp_path, monkeypatch):
+    """The lineage counters equal the derivations the job used to run
+    as separate jobs (doc count, media-span explode count, read-back of
+    the written group), and each group starts a pinned number of Spark
+    jobs, told apart by a job group switched after each lineage commit."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from onnxtr_spark import lineage
+
+    docs, media = corpus
+    out = str(tmp_path / "out")
+    sc = spark.sparkContext
+    tag = f"lineage-jobs-{tmp_path.name}"
+    committed = [0]
+
+    orig_completed = lineage.completed_groups
+    orig_parquet = DataFrameWriter.parquet
+
+    def completed(spark_, path):
+        sc.setJobGroup(f"{tag}-resume", "resume read")
+        done = orig_completed(spark_, path)
+        sc.setJobGroup(f"{tag}-0", "group 0")
+        return done
+
+    def parquet(writer, path, *args, **kwargs):
+        ret = orig_parquet(writer, path, *args, **kwargs)
+        if path.endswith("/lineage"):
+            committed[0] += 1
+            sc.setJobGroup(f"{tag}-{committed[0]}", f"group {committed[0]}")
+        return ret
+
+    monkeypatch.setattr(lineage, "completed_groups", completed)
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    try:
+        assert run_checkpointed(spark, docs, media, out, n_groups=4) == [0, 1, 2, 3]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    monkeypatch.undo()
+
+    lin = spark.read.parquet(f"{out}/lineage").toPandas().set_index("group").sort_index()
+    grouped = lineage._with_group(docs, 4)
+    spans = spark.read.parquet(f"{out}/spans")
+    tracker = sc.statusTracker()
+    assert (lin["n_docs"] == 0).any() and (lin["n_docs"] > 0).any()
+    for g, row in lin.iterrows():
+        gdocs = grouped.where(F.col("group") == g).drop("group")
+        written = spans.where(F.col("group") == g)
+        want = {
+            "n_docs": gdocs.count(),
+            "n_pages": gdocs.select(F.explode("spans").alias("s")).where(F.col("s.kind") == "media").count(),
+            "n_words": written.where(F.col("media_ref") != "").count(),
+            "n_spans": written.count(),
+        }
+        assert {k: int(row[k]) for k in want} == want, g
+        jobs = tracker.getJobIdsForGroup(f"{tag}-{g}")
+        assert len(jobs) == (JOBS_GROUP if want["n_docs"] else JOBS_EMPTY_GROUP), (g, sorted(jobs))

@@ -21,9 +21,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from onnxtr_spark import imaging
 from onnxtr_spark.engine import ART_INPUT, ARTEFACT_LABELS, get_artefact_engine
 from onnxtr_spark.kernels.nms import nms_boxes
+from onnxtr_spark.stages.page_path import decode
 
 ARTEFACT_SCHEMA = (
     "media_ref string, label string, confidence double, "
@@ -49,7 +49,7 @@ def detect_artefacts(
                 continue
             out: list[dict] = []
             for media_ref, png in zip(pdf["media_ref"], pdf["png"]):
-                img = imaging.decode_image(png)
+                img = decode(png)
                 org_height, org_width = img.shape[:2]
                 width_scale = org_width / ART_INPUT
                 height_scale = org_height / ART_INPUT

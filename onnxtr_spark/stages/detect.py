@@ -1,9 +1,12 @@
 """Detect stage: page images → relative word boxes.
 
-One ``mapInPandas`` pass fusing the reference's detection predictor
-(onnxtr/models/detection/predictor/base.py:35-67): decode → P1 resize
-with aspect-preserving symmetric pad → I2 model run (batched) → sigmoid
-prob map → D1-D6 postprocess → P8 padding removal.
+One ``mapInPandas`` pass: the page layer sequence (stages/page_path.py)
+cut after the loc_preds hooks — the reference's detection predictor
+(onnxtr/models/detection/predictor/base.py:35-67): decode → straighten
+if configured → P1 map resize → P2-P4 + model run (or the stub's uint8
+fold) → D1-D6 postprocess, one stacked call per group of pages → P8
+padding removal → hooks. Maps are per page and content-exact, so the
+boxes equal the ones the fused stage crops from.
 
 Input columns : doc_id, offset, media_ref, png, height, width
 Output columns: doc_id, offset, media_ref, png, height, width,
@@ -11,7 +14,9 @@ Output columns: doc_id, offset, media_ref, png, height, width,
 
 Page bytes are passed through so the recognize stage can crop without a
 second join against the media table (SURVEY.md §2.5 G1: the det→reco
-join is explode + co-resident slicing, never a shuffle join).
+join is explode + co-resident slicing, never a shuffle join). With
+``straighten_pages`` the boxes are relative to the straightened page,
+so that page replaces the stored one (and its height/width).
 
 Scale notes:
 - pages are embarrassingly parallel; upstream salt-repartition by
@@ -32,8 +37,9 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from onnxtr_spark import imaging
-from onnxtr_spark.engine import EngineConfig, get_detection_engine
+from onnxtr_spark.engine import EngineConfig
 from onnxtr_spark.kernels import detect_post
+from onnxtr_spark.stages.page_path import GROUP_PAGES, PagePath, check_contracts
 
 DETECT_SCHEMA = (
     "doc_id string, offset int, media_ref string, png binary, height int, width int, "
@@ -72,30 +78,38 @@ class DetectConfig:
     unclip_ratio: float = detect_post.UNCLIP_RATIO
     # The reference Resize contract (transforms/base.py:41-86): keep
     # aspect ratio and pad (symmetrically or bottom/right), or stretch
-    # anisotropically; remove_padding inverts the pad on the emitted
-    # relative boxes (_utils/base.py:12-62). All four combinations are
-    # span-equivalent on the same pages — only the map geometry differs.
+    # anisotropically. Maps are per page, so the symmetric default needs
+    # no pad at all: the map is the content-exact isotropic resize and
+    # P8 removal is the identity. Bottom/right pad is real, and
+    # remove_padding inverts it on the emitted relative boxes
+    # (_utils/base.py:12-62); a stretched map is page-relative as is.
+    # All four combinations are span-equivalent on the same pages — only
+    # the map geometry differs.
     preserve_aspect_ratio: bool = True
     symmetric_pad: bool = True
-    batch_size: int = 2  # reference det batch size (models/zoo.py:22)
+    # Mirrors the reference signature (det batch size, models/zoo.py:22)
+    # and changes nothing: maps are per page and content-exact, so each
+    # page runs its own forward.
+    batch_size: int = 2
     # loc_preds hooks (reference OCRPredictor.add_hook,
     # models/predictor/base.py:77,204-210, applied predictor.py:112-113):
-    # callables (N,5) -> (N,5) applied to each page's boxes after
-    # postprocess+unpad, inside the executor stage. Must be picklable
-    # (top-level functions).
+    # callables (N,5) -> (N,5) — (N,5,2) polygons on the rotated path —
+    # applied to each page's boxes after postprocess+unpad, inside the
+    # executor stage. Must be picklable (top-level functions).
     hooks: tuple = ()
     # I5/G4 analog (reference straighten_pages flag, models/zoo.py:19-27;
     # predictor/base.py:102-124): classify page orientation and rectify
-    # with rot90 before detection. Off by default like the reference.
+    # with rot90, then undo the residual skew (estimate_orientation +
+    # rotate) before detection. Off by default like the reference.
     straighten_pages: bool = False
     # Rotated-word path (reference assume_straight_pages flag,
     # models/zoo.py:19-27): when False, detection emits (N,4,2) polygons
     # (kernels/rotated_post.py), recognition crops along them
     # (kernels/rotated.extract_rcrops_nearest), the builder uses the
     # rotated sort/line kernels, and exported geometry is the B7
-    # enclosing straight box (models/builder.py:322-326). Wired in the
-    # fused stage (stages/fused.py); the standalone detect stage is
-    # straight-only (its output schema carries straight boxes).
+    # enclosing straight box (models/builder.py:322-326). Runs in the
+    # fused stage; detect_pages raises NotImplementedError for it (its
+    # output schema carries straight boxes).
     assume_straight_pages: bool = True
     # G3 crop-orientation rectification inside the rotated path
     # (reference disable_crop_orientation flag, models/zoo.py:19-27 —
@@ -103,10 +117,12 @@ class DetectConfig:
     disable_crop_orientation: bool = False
     # Model registry / EngineConfig analog (reference models/engine.py:
     # 33-90 + factory/hub.py): which session the stage resolves. The
-    # default stub consumes raw uint8 pages (the folded fast path); a
-    # float-contract engine (input_contract="float_bchw"/"float_bhwc")
-    # gets the REAL P1-P4 preprocess (kernels/preprocess.py) ahead of
-    # the session — a real ONNX model drops in via config only.
+    # default stub is affine in pixel value and folds into the uint8
+    # postprocess (the fast path); any other uint8 session runs on the
+    # resized map, and a float-contract engine
+    # (input_contract="float_bchw"/"float_bhwc") gets the REAL P2-P4
+    # preprocess (kernels/preprocess.py) ahead of the session — a real
+    # ONNX model drops in via config only.
     engine: EngineConfig = EngineConfig()
     # Orientation-classifier engine (reference clf_engine_cfg,
     # models/zoo.py:79/139): resolves the I5/G3 classifier session; None
@@ -116,64 +132,28 @@ class DetectConfig:
 
 def detect_pages(pages: DataFrame, cfg: DetectConfig = DetectConfig()) -> DataFrame:
     """Run detection over a pages DataFrame."""
-    map_size = cfg.map_size
-    bin_thresh, box_thresh, unclip = cfg.bin_thresh, cfg.box_thresh, cfg.unclip_ratio
-    batch_size = cfg.batch_size
+    if not cfg.assume_straight_pages:
+        raise NotImplementedError(
+            "detect_pages emits straight (N, 5) boxes; the rotated polygon path "
+            "runs in fused.detect_recognize_pages (ocr_predictor(assume_straight_pages=False))"
+        )
+    check_contracts(cfg.engine)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from onnxtr_spark.kernels.geometry import resize_preserve
-
-        engine = get_detection_engine(cfg.engine)
-        float_path = cfg.engine.input_contract.startswith("float")
+        path = PagePath(cfg)
         for pdf in batches:
             if pdf.empty:
                 continue
-            out_boxes: list[list[list[float]]] = []
-            n = len(pdf)
-            # I1 micro-batching: fixed-size model batches inside the Arrow chunk
-            # (reference PreProcessor.batch_inputs, models/preprocessor/base.py:44-59).
-            pngs, heights, widths = pdf["png"].tolist(), pdf["height"].tolist(), pdf["width"].tolist()
-            for start in range(0, n, batch_size):
-                if float_path:
-                    # real-CNN contract: P1-P4 preprocess ahead of the session
-                    from onnxtr_spark.kernels.preprocess import preprocess_samples
-
-                    fmt = "BCHW" if cfg.engine.input_contract == "float_bchw" else "BHWC"
-                    batch = preprocess_samples(
-                        [np.asarray(imaging.decode_image(b)) for b in pngs[start : start + batch_size]],
-                        map_size, map_size, batch_size,
-                        mean=cfg.engine.mean, std=cfg.engine.std, output_format=fmt,
-                        pad_value=255,
-                        symmetric_pad=cfg.symmetric_pad,
-                        preserve_aspect_ratio=cfg.preserve_aspect_ratio,
-                    )[0]
-                elif cfg.preserve_aspect_ratio:
-                    batch = np.stack([
-                        resize_preserve(imaging.decode_image(b), map_size, map_size, cfg.symmetric_pad, 255)
-                        for b in pngs[start : start + batch_size]
-                    ])
-                else:
-                    from onnxtr_spark.kernels.geometry import resize_stretch
-
-                    batch = np.stack([
-                        resize_stretch(imaging.decode_image(b), map_size, map_size)
-                        for b in pngs[start : start + batch_size]
-                    ])
-                prob_maps = engine.run(batch)  # B×H×W float32 in [0,1]
-                for i in range(prob_maps.shape[0]):
-                    boxes = detect_post.postprocess_prob_map(
-                        prob_maps[i], bin_thresh, box_thresh, unclip, morph_open=True
-                    )
-                    boxes = detect_post.remove_padding(
-                        boxes, int(heights[start + i]), int(widths[start + i]),
-                        preserve_aspect_ratio=cfg.preserve_aspect_ratio,
-                        symmetric_pad=cfg.symmetric_pad,
-                    )
-                    for hook in cfg.hooks:
-                        boxes = hook(boxes)
-                    out_boxes.append([b.tolist() for b in boxes.astype(np.float64)])
             res = pdf[["doc_id", "offset", "media_ref", "png", "height", "width"]].copy()
-            res["boxes"] = out_boxes
+            pngs, boxes = res["png"].tolist(), []
+            for g, imgs, locs in path.detect(pngs, GROUP_PAGES):
+                if cfg.straighten_pages:
+                    pngs[g : g + len(imgs)] = [imaging.encode_image(img) for img in imgs]
+                boxes.extend(loc.astype(np.float64).tolist() for loc in locs)
+            if cfg.straighten_pages:
+                res["png"] = pngs
+                res["height"], res["width"] = zip(*(imaging.peek_dims(p) for p in pngs))
+            res["boxes"] = boxes
             yield res
 
     return pages.mapInPandas(run, schema=DETECT_SCHEMA)

@@ -1,16 +1,15 @@
 """Fused detect+recognize stage: page images → ordered word rows.
 
-One ``mapInPandas`` covering both model stages. Rationale (measured, see
-BASELINE.md): page blobs are the dominant data volume; keeping detect
-and recognize as separate Python stages ships every page across the
-JVM↔Python Arrow boundary twice more than necessary. Fusing them means
-a page's bytes are decoded exactly once per pipeline and never
-re-serialized. The standalone ``detect_pages``/``recognize_pages``
-stages remain the public per-operator API (mirroring the reference's
-standalone detection_predictor / recognition_predictor entry points);
-this fused stage is what the end-to-end pipeline uses — the same
-operator-fusion decision the reference makes by running both models in
-one process (models/predictor/predictor.py:72-154).
+One ``mapInPandas`` running the whole page layer sequence
+(stages/page_path.py) — the operator-fusion decision the reference
+makes by running both models in one process
+(models/predictor/predictor.py:72-154). Rationale (measured, see
+BASELINE.md): page blobs are the dominant data volume; chaining the
+standalone ``detect_pages``/``recognize_pages`` stages ships every page
+across the JVM↔Python Arrow boundary twice more than necessary. Fusing
+them means a page's bytes are decoded exactly once per pipeline and
+never re-serialized. The standalone stages compose the same layers, so
+they return the same rows.
 
 Recognition model batches are flattened across all pages in the Arrow
 chunk (reference flattens across pages too, predictor.py:132).
@@ -25,48 +24,21 @@ before dilation and labeling — kernels/detect_post.py), so every page
 gets exactly the boxes a one-page call gives it. The group's crops are
 cut, and its pages and maps dropped, before the next group starts. The
 rotated path has no group kernel and runs page at a time (groups of
-one).
+one); its crops are classified (G3) in one batch per chunk.
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from onnxtr_spark import imaging
-from onnxtr_spark.engine import get_detection_engine, get_orientation_engine, get_recognition_engine
-from onnxtr_spark.kernels import detect_post, preprocess, rotated_post, split_merge
-from onnxtr_spark.kernels.straighten import estimate_orientation
-from onnxtr_spark.kernels.builder import word_order, word_order_blocks
-from onnxtr_spark.kernels.ctc import attention_decode, ctc_best_path
-from onnxtr_spark.kernels.geometry import (
-    extract_crops,
-    resize_preserve,
-    resize_stretch,
-    resize_unpadded,
-)
-from onnxtr_spark.kernels.rotated import (
-    extract_rcrops_nearest,
-    rectify_crops,
-    rectify_loc_preds,
-    word_order_rotated,
-)
 from onnxtr_spark.stages.detect import DetectConfig
+from onnxtr_spark.stages.page_path import GROUP_PAGES, OUT_COLS, PagePath, check_contracts
 from onnxtr_spark.stages.recognize import RECOGNIZE_SCHEMA, RecognizeConfig
 
-# Pages staged per detection group (one batched D1-D6 call each). A
-# group's decoded pages and maps are alive together, so this bounds the
-# memory staging adds: 16 pages amortize the per-call NumPy overhead
-# while the worker's peak RSS stays at the page-at-a-time level.
-GROUP_PAGES = 16
-
-OUT_COLS = [
-    "doc_id", "offset", "media_ref", "word_id", "rank", "line_id", "block_id",
-    "xmin", "ymin", "xmax", "ymax", "objectness", "text", "conf",
-]
+__all__ = ["GROUP_PAGES", "OUT_COLS", "detect_recognize_pages"]
 
 
 def detect_recognize_pages(
@@ -85,25 +57,7 @@ def detect_recognize_pages(
     exactly-once only for actions) — metrics, not bookkeeping; resume
     correctness never depends on them.
     """
-
-    # Float-contract engines (a real CNN) run INSIDE the fused stage too
-    # (round-3 verdict item #2): P1-P4 preprocess + forward + the
-    # prob-map D1-D6 chain replace the affine pixel-map fold, keeping
-    # the single-Arrow-crossing plan exactly when models get 100× more
-    # expensive. The fused path keeps its unpadded content-exact maps
-    # (per-page forward, dynamic spatial dims — FAST/DBNet are FCNs);
-    # the fixed-input padded batch contract lives on the standalone
-    # detect stage. Span output is identical either way (asserted in
-    # test_preprocess_registry.py).
-    _CONTRACTS = ("uint8_bhwc", "float_bchw", "float_bhwc")
-    for eng_cfg in (det_cfg.engine, reco_cfg.engine):
-        if eng_cfg.input_contract not in _CONTRACTS:
-            raise ValueError(
-                f"unknown engine input_contract {eng_cfg.input_contract!r} "
-                f"(expected one of {_CONTRACTS})"
-            )
-    float_det = det_cfg.engine.input_contract.startswith("float")
-    float_reco = reco_cfg.engine.input_contract.startswith("float")
+    check_contracts(det_cfg.engine, reco_cfg.engine)
     # the rotated postprocess has no group kernel: its pages go one at a
     # time, so staging would only hold their maps longer
     group_pages = GROUP_PAGES if det_cfg.assume_straight_pages else 1
@@ -111,295 +65,33 @@ def detect_recognize_pages(
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from time import perf_counter
 
-        det = get_detection_engine(det_cfg.engine)
-        reco = get_recognition_engine(reco_cfg.vocab, reco_cfg.engine)
-        n_classes_vocab = reco_cfg.vocab
-        # C1 vs C2: the decoder follows the model family, not the stage
-        # (reference binds a postprocessor per model class — engine.py
-        # DecodeContract). CTC engines predate the contract attribute,
-        # hence the default.
-        from onnxtr_spark.engine import CTC_CONTRACT
-
-        contract = getattr(reco, "decode_contract", CTC_CONTRACT)
+        path = PagePath(det_cfg, reco_cfg)
         t_part = perf_counter()
         m_pages = m_boxes = m_words = 0
-        m_decode_s = 0.0
 
         for pdf in batches:
             if pdf.empty:
                 continue
-            page_meta: list[dict] = []
-            flat_splits: list[np.ndarray] = []
-            pending: list[tuple[dict, list[np.ndarray]]] = []  # G3 crops awaiting the batched classify
-
-            def _finalize(meta: dict, crops: list[np.ndarray]) -> None:
-                # split (W1) + height-normalized, unpadded resize: the
-                # batch step pads to the batch max width (dynamic T axis
-                # — fixed 128-wide pad made ~70% of the logits tensor
-                # padding columns)
-                splits, crop_map, _ = split_merge.split_crops(
-                    crops, reco_cfg.critical_ar, reco_cfg.target_ar, reco_cfg.overlap_ratio
-                )
-                meta["crop_map"] = crop_map
-                meta["start"] = len(flat_splits)
-                meta["n_splits"] = len(splits)
-                flat_splits.extend(
-                    resize_unpadded(s, reco_cfg.crop_h, reco_cfg.crop_w) for s in splits
-                )
-
-            # detection groups (module docstring); `staged` is rebound per
-            # group, dropping the last group's pages and maps before the
-            # next one decodes
+            pages: list[dict] = []
+            flat: list = []  # the chunk's resized splits, in page order
+            pending: list[tuple[dict, list]] = []  # G3 crops awaiting the batched classify
             keys = list(zip(pdf["doc_id"], pdf["offset"], pdf["media_ref"]))
-            pngs = pdf["png"].tolist()
-            for g in range(0, len(pngs), group_pages):
-                staged: list[tuple] = []  # (img, resized, prob, unpad) per page
-                for png in pngs[g : g + group_pages]:
-                    # Single-channel fast path (uint8 stub engines only):
-                    # both stub models read channel 0, so slice a (H, W, 1)
-                    # view once — 3× less memory traffic through
-                    # resize/crop/model (this kernel chain is DRAM-bound at
-                    # high core counts). Float-contract engines (a real CNN)
-                    # keep the full channel axis — P2 normalize is
-                    # per-channel and the model consumes every plane.
-                    t_dec = perf_counter()
-                    img = imaging.decode_image(png)
-                    if not (float_det or float_reco):
-                        img = img[:, :, :1]
-                    m_decode_s += perf_counter() - t_dec
-                    m_pages += 1
-                    if det_cfg.straighten_pages:
-                        # I5 orientation classify + G4 rectification
-                        # (reference predictor.py:100-106 + base.py:102-124):
-                        # undo the stored 90°-multiple rotation, then the
-                        # arbitrary-angle pass — first detection pass gives
-                        # the seg bitmap, estimate_orientation measures the
-                        # residual skew from line-like contours, the page is
-                        # rotated straight, and detection runs again on the
-                        # straightened page (the code below IS that second
-                        # pass). General orientation is (0, 1.0) here because
-                        # the classifier just rectified the 90° component.
-                        k = get_orientation_engine(det_cfg.orient_engine).run_one(img)
-                        if k:
-                            img = np.ascontiguousarray(np.rot90(img, -k))
-                        pix_thresh = float(np.floor(255.0 - 255.0 * det_cfg.bin_thresh))
-                        seg = (img[:, :, 0] <= pix_thresh).astype(np.uint8)
-                        angle = estimate_orientation(seg, (0, 1.0))
-                        if angle:
-                            if img.shape[2] == 1:
-                                # rotate the single channel 2-D (the (H,W,1)
-                                # slice pays a per-pixel trailing-dim gather)
-                                img = imaging.rotate_image_nearest(
-                                    np.ascontiguousarray(img[:, :, 0]), angle
-                                )[:, :, None]
-                            else:
-                                img = imaging.rotate_image_nearest(img, angle)
-                    # --- detect (D1-D6): the stub model is affine in pixel
-                    # value, so it folds through the postprocess and runs on
-                    # the uint8 map (postprocess_pixel_maps docstring); `det`
-                    # (the session) defines that affine contract and runs
-                    # unfolded in the standalone stage. The map is resized
-                    # WITHOUT padding — content-exact AND isotropic (one
-                    # scale = min ratio for both axes), so relative coords
-                    # are page-relative directly, rotation angles survive,
-                    # and P8 padding removal is the identity (it stays real
-                    # in the standalone stage); map passes skip the ~30% pad
-                    # rows a square map carries.
-                    if det_cfg.preserve_aspect_ratio and det_cfg.symmetric_pad:
-                        # default contract: content-exact isotropic map, no
-                        # pad rows at all — P8 removal is the identity (the
-                        # padded-symmetric algebra is exercised standalone,
-                        # stages/detect.py)
-                        resized = resize_unpadded(img, det_cfg.map_size, det_cfg.map_size)
-                        unpad = None
-                    elif det_cfg.preserve_aspect_ratio:
-                        # asymmetric pad (bottom/right, transforms/base.py:
-                        # 72-76): boxes come back map-relative; the
-                        # asymmetric remove_padding branch rescales them to
-                        # page-relative (_utils/base.py:12-62). White pad:
-                        # the stub reads pixel value as text evidence.
-                        resized = resize_preserve(
-                            img, det_cfg.map_size, det_cfg.map_size, symmetric_pad=False, pad_value=255
-                        )
-                        unpad = "asym"
-                    else:
-                        # preserve_aspect_ratio=False: anisotropic stretch;
-                        # map-relative coords ARE page-relative, no unpad
-                        resized = resize_stretch(img, det_cfg.map_size, det_cfg.map_size)
-                        unpad = None
-                    if float_det:
-                        # real-CNN contract: P2-P4 on the unpadded map, one
-                        # forward per page (dynamic spatial dims — unpadded
-                        # maps are content-exact, so pages don't stack),
-                        # then the prob-map D1-D6 chain. Cost emulation runs
-                        # inside the engine's run().
-                        x = preprocess.cast_normalize(
-                            resized, det_cfg.engine.mean, det_cfg.engine.std
-                        )[None]
-                        if det_cfg.engine.input_contract == "float_bchw":
-                            x = np.moveaxis(x, -1, 1)
-                        prob = det.run(x)[0]
-                    else:
-                        det.simulate_model_cost(1)  # no-op unless SPARK_GRAFT_MODEL_ITERS set
-                        prob = None
-                    staged.append((img, resized, prob, unpad))
-                if det_cfg.assume_straight_pages:
-                    group_boxes = (
-                        detect_post.postprocess_prob_maps(
-                            [prob for _, _, prob, _ in staged],
-                            det_cfg.bin_thresh, det_cfg.box_thresh, det_cfg.unclip_ratio,
-                        )
-                        if float_det
-                        else detect_post.postprocess_pixel_maps(
-                            [resized[:, :, 0] for _, resized, _, _ in staged],
-                            det_cfg.bin_thresh, det_cfg.box_thresh, det_cfg.unclip_ratio,
-                        )
-                    )
-                for i, ((doc_id, offset, media_ref), (img, resized, prob, unpad)) in enumerate(
-                    zip(keys[g : g + group_pages], staged)
-                ):
-                    if det_cfg.assume_straight_pages:
-                        boxes = group_boxes[i]
-                        if unpad == "asym":
-                            boxes = detect_post.remove_padding(
-                                boxes, img.shape[0], img.shape[1],
-                                preserve_aspect_ratio=True, symmetric_pad=False,
-                            )
-                        for hook in det_cfg.hooks:  # loc_preds hooks (detect.py DetectConfig)
-                            boxes = hook(boxes)
-                        # --- crop + split (G1, P5, W1). Mixed-contract case
-                        # (float detection + uint8 recognition, e.g. the
-                        # db-float arch): the reco stub reads channel 0 only,
-                        # so crops slice a (H, W, 1) view exactly like the
-                        # all-uint8 fast path — 3× less resize/pad traffic.
-                        crop_src = img[:, :, :1] if (img.shape[2] == 3 and not float_reco) else img
-                        crops = (
-                            extract_crops(crop_src, boxes[:, :4].astype(np.float64))
-                            if boxes.shape[0]
-                            else []
-                        )
-                        polys = None
-                    else:
-                        # Rotated-word path (assume_straight_pages=False,
-                        # reference predictor.py:91-129): (N,5,2) polygons,
-                        # G2 rotated crop extract, B7 enclosing-box export.
-                        polys5 = (
-                            rotated_post.postprocess_prob_map_rotated(
-                                prob, det_cfg.bin_thresh, det_cfg.box_thresh, det_cfg.unclip_ratio
-                            )
-                            if float_det
-                            else rotated_post.postprocess_pixel_map_rotated(
-                                resized[:, :, 0], det_cfg.bin_thresh, det_cfg.box_thresh, det_cfg.unclip_ratio
-                            )
-                        )
-                        if unpad == "asym":
-                            # P8 rotated branch (reference _utils/base.py
-                            # 12-62, loc_pred[:, :, c] rescale incl. the
-                            # score-row quirk — kernels/rotated_post.py)
-                            polys5 = rotated_post.remove_padding_rotated(
-                                polys5, img.shape[0], img.shape[1],
-                                preserve_aspect_ratio=True, symmetric_pad=False,
-                            )
-                        for hook in det_cfg.hooks:
-                            polys5 = hook(polys5)
-                        polys = polys5[:, :4, :].astype(np.float64)
-                        scores = polys5[:, 4, 1].astype(np.float64)  # detach_scores, geometry.py:119-122
-                        crop_src = img[:, :, :1] if (img.shape[2] == 3 and not float_reco) else img
-                        crops = extract_rcrops_nearest(crop_src, polys) if polys.shape[0] else []
-                        # B7 straight-box export carried in the output cols
-                        boxes = (
-                            np.concatenate([rotated_post.polys_to_straight(polys), scores[:, None]], axis=1)
-                            if polys.shape[0]
-                            else np.zeros((0, 5), dtype=np.float64)
-                        )
-                    keep = [i for i, c in enumerate(crops) if c.shape[0] > 0 and c.shape[1] > 0]
-                    crops = [crops[i] for i in keep]
-                    boxes = boxes[keep] if keep else boxes[:0]
-                    if polys is not None:
-                        polys = polys[keep] if keep else polys[:0]
+            for g, imgs, locs in path.detect(pdf["png"].tolist(), group_pages):
+                m_pages += len(imgs)
+                for (doc_id, offset, media_ref), img, loc in zip(keys[g:], imgs, locs):
+                    boxes, polys, crops = path.crop(img, loc)
                     m_boxes += int(boxes.shape[0])
-                    meta = {
-                        "key": (doc_id, int(offset), media_ref),
-                        "boxes": boxes,
-                        "polys": polys,
-                    }
-                    page_meta.append(meta)
+                    page = {"key": (doc_id, int(offset), media_ref), "boxes": boxes, "polys": polys}
+                    pages.append(page)
                     if polys is not None and crops and not det_cfg.disable_crop_orientation:
-                        pending.append((meta, crops))  # classify across the chunk below
+                        pending.append((page, crops))  # classified across the chunk below
                     else:
-                        _finalize(meta, crops)
-
+                        path.split(page, crops, flat)
             if pending:
-                # G3 crop rectification (reference enables the crop-
-                # orientation classifier by default when
-                # assume_straight_pages=False, models/zoo.py:19-27 +
-                # predictor.py:126-129): classify every rotated crop in
-                # the chunk with ONE batched engine call (r2 verdict
-                # finding #2 — a per-crop run_one loop was the main
-                # rotated-vs-straight cost gap), then rot90 each crop
-                # readable and re-roll its polygon.
-                orient = get_orientation_engine(det_cfg.orient_engine)
-                ks = orient.run([c for _, crops in pending for c in crops])
-                pos = 0
-                for meta, crops in pending:
-                    orientations = [int(k) for k in ks[pos : pos + len(crops)]]
-                    pos += len(crops)
-                    meta["polys"] = rectify_loc_preds(meta["polys"], orientations)
-                    _finalize(meta, rectify_crops(crops, orientations))
-
-            # --- recognize (I4 + C1), batched across pages
-            preds: list[tuple[str, float]] = []
-            for start in range(0, len(flat_splits), reco_cfg.batch_size):
-                chunk = flat_splits[start : start + reco_cfg.batch_size]
-                max_w = max(c.shape[1] for c in chunk)
-                batch = np.full(
-                    (len(chunk), reco_cfg.crop_h, max_w) + chunk[0].shape[2:], 255, dtype=np.uint8
-                )
-                for i, c in enumerate(chunk):
-                    batch[i, : c.shape[0], : c.shape[1]] = c
-                if float_reco:
-                    # real-CRNN contract: P2-P4 on the padded crop batch
-                    x = preprocess.cast_normalize(
-                        batch, reco_cfg.engine.mean, reco_cfg.engine.std
-                    )
-                    if reco_cfg.engine.input_contract == "float_bchw":
-                        x = np.moveaxis(x, -1, 1)
-                    logits = reco.run(x)
-                else:
-                    logits = reco.run(batch)
-                if contract.kind == "attention":
-                    preds.extend(
-                        attention_decode(logits, n_classes_vocab, contract.conf, contract.n_special)
-                    )
-                else:
-                    preds.extend(ctc_best_path(logits, n_classes_vocab))
-
-            out_rows: list[tuple] = []
-            for meta in page_meta:
-                boxes = meta["boxes"]
-                if boxes.shape[0] == 0:
-                    continue
-                page_preds = preds[meta["start"] : meta["start"] + meta["n_splits"]]
-                words = split_merge.remap_preds(page_preds, meta["crop_map"], reco_cfg.overlap_ratio)
-                if meta["polys"] is not None:
-                    # rotated B1/B2: straighten by -estimate_page_angle
-                    # then the standard sort/line scan (builder.py:55-63)
-                    rank, line_id = word_order_rotated(meta["polys"])
-                    block_id = np.zeros_like(rank)  # B4 is straight-only (reference default off)
-                elif reco_cfg.resolve_blocks:
-                    rank, line_id, block_id = word_order_blocks(boxes[:, :4])
-                else:
-                    rank, line_id = word_order(boxes[:, :4])
-                    block_id = np.zeros_like(rank)
-                doc_id, offset, media_ref = meta["key"]
-                for wi, ((text, conf), box) in enumerate(zip(words, boxes)):
-                    out_rows.append((
-                        doc_id, offset, media_ref, wi, int(rank[wi]), int(line_id[wi]), int(block_id[wi]),
-                        float(box[0]), float(box[1]), float(box[2]), float(box[3]),
-                        float(box[4]), text, float(conf),
-                    ))
-            m_words += len(out_rows)
-            yield pd.DataFrame(out_rows, columns=OUT_COLS)
+                path.orient(pending, flat)
+            out = path.rows(pages, flat)
+            m_words += len(out)
+            yield out
 
         if metrics_acc is not None:
             from pyspark import TaskContext
@@ -408,7 +100,7 @@ def detect_recognize_pages(
             metrics_acc.add([(
                 int(ctx.partitionId()) if ctx else -1,
                 m_pages, m_boxes, m_words,
-                round(m_decode_s * 1000.0, 3),
+                round(path.decode_s * 1000.0, 3),
                 round((perf_counter() - t_part) * 1000.0, 3),
             )])
 

@@ -9,10 +9,9 @@ Physical plan (SURVEY.md §4):
              pages scatter across all tasks — this IS the north_rule
              skew salt: parallel grain = page, never doc)
           │
-    detect (mapInPandas, fused decode→resize→model→postprocess→unpad)
-          │                                                  (narrow)
-    recognize (mapInPandas, fused crop→split→model→CTC→merge→rank)
-          │                                                  (narrow)
+    detect+recognize (one mapInPandas: the page layer sequence of
+          │           stages/page_path.py, decode→resize→model→
+          │           postprocess→crop→split→model→decode→rank) (narrow)
     assemble (union text spans + window row_number by doc_id)
                                             ← the ONE reassembly shuffle
                                               (word rows only, tiny; AQE
@@ -78,8 +77,9 @@ def extract_spans(
 
     ``fused=True`` (default) runs detect+recognize in one mapInPandas so
     page bytes cross the JVM↔Python boundary once (see stages/fused.py);
-    ``fused=False`` chains the standalone stages (same results — asserted
-    in tests). ``metrics_acc``: see fused.detect_recognize_pages."""
+    ``fused=False`` chains the standalone stages, which cut the same
+    layer sequence at the crop boundary (same rows — asserted in tests).
+    ``metrics_acc``: see fused.detect_recognize_pages."""
     pages = media_pages(docs, media)
     if fused:
         from onnxtr_spark.stages.fused import detect_recognize_pages

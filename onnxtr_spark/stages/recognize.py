@@ -1,24 +1,31 @@
 """Recognize stage: page images + boxes → ordered word predictions.
 
-One ``mapInPandas`` pass fusing the reference's recognition predictor
+One ``mapInPandas`` pass over the detect stage's output: the page layer
+sequence (stages/page_path.py) from decode, then crop through row
+building — the reference's recognition predictor
 (onnxtr/models/recognition/predictor/base.py:42-79) plus the
 document-builder's per-page geometry (models/builder.py:42-146):
 
   G1 crop extraction (co-resident page bytes — the det→reco join)
   → P5 zero-size crop filter (models/predictor/base.py:157-162)
   → W1 wide-crop split (critical_ar=8, target_ar=6, overlap=0.5)
-  → P1 resize 32×128 aspect-preserving
-  → I4 model forward, batched ACROSS pages within the Arrow chunk
-    (the reference flattens crops across pages the same way,
-    models/predictor/predictor.py:132; reco batch 1024, zoo.py:54)
-  → C1 CTC best-path decode
+  → P1 height-normalized resize, padded per model batch
+  → I4 model forward (P2-P4 first for a float-contract engine), batched
+    ACROSS pages within the Arrow chunk (the reference flattens crops
+    across pages the same way, models/predictor/predictor.py:132)
+  → C1 CTC / C2 attention decode (the engine's DecodeContract)
   → W2 merge split predictions (Hamming best-overlap)
-  → B1-B3 reading-order rank + line ids (per page — fused here because
-    all of a page's boxes are already co-resident; saves the extra
-    shuffle an applyInPandas build stage would need).
+  → B1-B4 reading-order rank, line and block ids (per page — fused here
+    because all of a page's boxes are already co-resident; saves the
+    extra shuffle an applyInPandas build stage would need).
+
+The boxes are read back as float32: postprocess emits float32, so the
+round trip through the double column is lossless and the crops and
+reading order see exactly what the fused stage sees — chaining
+``recognize_pages(detect_pages(pages))`` gives the fused stage's rows.
 
 Output: one row per word —
-  doc_id, offset, media_ref, word_id, rank, line_id,
+  doc_id, offset, media_ref, word_id, rank, line_id, block_id,
   xmin, ymin, xmax, ymax, objectness, text, conf
 
 Image bytes are dropped at this boundary (memory: SURVEY.md §7).
@@ -33,12 +40,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from onnxtr_spark import imaging
-from onnxtr_spark.engine import EngineConfig, get_recognition_engine
+from onnxtr_spark.engine import EngineConfig
 from onnxtr_spark.kernels import split_merge
-from onnxtr_spark.kernels.builder import word_order, word_order_blocks
-from onnxtr_spark.kernels.ctc import ctc_best_path
-from onnxtr_spark.kernels.geometry import extract_crops, resize_preserve
+from onnxtr_spark.stages.page_path import PagePath, check_contracts, decode
 from onnxtr_spark.vocabs import DEFAULT_VOCAB
 
 RECOGNIZE_SCHEMA = (
@@ -62,11 +66,6 @@ class RecognizeConfig:
     # cores with 1024).
     batch_size: int = 256
     vocab: str = DEFAULT_VOCAB
-    # The reference recognition Resize pads bottom/right by default and
-    # symmetrically on request (recognition/zoo.py:61-66 symmetric_pad,
-    # transforms/base.py:59-71); decode is pad-side-invariant (padding
-    # is background white), asserted in test_zoo.py.
-    symmetric_pad: bool = False
     # B1-B3 always run; B4 block clustering is off by default like the
     # reference (models/builder.py:33 resolve_blocks=False)
     resolve_blocks: bool = False
@@ -76,98 +75,24 @@ class RecognizeConfig:
 
 def recognize_pages(detected: DataFrame, cfg: RecognizeConfig = RecognizeConfig()) -> DataFrame:
     """Run recognition + per-page builder geometry over detect output."""
+    check_contracts(cfg.engine)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        engine = get_recognition_engine(cfg.vocab, cfg.engine)
-
+        path = PagePath(reco_cfg=cfg)
         for pdf in batches:
             if pdf.empty:
                 continue
-            # Per page: raw crops + split bookkeeping; splits flattened
-            # across the whole Arrow chunk for model batching.
-            flat_splits: list[np.ndarray] = []
-            page_meta: list[dict] = []
-            for _, row in pdf.iterrows():
-                raw = row["boxes"]
-                blist = [np.asarray(b, dtype=np.float64) for b in raw] if raw is not None else []
-                boxes = np.stack(blist) if blist else np.zeros((0, 5), dtype=np.float64)
-                img = imaging.decode_image(row["png"]) if boxes.shape[0] else None
-                crops = extract_crops(img, boxes[:, :4]) if boxes.shape[0] else []
-                # P5: drop zero-dim crops, keep boxes aligned
-                keep = [i for i, c in enumerate(crops) if c.shape[0] > 0 and c.shape[1] > 0]
-                crops = [crops[i] for i in keep]
-                boxes = boxes[keep] if len(keep) else boxes[:0]
-                splits, crop_map, _ = split_merge.split_crops(
-                    crops, cfg.critical_ar, cfg.target_ar, cfg.overlap_ratio
-                )
-                page_meta.append({
-                    "row": row,
-                    "boxes": boxes,
-                    "crop_map": crop_map,
-                    "start": len(flat_splits),
-                    "n_splits": len(splits),
-                })
-                # Pad with background white: the stub model classifies
-                # columns by darkest pixel, so black padding would mask
-                # every glyph in height-padded (wide) crops.
-                flat_splits.extend(
-                    resize_preserve(s, cfg.crop_h, cfg.crop_w, symmetric_pad=cfg.symmetric_pad, pad_value=255)
-                    for s in splits
-                )
-
-            # I4: batched model forward + decode over all splits; the
-            # decoder (C1 CTC vs C2 attention) follows the engine's
-            # DecodeContract, same dispatch as the fused stage.
-            from onnxtr_spark.engine import CTC_CONTRACT
-            from onnxtr_spark.kernels.ctc import attention_decode
-
-            contract = getattr(engine, "decode_contract", CTC_CONTRACT)
-            preds: list[tuple[str, float]] = []
-            for start in range(0, len(flat_splits), cfg.batch_size):
-                batch = np.stack(flat_splits[start : start + cfg.batch_size])
-                logits = engine.run(batch)
-                if contract.kind == "attention":
-                    preds.extend(attention_decode(logits, cfg.vocab, contract.conf, contract.n_special))
-                else:
-                    preds.extend(ctc_best_path(logits, cfg.vocab))
-
-            out_rows: list[dict] = []
-            for meta in page_meta:
-                boxes = meta["boxes"]
-                if boxes.shape[0] == 0:
-                    continue
-                page_preds = preds[meta["start"] : meta["start"] + meta["n_splits"]]
-                # W2: local crop_map indexes into the page's own split range.
-                words = split_merge.remap_preds(page_preds, meta["crop_map"], cfg.overlap_ratio)
-                if cfg.resolve_blocks:
-                    rank, line_id, block_id = word_order_blocks(boxes[:, :4])
-                else:
-                    rank, line_id = word_order(boxes[:, :4])
-                    block_id = np.zeros_like(rank)
-                row = meta["row"]
-                for wi, ((text, conf), box) in enumerate(zip(words, boxes)):
-                    out_rows.append({
-                        "doc_id": row["doc_id"],
-                        "offset": int(row["offset"]),
-                        "media_ref": row["media_ref"],
-                        "word_id": wi,
-                        "rank": int(rank[wi]),
-                        "line_id": int(line_id[wi]),
-                        "block_id": int(block_id[wi]),
-                        "xmin": float(box[0]),
-                        "ymin": float(box[1]),
-                        "xmax": float(box[2]),
-                        "ymax": float(box[3]),
-                        "objectness": float(box[4]),
-                        "text": text,
-                        "conf": float(conf),
-                    })
-            yield pd.DataFrame(
-                out_rows,
-                columns=[
-                    "doc_id", "offset", "media_ref", "word_id", "rank", "line_id", "block_id",
-                    "xmin", "ymin", "xmax", "ymax", "objectness", "text", "conf",
-                ],
-            )
+            pages: list[dict] = []
+            flat: list = []
+            for doc_id, offset, media_ref, png, raw in zip(
+                pdf["doc_id"], pdf["offset"], pdf["media_ref"], pdf["png"], pdf["boxes"]
+            ):
+                if raw is None or len(raw) == 0:
+                    continue  # a page without boxes has no words
+                boxes, _, crops = path.crop(decode(png), np.stack(list(raw)).astype(np.float32))
+                page = {"key": (doc_id, int(offset), media_ref), "boxes": boxes, "polys": None}
+                pages.append(page)
+                path.split(page, crops, flat)
+            yield path.rows(pages, flat)
 
     return detected.mapInPandas(run, schema=RECOGNIZE_SCHEMA)

@@ -18,7 +18,9 @@ Flag mapping (reference → this repo):
 - ``straighten_pages`` → DetectConfig.straighten_pages (I5 90°-multiple
   rectify + G4 arbitrary-angle estimate→rotate→re-detect).
 - ``disable_crop_orientation`` → same flag.
-- ``det_bs`` / ``reco_bs`` → stage batch sizes.
+- ``det_bs`` → DetectConfig.batch_size, which mirrors the reference and
+  has no effect (detection maps are per page); ``reco_bs`` →
+  RecognizeConfig.batch_size, the recognition model batch.
 - ``export_as_straight_boxes``: accepted for parity; the flat span
   schema always carries the B7 enclosing straight box columns, so True
   and False coincide here (the reference's False keeps polygons in its
@@ -359,17 +361,20 @@ def recognition_predictor(
     vocab: str = DEFAULT_VOCAB,
 ) -> RecognitionPredictorSpark:
     """The reference ``recognition_predictor`` (models/recognition/
-    zoo.py:61-96): arch-or-config polymorphism, the crop Resize's
-    symmetric_pad flag (default False = bottom/right, like the
-    reference), and the quantization flag. The decoder family (C1 CTC
-    vs C2 attention) follows the resolved engine's DecodeContract."""
+    zoo.py:61-96): arch-or-config polymorphism and the quantization
+    flag. The crop Resize's ``symmetric_pad`` flag is accepted for
+    parity and discarded: crops pad with background white per model
+    batch, and decoding does not depend on the padded side. The decoder
+    family (C1 CTC vs C2 attention) follows the resolved engine's
+    DecodeContract."""
+    _ = symmetric_pad  # parity no-op: decoding is pad-side-invariant
     engine = engine_cfg or _engine_of(arch, "stub_crnn")
     if load_in_8_bit:
         engine = replace(engine, load_in_8_bit=True)
     if isinstance(arch, object) and hasattr(arch, "param"):
         vocab = arch.param("vocab", vocab)
     return RecognitionPredictorSpark(
-        RecognizeConfig(batch_size=batch_size, symmetric_pad=symmetric_pad, vocab=vocab, engine=engine)
+        RecognizeConfig(batch_size=batch_size, vocab=vocab, engine=engine)
     )
 
 

@@ -23,7 +23,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from onnxtr_spark.kernels.builder import PARAGRAPH_BREAK, resolve_sub_lines
+from onnxtr_spark.kernels.builder import PARAGRAPH_BREAK, resolve_lines, sort_boxes
 
 
 def remap_boxes(loc_preds: np.ndarray, orig_shape: tuple[int, int], dest_shape: tuple[int, int]) -> np.ndarray:
@@ -82,36 +82,26 @@ def estimate_page_angle(polys: np.ndarray) -> float:
             return 0.0
 
 
-def sort_boxes_rotated(boxes: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """Rotated branch of the builder's sort (models/builder.py:55-63):
-    straighten, fit straight boxes, return (order, straight_boxes)."""
+def _straight_fit(boxes: np.ndarray) -> np.ndarray:
+    """Straighten rotated (N,4,2) boxes by -estimate_page_angle about a
+    1024² frame and fit (N,4) straight boxes [xmin, ymin, xmax, ymax]."""
     straightened = rotate_boxes(
         loc_preds=boxes, angle=-estimate_page_angle(boxes), orig_shape=(1024, 1024), min_angle=5.0
     )
-    straight = np.concatenate((straightened.min(1), straightened.max(1)), -1)
-    key = straight[:, 0] + 2 * straight[:, 3] / np.median(straight[:, 3] - straight[:, 1])
-    return key.argsort(), straight
+    return np.concatenate((straightened.min(1), straightened.max(1)), -1)
+
+
+def sort_boxes_rotated(boxes: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Rotated branch of the builder's sort (models/builder.py:55-63):
+    straighten, fit straight boxes, return (order, straight_boxes)."""
+    straight = _straight_fit(boxes)
+    return sort_boxes(straight), straight
 
 
 def resolve_lines_rotated(boxes: np.ndarray, paragraph_break: float = PARAGRAPH_BREAK) -> list[list[int]]:
     """resolve_lines for rotated (N,4,2) boxes (builder.py:103-146):
-    sort straightens first, then the standard running-mean scan."""
-    idxs, straight = sort_boxes_rotated(boxes)
-    y_med = np.median(straight[:, 3] - straight[:, 1])
-    lines: list[list[int]] = []
-    words: list[int] = [idxs[0]]
-    y_center_sum = straight[idxs[0]][[1, 3]].mean()
-    for idx in idxs[1:]:
-        y_dist = abs(straight[idx][[1, 3]].mean() - y_center_sum / len(words))
-        if y_dist >= y_med / 2:
-            lines.extend(resolve_sub_lines(straight, words, paragraph_break))
-            words = []
-            y_center_sum = 0
-        words.append(idx)
-        y_center_sum += straight[idx][[1, 3]].mean()
-    if words:
-        lines.extend(resolve_sub_lines(straight, words, paragraph_break))
-    return lines
+    the standard sort and running-mean scan over the straightened fit."""
+    return resolve_lines(_straight_fit(boxes), paragraph_break)
 
 
 def rectify_crops(crops: list[np.ndarray], orientations: list[int]) -> list[np.ndarray]:
@@ -129,15 +119,13 @@ def rectify_crops(crops: list[np.ndarray], orientations: list[int]) -> list[np.n
 def rectify_loc_preds(page_loc_preds: np.ndarray, orientations: list[int]) -> np.ndarray | None:
     """G3 polygon re-orientation (models/_utils.py:173-190): roll each
     quadrangle's points by the predicted orientation so TL,TR,BR,BL is
-    the READABLE order."""
-    return (
-        np.stack(
-            [np.roll(p, o, axis=0) for o, p in zip(orientations, page_loc_preds)],
-            axis=0,
-        )
-        if len(orientations) > 0
-        else None
-    )
+    the READABLE order — ``np.roll(p, o, axis=0)`` of every polygon as
+    one gather, row i taking point (i - o) mod 4."""
+    if len(orientations) == 0:
+        return None
+    n = page_loc_preds.shape[1]
+    rows = np.arange(len(orientations))[:, None]
+    return page_loc_preds[rows, (np.arange(n) - np.asarray(orientations)[:, None]) % n]
 
 
 def word_order_rotated(polys: np.ndarray, paragraph_break: float = PARAGRAPH_BREAK) -> tuple[np.ndarray, np.ndarray]:
@@ -177,13 +165,16 @@ def extract_rcrops_nearest(img: np.ndarray, polys: np.ndarray) -> list[np.ndarra
     For each relative (4,2) poly ordered TL,TR,BR,BL: output size
     (round(|TL-BL|), round(|TL-TR|)) like the reference's dst rectangle;
     each output pixel samples the source at
-    TL + u*(TR-TL)/w + v*(BL-TL)/h (nearest).
+    TL + u*(TR-TL)/w + v*(BL-TL)/h (nearest). Samples are taken from the
+    page as one contiguous (H·W, C) plane: a row ``take`` per crop
+    instead of 2-D fancy indexing into a strided page view.
     """
     import math
 
     if polys.shape[0] == 0:
         return []
     h, w = img.shape[:2]
+    plane = np.ascontiguousarray(img).reshape((h * w,) + img.shape[2:])
     abs_polys = polys.copy().astype(np.float64)
     abs_polys[:, :, 0] *= w
     abs_polys[:, :, 1] *= h
@@ -198,12 +189,14 @@ def extract_rcrops_nearest(img: np.ndarray, polys: np.ndarray) -> list[np.ndarra
         us = _center_fracs(out_w)
         vs = _center_fracs(out_h)[:, None]
         # broadcast form of tl + u·(TR-TL) + v·(BL-TL): the same fp adds
-        # in the same order as the previous outer-product form
-        sx = tlx + us * dx_u + vs * dx_v
-        sy = tly + us * dy_u + vs * dy_v
-        # floor of pixel-center coordinates: exact slice equivalence for
+        # in the same order as the previous outer-product form; floor of
+        # pixel-center coordinates: exact slice equivalence for
         # axis-aligned quads (round() would banker's-round .5 centers)
-        xi = np.clip(np.floor(sx).astype(np.int64), 0, w - 1)
-        yi = np.clip(np.floor(sy).astype(np.int64), 0, h - 1)
-        crops.append(img[yi, xi])
+        xi = np.floor(tlx + us * dx_u + vs * dx_v).astype(np.int64)
+        yi = np.floor(tly + us * dy_u + vs * dy_v).astype(np.int64)
+        np.clip(xi, 0, w - 1, out=xi)
+        np.clip(yi, 0, h - 1, out=yi)
+        yi *= w
+        yi += xi
+        crops.append(plane.take(yi, axis=0))
     return crops

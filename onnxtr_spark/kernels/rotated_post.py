@@ -27,13 +27,37 @@ base.py:38-139) without cv2/pyclipper:
   note the faithful quirk — the transform runs BEFORE detach_scores
   (predictor/base.py:56-62), so the score row's y coordinate is
   remapped (and clipped) like any other point when width > height.
+
+D1-D6 run once per GROUP of pages (``postprocess_pixel_maps_rotated`` /
+``postprocess_prob_maps_rotated``; the one-page calls are groups of
+one). Each page is opened, labeled and scored on its own (D2-D4), and
+only the runs of its components that pass both filters are kept — so a
+page's map is dropped once the next one is made (while the next map is
+made, the previous one is still the loop's current item). The min-area
+rects, D5 and D6 then run once over the group's concatenated runs:
+hulls, calipers, unclip and ``order_points`` are array expressions over
+every component of every page, each evaluating the scalar chain's float
+ops in the scalar chain's order (``tests/rotated_post_oracle.py`` keeps
+that chain; ``tests/test_rotated_post_batched.py`` asserts equal bits).
+Two steps stay per value: libm's trig (NumPy's ``arctan2``, ``cos`` and
+``sin`` are not libm's in the last ulp), and the D4 sum, one ``np.sum``
+per component (``np.add.reduceat`` associates the sum differently).
 """
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 
-from onnxtr_spark.kernels.detect_post import BIN_THRESH, BOX_THRESH, UNCLIP_RATIO, binary_open_3x3
+from onnxtr_spark.kernels.detect_post import (
+    BIN_THRESH,
+    BOX_THRESH,
+    UNCLIP_RATIO,
+    _label_runs_packed,
+    _open_3x3_packed,
+    label_runs,
+)
 
 
 def component_runs(bitmap: np.ndarray) -> list[list[tuple[int, int, int]]]:
@@ -45,8 +69,6 @@ def component_runs(bitmap: np.ndarray) -> list[list[tuple[int, int, int]]]:
     order within each component (deterministic, identical to the
     previous per-run union-find loop).
     """
-    from onnxtr_spark.kernels.detect_post import label_runs
-
     ys, xs, xe, lab = label_runs(bitmap)
     n = len(ys)
     if n == 0:
@@ -207,29 +229,36 @@ def _hulls_batch(
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Monotone-chain hulls for MANY components at once.
 
-    Input: integer-valued point coordinates (float64) with their
-    component id (non-decreasing). Output: flat (hx, hy, counts) hull
-    vertex arrays, each component's vertices in the exact order
-    ``_hull_points`` produces (lower chain then upper chain, both
-    without their closing vertex).
+    Input: integer-valued point coordinates with their component id
+    (non-decreasing). Output: flat (hx, hy, counts) hull vertex arrays,
+    each component's vertices in the exact order ``_hull_points``
+    produces (lower chain then upper chain, both without their closing
+    vertex).
 
     Equality argument: points are deduped and sorted by (x, y) per
-    component exactly like ``sorted(set(pts))`` (via a composite
-    integer key — coords are exact pixel integers < 2^13); each chain
-    is the fixpoint of simultaneously deleting every interior point
-    whose (prev, self, next) cross product is <= 0 — cross products of
-    integer coords are EXACT in float64, hull vertices are never
-    deletable (they turn strictly left against any bracketing pair),
-    and a surviving non-vertex would make the surviving chain a
-    strictly convex chain containing a non-extreme point (impossible),
-    so the fixpoint is exactly the strict hull vertex set in sorted
-    order — the stack algorithm's output."""
-    # sort + dedup per component via one composite integer key
-    key = (comp.astype(np.int64) << 26) | (px.astype(np.int64) << 13) | py.astype(np.int64)
-    key = np.unique(key)
-    cs = key >> 26
-    xs = ((key >> 13) & 0x1FFF).astype(np.float64)
-    ys = (key & 0x1FFF).astype(np.float64)
+    component exactly like ``sorted(set(pts))`` (via one composite int64
+    key ``comp << 2s | x << s | y``, ``s`` the bit length of the largest
+    coordinate, or a lexsort when that key would not fit in 63 bits —
+    so no page size is refused); each chain is the fixpoint of
+    simultaneously deleting every interior point whose (prev, self,
+    next) cross product is <= 0 — cross products of integer coords are
+    EXACT in float64, hull vertices are never deletable (they turn strictly left
+    against any bracketing pair), and a surviving non-vertex would make
+    the surviving chain a strictly convex chain containing a
+    non-extreme point (impossible), so the fixpoint is exactly the
+    strict hull vertex set in sorted order — the stack algorithm's
+    output."""
+    px, py, comp = (a.astype(np.int64) for a in (px, py, comp))
+    s = int(max(px.max(), py.max())).bit_length()
+    if int(comp.max()).bit_length() + 2 * s <= 63:
+        key = np.unique((comp << 2 * s) | (px << s) | py)
+        cs, xs, ys = key >> 2 * s, (key >> s) & ((1 << s) - 1), key & ((1 << s) - 1)
+    else:
+        o = np.lexsort((py, px, comp))
+        cs, xs, ys = comp[o], px[o], py[o]
+        new = np.r_[True, (cs[1:] != cs[:-1]) | (xs[1:] != xs[:-1]) | (ys[1:] != ys[:-1])]
+        cs, xs, ys = cs[new], xs[new], ys[new]
+    xs, ys = xs.astype(np.float64), ys.astype(np.float64)
 
     def chain(xa: np.ndarray, ya: np.ndarray, ca: np.ndarray) -> np.ndarray:
         """Alive mask of the convex chain over (xa, ya) in given order."""
@@ -298,59 +327,43 @@ def _hulls_batch(
 
 
 def _rects_for_components(
-    rpx0: np.ndarray,
-    rpx1: np.ndarray,
-    rpy: np.ndarray,
-    crb: np.ndarray,
-    cre: np.ndarray,
-    sel: np.ndarray,
-) -> list[tuple[float, float, float, float, float]]:
-    """(cx, cy, w, h, angle) per selected component, computed through
-    the batched hull + calipers — bit-identical to looping
-    ``min_area_rect`` over each component's row-extreme points."""
-    import math
+    ys: np.ndarray, xs: np.ndarray, xe: np.ndarray, comp_b: np.ndarray, sel: np.ndarray
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """(cx, cy, w, h, angle) arrays, one entry per selected component,
+    through the batched hull + calipers — bit-identical to looping
+    ``min_area_rect`` over each component's run endpoints.
 
-    nr = cre[sel] - crb[sel]
-    tot = int(nr.sum())
-    off = np.cumsum(nr) - nr
-    rows = np.repeat(crb[sel] - off, nr) + np.arange(tot, dtype=np.int64)
-    cid = np.repeat(np.arange(len(sel), dtype=np.int64), nr)
-    px = np.concatenate([rpx0[rows], rpx1[rows]])
-    py = np.concatenate([rpy[rows], rpy[rows]])
-    if tot and (px.max() >= 8192.0 or py.max() >= 8192.0):
-        # coords exceed the 13-bit composite-key domain (pages beyond
-        # 8k px): per-component scalar fallback, same results
-        out = []
-        for i in range(len(sel)):
-            a, b = off[i], off[i] + nr[i]
-            pts = list(zip(px[a:b].tolist(), py[a:b].tolist()))
-            pts += zip(px[tot + a : tot + b].tolist(), py[tot + a : tot + b].tolist())
-            out.append(min_area_rect(pts))
-        return out
-    comp2 = np.concatenate([cid, cid])
-    hx, hy, counts = _hulls_batch(px, py, comp2)
+    Runs are grouped by component (``_by_component``; ``comp_b`` is each
+    component's first run). The hull input is each row's (min-x, max-x)
+    endpoints: interior run endpoints of a row lie on the segment
+    between the row extremes, so they are never STRICT hull vertices,
+    and ``_half``'s strict-turn popping already drops collinear boundary
+    points — the hull vertex list (and hence the rect) is unchanged."""
+    if len(sel) == 0:
+        return tuple(np.zeros(0) for _ in range(5))
+    nr = np.r_[comp_b[1:], len(ys)][sel] - comp_b[sel]
+    run = np.repeat(comp_b[sel] - (np.cumsum(nr) - nr), nr) + np.arange(int(nr.sum()))
+    cid, y = np.repeat(np.arange(len(sel)), nr), ys[run]
+    # per-(component, row) x extremes: a row group's first run has the
+    # min start and its last run the max end (runs in a row are
+    # disjoint and x-sorted)
+    rb = np.flatnonzero(np.r_[True, (cid[1:] != cid[:-1]) | (y[1:] != y[:-1])])
+    re_ = np.r_[rb[1:], len(run)] - 1
+    hx, hy, counts = _hulls_batch(
+        np.concatenate([xs[run[rb]], xe[run[re_]] - 1]), np.r_[y[rb], y[rb]], np.r_[cid[rb], cid[rb]]
+    )
+    rects = np.empty((5, len(sel)))
     big = counts >= 3
-    rects: list[tuple[float, float, float, float, float]] = [None] * len(sel)  # type: ignore[list-item]
     if big.any():
-        sub = np.flatnonzero(big)
-        cb = np.cumsum(counts) - counts
         keep_pts = np.repeat(big, counts)
-        bcx, bcy, bw, bh, bux, buy = _rects_from_hull_batch(
-            hx[keep_pts], hy[keep_pts], counts[sub]
-        )
-        for k, c in enumerate(sub):
-            rects[c] = (
-                float(bcx[k]), float(bcy[k]), float(bw[k]), float(bh[k]),
-                math.atan2(float(buy[k]), float(bux[k])),
-            )
-    if not big.all():
-        cb = np.cumsum(counts) - counts
-        for c in np.flatnonzero(~big):
-            hull = [
-                (float(hx[i]), float(hy[i])) for i in range(cb[c], cb[c] + counts[c])
-            ]
-            rects[c] = _rect_from_hull(hull)
-    return rects
+        cx, cy, w, h, ux, uy = _rects_from_hull_batch(hx[keep_pts], hy[keep_pts], counts[big])
+        rects[:4, big] = cx, cy, w, h
+        rects[4, big] = _libm(math.atan2, uy, ux)
+    ends = np.cumsum(counts)
+    for c in np.flatnonzero(~big):  # 1-2 vertex hulls: collinear components
+        a, b = ends[c] - counts[c], ends[c]
+        rects[:, c] = _rect_from_hull(list(zip(hx[a:b].tolist(), hy[a:b].tolist())))
+    return tuple(rects)
 
 
 def _rects_from_hull_batch(
@@ -456,50 +469,46 @@ def unclip_rotated(
     ``distance = (w+1)(h+1) * ratio / (2(w+h) + 2)`` per side (the
     reference's pyclipper round-join offset + minAreaRect composition,
     postprocessor/base.py:54-81 — analytic for rectangles), then order
-    points TL,TR,BR,BL. Returns (4, 2) absolute corner coords.
-
-    Plain-float corner math + ``order_points`` semantics inlined on the
-    4 tuples (this runs once per component per page — same hot-path
-    rationale as _hull_points; semantics pinned equal to
-    order_points(box_points(...)) by test).
-    """
-    return np.asarray(_unclip_pts(cx, cy, w, h, angle_rad, unclip_ratio), dtype=np.float64)
+    points TL,TR,BR,BL. Returns (4, 2) absolute corner coords: the
+    ``_unclip_quads`` of one rect."""
+    rect = (np.array([v], dtype=np.float64) for v in (cx, cy, w, h, angle_rad))
+    return _unclip_quads(*rect, unclip_ratio)[0]
 
 
-def _unclip_pts(
-    cx: float, cy: float, w: float, h: float, angle_rad: float, unclip_ratio: float = UNCLIP_RATIO
-) -> list[tuple[float, float]]:
-    """``unclip_rotated`` body returning the 4 ordered corner tuples
-    (no per-component ndarray materialization — the page-level driver
-    writes them straight into its preallocated output)."""
-    import math
+def _libm(fn, *args: np.ndarray) -> np.ndarray:
+    """``fn`` (a ``math`` function) per element: libm's bits, which
+    NumPy's own trig does not always give."""
+    flat = (a.ravel().tolist() for a in args)
+    return np.fromiter(map(fn, *flat), np.float64, args[0].size).reshape(args[0].shape)
 
-    area = (w + 1.0) * (h + 1.0)
-    length = 2.0 * (w + h) + 2.0
-    d = area * unclip_ratio / length
-    hw, hh = w / 2 + d, h / 2 + d
-    ux, uy = math.cos(angle_rad), math.sin(angle_rad)
-    vx, vy = -uy, ux
-    pts = [
-        (cx - ux * hw - vx * hh, cy - uy * hw - vy * hh),
-        (cx + ux * hw - vx * hh, cy + uy * hw - vy * hh),
-        (cx + ux * hw + vx * hh, cy + uy * hw + vy * hh),
-        (cx - ux * hw + vx * hh, cy - uy * hw + vy * hh),
-    ]
-    # order_points, inlined: CCW-by-centroid-angle sort, start at min
-    # coordinate sum, clockwise fix (shoelace)
-    mx = sum(p[0] for p in pts) / 4
-    my = sum(p[1] for p in pts) / 4
-    pts.sort(key=lambda p: math.atan2(p[1] - my, p[0] - mx))
-    start = min(range(4), key=lambda i: pts[i][0] + pts[i][1])
-    pts = pts[start:] + pts[:start]
-    shoelace = sum(
-        pts[i][0] * pts[(i + 1) % 4][1] - pts[i][1] * pts[(i + 1) % 4][0] for i in range(4)
-    )
-    if shoelace < 0:
-        rev = pts[::-1]
-        pts = rev[-1:] + rev[:-1]
-    return pts
+
+def _unclip_quads(
+    cx: np.ndarray, cy: np.ndarray, w: np.ndarray, h: np.ndarray, angle: np.ndarray, unclip_ratio: float
+) -> np.ndarray:
+    """``unclip_rotated`` over arrays of rects: (M, 4, 2) corners, each
+    quad ordered as ``order_points`` orders it — stable sort by the
+    angle about the corners' mean, start at the first minimal
+    coordinate sum, reverse when the shoelace sum is negative. Every
+    sum is the scalar chain's left-to-right adds (from 0, as Python's
+    ``sum`` starts), so each corner is bit-identical to a per-rect
+    evaluation."""
+    d = (w + 1.0) * (h + 1.0) * unclip_ratio / (2.0 * (w + h) + 2.0)
+    hw, hh = (w / 2 + d)[:, None], (h / 2 + d)[:, None]
+    ux, uy = _libm(math.cos, angle)[:, None], _libm(math.sin, angle)[:, None]
+    # corners c ∓ u·hw ∓ v·hh, v = (-uy, ux); a - b == a + (-1)·b exactly
+    su, sv = np.array([-1.0, 1.0, 1.0, -1.0]), np.array([-1.0, -1.0, 1.0, 1.0])
+    px = (cx[:, None] + su * (ux * hw)) + sv * (-uy * hh)
+    py = (cy[:, None] + su * (uy * hw)) + sv * (ux * hh)
+    mx = ((((0.0 + px[:, 0]) + px[:, 1]) + px[:, 2]) + px[:, 3]) / 4
+    my = ((((0.0 + py[:, 0]) + py[:, 1]) + py[:, 2]) + py[:, 3]) / 4
+    pos = np.argsort(_libm(math.atan2, py - my[:, None], px - mx[:, None]), axis=1, kind="stable")
+    start = np.argmin(np.take_along_axis(px + py, pos, 1), axis=1)
+    pos = np.take_along_axis(pos, (np.arange(4) + start[:, None]) % 4, 1)
+    qx, qy = np.take_along_axis(px, pos, 1), np.take_along_axis(py, pos, 1)
+    t = qx * np.roll(qy, -1, axis=1) - qy * np.roll(qx, -1, axis=1)
+    flip = (((0.0 + t[:, 0]) + t[:, 1]) + t[:, 2]) + t[:, 3] < 0
+    pos[flip] = pos[flip][:, [0, 3, 2, 1]]
+    return np.stack([np.take_along_axis(px, pos, 1), np.take_along_axis(py, pos, 1)], axis=-1)
 
 
 def _gather_runs(arr: np.ndarray, runs: list[tuple[int, int, int]]) -> np.ndarray:
@@ -516,127 +525,67 @@ def _runs_score_px(px_map: np.ndarray, runs: list[tuple[int, int, int]]) -> floa
     return float(probs[nz].sum()) / count if count else 0.0
 
 
-def _runs_score_prob(pred: np.ndarray, runs: list[tuple[int, int, int]]) -> float:
-    probs = _gather_runs(pred, runs).astype(np.float64)
-    nz = probs > 0
-    count = int(nz.sum())
-    return float(probs[nz].sum()) / count if count else 0.0
-
-
-def _polys_from_labeled_runs(
-    src: np.ndarray,
-    pixel_mode: bool,
-    shape: tuple[int, int],
-    ys: np.ndarray,
-    xs: np.ndarray,
-    xe: np.ndarray,
-    lab: np.ndarray,
-    box_thresh: float,
-    unclip_ratio: float,
-) -> np.ndarray:
-    """Array-native page-level driver of the rotated D3-D6 chain.
-
-    Replaces the per-component tuple pipeline (component_runs →
-    per-component numpy gathers → min_area_rect → unclip) with ONE
-    vectorized pass per page for everything except the per-component
-    hull/caliper/unclip scalar math, which is bit-identical to the old
-    path by construction:
-
-    - extents/row-extremes are integer reduceat's (exact);
-    - the score value gather concatenates each component's run pixels in
-      the same raster order ``_gather_runs`` produced, and the score is
-      the identical ``probs[probs > 0].sum()/count`` expression over the
-      same contiguous float64 array (np.sum's pairwise tree depends only
-      on length/layout — equal);
-    - hull input is reduced to each row's (min-x, max-x) endpoints:
-      interior run endpoints of a row lie on the segment between the row
-      extremes, so they are never STRICT hull vertices, and
-      ``_half``'s strict-turn popping already drops collinear boundary
-      points — the hull vertex list (and hence the rect) is unchanged;
-    - corners are written straight into the preallocated (N, 5, 2)
-      float64 page array; the final ``clip(astype(float32))`` matches
-      the old asarray path value-for-value.
-    """
-    height, width = shape
-    n = len(ys)
-    if n == 0:
-        return np.zeros((0, 5, 2), dtype=np.float32)
+def _by_component(ys: np.ndarray, xs: np.ndarray, xe: np.ndarray, lab: np.ndarray):
+    """Labeled runs (at least one) regrouped by component: (ys, xs, xe,
+    comp_b), each component's runs contiguous and in raster order,
+    components in raster order of their first run (a stable sort by
+    label), ``comp_b`` the index of each component's first run."""
     order = np.argsort(lab, kind="stable")
-    ys = ys[order]
-    xs = xs[order]
-    xe = xe[order]
     lab = lab[order]
-    comp_b = np.flatnonzero(np.r_[True, lab[1:] != lab[:-1]])
-    comp_e = np.r_[comp_b[1:], n]
-    # contour span < 2 filter, i.e. pixel extent < 3 (base.py:106);
-    # runs are raster-ordered within a component, so ymin/ymax are the
-    # first/last run's rows
-    x0 = np.minimum.reduceat(xs, comp_b)
-    x1 = np.maximum.reduceat(xe, comp_b)
-    keep = ((x1 - x0) >= 3) & ((ys[comp_e - 1] - ys[comp_b] + 1) >= 3)
-    kept = np.flatnonzero(keep)
-    if len(kept) == 0:
-        return np.zeros((0, 5, 2), dtype=np.float32)
-    # ragged gather of the score source over every run (raster order —
-    # the same concatenation order _gather_runs produced)
-    L = xe - xs
-    cum = np.cumsum(L)
-    off0 = cum - L
-    tot = int(cum[-1])
-    flat_idx = np.repeat(ys * width + xs - off0, L) + np.arange(tot, dtype=np.int64)
-    flat = np.ascontiguousarray(src).ravel()[flat_idx]
-    comp_pa = off0[comp_b]
-    comp_pb = cum[comp_e - 1]
-    # per-(component, row) x extremes: run rows are raster-sorted, so a
-    # row group's first run has the min start and its last run the max
-    # end (runs in a row are disjoint and x-sorted)
-    rb = np.flatnonzero(np.r_[True, (lab[1:] != lab[:-1]) | (ys[1:] != ys[:-1])])
-    re_ = np.r_[rb[1:], n]
-    rpx0 = xs[rb].astype(np.float64)
-    rpx1 = (xe[re_ - 1] - 1).astype(np.float64)
-    rpy = ys[rb].astype(np.float64)
-    crb = np.searchsorted(rb, comp_b)
-    cre = np.r_[crb[1:], len(rb)]
-    # One page-level check replaces the per-component nz mask: component
-    # pixels come from the OPENED bitmap (opening is anti-extensive, so
-    # every pixel is below the binarize threshold) — when the gathered
-    # page holds no zero-probability value at all, probs[nz] is a full
-    # contiguous copy and probs[nz].sum() == probs.sum() (same pairwise
-    # tree over the same values), so the masked path is skipped whole.
-    all_nz = bool(flat.max() < 255) if pixel_mode else bool(flat.min() > 0)
-    scores: list[float] = []
-    passing: list[int] = []
-    for c in kept:
-        fl = flat[comp_pa[c] : comp_pb[c]]
-        if pixel_mode:
-            probs = (255.0 - fl.astype(np.float64)) / 255.0
-        else:
-            probs = fl.astype(np.float64)
-        if all_nz:
-            count = len(probs)
-            score = float(probs.sum()) / count if count else 0.0
-        else:
-            nz = probs > 0
-            count = int(nz.sum())
-            score = float(probs[nz].sum()) / count if count else 0.0
-        if score < box_thresh:
-            continue
-        scores.append(score)
-        passing.append(c)
-    m = len(scores)
-    if m == 0:
-        return np.zeros((0, 5, 2), dtype=np.float32)
-    rects = _rects_for_components(rpx0, rpx1, rpy, crb, cre, np.asarray(passing))
-    polys = np.empty((m, 5, 2), dtype=np.float64)
-    for i in range(m):
-        quad = _unclip_pts(*rects[i], unclip_ratio)
-        for j in range(4):
-            qx, qy = quad[j]
-            polys[i, j, 0] = qx / width
-            polys[i, j, 1] = qy / height
-        polys[i, 4, 0] = 0.0
-        polys[i, 4, 1] = scores[i]
-    return np.clip(polys.astype(np.float32), 0, 1)
+    return ys[order], xs[order], xe[order], np.flatnonzero(np.r_[True, lab[1:] != lab[:-1]])
+
+
+def _page_components(
+    src: np.ndarray, binmap: np.ndarray, morph_open: bool, pixel_mode: bool, box_thresh: float
+):
+    """The per-page half of the group kernel: D2 + D3 on one page's
+    binary map, the small-component filter (contour span < 2, i.e.
+    pixel extent < 3 — base.py:106) and the D4 score. Returns
+    ``((h, w), ys, xs, xe, runs per component, scores)`` of the
+    components that pass ``box_thresh``; nothing in it refers to the
+    maps."""
+    h, w = binmap.shape
+    runs = _label_runs_packed(_open_3x3_packed(binmap), h, w) if morph_open else label_runs(binmap)
+    if len(runs[0]) == 0:
+        return (h, w), *runs, np.zeros(0)
+    ys, xs, xe, comp_b = _by_component(*runs)
+    nr = np.r_[comp_b[1:], len(ys)] - comp_b
+    x0, x1 = np.minimum.reduceat(xs, comp_b), np.maximum.reduceat(xe, comp_b)
+    keep = ((x1 - x0) >= 3) & ((ys[comp_b + nr - 1] - ys[comp_b] + 1) >= 3)
+    run = np.repeat(keep, nr)
+    ys, xs, xe, nr = ys[run], xs[run], xe[run], nr[keep]
+    # D4: the mean of each component's positive probabilities, gathered
+    # in run order and compacted; np.sum per slice (module docstring)
+    length = xe - xs
+    pix = np.repeat(ys * w + xs - (np.cumsum(length) - length), length) + np.arange(int(length.sum()))
+    probs = np.ascontiguousarray(src).ravel()[pix].astype(np.float64)
+    if pixel_mode:
+        probs = (255.0 - probs) / 255.0
+    nz = probs > 0
+    count = np.add.reduceat(nz, np.r_[0, np.cumsum(length)][np.cumsum(nr) - nr], dtype=np.int64)
+    positive, bounds = probs[nz], np.r_[0, np.cumsum(count)].tolist()
+    sums = np.array([positive[a:b].sum() for a, b in zip(bounds[:-1], bounds[1:])])
+    scores = np.divide(sums, count, out=np.zeros(len(count)), where=count > 0)
+    ok = ~(scores < box_thresh)
+    run = np.repeat(ok, nr)
+    return (h, w), ys[run], xs[run], xe[run], nr[ok], scores[ok]
+
+
+def _group_polys(pages: list, unclip_ratio: float) -> list[np.ndarray]:
+    """D5-D6 over a group's ``_page_components`` in one vectorized pass:
+    one (N, 5, 2) float32 polygon array per page, in order."""
+    ys, xs, xe, nr, scores = (np.concatenate([p[k] for p in pages]) for k in range(1, 6))
+    if len(nr) == 0:
+        return [np.zeros((0, 5, 2), dtype=np.float32) for _ in pages]
+    comp_b = np.cumsum(nr) - nr
+    quads = _unclip_quads(*_rects_for_components(ys, xs, xe, comp_b, np.arange(len(nr))), unclip_ratio)
+    per_page = [len(p[5]) for p in pages]
+    hw = np.repeat(np.array([p[0] for p in pages], dtype=np.int64), per_page, axis=0)
+    polys = np.zeros((len(nr), 5, 2))
+    polys[:, :4, 0] = quads[:, :, 0] / hw[:, 1:]
+    polys[:, :4, 1] = quads[:, :, 1] / hw[:, :1]
+    polys[:, 4, 1] = scores
+    return np.split(np.clip(polys.astype(np.float32), 0, 1), np.cumsum(per_page)[:-1])
 
 
 def bitmap_to_polys(
@@ -648,12 +597,43 @@ def bitmap_to_polys(
     """Binary map -> (N, 5, 2) rotated polygons [TL,TR,BR,BL,(0,score)]
     in relative coords clipped to [0,1] (postprocessor/base.py:83-139,
     rotated path) — the real-prob-map variant."""
-    from onnxtr_spark.kernels.detect_post import label_runs
+    return _group_polys([_page_components(pred, bitmap, False, False, box_thresh)], unclip_ratio)[0]
 
-    ys, xs, xe, lab = label_runs(bitmap)
-    return _polys_from_labeled_runs(
-        pred, False, bitmap.shape[:2], ys, xs, xe, lab, box_thresh, unclip_ratio
-    )
+
+def postprocess_prob_maps_rotated(
+    prob_maps,
+    bin_thresh: float = BIN_THRESH,
+    box_thresh: float = BOX_THRESH,
+    unclip_ratio: float = UNCLIP_RATIO,
+    morph_open: bool = True,
+) -> list[np.ndarray]:
+    """Full rotated D1-D6 chain for a group of (H, W) probability maps —
+    the real-CNN path (a non-affine model can't be folded; see
+    detect_post.postprocess_prob_maps): one (N, 5, 2) float32 array per
+    map, in order. ``prob_maps`` may be any iterable; each map is
+    labeled and gathered as it arrives, and only it and the next map
+    are alive at once.
+    Geometry is bit-identical to the folded path; scores differ only
+    in float32-map ulps."""
+    pages = [_page_components(m, m >= bin_thresh, morph_open, False, box_thresh) for m in prob_maps]
+    return _group_polys(pages, unclip_ratio)
+
+
+def postprocess_pixel_maps_rotated(
+    px_maps,
+    bin_thresh: float = BIN_THRESH,
+    box_thresh: float = BOX_THRESH,
+    unclip_ratio: float = UNCLIP_RATIO,
+    morph_open: bool = True,
+) -> list[np.ndarray]:
+    """Full rotated D1-D6 chain folded through the affine stub model,
+    directly on a group of uint8 maps (see
+    detect_post.postprocess_pixel_maps for the folding argument —
+    identical here, geometry is bit-identical); iterable as in
+    ``postprocess_prob_maps_rotated``."""
+    pix_thresh = float(np.floor(255.0 - 255.0 * bin_thresh))
+    pages = [_page_components(m, m <= pix_thresh, morph_open, True, box_thresh) for m in px_maps]
+    return _group_polys(pages, unclip_ratio)
 
 
 def postprocess_prob_map_rotated(
@@ -663,13 +643,8 @@ def postprocess_prob_map_rotated(
     unclip_ratio: float = UNCLIP_RATIO,
     morph_open: bool = True,
 ) -> np.ndarray:
-    """Full rotated D1-D6 chain for one page's (H, W) probability map —
-    the real-CNN path (a non-affine model can't be folded; see
-    detect_post.postprocess_prob_map). Geometry is bit-identical to the
-    folded path; scores differ only in float32-map ulps."""
-    return _postprocess_binmap_rotated(
-        prob_map, False, prob_map >= bin_thresh, box_thresh, unclip_ratio, morph_open
-    )
+    """``postprocess_prob_maps_rotated`` for one page's map."""
+    return postprocess_prob_maps_rotated([prob_map], bin_thresh, box_thresh, unclip_ratio, morph_open)[0]
 
 
 def postprocess_pixel_map_rotated(
@@ -679,35 +654,8 @@ def postprocess_pixel_map_rotated(
     unclip_ratio: float = UNCLIP_RATIO,
     morph_open: bool = True,
 ) -> np.ndarray:
-    """Full rotated D1-D6 chain folded through the affine stub model,
-    directly on the uint8 map (see detect_post.postprocess_pixel_maps for
-    the folding argument — identical here, geometry is bit-identical)."""
-    pix_thresh = float(np.floor(255.0 - 255.0 * bin_thresh))
-    return _postprocess_binmap_rotated(
-        px_map, True, px_map <= pix_thresh, box_thresh, unclip_ratio, morph_open
-    )
-
-
-def _postprocess_binmap_rotated(
-    src: np.ndarray,
-    pixel_mode: bool,
-    binmap: np.ndarray,
-    box_thresh: float,
-    unclip_ratio: float,
-    morph_open: bool,
-) -> np.ndarray:
-    from onnxtr_spark.kernels.detect_post import _label_runs_packed, _open_3x3_packed, label_runs
-
-    h, w = binmap.shape[:2]
-    if morph_open:
-        # packed-bit opening feeds run labeling directly — no
-        # unpack/repack roundtrip
-        ys, xs, xe, lab = _label_runs_packed(_open_3x3_packed(binmap), h, w)
-    else:
-        ys, xs, xe, lab = label_runs(binmap)
-    return _polys_from_labeled_runs(
-        src, pixel_mode, (h, w), ys, xs, xe, lab, box_thresh, unclip_ratio
-    )
+    """``postprocess_pixel_maps_rotated`` for one page's uint8 map."""
+    return postprocess_pixel_maps_rotated([px_map], bin_thresh, box_thresh, unclip_ratio, morph_open)[0]
 
 
 def remove_padding_rotated(

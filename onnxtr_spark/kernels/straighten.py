@@ -76,33 +76,16 @@ def _component_stats_arrays(work: np.ndarray, lower_area: int) -> list[tuple[flo
     strict hull vertices. The rect is then normalized as the module
     docstring describes."""
     from onnxtr_spark.kernels.detect_post import label_runs
+    from onnxtr_spark.kernels.rotated_post import _by_component, _rects_for_components
 
-    ys, xs, xe, lab = label_runs(work)
-    n = len(ys)
-    if n == 0:
+    runs = label_runs(work)
+    if len(runs[0]) == 0:
         return []
-    order = np.argsort(lab, kind="stable")
-    ys = ys[order]
-    xs = xs[order]
-    xe = xe[order]
-    lab = lab[order]
-    comp_b = np.flatnonzero(np.r_[True, lab[1:] != lab[:-1]])
+    ys, xs, xe, comp_b = _by_component(*runs)
     areas = np.add.reduceat(xe - xs, comp_b)
-    keep = np.flatnonzero(areas > lower_area)
-    if len(keep) == 0:
-        return []
-    rb = np.flatnonzero(np.r_[True, (lab[1:] != lab[:-1]) | (ys[1:] != ys[:-1])])
-    re_ = np.r_[rb[1:], n]
-    rpx0 = xs[rb].astype(np.float64)
-    rpx1 = (xe[re_ - 1] - 1).astype(np.float64)
-    rpy = ys[rb].astype(np.float64)
-    crb = np.searchsorted(rb, comp_b)
-    cre = np.r_[crb[1:], len(rb)]
-    from onnxtr_spark.kernels.rotated_post import _rects_for_components
-
-    rects = _rects_for_components(rpx0, rpx1, rpy, crb, cre, keep)
+    _, _, ws, hs, angs = _rects_for_components(ys, xs, xe, comp_b, np.flatnonzero(areas > lower_area))
     stats: list[tuple[float, float, float, float]] = []
-    for _, _, w, h, ang in rects:
+    for w, h, ang in zip(ws.tolist(), hs.tolist(), angs.tolist()):
         deg = math.degrees(ang)
         if w < h:
             w, h = h, w

@@ -39,7 +39,7 @@ from pyspark.sql import DataFrame
 from onnxtr_spark import imaging
 from onnxtr_spark.engine import EngineConfig
 from onnxtr_spark.kernels import detect_post
-from onnxtr_spark.stages.page_path import GROUP_PAGES, PagePath, check_contracts
+from onnxtr_spark.stages.page_path import PagePath, check_contracts
 
 DETECT_SCHEMA = (
     "doc_id string, offset int, media_ref string, png binary, height int, width int, "
@@ -146,7 +146,7 @@ def detect_pages(pages: DataFrame, cfg: DetectConfig = DetectConfig()) -> DataFr
                 continue
             res = pdf[["doc_id", "offset", "media_ref", "png", "height", "width"]].copy()
             pngs, boxes = res["png"].tolist(), []
-            for g, imgs, locs in path.detect(pngs, GROUP_PAGES):
+            for g, imgs, locs in path.detect(pngs):
                 if cfg.straighten_pages:
                     pngs[g : g + len(imgs)] = [imaging.encode_image(img) for img in imgs]
                 boxes.extend(loc.astype(np.float64).tolist() for loc in locs)

@@ -15,16 +15,19 @@ Recognition model batches are flattened across all pages in the Arrow
 chunk (reference flattens across pages too, predictor.py:132).
 
 Detection is staged in groups of at most ``GROUP_PAGES`` pages of the
-Arrow chunk: every page of a group is decoded, straightened if
-configured, and map-resized (plus the float model's forward); then one
-batched straight D1-D6 call covers the whole group. That call stacks
-the group's maps with a separator row between pages, and separator rows
-and pad columns obey cv2's border rule (foreground for erosion, cleared
-before dilation and labeling — kernels/detect_post.py), so every page
-gets exactly the boxes a one-page call gives it. The group's crops are
-cut, and its pages and maps dropped, before the next group starts. The
-rotated path has no group kernel and runs page at a time (groups of
-one); its crops are classified (G3) in one batch per chunk.
+Arrow chunk (``ROTATED_GROUP_PAGES`` on the rotated path): every page of
+a group is decoded, straightened if configured, and map-resized (plus
+the float model's forward); then one batched D1-D6 call covers the
+whole group. The straight call stacks the group's maps with a
+separator row between pages, and separator rows and pad columns obey
+cv2's border rule (foreground for erosion, cleared before dilation and
+labeling — kernels/detect_post.py), so every page gets exactly the
+boxes a one-page call gives it. The rotated call opens, labels and
+scores each page's map as it is made, keeps only the passing
+components' runs, and fits and unclips the group's polygons at once
+(kernels/rotated_post.py). The group's crops are cut, and its pages and
+maps dropped, before the next group starts. Rotated crops are
+classified (G3) in one batch per chunk.
 """
 
 from __future__ import annotations
@@ -58,9 +61,6 @@ def detect_recognize_pages(
     correctness never depends on them.
     """
     check_contracts(det_cfg.engine, reco_cfg.engine)
-    # the rotated postprocess has no group kernel: its pages go one at a
-    # time, so staging would only hold their maps longer
-    group_pages = GROUP_PAGES if det_cfg.assume_straight_pages else 1
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from time import perf_counter
@@ -76,7 +76,7 @@ def detect_recognize_pages(
             flat: list = []  # the chunk's resized splits, in page order
             pending: list[tuple[dict, list]] = []  # G3 crops awaiting the batched classify
             keys = list(zip(pdf["doc_id"], pdf["offset"], pdf["media_ref"]))
-            for g, imgs, locs in path.detect(pdf["png"].tolist(), group_pages):
+            for g, imgs, locs in path.detect(pdf["png"].tolist()):
                 m_pages += len(imgs)
                 for (doc_id, offset, media_ref), img, loc in zip(keys[g:], imgs, locs):
                     boxes, polys, crops = path.crop(img, loc)

@@ -26,6 +26,7 @@ contract maps page-relative coordinates directly.
 
 from __future__ import annotations
 
+from collections.abc import Iterator
 from time import perf_counter
 
 import numpy as np
@@ -56,6 +57,11 @@ from onnxtr_spark.kernels.straighten import estimate_orientation
 # memory staging adds: 16 pages amortize the per-call NumPy overhead
 # while the worker's peak RSS stays at the page-at-a-time level.
 GROUP_PAGES = 16
+# A rotated group keeps its decoded pages (not its maps) until D5-D6.
+# On the rotated job, 16 such pages put the worker's peak RSS at
+# 183.6-186.7 MB in all 10 perfbench runs; page-at-a-time and 8 pages
+# read 170.4-172.0 MB in 16 of 18 runs each (runs in CHANGES.md).
+ROTATED_GROUP_PAGES = 8
 
 OUT_COLS = [
     "doc_id", "offset", "media_ref", "word_id", "rank", "line_id", "block_id",
@@ -116,23 +122,28 @@ class PagePath:
         self.channel0 = self.fold and reco_cfg is not None and not self.float_reco
         self.decode_s = 0.0
 
-    def detect(self, pngs: list[bytes], group_pages: int):
+    def detect(self, pngs: list[bytes]):
         """Decode → straighten → map resize + forward per page, then the
         grouped postprocess: yields (start, pages, locs) per group of at
-        most ``group_pages`` pages. A group's pages and maps are dropped
-        before the next group decodes — the yielded page list is emptied
-        on resume — and decode time accumulates in ``decode_s``."""
+        most ``GROUP_PAGES`` pages (``ROTATED_GROUP_PAGES`` on the
+        rotated path). The postprocess pulls the maps one page at a
+        time, and each page joins the group's page list as its map is
+        made. A group's pages and maps are dropped before the next group
+        decodes — the yielded page list is emptied on resume — and
+        decode time accumulates in ``decode_s``."""
+        group_pages = GROUP_PAGES if self.det_cfg.assume_straight_pages else ROTATED_GROUP_PAGES
         for g in range(0, len(pngs), group_pages):
-            imgs, maps = [], []
-            for png in pngs[g : g + group_pages]:
-                t_dec = perf_counter()
-                img = decode(png, self.channel0)
-                self.decode_s += perf_counter() - t_dec
-                if self.det_cfg.straighten_pages:
-                    img = self.straighten(img)
-                imgs.append(img)
-                maps.append(self.detect_map(img))
-            yield g, imgs, self.detect_group(imgs, maps)
+            imgs: list[np.ndarray] = []
+
+            def maps():
+                for png in pngs[g : g + group_pages]:
+                    t_dec = perf_counter()
+                    img = decode(png, self.channel0)
+                    self.decode_s += perf_counter() - t_dec
+                    imgs.append(self.straighten(img) if self.det_cfg.straighten_pages else img)
+                    yield self.detect_map(imgs[-1])
+
+            yield g, imgs, self.detect_group(imgs, maps())
             imgs.clear()  # the caller's reference too
 
     def straighten(self, img: np.ndarray) -> np.ndarray:
@@ -179,20 +190,23 @@ class PagePath:
         x = preprocess.cast_normalize(resized, eng_cfg.mean, eng_cfg.std)[None] if self.float_det else resized[None]
         return self.det.run(_session_layout(x, eng_cfg))[0]
 
-    def detect_group(self, imgs: list[np.ndarray], maps: list[np.ndarray]) -> list[np.ndarray]:
+    def detect_group(self, imgs: list[np.ndarray], maps: Iterator[np.ndarray]) -> list[np.ndarray]:
         """D1-D6 over a group's maps, then P8 unpad and the loc_preds
         hooks per page: (N, 5) straight boxes, or (N, 5, 2) polygons
         with the score row on the rotated path. Straight maps go through
         one stacked call (separator rows obey cv2's border rule,
-        kernels/detect_post.py); the rotated postprocess runs per page."""
+        kernels/detect_post.py); the rotated group kernel labels and
+        scores each map as ``maps`` yields it and keeps only the passing
+        components' runs, so at most the previous rotated map is alive
+        while the next one is made (kernels/rotated_post.py)."""
         cfg = self.det_cfg
         thresholds = (cfg.bin_thresh, cfg.box_thresh, cfg.unclip_ratio)
         if cfg.assume_straight_pages:
             post = detect_post.postprocess_pixel_maps if self.fold else detect_post.postprocess_prob_maps
-            locs, unpad = post(maps, *thresholds), detect_post.remove_padding
+            locs, unpad = post(list(maps), *thresholds), detect_post.remove_padding
         else:
-            post = rotated_post.postprocess_pixel_map_rotated if self.fold else rotated_post.postprocess_prob_map_rotated
-            locs, unpad = [post(m, *thresholds) for m in maps], rotated_post.remove_padding_rotated
+            post = rotated_post.postprocess_pixel_maps_rotated if self.fold else rotated_post.postprocess_prob_maps_rotated
+            locs, unpad = post(maps, *thresholds), rotated_post.remove_padding_rotated
         out = []
         for img, loc in zip(imgs, locs):
             if cfg.preserve_aspect_ratio and not cfg.symmetric_pad:

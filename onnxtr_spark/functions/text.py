@@ -399,7 +399,7 @@ def _top_trigrams_arrow():
     """Arrow-vectorized per-doc trigram profile: the ranked top-DOC_TOP
     packed trigrams of each text, as one pandas UDF.
 
-    Replaces the interpreted-HOF JVM chain (3 substring+ascii per
+    It replaced an interpreted-HOF JVM chain (3 substring+ascii per
     trigram inside nested transforms) on the hot path: profiling at
     80k docs put lang-ID at ~10.6 s of a 15.7 s curation pass, nearly
     all interpreted lambda dispatch + allocation (HOF lambdas never
@@ -411,8 +411,6 @@ def _top_trigrams_arrow():
     np.unique + lexsort((trigram, -count)) = the identical
     (count desc, trigram asc) total order. Per-row, zero shuffle,
     Arrow-batched — scales with executors like any narrow map.
-    Caveat shared with the JVM path: BMP codepoints (Java substring
-    walks UTF-16 units; numpy walks codepoints — they agree on BMP).
     """
     import re
 
@@ -443,28 +441,21 @@ def _top_trigrams_arrow():
     return F.pandas_udf(_extract, "array<long>")
 
 
-def lang_id(documents: DataFrame, cast_id: bool = True, impl: str = "arrow") -> DataFrame:
+def lang_id(documents: DataFrame, cast_id: bool = True) -> DataFrame:
     """(doc_id, pred_lang) via Cavnar-Trenkle out-of-place distance.
 
     ``cast_id=False`` keeps the doc_id column's own type (non-numeric
     ids, e.g. when called over recognized text inside the zoo
     predictor); the oracle uses the default long cast.
 
-    ``impl='arrow'`` (default) extracts each doc's ranked trigram
-    profile in one Arrow-vectorized pandas UDF (see
-    _top_trigrams_arrow — the interpreted-HOF JVM chain was the
-    corpus pipeline's dominant cost and its allocation rate the
-    single-JVM scaling ceiling); ``impl='jvm'`` keeps the pure-JVM
-    column-algebra chain (bit-equal output, parity-tested).
+    Each doc's ranked trigram profile comes from one Arrow-vectorized
+    pandas UDF (``_top_trigrams_arrow``).
 
     Plan shape: per-row profile extraction (no shuffle) → broadcast
     join against the ~800-row profile table → per-(doc, lang) integer
-    sum → per-doc argmin window. At 10^12 docs everything is keyed by
-    doc_id after the first aggregation; the profile side is a
-    broadcast.
+    sum → per-doc argmin. At 10^12 docs everything is keyed by doc_id
+    after the first aggregation; the profile side is a broadcast.
     """
-    from pyspark.sql import Window
-
     spark = documents.sparkSession
     profiles = F.broadcast(
         spark.createDataFrame(
@@ -472,105 +463,18 @@ def lang_id(documents: DataFrame, cast_id: bool = True, impl: str = "arrow") -> 
             "lang string, trigram long, prank int",
         )
     )
-    langs = F.broadcast(spark.createDataFrame([(lg,) for lg in sorted(TRAIN_SNIPPETS)], "lang string"))
-
     idc = F.col("doc_id").cast("long") if cast_id else F.col("doc_id")
     # spread the trigram extraction: normalization + extraction are
     # CPU-bound per doc and the documents table is a single row group
     # (same rationale as shingles())
     documents = spread(documents)
-    if impl == "arrow":
-        docs_top = documents.select(
-            idc.alias("doc_id"), _top_trigrams_arrow()(F.col("text")).alias("top")
-        ).localCheckpoint(eager=False)
-        return _lang_id_from_top(documents, docs_top, idc, profiles, langs)
-    norm = F.trim(F.regexp_replace(F.lower(F.col("text")), _NORM_RE, " "))
-    # Trigrams are INT64-PACKED at extraction (cp0·2048² + cp1·2048 +
-    # cp2; every profile script's codepoints are < 2048): the whole
-    # count/rank pass below then sorts and compares longs, not strings
-    # — measured ~20% cheaper end-to-end (interpreted lambda dispatch,
-    # not comparison cost, dominates the pass). Packed-int order
-    # equals binary-UTF-8 string order for BMP codepoints, so ranking
-    # tie-breaks — and therefore the oracle — are unchanged.
-    def _pack(tok, i):
-        padded = F.concat(F.lit(" "), tok, F.lit(" "))
-        return (
-            F.ascii(F.substring(padded, i, 1)).cast("long") * 2048 * 2048
-            + F.ascii(F.substring(padded, i + 1, 1)).cast("long") * 2048
-            + F.ascii(F.substring(padded, i + 2, 1)).cast("long")
-        )
-
-    tris = F.flatten(
-        F.transform(
-            F.filter(F.split(norm, " "), lambda t: t != ""),
-            lambda tok: F.transform(
-                F.sequence(F.lit(1), F.length(tok)),  # padded len+2 → len trigrams
-                lambda i: _pack(tok, i),
-            ),
-        )
-    )
-    docs = documents.select(idc.alias("doc_id"), tris.alias("tris"))
-    # Per-ROW trigram counting: a document's trigram counts depend only
-    # on its own row, so the former explode → groupBy(doc_id, trigram)
-    # → row_number window — a full shuffle + sort of EVERY trigram
-    # occurrence (~1500 rows/doc; measured 43 s of a 60 s curation run
-    # at 320k docs, and memory-bandwidth-bound so it barely scaled
-    # 8→32 cores) — collapses into sorted-run detection inside the
-    # array: array_sort, run boundaries, (count desc, trigram asc)
-    # struct sort, slice. Identical total order ⇒ identical output;
-    # zero wide operators before the broadcast profile join.
-    # Each intermediate is ALIASED into its own projection so the HOF
-    # lambdas below capture ATTRIBUTES: an expression captured in a
-    # lambda re-evaluates PER ELEMENT (an inline array_sort here made
-    # the pass O(n² log n) per doc — measured 80× slower).
-    d_sorted = docs.select(
-        "doc_id", F.array_sort("tris").alias("ts"), F.size("tris").alias("n")
-    ).where(F.col("n") > 0)
-    d_starts = d_sorted.select(
-        "doc_id",
-        "ts",
-        "n",
-        F.filter(
-            F.sequence(F.lit(1), F.col("n")),
-            lambda i: F.when(i == F.lit(1), F.lit(True)).otherwise(
-                F.element_at(F.col("ts"), i) != F.element_at(F.col("ts"), i - F.lit(1))
-            ),
-        ).alias("starts"),
-    )
-    d_ends = d_starts.select(
-        "doc_id",
-        "ts",
-        "starts",
-        F.concat(
-            F.slice(F.col("starts"), 2, F.greatest(F.lit(0), F.size("starts") - 1)),
-            F.array(F.col("n") + 1),
-        ).alias("ends"),
-    )
-    d_runs = d_ends.select(
-        "doc_id",
-        F.zip_with(
-            F.col("starts"),
-            F.col("ends"),
-            lambda a, b: F.struct(
-                (a - b).alias("negcnt"), F.element_at(F.col("ts"), a).alias("trigram")
-            ),
-        ).alias("runs"),
-    )
-    # materialize the per-doc top array BEFORE the generator: Generate
-    # collapses the whole HOF chain into its input and re-evaluates it
-    # pathologically (measured 0.3 s -> 211 s for the same 500 docs
-    # without the barrier); the checkpointed relation is doc-level
-    # (≤ DOC_TOP structs per row) and also feeds per_doc below
-    docs_top = d_runs.select(
-        "doc_id",
-        F.transform(
-            F.slice(F.array_sort("runs"), 1, DOC_TOP), lambda r: r["trigram"]
-        ).alias("top"),
+    docs_top = documents.select(
+        idc.alias("doc_id"), _top_trigrams_arrow()(F.col("text")).alias("top")
     ).localCheckpoint(eager=False)
-    return _lang_id_from_top(documents, docs_top, idc, profiles, langs)
+    return _lang_id_from_top(documents, docs_top, idc, profiles)
 
 
-def _lang_id_from_top(documents, docs_top, idc, profiles, langs) -> DataFrame:
+def _lang_id_from_top(documents, docs_top, idc, profiles) -> DataFrame:
     """Shared scoring tail: (doc_id, top: array<long> ranked trigrams)
     → broadcast profile join → out-of-place distance → argmin.
 
@@ -585,9 +489,7 @@ def _lang_id_from_top(documents, docs_top, idc, profiles, langs) -> DataFrame:
     sort-merge join + window tail tripled lang_id wall time on a
     4-executor local-cluster (cross-process shuffle of 13× the rows);
     this tail shuffles one pre-aggregated row per (doc, matched-lang)
-    and then one per doc. ``langs`` (the broadcast 13-row frame) is
-    retained in the signature for call compatibility but the floor is
-    a literal array — no join against it remains.
+    and then one per doc; the floor's language list is a literal array.
     """
     top = docs_top.where(F.size("top") > 0).select(
         "doc_id", F.size("top").alias("n_top"), F.posexplode("top").alias("pos", "trigram")

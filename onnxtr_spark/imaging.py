@@ -362,37 +362,12 @@ def synthesize_page(
     return page
 
 
-def page_to_prob(img: np.ndarray) -> np.ndarray:
-    """Darkness probability map of a rendered page: (255 - gray) / 255.
-
-    This is the stub detection "model": dark pixels are text. Shape
-    (H, W) float32 in [0, 1] — same contract as the reference's
-    sigmoid(logits) output (models/detection/models/fast.py:83).
-    """
-    return (WHITE - img[:, :, 0].astype(np.float32)) / 255.0
-
-
-def columns_to_classes(crop: np.ndarray, vocab: str = DEFAULT_VOCAB) -> np.ndarray:
-    """Classify each crop column as a vocab index or blank (= len(vocab)).
-
-    The stub recognition "model": the darkest pixel per column recovers
-    the glyph encoding; white/gap/pad columns map to the blank class.
-    Returns an int array of length crop_width.
-    """
-    blank = len(vocab)
-    if crop.size == 0:
-        return np.zeros(0, dtype=np.int64)
-    col_min = crop[:, :, 0].min(axis=0).astype(np.int64)
-    classes = np.full(col_min.shape, blank, dtype=np.int64)
-    is_char = (col_min >= CHAR_BASE) & (col_min < CHAR_BASE + len(vocab))
-    classes[is_char] = col_min[is_char] - CHAR_BASE
-    return classes
-
-
 def batch_columns_to_classes(batch: np.ndarray, vocab: str = DEFAULT_VOCAB) -> np.ndarray:
-    """``columns_to_classes`` over a whole (B, H, W, C) crop batch in one
-    vectorized pass: (B, W) int64 class ids (identical per-crop values —
-    min over the row axis commutes with batching)."""
+    """The stub recognition "model": classify each column of every crop
+    in a (B, H, W, C) batch as a vocab index or blank (= len(vocab)).
+    The darkest pixel per column recovers the glyph encoding; white,
+    gap and pad columns map to the blank class. Returns (B, W) int64
+    class ids."""
     blank = len(vocab)
     if batch.size == 0:
         return np.full(batch.shape[:1] + batch.shape[2:3], blank, dtype=np.int64)
@@ -404,18 +379,10 @@ def batch_columns_to_classes(batch: np.ndarray, vocab: str = DEFAULT_VOCAB) -> n
 
 
 def batch_classes_to_logits(classes: np.ndarray, n_classes: int, peak: float = 12.0) -> np.ndarray:
-    """One-hot (B, T, C) logits from a (B, T) class batch — the batched
-    ``classes_to_logits`` (same peak, same dtype, one fancy-index store)."""
+    """One-hot (B, T, C) logits from a (B, T) class batch: the stub
+    model's output tensor, consumed by the real CTC decoder
+    (kernels/ctc.py)."""
     b, t = classes.shape
     logits = np.zeros((b, t, n_classes), dtype=np.float32)
     logits[np.arange(b)[:, None], np.arange(t)[None, :], classes] = peak
-    return logits
-
-
-def classes_to_logits(classes: np.ndarray, n_classes: int, peak: float = 12.0) -> np.ndarray:
-    """One-hot logits (T, C) from per-timestep classes — the stub model's
-    output tensor, consumed by the real CTC decoder (kernels/ctc.py)."""
-    t = classes.shape[0]
-    logits = np.zeros((t, n_classes), dtype=np.float32)
-    logits[np.arange(t), classes] = peak
     return logits

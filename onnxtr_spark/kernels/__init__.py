@@ -4,35 +4,3 @@ Each module cites the reference implementation it re-derives
 (path:line into /root/reference). No Spark imports here — these run
 inside pandas UDFs on executors and in plain pytest.
 """
-
-from onnxtr_spark.kernels.builder import resolve_lines, sort_boxes
-from onnxtr_spark.kernels.ctc import ctc_best_path, softmax
-from onnxtr_spark.kernels.detect_post import bitmap_to_boxes, postprocess_prob_map
-from onnxtr_spark.kernels.rotated import (
-    estimate_page_angle,
-    extract_rcrops_nearest,
-    remap_boxes,
-    resolve_lines_rotated,
-    rotate_boxes,
-    sort_boxes_rotated,
-)
-from onnxtr_spark.kernels.split_merge import merge_multi_strings, merge_strings, remap_preds, split_crops
-
-__all__ = [
-    "bitmap_to_boxes",
-    "estimate_page_angle",
-    "extract_rcrops_nearest",
-    "remap_boxes",
-    "resolve_lines_rotated",
-    "rotate_boxes",
-    "sort_boxes_rotated",
-    "ctc_best_path",
-    "merge_multi_strings",
-    "merge_strings",
-    "postprocess_prob_map",
-    "remap_preds",
-    "resolve_lines",
-    "softmax",
-    "sort_boxes",
-    "split_crops",
-]

@@ -22,14 +22,6 @@ import numpy as np
 DECODE_BLOCK = 16
 
 
-def softmax(x: np.ndarray, axis: int = -1) -> np.ndarray:
-    """Numerically-stable softmax (scipy.special.softmax equivalent,
-    reference crnn.py:79)."""
-    shifted = x - x.max(axis=axis, keepdims=True)
-    e = np.exp(shifted)
-    return e / e.sum(axis=axis, keepdims=True)
-
-
 def _argmax_top_prob(logits: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     """Per-position argmax class and top softmax probability of a
     (N, T, C) float logits batch, computed DECODE_BLOCK crops at a time.
@@ -53,11 +45,6 @@ def _argmax_top_prob(logits: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
         np.exp(e, out=e)
         e.sum(axis=-1, out=sums[i : i + DECODE_BLOCK])
     return best, 1.0 / sums
-
-
-def decode_sequence(sequence: list[int], vocab: str) -> str:
-    """Map label indices to characters (reference crnn.py:58-59)."""
-    return "".join(vocab[int(c)] for c in sequence)
 
 
 def attention_decode(

@@ -59,22 +59,13 @@ BOX_THRESH = 0.1  # reference: models/detection/models/fast.py:58
 UNCLIP_RATIO = 1.5  # reference: models/detection/postprocessor/base.py:36
 
 
-def binary_open_3x3(bitmap: np.ndarray) -> np.ndarray:
-    """3x3 morphological opening of a binary (0/1 uint8) map.
-
-    Matches cv2.morphologyEx(MORPH_OPEN, ones((3,3))) on binary input:
-    erosion pads with foreground (border pixels survive), dilation pads
-    with background.
-    """
-    h, w = bitmap.shape
-    return np.unpackbits(_open_3x3_packed(bitmap), axis=1)[:, :w]
-
-
 def _open_3x3_packed(bitmap: np.ndarray) -> np.ndarray:
-    """``binary_open_3x3`` in packed-bit form (pad bits beyond ``w``
-    CLEARED, so ``_label_runs_packed`` can consume it directly without
-    the unpack/repack roundtrip): the stacked opening over a group of
-    one page."""
+    """3x3 morphological opening of one binary (0/1) page, as
+    cv2.morphologyEx(MORPH_OPEN, ones((3,3))) opens binary input
+    (erosion pads with foreground, dilation with background), in
+    packed-bit form: pad bits beyond ``w`` are CLEARED, so
+    ``_label_runs_packed`` consumes it without an unpack/repack
+    roundtrip. It is the stacked opening over a group of one page."""
     stack, _, inside = _stack([bitmap], False, np.bool_)
     return _open_packed(np.packbits(stack, axis=1), inside)[1:-1]
 
@@ -214,16 +205,6 @@ def _label_runs_packed(
     return ys.astype(np.int64), xs.astype(np.int64), xe.astype(np.int64), lab
 
 
-def connected_components(bitmap: np.ndarray) -> list[tuple[int, int, int, int]]:
-    """8-connected components of a binary map -> bounding rects (x, y, w, h).
-
-    Vectorized run labeling (``label_runs``); rects are returned in
-    raster order of the component's topmost-leftmost run (deterministic,
-    identical to the previous union-find implementation).
-    """
-    return [tuple(r) for r in _rects_from_runs(*label_runs(bitmap)).tolist()]
-
-
 def _rects_from_runs(ys: np.ndarray, xs: np.ndarray, xe: np.ndarray, lab: np.ndarray) -> np.ndarray:
     """(k, 4) int64 bounding rects [x, y, w, h] of the labeled
     components, in ascending label (= raster) order."""
@@ -360,18 +341,6 @@ def _size_filter(page: np.ndarray, rects: np.ndarray):
     return page[keep], rects[keep]
 
 
-def bitmap_to_boxes(
-    pred: np.ndarray,
-    bitmap: np.ndarray,
-    box_thresh: float = BOX_THRESH,
-    unclip_ratio: float = UNCLIP_RATIO,
-) -> np.ndarray:
-    """Binary map -> (N, 5) array of [xmin, ymin, xmax, ymax, score],
-    relative coords clipped to [0,1] (reference postprocessor/base.py:83-139,
-    straight path)."""
-    return _prob_boxes([pred], [bitmap], box_thresh, unclip_ratio, False)[0]
-
-
 def remove_padding(
     boxes: np.ndarray,
     page_h: int,
@@ -409,7 +378,7 @@ def _prob_boxes(
     morph_open: bool,
 ) -> list[np.ndarray]:
     """D2-D6 for a group of binary maps scored on their float maps
-    ``preds`` (the prob-map path and ``bitmap_to_boxes``)."""
+    ``preds`` (the prob-map path)."""
     stack, row0, inside = _stack(binmaps, False, np.bool_)
     page, rects = _size_filter(*_group_rects(stack, row0, inside, morph_open))
     x0, y0, x1, y1 = _rect_bounds(

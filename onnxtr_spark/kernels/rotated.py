@@ -8,9 +8,9 @@ Exact re-derivations of the reference's rotated-box math:
   |angle| exceeds min_angle; optional remap to a padded target shape)
 - ``estimate_page_angle``  — utils/geometry.py:439-454 (median arctan of
   reading-direction left→right point pairs)
-- ``sort_boxes_rotated``   — models/builder.py:55-63: straighten rotated
-  boxes by -estimate_page_angle about a 1024² frame, take min/max
-  corners, then the standard straight sort key.
+- ``resolve_lines_rotated`` — models/builder.py:55-63 + 103-146:
+  straighten rotated boxes by -estimate_page_angle about a 1024² frame,
+  take min/max corners, then the standard straight sort and line scan.
 - ``extract_rcrops_nearest`` — G2 analog of utils/geometry.py:514-625:
   per-quadrilateral inverse-affine crop. The reference warps with
   cv2.warpPerspective/​warpAffine (bilinear); with no cv2 here we
@@ -23,7 +23,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from onnxtr_spark.kernels.builder import PARAGRAPH_BREAK, resolve_lines, sort_boxes
+from onnxtr_spark.kernels.builder import PARAGRAPH_BREAK, resolve_lines
 
 
 def remap_boxes(loc_preds: np.ndarray, orig_shape: tuple[int, int], dest_shape: tuple[int, int]) -> np.ndarray:
@@ -89,13 +89,6 @@ def _straight_fit(boxes: np.ndarray) -> np.ndarray:
         loc_preds=boxes, angle=-estimate_page_angle(boxes), orig_shape=(1024, 1024), min_angle=5.0
     )
     return np.concatenate((straightened.min(1), straightened.max(1)), -1)
-
-
-def sort_boxes_rotated(boxes: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """Rotated branch of the builder's sort (models/builder.py:55-63):
-    straighten, fit straight boxes, return (order, straight_boxes)."""
-    straight = _straight_fit(boxes)
-    return sort_boxes(straight), straight
 
 
 def resolve_lines_rotated(boxes: np.ndarray, paragraph_break: float = PARAGRAPH_BREAK) -> list[list[int]]:

@@ -4,11 +4,11 @@ Re-derives the reference's ``assume_straight_pages=False`` branch of
 GeneralDetectionPostProcessor (onnxtr/models/detection/postprocessor/
 base.py:38-139) without cv2/pyclipper:
 
-- D3 components: same union-find labeling as detect_post, but keeping
-  each component's row runs so the convex hull is available (the hull
-  of a pixel set equals the hull of its per-row run endpoints).
-- min-area rect: rotating calipers over the monotone-chain hull —
-  the cv2.minAreaRect analog (postprocessor/base.py:52).
+- D3 components: the run labeling of detect_post (``label_runs``),
+  keeping each component's row runs, since the convex hull of a pixel
+  set equals the hull of its per-row run endpoints.
+- min-area rect: rotating calipers over the monotone-chain hull, the
+  cv2.minAreaRect analog (postprocessor/base.py:52).
 - D4 rotated box score: mean of the NONZERO probabilities inside the
   component (core.py:54-58 masks with fillPoly(contour) and divides by
   ``count_nonzero(product)`` — zero-prob pixels inside the mask do not
@@ -18,9 +18,9 @@ base.py:38-139) without cv2/pyclipper:
   (the reference's +1 "cv2 approx" correction, base.py:54-56), round
   joins via pyclipper then minAreaRect — for a rectangle input that
   composition is exactly the same-angle rectangle grown by ``distance``
-  on each side (computed analytically), then ``order_points``.
-- ``order_points``: TL,TR,BR,BL ordering (utils/geometry.py:58-105:
-  centroid-angle sort, roll to min coordinate-sum, clockwise fix).
+  on each side (computed analytically), with the corners ordered
+  TL,TR,BR,BL as utils/geometry.py:58-105 orders them (centroid-angle
+  sort, roll to min coordinate-sum, clockwise fix).
 - D6: relative coords, score appended as a 5th row ``[0, score]``,
   clip to [0,1] (base.py:132-137); empty -> (0, 5, 2).
 - P8 rotated padding removal (models/detection/_utils/base.py:12-62):
@@ -35,13 +35,15 @@ only the runs of its components that pass both filters are kept — so a
 page's map is dropped once the next one is made (while the next map is
 made, the previous one is still the loop's current item). The min-area
 rects, D5 and D6 then run once over the group's concatenated runs:
-hulls, calipers, unclip and ``order_points`` are array expressions over
-every component of every page, each evaluating the scalar chain's float
-ops in the scalar chain's order (``tests/rotated_post_oracle.py`` keeps
-that chain; ``tests/test_rotated_post_batched.py`` asserts equal bits).
-Two steps stay per value: libm's trig (NumPy's ``arctan2``, ``cos`` and
-``sin`` are not libm's in the last ulp), and the D4 sum, one ``np.sum``
-per component (``np.add.reduceat`` associates the sum differently).
+hulls, calipers, unclip and corner order are array expressions over
+every component of every page, hulls of one or two vertices included,
+each evaluating the scalar chain's float ops in the scalar chain's
+order. The scalar chain is the oracle in ``tests/rotated_post_oracle.py``;
+``tests/test_rotated_post_batched.py`` asserts equal bits. Two steps
+stay per value: libm's trig and ``hypot`` (NumPy's ``arctan2``, ``cos``
+and ``sin`` are not libm's in the last ulp), and the D4 sum, one
+``np.sum`` per component (``np.add.reduceat`` associates the sum
+differently).
 """
 
 from __future__ import annotations
@@ -60,170 +62,6 @@ from onnxtr_spark.kernels.detect_post import (
 )
 
 
-def component_runs(bitmap: np.ndarray) -> list[list[tuple[int, int, int]]]:
-    """8-connected components as per-component row runs [(y, xs, xe)].
-
-    Vectorized run labeling (``detect_post.label_runs`` — searchsorted
-    overlap edges + min-label pointer jumping); components are returned
-    in raster order of their topmost-leftmost run with runs in raster
-    order within each component (deterministic, identical to the
-    previous per-run union-find loop).
-    """
-    ys, xs, xe, lab = label_runs(bitmap)
-    n = len(ys)
-    if n == 0:
-        return []
-    # stable sort by label keeps raster order within each component;
-    # ascending label order == raster order of component first-runs
-    order = np.argsort(lab, kind="stable")
-    sorted_lab = lab[order]
-    bounds = np.flatnonzero(np.r_[True, sorted_lab[1:] != sorted_lab[:-1], True])
-    triples = np.stack([ys[order], xs[order], xe[order]], axis=1).tolist()
-    return [
-        [tuple(t) for t in triples[bounds[i] : bounds[i + 1]]]
-        for i in range(len(bounds) - 1)
-    ]
-
-
-def _half(seq: list[tuple[float, float]]) -> list[tuple[float, float]]:
-    out: list[tuple[float, float]] = []
-    for px, py in seq:
-        while len(out) >= 2:
-            (ox, oy), (qx, qy) = out[-2], out[-1]
-            if (qx - ox) * (py - oy) - (qy - oy) * (px - ox) > 0:
-                break
-            out.pop()
-        out.append((px, py))
-    return out
-
-
-def _hull_points(points: np.ndarray) -> list[tuple[float, float]]:
-    """Monotone-chain hull as a float-tuple list (CCW in math
-    orientation — visually clockwise with y down).
-
-    Pure-Python tuples: the per-component point sets are tiny (2 per
-    blob row, ~20-60 points), where per-element numpy calls cost ~10x
-    more than float tuple arithmetic (this runs once per connected
-    component per page — the rotated path's hottest kernel). Accepts a
-    ready list of float tuples directly to skip the ndarray round-trip."""
-    if isinstance(points, np.ndarray):
-        points = map(tuple, points.astype(np.float64).tolist())
-    pts = sorted(set(points))
-    if len(pts) <= 2:
-        return pts
-    return _half(pts)[:-1] + _half(pts[::-1])[:-1]
-
-
-def min_area_rect(points: np.ndarray) -> tuple[float, float, float, float, float]:
-    """Minimum-area oriented bounding rectangle (cv2.minAreaRect analog).
-
-    Returns (cx, cy, w, h, angle_rad) with the rect's u axis (width) at
-    ``angle_rad``. Rotating calipers: the optimal rect is aligned with
-    some hull edge. Plain-float loops over the tuple hull (same hot-path
-    rationale as ``_hull_points`` — E·H ≈ 200 fused multiply-compares
-    beat ~15 tiny-array numpy ops per component by ~5x; the projection
-    arithmetic x·ux + y·uy is the identical fp expression the previous
-    matmul form evaluated, so results are bit-equal).
-    """
-    return _rect_from_hull(_hull_points(points))
-
-
-def _rect_from_hull(hull: list[tuple[float, float]]) -> tuple[float, float, float, float, float]:
-    """Calipers over a ready monotone-chain hull (see min_area_rect)."""
-    import math
-
-    if len(hull) == 1:
-        return hull[0][0], hull[0][1], 0.0, 0.0, 0.0
-    if len(hull) == 2:
-        (x0, y0), (x1, y1) = hull
-        dx, dy = x1 - x0, y1 - y0
-        return (x0 + x1) / 2, (y0 + y1) / 2, math.hypot(dx, dy), 0.0, math.atan2(dy, dx)
-    n = len(hull)
-    if n <= 24:
-        # Small hulls (digitized word blobs hull to ~9 vertices): the
-        # scalar O(E·H) loop beats the numpy broadcast below — ~15
-        # tiny-array numpy calls cost more than ~100 float ops
-        # (measured unprofiled: 12 µs vs 35 µs per component; cProfile
-        # inverts this by taxing Python bytecode more than ufuncs).
-        best_area = best_ux = best_uy = best_pumin = best_pumax = best_pvmin = best_pvmax = 0.0
-        have = False
-        for i in range(n):
-            x0, y0 = hull[i]
-            x1, y1 = hull[i + 1] if i + 1 < n else hull[0]
-            e_x, e_y = x1 - x0, y1 - y0
-            length = math.hypot(e_x, e_y)
-            sux, suy = e_x / length, e_y / length
-            svx, svy = -suy, sux
-            hx0, hy0 = hull[0]
-            pumin = pumax = hx0 * sux + hy0 * suy
-            pvmin = pvmax = hx0 * svx + hy0 * svy
-            for hx1, hy1 in hull[1:]:
-                p_u = hx1 * sux + hy1 * suy
-                if p_u < pumin:
-                    pumin = p_u
-                elif p_u > pumax:
-                    pumax = p_u
-                p_v = hx1 * svx + hy1 * svy
-                if p_v < pvmin:
-                    pvmin = p_v
-                elif p_v > pvmax:
-                    pvmax = p_v
-            area = (pumax - pumin) * (pvmax - pvmin)
-            if not have or area < best_area:
-                have = True
-                best_area, best_ux, best_uy = area, sux, suy
-                best_pumin, best_pumax, best_pvmin, best_pvmax = pumin, pumax, pvmin, pvmax
-        sux, suy = best_ux, best_uy
-        svx, svy = -suy, sux
-        cu = (best_pumax + best_pumin) / 2
-        cv_ = (best_pvmax + best_pvmin) / 2
-        return (
-            cu * sux + cv_ * svx,
-            cu * suy + cv_ * svy,
-            best_pumax - best_pumin,
-            best_pvmax - best_pvmin,
-            math.atan2(suy, sux),
-        )
-    # Vectorized calipers for LARGE hulls: ONE H×E broadcast per
-    # projection axis instead of the O(E·H) Python float loop. The
-    # projection is evaluated as (hx*ux) + (hy*uy) — two elementwise
-    # multiplies and one add, the IDENTICAL IEEE op sequence the scalar
-    # loop uses (no BLAS matmul, whose FMA contraction could differ in
-    # the last ulp); edge lengths keep math.hypot per edge so unit
-    # vectors are bit-equal too.
-    hx = np.array([p[0] for p in hull])
-    hy = np.array([p[1] for p in hull])
-    ex = np.empty(n)
-    ey = np.empty(n)
-    ex[: n - 1] = hx[1:] - hx[: n - 1]
-    ex[n - 1] = hx[0] - hx[n - 1]
-    ey[: n - 1] = hy[1:] - hy[: n - 1]
-    ey[n - 1] = hy[0] - hy[n - 1]
-    length = np.array([math.hypot(float(a), float(b)) for a, b in zip(ex, ey)])
-    ux = ex / length
-    uy = ey / length
-    pu = hx[:, None] * ux[None, :] + hy[:, None] * uy[None, :]
-    # v = (-uy, ux): pv = hx*(-uy) + hy*ux
-    pv = hx[:, None] * (-uy)[None, :] + hy[:, None] * ux[None, :]
-    pumin = pu.min(axis=0)
-    pumax = pu.max(axis=0)
-    pvmin = pv.min(axis=0)
-    pvmax = pv.max(axis=0)
-    areas = (pumax - pumin) * (pvmax - pvmin)
-    b = int(np.argmin(areas))  # first minimum — the loop's strict < tie-break
-    bux, buy = float(ux[b]), float(uy[b])
-    bvx, bvy = -buy, bux
-    cu = (float(pumax[b]) + float(pumin[b])) / 2
-    cv_ = (float(pvmax[b]) + float(pvmin[b])) / 2
-    return (
-        cu * bux + cv_ * bvx,
-        cu * buy + cv_ * bvy,
-        float(pumax[b]) - float(pumin[b]),
-        float(pvmax[b]) - float(pvmin[b]),
-        math.atan2(buy, bux),
-    )
-
-
 def _hulls_batch(
     px: np.ndarray, py: np.ndarray, comp: np.ndarray
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
@@ -231,9 +69,10 @@ def _hulls_batch(
 
     Input: integer-valued point coordinates with their component id
     (non-decreasing). Output: flat (hx, hy, counts) hull vertex arrays,
-    each component's vertices in the exact order ``_hull_points``
-    produces (lower chain then upper chain, both without their closing
-    vertex).
+    each component's vertices in the exact order the scalar
+    ``_hull_points`` (``tests/rotated_post_oracle.py``) produces: lower
+    chain then upper chain, both without their closing vertex, and the
+    deduped sorted points of a component with one or two.
 
     Equality argument: points are deduped and sorted by (x, y) per
     component exactly like ``sorted(set(pts))`` (via one composite int64
@@ -289,8 +128,6 @@ def _hulls_batch(
     # per-comp boundaries in the sorted point array
     cb = np.flatnonzero(np.r_[True, cs[1:] != cs[:-1]])
     ce = np.r_[cb[1:], len(cs)]
-    # single-point / two-point components: _hull_points returns the
-    # deduped sorted points directly
     sizes = ce - cb
     # each chain drops its LAST point (the other chain's first):
     # lower[:-1] keeps lower-chain vertices except the max point;
@@ -301,11 +138,10 @@ def _hulls_batch(
     lower_keep[last] = False  # lower[:-1]
     upper_keep = upper_r.copy()
     upper_keep[first] = False  # upper chain ends at the min point
-    small = sizes <= 2
-    if small.any():
-        for c in np.flatnonzero(small):
-            lower_keep[cb[c] : ce[c]] = True
-            upper_keep[cb[c] : ce[c]] = False
+    # one- and two-point components keep their deduped sorted points
+    small = np.repeat(sizes <= 2, sizes)
+    lower_keep |= small
+    upper_keep &= ~small
     # assemble: per comp, lower vertices in ascending order, then upper
     # vertices in DESCENDING (x, y) order (the reversed-pass chain)
     li = np.flatnonzero(lower_keep)
@@ -330,15 +166,20 @@ def _rects_for_components(
     ys: np.ndarray, xs: np.ndarray, xe: np.ndarray, comp_b: np.ndarray, sel: np.ndarray
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
     """(cx, cy, w, h, angle) arrays, one entry per selected component,
-    through the batched hull + calipers — bit-identical to looping
-    ``min_area_rect`` over each component's run endpoints.
+    through the batched hull + calipers — bit-identical to looping the
+    scalar ``min_area_rect`` (``tests/rotated_post_oracle.py``) over each
+    component's run endpoints.
 
     Runs are grouped by component (``_by_component``; ``comp_b`` is each
     component's first run). The hull input is each row's (min-x, max-x)
     endpoints: interior run endpoints of a row lie on the segment
     between the row extremes, so they are never STRICT hull vertices,
-    and ``_half``'s strict-turn popping already drops collinear boundary
-    points — the hull vertex list (and hence the rect) is unchanged."""
+    and the monotone chain's strict-turn popping already drops collinear
+    boundary points — the hull vertex list (and hence the rect) is
+    unchanged. A hull of one or two vertices (a dot or a 1-px line) takes
+    the scalar formulas as array expressions: the midpoint, ``hypot`` of
+    the edge as width, zero height and ``atan2`` of the edge as angle; a
+    single vertex is its own edge, which gives ``(x, y, 0, 0, 0)``."""
     if len(sel) == 0:
         return tuple(np.zeros(0) for _ in range(5))
     nr = np.r_[comp_b[1:], len(ys)][sel] - comp_b[sel]
@@ -359,10 +200,17 @@ def _rects_for_components(
         cx, cy, w, h, ux, uy = _rects_from_hull_batch(hx[keep_pts], hy[keep_pts], counts[big])
         rects[:4, big] = cx, cy, w, h
         rects[4, big] = _libm(math.atan2, uy, ux)
-    ends = np.cumsum(counts)
-    for c in np.flatnonzero(~big):  # 1-2 vertex hulls: collinear components
-        a, b = ends[c] - counts[c], ends[c]
-        rects[:, c] = _rect_from_hull(list(zip(hx[a:b].tolist(), hy[a:b].tolist())))
+    # 1-2 vertex hulls (collinear components): first and last vertex
+    a = (np.cumsum(counts) - counts)[~big]
+    b = a + counts[~big] - 1
+    dx, dy = hx[b] - hx[a], hy[b] - hy[a]
+    rects[:, ~big] = [
+        (hx[a] + hx[b]) / 2,
+        (hy[a] + hy[b]) / 2,
+        _libm(math.hypot, dx, dy),
+        np.zeros(len(a)),
+        _libm(math.atan2, dy, dx),
+    ]
     return tuple(rects)
 
 
@@ -371,7 +219,8 @@ def _rects_from_hull_batch(
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
     """Batched rotating calipers over many hulls (each >= 3 vertices).
 
-    The scalar ``_rect_from_hull`` loop's float expressions evaluated
+    The float expressions of the scalar ``_rect_from_hull`` loop
+    (``tests/rotated_post_oracle.py``) evaluated
     elementwise over a (ncomp, maxE, maxH) pad (mul, mul, add — no
     FMA/matmul, so projections are bit-equal); edge lengths via
     ``sqrt(ex*ex + ey*ey)``, bit-equal to the scalar ``math.hypot`` for
@@ -430,51 +279,6 @@ def _rects_from_hull_batch(
     )
 
 
-def box_points(cx: float, cy: float, w: float, h: float, angle_rad: float) -> np.ndarray:
-    """The rect's 4 corners (4, 2), unordered convention (cv2.boxPoints
-    analog) — callers pass the result through ``order_points``."""
-    u = np.array([np.cos(angle_rad), np.sin(angle_rad)])
-    v = np.array([-np.sin(angle_rad), np.cos(angle_rad)])
-    c = np.array([cx, cy])
-    return np.stack([
-        c - u * w / 2 - v * h / 2,
-        c + u * w / 2 - v * h / 2,
-        c + u * w / 2 + v * h / 2,
-        c - u * w / 2 + v * h / 2,
-    ])
-
-
-def order_points(pts: np.ndarray) -> np.ndarray:
-    """Order a (4,2) quadrangle TL,TR,BR,BL (utils/geometry.py:82-104):
-    CCW-by-centroid-angle sort, start at the min coordinate-sum point,
-    then enforce clockwise orientation (shoelace area < 0 in y-down
-    image coords means counter-clockwise visually -> reversed+rolled).
-    """
-    pts = np.asarray(pts)
-    c = pts.mean(axis=0)
-    angles = np.arctan2(pts[:, 1] - c[1], pts[:, 0] - c[0])
-    pts = pts[np.argsort(angles)]
-    start_idx = int(np.argmin(pts.sum(axis=1)))
-    pts = np.roll(pts, -start_idx, axis=0)
-    area = 0.5 * np.sum(pts[:, 0] * np.roll(pts[:, 1], -1) - pts[:, 1] * np.roll(pts[:, 0], -1))
-    if area < 0:
-        pts = np.roll(pts[::-1], 1, axis=0)
-    return pts
-
-
-def unclip_rotated(
-    cx: float, cy: float, w: float, h: float, angle_rad: float, unclip_ratio: float = UNCLIP_RATIO
-) -> np.ndarray:
-    """D5 rotated unclip: expand the min-area rect by
-    ``distance = (w+1)(h+1) * ratio / (2(w+h) + 2)`` per side (the
-    reference's pyclipper round-join offset + minAreaRect composition,
-    postprocessor/base.py:54-81 — analytic for rectangles), then order
-    points TL,TR,BR,BL. Returns (4, 2) absolute corner coords: the
-    ``_unclip_quads`` of one rect."""
-    rect = (np.array([v], dtype=np.float64) for v in (cx, cy, w, h, angle_rad))
-    return _unclip_quads(*rect, unclip_ratio)[0]
-
-
 def _libm(fn, *args: np.ndarray) -> np.ndarray:
     """``fn`` (a ``math`` function) per element: libm's bits, which
     NumPy's own trig does not always give."""
@@ -485,8 +289,9 @@ def _libm(fn, *args: np.ndarray) -> np.ndarray:
 def _unclip_quads(
     cx: np.ndarray, cy: np.ndarray, w: np.ndarray, h: np.ndarray, angle: np.ndarray, unclip_ratio: float
 ) -> np.ndarray:
-    """``unclip_rotated`` over arrays of rects: (M, 4, 2) corners, each
-    quad ordered as ``order_points`` orders it — stable sort by the
+    """D5 unclip over arrays of rects: (M, 4, 2) corners, each quad
+    ordered as the scalar ``unclip_pts`` (``tests/rotated_post_oracle.py``)
+    orders it — stable sort by the
     angle about the corners' mean, start at the first minimal
     coordinate sum, reverse when the shoelace sum is negative. Every
     sum is the scalar chain's left-to-right adds (from 0, as Python's
@@ -509,20 +314,6 @@ def _unclip_quads(
     flip = (((0.0 + t[:, 0]) + t[:, 1]) + t[:, 2]) + t[:, 3] < 0
     pos[flip] = pos[flip][:, [0, 3, 2, 1]]
     return np.stack([np.take_along_axis(px, pos, 1), np.take_along_axis(py, pos, 1)], axis=-1)
-
-
-def _gather_runs(arr: np.ndarray, runs: list[tuple[int, int, int]]) -> np.ndarray:
-    """One flat array of a component's pixel values (single gather)."""
-    return np.concatenate([arr[y, xs:xe] for y, xs, xe in runs])
-
-
-def _runs_score_px(px_map: np.ndarray, runs: list[tuple[int, int, int]]) -> float:
-    """Rotated D4 on the stub-folded pixel map: mean of nonzero
-    probabilities over the component's own pixels (see module doc)."""
-    probs = (255.0 - _gather_runs(px_map, runs).astype(np.float64)) / 255.0
-    nz = probs > 0
-    count = int(nz.sum())
-    return float(probs[nz].sum()) / count if count else 0.0
 
 
 def _by_component(ys: np.ndarray, xs: np.ndarray, xe: np.ndarray, lab: np.ndarray):
@@ -586,18 +377,6 @@ def _group_polys(pages: list, unclip_ratio: float) -> list[np.ndarray]:
     polys[:, :4, 1] = quads[:, :, 1] / hw[:, :1]
     polys[:, 4, 1] = scores
     return np.split(np.clip(polys.astype(np.float32), 0, 1), np.cumsum(per_page)[:-1])
-
-
-def bitmap_to_polys(
-    pred: np.ndarray,
-    bitmap: np.ndarray,
-    box_thresh: float = BOX_THRESH,
-    unclip_ratio: float = UNCLIP_RATIO,
-) -> np.ndarray:
-    """Binary map -> (N, 5, 2) rotated polygons [TL,TR,BR,BL,(0,score)]
-    in relative coords clipped to [0,1] (postprocessor/base.py:83-139,
-    rotated path) — the real-prob-map variant."""
-    return _group_polys([_page_components(pred, bitmap, False, False, box_thresh)], unclip_ratio)[0]
 
 
 def postprocess_prob_maps_rotated(

@@ -119,15 +119,14 @@ def run_checkpointed(
     out_path: str,
     n_groups: int = 8,
     fail_after: int | None = None,
-    partition_metrics: bool = True,
     det_cfg=None,
 ) -> list[int]:
     """Extract all doc groups, skipping completed ones. Returns the list
     of groups processed this run. ``fail_after`` aborts after N groups
-    (test hook simulating a mid-job crash). ``partition_metrics``
-    appends per-partition rows (pages decoded, boxes detected, words
-    recognized, decode latency, wall time) to
-    ``out/partition_metrics/`` after each group commits."""
+    (test hook simulating a mid-job crash). After a group commits, its
+    per-partition rows (pages decoded, boxes detected, words
+    recognized, decode latency, wall time) are appended to
+    ``out/partition_metrics/``."""
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     run_id = uuid.uuid4().hex[:12]
     done = completed_groups(spark, out_path)
@@ -151,7 +150,7 @@ def run_checkpointed(
         n_pages = int(pre["pages"])
         n_spans = 0
         n_words = 0
-        acc = metrics_accumulator(spark) if partition_metrics else None
+        acc = metrics_accumulator(spark)
         if n_docs:
             kw = {"det_cfg": det_cfg} if det_cfg is not None else {}
             obs = Observation()
@@ -167,7 +166,7 @@ def run_checkpointed(
             counts = obs.get
             n_spans = int(counts["spans"])
             n_words = int(counts["words"] or 0)
-        if partition_metrics and acc is not None and acc.value:
+        if acc.value:
             rows = [(run_id, g, *tup) for tup in acc.value]
             _local_frame(spark, rows, PARTITION_METRICS_SCHEMA).write.mode("append").parquet(
                 f"{out_path}/partition_metrics"

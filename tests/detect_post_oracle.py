@@ -7,7 +7,9 @@ then one Python iteration per component with a ``.mean()`` over the
 box's inclusive clipped rect and a scalar unclip. The runtime kernel
 stacks a group of pages and vectorizes the box stage;
 ``tests/test_detect_post_batched.py`` asserts it returns exactly what
-this chain returns, page by page.
+this chain returns, page by page. ``binary_open_3x3`` and
+``connected_components`` unpack the runtime's packed opening and
+labeling into a 0/1 map and a rect list for the property tests.
 """
 
 from __future__ import annotations
@@ -21,6 +23,8 @@ from onnxtr_spark.kernels.detect_post import (
     BOX_THRESH,
     UNCLIP_RATIO,
     _label_runs_packed,
+    _open_3x3_packed,
+    _rects_from_runs,
     label_runs,
 )
 
@@ -63,6 +67,27 @@ def open_3x3_packed(bitmap: np.ndarray) -> np.ndarray:
     if pad_bits:
         di[:, -1] &= np.uint8(0xFF ^ edge)
     return di
+
+
+def binary_open_3x3(bitmap: np.ndarray) -> np.ndarray:
+    """3x3 morphological opening of a binary (0/1 uint8) map.
+
+    Matches cv2.morphologyEx(MORPH_OPEN, ones((3,3))) on binary input:
+    erosion pads with foreground (border pixels survive), dilation pads
+    with background.
+    """
+    h, w = bitmap.shape
+    return np.unpackbits(_open_3x3_packed(bitmap), axis=1)[:, :w]
+
+
+def connected_components(bitmap: np.ndarray) -> list[tuple[int, int, int, int]]:
+    """8-connected components of a binary map -> bounding rects (x, y, w, h).
+
+    Vectorized run labeling (``label_runs``); rects are returned in
+    raster order of the component's topmost-leftmost run (deterministic,
+    identical to the previous union-find implementation).
+    """
+    return [tuple(r) for r in _rects_from_runs(*label_runs(bitmap)).tolist()]
 
 
 def rects_from_runs(ys, xs, xe, lab) -> list[tuple[int, int, int, int]]:

@@ -10,6 +10,7 @@ import numpy as np
 import pytest
 
 from onnxtr_spark.kernels import preprocess as pp
+from tests import preprocess_oracle
 
 IMAGENET = ((0.485, 0.456, 0.406), (0.229, 0.224, 0.225))
 PARAMS = [(pp.MEAN_DEFAULT, pp.STD_DEFAULT), IMAGENET, ((0.7,), (0.3,)), ((0.1, 0.9, 0.5), (2.0, 0.5, 1.0))]
@@ -51,6 +52,14 @@ def test_all_256_values_every_channel(mean, std):
     v = np.arange(256, dtype=np.uint8)
     x = np.stack([v, v[::-1], np.roll(v, 77)], axis=-1)  # (256, 3): each channel sees all values
     assert_bits_equal(pp.cast_normalize(x, mean, std), cast_normalize_arith(x, mean, std))
+
+
+@pytest.mark.parametrize("mean,std", PARAMS)
+def test_equals_cast_then_normalize(mean, std):
+    """One buffer gives the bits of P3 then P2 as two float32 passes."""
+    for x in _frames(np.random.default_rng(7)):
+        want = preprocess_oracle.normalize(preprocess_oracle.cast_scale(x), mean, std)
+        assert_bits_equal(pp.cast_normalize(x, mean, std), want)
 
 
 @pytest.mark.parametrize("seed", range(4))

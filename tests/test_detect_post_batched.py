@@ -87,7 +87,8 @@ def test_one_page_calls_and_bitmap_to_boxes_match_oracle():
         _assert_same([detect_post.postprocess_prob_map(prob)], [oracle.postprocess_prob_map(prob)])
         bm = (px < 128).astype(np.uint8)
         pred = prob.astype(np.float64)
-        _assert_same([detect_post.bitmap_to_boxes(pred, bm)], [oracle.bitmap_to_boxes(pred, bm)])
+        got = detect_post._prob_boxes([pred], [bm], oracle.BOX_THRESH, oracle.UNCLIP_RATIO, False)
+        _assert_same(got, [oracle.bitmap_to_boxes(pred, bm)])
         np.testing.assert_array_equal(
             detect_post._open_3x3_packed(bm), oracle.open_3x3_packed(bm)
         )

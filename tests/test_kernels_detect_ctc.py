@@ -9,16 +9,18 @@ maps, and CTC decode semantics from crnn.py:61-101.
 import numpy as np
 import pytest
 
-from onnxtr_spark.kernels.ctc import ctc_best_path, softmax
-from onnxtr_spark.kernels.detect_post import (
-    binary_open_3x3,
-    bitmap_to_boxes,
-    connected_components,
-    postprocess_prob_map,
-    remove_padding,
-    unclip_rect,
-)
+from onnxtr_spark.kernels.ctc import ctc_best_path
+from onnxtr_spark.kernels.detect_post import postprocess_prob_map, remove_padding, unclip_rect
 from onnxtr_spark.kernels.geometry import extract_crops, resize_preserve
+from tests.detect_post_oracle import binary_open_3x3, bitmap_to_boxes, connected_components
+
+
+def softmax(x: np.ndarray, axis: int = -1) -> np.ndarray:
+    """Numerically-stable softmax (scipy.special.softmax equivalent,
+    reference crnn.py:79)."""
+    shifted = x - x.max(axis=axis, keepdims=True)
+    e = np.exp(shifted)
+    return e / e.sum(axis=axis, keepdims=True)
 
 
 def test_connected_components_basic():
@@ -170,7 +172,7 @@ def test_attention_decode_reference_conf_semantics():
     empty, vitstr.py:103-107); SAR/MASTER min over ALL positions
     including past <eos> (sar.py:91-93)."""
     import numpy as np
-    from onnxtr_spark.kernels.ctc import attention_decode, softmax
+    from onnxtr_spark.kernels.ctc import attention_decode
 
     vocab = "abc"
     eos = len(vocab)

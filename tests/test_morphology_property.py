@@ -5,7 +5,7 @@ import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from onnxtr_spark.kernels.detect_post import binary_open_3x3
+from tests.detect_post_oracle import binary_open_3x3
 
 
 def naive_open(bitmap: np.ndarray) -> np.ndarray:

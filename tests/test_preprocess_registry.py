@@ -11,11 +11,11 @@ import pytest
 
 from onnxtr_spark import engine as eng
 from onnxtr_spark.corpus import FIXTURE_TEXTS, build_corpus_pdfs
-from onnxtr_spark.kernels import preprocess as pp
 from onnxtr_spark.stages.detect import DetectConfig, detect_pages
 from onnxtr_spark.stages.fused import detect_recognize_pages
 from onnxtr_spark.stages.recognize import RecognizeConfig
 from onnxtr_spark.stages.pipeline import media_pages
+from tests import preprocess_oracle as pp
 from tests.test_pipeline_e2e import DOCS_SCHEMA, MEDIA_SCHEMA
 
 
@@ -28,38 +28,6 @@ def test_normalize_exact_values():
     assert np.all(out == np.float32(128 / 255) - np.float32(0.5))
     with pytest.raises(TypeError):
         pp.normalize(x)  # uint8 must be cast first
-
-
-def test_batch_inputs_counts():
-    samples = [np.zeros((2, 2, 3), dtype=np.float32)] * 7
-    batches = pp.batch_inputs(samples, 3)
-    assert [b.shape[0] for b in batches] == [3, 3, 1]
-
-
-@pytest.mark.parametrize(
-    "fmt,in_shape,out_shape",
-    [
-        ("BCHW", (2, 3, 8, 8), (2, 3, 8, 8)),
-        ("BCHW", (2, 8, 8, 3), (2, 3, 8, 8)),
-        ("BHWC", (2, 8, 8, 3), (2, 8, 8, 3)),
-        ("BHWC", (2, 3, 8, 8), (2, 8, 8, 3)),
-        ("CHW", (8, 8, 3), (3, 8, 8)),
-        ("HWC", (3, 8, 8), (8, 8, 3)),
-        ("XYZ", (2, 3, 8, 8), (2, 3, 8, 8)),
-    ],
-)
-def test_shape_translate(fmt, in_shape, out_shape):
-    # the reference's own parameter table (tests/common/test_utils_geometry.py)
-    assert pp.shape_translate(np.zeros(in_shape), fmt).shape == out_shape
-
-
-def test_preprocess_samples_contract():
-    samples = [np.full((60, 100, 3), 128, dtype=np.uint8) for _ in range(3)]
-    batches = pp.preprocess_samples(samples, 64, 64, 2, output_format="BCHW")
-    assert [b.shape for b in batches] == [(2, 3, 64, 64), (1, 3, 64, 64)]
-    assert all(b.dtype == np.float32 for b in batches)
-    # content pixels carry the normalized value, pad carries (0-mean)/std
-    assert np.float32(128 / 255) - np.float32(0.5) in batches[0]
 
 
 @pytest.fixture(scope="module")

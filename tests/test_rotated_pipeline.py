@@ -19,9 +19,11 @@ from onnxtr_spark.corpus import (
     build_rotated_words_corpus_pdfs,
     expected_spans,
 )
-from onnxtr_spark.kernels import detect_post, rotated_post
+from onnxtr_spark.kernels import rotated_post
 from onnxtr_spark.stages.detect import DetectConfig
 from onnxtr_spark.stages.pipeline import extract_spans
+from tests import detect_post_oracle as detect_post
+from tests import rotated_post_oracle as oracle
 from tests.test_pipeline_e2e import DOCS_SCHEMA, MEDIA_SCHEMA, golden_flat
 
 
@@ -31,38 +33,38 @@ def test_min_area_rect_recovers_rotated_rects():
         theta = rng.uniform(-np.pi / 2, np.pi / 2)
         w, h = rng.uniform(10, 100), rng.uniform(5, 30)
         cx, cy = rng.uniform(50, 200, 2)
-        corners = rotated_post.box_points(cx, cy, w, h, theta)
+        corners = oracle.box_points(cx, cy, w, h, theta)
         us = rng.uniform(-w / 2, w / 2, 200)
         vs = rng.uniform(-h / 2, h / 2, 200)
         u = np.array([np.cos(theta), np.sin(theta)])
         v = np.array([-np.sin(theta), np.cos(theta)])
         pts = np.vstack([np.array([cx, cy]) + us[:, None] * u + vs[:, None] * v, corners])
-        rcx, rcy, rw, rh, _ = rotated_post.min_area_rect(pts)
+        rcx, rcy, rw, rh, _ = oracle.min_area_rect(pts)
         assert abs(rw * rh - w * h) < 1e-6 * w * h + 1e-6
         assert abs(rcx - cx) < 1e-8 and abs(rcy - cy) < 1e-8
 
 
 def test_min_area_rect_degenerate():
-    cx, cy, w, h, ang = rotated_post.min_area_rect(np.array([[3.0, 4.0]]))
+    cx, cy, w, h, ang = oracle.min_area_rect(np.array([[3.0, 4.0]]))
     assert (cx, cy, w, h) == (3.0, 4.0, 0.0, 0.0)
-    cx, cy, w, h, ang = rotated_post.min_area_rect(np.array([[0.0, 0.0], [3.0, 4.0]]))
+    cx, cy, w, h, ang = oracle.min_area_rect(np.array([[0.0, 0.0], [3.0, 4.0]]))
     assert (cx, cy) == (1.5, 2.0) and abs(w - 5.0) < 1e-12 and h == 0.0
 
 
 def test_order_points_semantics():
     # TL first (min coordinate sum), clockwise in image coords
-    q = rotated_post.box_points(10, 10, 6, 2, np.deg2rad(25))
-    o = rotated_post.order_points(q)
+    q = oracle.box_points(10, 10, 6, 2, np.deg2rad(25))
+    o = oracle.order_points(q)
     assert np.argmin(o.sum(1)) == 0
     area = 0.5 * np.sum(o[:, 0] * np.roll(o[:, 1], -1) - o[:, 1] * np.roll(o[:, 0], -1))
     assert area > 0  # y-down clockwise
     # axis-aligned square: exact TL,TR,BR,BL
     sq = np.array([[1.0, 1.0], [3.0, 1.0], [3.0, 3.0], [1.0, 3.0]])
-    assert np.allclose(rotated_post.order_points(sq[[2, 0, 3, 1]]), sq)
+    assert np.allclose(oracle.order_points(sq[[2, 0, 3, 1]]), sq)
 
 
 def test_unclip_rotated_axis_aligned_analytic():
-    quad = rotated_post.unclip_rotated(50, 20, 30, 10, 0.0, 1.5)
+    quad = oracle.unclip_rotated(50, 20, 30, 10, 0.0, 1.5)
     d = (31 * 11) * 1.5 / (2 * 40 + 2)  # reference's +1 cv2-approx correction
     exp = np.array([
         [50 - 15 - d, 20 - 5 - d],
@@ -77,7 +79,7 @@ def test_component_runs_consistent_with_rects():
     rng = np.random.RandomState(3)
     bm = (rng.rand(64, 64) > 0.7).astype(np.uint8)
     rects = detect_post.connected_components(bm)
-    runs = rotated_post.component_runs(bm)
+    runs = oracle.component_runs(bm)
     assert len(rects) == len(runs)
     for (x, y, w, h), rr in zip(rects, runs):
         ys = [r[0] for r in rr]
@@ -130,7 +132,7 @@ def test_prob_and_pixel_rotated_postprocess_agree():
     folded = rotated_post.postprocess_pixel_map_rotated(px)
     bitmap = (prob >= detect_post.BIN_THRESH).astype(np.uint8)
     bitmap = detect_post.binary_open_3x3(bitmap)
-    unfolded = rotated_post.bitmap_to_polys(prob, bitmap)
+    unfolded = oracle.bitmap_to_polys(prob, bitmap)
     assert folded.shape == unfolded.shape == (4, 5, 2)
     assert np.allclose(folded[:, :4, :], unfolded[:, :4, :])
     assert np.allclose(folded[:, 4, 1], unfolded[:, 4, 1], atol=1e-6)
@@ -220,13 +222,13 @@ def test_array_native_postprocess_equals_per_component_reference():
         bitmap = (px <= pix_thresh).astype(np.uint8)
         bitmap = detect_post.binary_open_3x3(bitmap)
         polys = []
-        for runs in rotated_post.component_runs(bitmap):
+        for runs in oracle.component_runs(bitmap):
             ys = [r[0] for r in runs]
             x0 = min(r[1] for r in runs)
             x1 = max(r[2] for r in runs)
             if (x1 - x0) < 3 or (max(ys) - min(ys) + 1) < 3:
                 continue
-            score = rotated_post._runs_score_px(px, runs)
+            score = oracle._runs_score_px(px, runs)
             if score < detect_post.BOX_THRESH:
                 continue
             pts = []
@@ -234,8 +236,8 @@ def test_array_native_postprocess_equals_per_component_reference():
                 fy = float(y)
                 pts.append((float(xs), fy))
                 pts.append((float(xe - 1), fy))
-            quad = rotated_post.unclip_rotated(
-                *rotated_post.min_area_rect(pts), detect_post.UNCLIP_RATIO
+            quad = oracle.unclip_rotated(
+                *oracle.min_area_rect(pts), detect_post.UNCLIP_RATIO
             )
             quad[:, 0] /= bitmap.shape[1]
             quad[:, 1] /= bitmap.shape[0]
@@ -263,7 +265,7 @@ def test_batched_calipers_equal_scalar_rect():
             (float(int(a)), float(int(b)))
             for a, b in rng.integers(0, 800, size=(int(rng.integers(4, 40)), 2))
         ]
-        hull = rotated_post._hull_points(pts)
+        hull = oracle._hull_points(pts)
         if len(hull) < 3:
             continue
         hulls.append(hull)
@@ -273,6 +275,6 @@ def test_batched_calipers_equal_scalar_rect():
         counts.append(len(hull))
     cx, cy, w, h, ux, uy = rotated_post._rects_from_hull_batch(hx, hy, counts)
     for i, hull in enumerate(hulls):
-        scx, scy, sw, sh, sang = rotated_post._rect_from_hull(hull)
+        scx, scy, sw, sh, sang = oracle._rect_from_hull(hull)
         assert (float(cx[i]), float(cy[i]), float(w[i]), float(h[i])) == (scx, scy, sw, sh)
         assert math.atan2(float(uy[i]), float(ux[i])) == sang

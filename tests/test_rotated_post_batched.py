@@ -115,7 +115,7 @@ def test_one_page_calls_and_bitmap_to_polys_match_oracle():
         bm = (rng.random(px.shape) < 0.7).astype(np.uint8)
         ys, xs, xe, lab = detect_post.label_runs(bm)
         want = oracle.polys_from_labeled_runs(prob, False, ys, xs, xe, lab, 0.1, 1.5)
-        _assert_same([rotated_post.bitmap_to_polys(prob, bm)], [want])
+        _assert_same([oracle.bitmap_to_polys(prob, bm)], [want])
 
 
 def test_unclip_quads_match_scalar_unclip():
@@ -155,7 +155,7 @@ def test_rects_on_wide_pages_match_scalar_min_area_rect(width):
     for c in sel:
         runs = range(bounds[c], bounds[c + 1])
         pts = [(float(x), float(ys[i])) for i in runs for x in (xs[i], xe[i] - 1)]
-        assert tuple(got[c].tolist()) == rotated_post.min_area_rect(pts)
+        assert tuple(got[c].tolist()) == oracle.min_area_rect(pts)
     assert (xs >= x0).all() and len(sel) > 30
 
 
@@ -182,6 +182,69 @@ def test_estimate_orientation_on_a_strip_beyond_16_bit_coordinates():
             bm[60 - i // 12 : 64 - i // 12, x + i] = 1
     angle = estimate_orientation(bm, (0, 1.0))
     assert angle != 0 and angle == estimate_orientation(np.ascontiguousarray(bm[:, 65000:]), (0, 1.0))
+
+
+def _line_runs(kind: str, y: int, x: int, n: int) -> list[tuple[int, int, int]]:
+    """Row runs of a 1-px line of ``n`` pixels from (x, y)."""
+    if kind == "horizontal":
+        return [(y, x, x + n)]
+    step = {"vertical": 0, "diagonal": 1, "antidiagonal": -1}[kind]
+    return [(y + i, x + step * i, x + step * i + 1) for i in range(n)]
+
+
+def test_degenerate_hulls_match_scalar_rect_bit_for_bit():
+    """Dots and horizontal, vertical and diagonal 1-px lines hull to one
+    or two vertices, with |dx| and |dy| up to 2^17; their rects equal
+    the scalar ``_rect_from_hull`` bit for bit, next to 3x3 blocks in
+    the same call."""
+    rng = np.random.default_rng(31)
+    kinds = ["dot", "horizontal", "vertical", "diagonal", "antidiagonal", "block"]
+    comps = []
+    for k in range(120):
+        kind = kinds[k % len(kinds)]
+        n = 2**17 + 1 if k < 12 else int(rng.integers(2, 3000))  # 2^17 + 1 px: |d| = 2^17
+        y, x = int(rng.integers(0, 2**17)), int(rng.integers(2**17, 2**18))
+        if kind == "dot":
+            comps.append([(y, x, x + 1)])
+        elif kind == "block":
+            comps.append([(y + i, x, x + 3) for i in range(3)])
+        else:
+            comps.append(_line_runs(kind, y, x, n))
+    runs = np.array([r for c in comps for r in c], dtype=np.int64)
+    comp_b = np.cumsum([0] + [len(c) for c in comps[:-1]])
+    sel = np.arange(len(comps))
+    got = np.stack(rotated_post._rects_for_components(*runs.T, comp_b, sel), axis=1)
+    for c, comp in zip(sel, comps):
+        hull = oracle._hull_points([(float(x), float(y)) for y, a, z in comp for x in (a, z - 1)])
+        assert len(hull) <= 2 or kinds[c % len(kinds)] == "block"
+        want = np.array(oracle._rect_from_hull(hull))
+        np.testing.assert_array_equal(got[c].view(np.uint64), want.view(np.uint64))
+
+
+def test_estimate_orientation_with_underline_strokes(monkeypatch):
+    """Long 1-px strokes pass the ``areas > 100`` filter, so the skew
+    estimate takes their degenerate rects; their zero height keeps them
+    out of the angle, which stays that of the tilted text lines."""
+    text = np.zeros((300, 900), dtype=np.uint8)
+    for k in range(5):  # thick lines rising 1 px per 12 px
+        for i in range(600):
+            text[80 + 40 * k - i // 12 : 84 + 40 * k - i // 12, 100 + i] = 1
+    page = text.copy()
+    page[290, 20:880] = 1  # underline
+    page[10:280, 890] = 1  # vertical rule
+    for i in range(150):  # diagonal stroke
+        page[100 + i, 720 + i] = 1
+    real, rects = rotated_post._rects_for_components, []
+
+    def spy(*args):
+        rects.append(real(*args))
+        return rects[-1]
+
+    monkeypatch.setattr(rotated_post, "_rects_for_components", spy)
+    angle = estimate_orientation(page, (0, 1.0))
+    _, _, w, h, _ = rects[0]
+    assert ((h == 0) & (w > 100)).sum() == 3
+    assert angle != 0 and angle == estimate_orientation(text, (0, 1.0))
 
 
 def _rotated_lines(rng: np.random.Generator) -> np.ndarray:

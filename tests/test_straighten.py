@@ -73,7 +73,7 @@ def test_dilate_rect_merges_words():
     img = np.zeros((20, 100), dtype=np.uint8)
     img[8:12, 10:40] = 1
     img[8:12, 44:74] = 1  # 4-px gap
-    from onnxtr_spark.kernels.rotated_post import component_runs
+    from tests.rotated_post_oracle import component_runs
 
     assert len(component_runs(img)) == 2
     assert len(component_runs(binary_dilate_rect(img, 5, 1))) == 1

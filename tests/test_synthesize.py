@@ -5,11 +5,30 @@ import pandas as pd
 
 from onnxtr_spark import imaging
 from onnxtr_spark.corpus import FIXTURE_TEXTS, build_corpus_pdfs
+from onnxtr_spark.imaging import CHAR_BASE
 from onnxtr_spark.kernels.rotated import rectify_crops, rectify_loc_preds
 from onnxtr_spark.stages.fused import detect_recognize_pages
 from onnxtr_spark.stages.pipeline import extract_spans, media_pages
 from onnxtr_spark.stages.synthesize import synthesize_pages
+from onnxtr_spark.vocabs import DEFAULT_VOCAB
 from tests.test_pipeline_e2e import DOCS_SCHEMA, MEDIA_SCHEMA, golden_flat
+
+
+def columns_to_classes(crop: np.ndarray, vocab: str = DEFAULT_VOCAB) -> np.ndarray:
+    """Classify each crop column as a vocab index or blank (= len(vocab)).
+
+    The stub recognition "model": the darkest pixel per column recovers
+    the glyph encoding; white/gap/pad columns map to the blank class.
+    Returns an int array of length crop_width.
+    """
+    blank = len(vocab)
+    if crop.size == 0:
+        return np.zeros(0, dtype=np.int64)
+    col_min = crop[:, :, 0].min(axis=0).astype(np.int64)
+    classes = np.full(col_min.shape, blank, dtype=np.int64)
+    is_char = (col_min >= CHAR_BASE) & (col_min < CHAR_BASE + len(vocab))
+    classes[is_char] = col_min[is_char] - CHAR_BASE
+    return classes
 
 
 def test_rectify_crops_inverse_rotation():
@@ -40,7 +59,7 @@ def test_synthesize_page_single_word_roundtrips():
     x = int(round(0.1 * 400))
     y = int(round(0.2 * 200))
     crop = page[y : y + imaging.CELL_H, x : x + imaging.word_width("hello")]
-    classes = imaging.columns_to_classes(crop)
+    classes = columns_to_classes(crop)
     from onnxtr_spark.vocabs import DEFAULT_VOCAB
 
     decoded = "".join(

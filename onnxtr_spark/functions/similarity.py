@@ -14,12 +14,18 @@
 - ``label_centroids``: per-label mean vector via posexplode — the IVF
   coarse-quantizer training step (k-means assignment pass analog).
 
-Dot products use ``zip_with`` + ``aggregate`` (JVM, no UDF), summing in
-float64 in array order so the oracle can reproduce values bit-for-bit.
+Column-side dot products use ``zip_with`` + ``aggregate`` (JVM, no UDF),
+summing in float64 in array order so the oracle can reproduce values
+bit-for-bit. The two Arrow-side exact queries, ``semdedup`` and
+``knn_classify``, run the same fold in NumPy through one kernel
+(``_matrix`` + ``_cosines``) over blocks of at most SIM_BLOCK x
+SIM_BLOCK sims.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -27,6 +33,7 @@ from onnxtr_spark.functions.hashing import round_half_up, round_half_up_sql
 from onnxtr_spark.partitioning import spread
 
 ROUND = 3  # similarity rounding — absorbs float32-vs-float64 engine drift
+SIM_BLOCK = 1024  # side of the largest sims block an Arrow-side query holds
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -39,6 +46,31 @@ def _dot(a: Column, b: Column) -> Column:
 
 def _norm(a: Column) -> Column:
     return F.sqrt(_dot(a, a))
+
+
+def _matrix(vectors) -> tuple[np.ndarray, np.ndarray]:
+    """A sequence of equal-length vectors -> (float64 matrix with one
+    COLUMN per vector, norms). Dim-major, so each dim's values over a
+    block of vectors are contiguous. Norms fold dims left to right,
+    sqrt(((0 + x0²) + x1²) + …): the ``_norm`` and DuckDB ``list_sum``
+    order."""
+    M = np.stack(list(vectors), axis=1).astype(np.float64)
+    sq = np.zeros(M.shape[1])
+    for x in M:
+        sq += x * x
+    return M, np.sqrt(sq)
+
+
+def _cosines(A: np.ndarray, na: np.ndarray, B: np.ndarray, nb: np.ndarray) -> np.ndarray:
+    """Rounded cosines of every (column of A, column of B), both from
+    ``_matrix``: the dot folds dims left to right like ``_dot``, then
+    round_half_up(dot / (na * nb), ROUND) with the same double ops, so
+    each value is bit-equal to the JVM and DuckDB ones."""
+    acc = np.zeros((len(na), len(nb)))
+    for a, b in zip(A, B):
+        acc += a[:, None] * b
+    m = float(10**ROUND)
+    return np.floor(acc / (na[:, None] * nb) * m + 0.5) / m + 0.0
 
 
 def cosine_topk(embeddings: DataFrame, n_queries: int = 8, k: int = 5) -> DataFrame:
@@ -806,6 +838,29 @@ SELECT node AS vec_id, min(other) AS group_id FROM reach GROUP BY node
 SEMDEDUP_T = 0.25  # cosine at/above this to a lower-id cluster-mate => drop
 
 
+def _cell_prior(pdf: pd.DataFrame) -> pd.DataFrame:
+    """One k-means cell (vec_id, embedding) -> (vec_id, mps): each
+    vector's max rounded cosine to a lower-id cell-mate, for every
+    vector but the cell's id-minimum. In id order, each column block
+    [s, e) meets every row block of lower ids; the diagonal block masks
+    its pairs i >= j, and each block's column max folds into mps. Max
+    is exact, so mps equals the max over the dense matrix's upper
+    triangle, in about half its pairs and SIM_BLOCK² memory."""
+    pdf = pdf.sort_values("vec_id", kind="mergesort")
+    ids = pdf["vec_id"].to_numpy(np.int64)
+    M, nm = _matrix(pdf["embedding"])
+    n = len(ids)
+    mps = np.full(n, -np.inf)
+    for s in range(0, n, SIM_BLOCK):
+        e = min(s + SIM_BLOCK, n)
+        for r in range(0, s + 1, SIM_BLOCK):
+            blk = _cosines(M[:, r : r + SIM_BLOCK], nm[r : r + SIM_BLOCK], M[:, s:e], nm[s:e])
+            if r == s:
+                blk[np.tri(e - s, dtype=bool)] = -np.inf  # pairs i >= j
+            np.maximum(mps[s:e], blk.max(axis=0), out=mps[s:e])
+    return pd.DataFrame({"vec_id": ids[1:], "mps": mps[1:]})
+
+
 def semdedup(
     embeddings: DataFrame,
     k: int = KMEANS_K,
@@ -827,11 +882,13 @@ def semdedup(
 
     Scale shape: centroids are the k-means broadcast control plane
     (k x dim literals); assignment is one narrow map + one window
-    keyed by vec_id; the pairwise stage is an equi-join on cell — ONE
-    shuffle, quadratic only within a cluster, so at 10^12 vectors k
-    grows ~N/target_cluster_size and per-task work stays bounded. The
-    assignment is localCheckpointed once and feeds both join sides and
-    the final projection (three consumers, one computation).
+    keyed by vec_id; the pairwise stage groups the assignment by cell
+    (ONE shuffle) and runs ``_cell_prior`` per cell in NumPy, quadratic
+    only within a cluster and in blocks of at most SIM_BLOCK x
+    SIM_BLOCK sims, so at 10^12 vectors k grows ~N/target_cluster_size
+    and per-task memory stays bounded. The assignment is
+    localCheckpointed once and feeds both the cell groups and the
+    final projection.
     """
     cents = kmeans_centroids(embeddings, k, iters)
     cent_vec = (
@@ -850,49 +907,10 @@ def semdedup(
     assigned = (
         scored.withColumn("rn", F.row_number().over(w))
         .where(F.col("rn") == 1)
-        .select("vec_id", "cell", "embedding", _norm(F.col("embedding")).alias("nm"))
+        .select("vec_id", "cell", "embedding")
         .localCheckpoint(eager=False)
     )
-    # Within-cell pairwise max-prior-cosine in ONE vectorized pass per
-    # cell (round-6): the equi-join shape materialized every (a, b)
-    # pair as a JVM row and evaluated the dot through interpreted
-    # zip_with/aggregate lambdas (~7 µs/pair — quadratic within the
-    # cell, so the dominant cost). applyInPandas per cell computes the
-    # same sims in NumPy with the identical left-to-right float64
-    # per-dimension fold, the identical (a_nm * b_nm) denominator
-    # order, and the identical floor-rounding — max over bit-equal
-    # doubles, so the result is unchanged (oracle-green). Cell
-    # populations are the k-means-bounded quadratic unit exactly as
-    # before; only the per-pair constant drops ~50×.
-    import numpy as np
-    import pandas as pd
-
-    round_m = float(10**ROUND)
-
-    def _cell_prior(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("vec_id", kind="mergesort")
-        n = len(pdf)
-        if n < 2:
-            return pd.DataFrame({"vec_id": np.empty(0, dtype=np.int64), "mps": np.empty(0)})
-        M = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-        nm = pdf["nm"].to_numpy().astype(np.float64)
-        d_ = M.shape[1]
-        sims = np.zeros((n, n))
-        for d in range(d_):
-            sims += M[:, d : d + 1] * M[:, d][None, :]
-        sims = sims / (nm[:, None] * nm[None, :])
-        sims = np.floor(sims * round_m + 0.5) / round_m + 0.0
-        ids = pdf["vec_id"].to_numpy().astype(np.int64)
-        mps = np.empty(n - 1)
-        for j in range(1, n):
-            mps[j - 1] = sims[:j, j].max()
-        return pd.DataFrame({"vec_id": ids[1:], "mps": mps})
-
-    prior = (
-        assigned.select("vec_id", "cell", "embedding", "nm")
-        .groupBy("cell")
-        .applyInPandas(_cell_prior, "vec_id long, mps double")
-    )
+    prior = assigned.groupBy("cell").applyInPandas(_cell_prior, "vec_id long, mps double")
     return (
         assigned.join(prior, "vec_id", "left")
         .select(
@@ -944,6 +962,40 @@ KNN_CLASSIFY_K = 5
 KNN_UNLABELED_MOD = 5  # vec_id % 5 == 0 -> the planted unlabeled split
 
 
+def _classify_batch(
+    pdf: pd.DataFrame, L: np.ndarray, ln: np.ndarray, labels: np.ndarray, k: int
+) -> pd.DataFrame:
+    """One batch of queries (vec_id, embedding) against the labeled
+    index (``_matrix`` columns in ascending vec_id, their norms and
+    labels) -> (vec_id, pred_label, n_votes). The top-k keeps every
+    sim at or above the row's k-th largest and sorts those by (row,
+    sim DESC, col ASC); col order is vec_id order, so the first k per
+    row are the oracle's (sim DESC, neighbor_id ASC) ranks. The vote
+    counts label equality inside each row's k and takes (votes DESC,
+    label ASC)."""
+    U, un = _matrix(pdf["embedding"])
+    B = SIM_BLOCK
+    sims = np.block([
+        [_cosines(U[:, r : r + B], un[r : r + B], L[:, c : c + B], ln[c : c + B]) for c in range(0, len(ln), B)]
+        for r in range(0, len(un), B)
+    ])
+    m, n = sims.shape
+    kk = min(k, n)
+    kth = np.partition(sims, n - kk, axis=1)[:, n - kk]
+    row, col = np.nonzero(sims >= kth[:, None])
+    order = np.lexsort((col, -sims[row, col], row))
+    row, col = row[order], col[order]
+    rank = np.arange(len(row)) - np.searchsorted(row, row)
+    top = labels[col[rank < kk]].reshape(m, kk)
+    votes = (top[:, :, None] == top[:, None, :]).sum(axis=2)
+    best = np.lexsort((top, -votes), axis=1)[:, :1]
+    return pd.DataFrame({
+        "vec_id": pdf["vec_id"].to_numpy(np.int64),
+        "pred_label": np.take_along_axis(top, best, 1)[:, 0],
+        "n_votes": np.take_along_axis(votes, best, 1)[:, 0],
+    })
+
+
 def knn_classify(embeddings: DataFrame, k: int = KNN_CLASSIFY_K, mod: int = KNN_UNLABELED_MOD) -> DataFrame:
     """kNN label propagation: classify the planted unlabeled split
     (vec_id % mod == 0) by majority vote over its k nearest LABELED
@@ -956,29 +1008,19 @@ def knn_classify(embeddings: DataFrame, k: int = KNN_CLASSIFY_K, mod: int = KNN_
     total-order tie-break; votes break ties (count DESC, label ASC).
     Output (vec_id, pred_label, n_votes).
 
-    Scale shape (round-6 rewrite): exact kNN is inherently all-pairs
-    (N_lab × N_unl dot products — the oracle defines the exact answer,
-    so ANN candidate generation cannot substitute without changing
-    results). The previous shape materialized every pair as a JVM row
-    through interpreted zip_with/aggregate lambdas (~7 µs/pair: 575 s
-    at the driver's sf1.0). Now the labeled index is ONE broadcast
-    float64 matrix and the unlabeled split streams through mapInPandas;
-    each task computes its rows' sims against the whole index in
-    vectorized NumPy whose per-dimension accumulation loop reproduces
-    the JVM fold EXACTLY (acc = ((0 + x0·y0) + x1·y1) + … in float64,
-    the same left-to-right order as F.aggregate(zip_with(...)) and
-    DuckDB's list_sum), then rounds with the identical
-    floor(x·10^ROUND + 0.5)/10^ROUND op sequence — results are
-    bit-identical, verified against the unchanged DuckDB oracle. No
-    shuffle of pairs, no window: one scan of the unlabeled split.
-    This is the small-index regime (index ≤ executor memory; the
-    labeled matrix is chunked inside the task to bound the working
-    set); a 10^9-vector index belongs to the ANN family
+    Scale shape: exact kNN is inherently all-pairs (N_lab × N_unl dot
+    products — the oracle defines the exact answer, so ANN candidate
+    generation cannot substitute without changing results). Pairs
+    never become JVM rows: the labeled index is ONE broadcast float64
+    matrix and the unlabeled split streams through mapInPandas; each
+    batch runs ``_classify_batch``, whose sims come from the shared
+    ``_cosines`` kernel in SIM_BLOCK x SIM_BLOCK blocks, bit-identical
+    to the unchanged DuckDB oracle. No shuffle of pairs, no window: one
+    scan of the unlabeled split. This is the small-index regime (index
+    ≤ executor memory; a batch's sims are no larger than the index it
+    is scored against); a 10^9-vector index belongs to the ANN family
     (ivf_topk/lsh_near_pairs), which trades exactness for scale.
     """
-    import numpy as np
-    import pandas as pd
-
     spark = embeddings.sparkSession
     out_schema = "vec_id long, pred_label long, n_votes long"
     lab_pdf = (
@@ -995,63 +1037,14 @@ def knn_classify(embeddings: DataFrame, k: int = KNN_CLASSIFY_K, mod: int = KNN_
     # ascending vec_id so that positional index order == the
     # (sim DESC, neighbor_id ASC) tie-break order within equal sims
     lab_pdf = lab_pdf.sort_values("vec_id", kind="mergesort")
-    lab_mat = np.stack(lab_pdf["embedding"].to_numpy()).astype(np.float64)
-    lab_labels = lab_pdf["label"].to_numpy().astype(np.int64)
-    dim = lab_mat.shape[1]
-    # labeled norms once: strict left-to-right fold over dims (the
-    # oracle's list_sum order — sqrt(((0 + x0²) + x1²) + …))
-    ln_sq = np.zeros(len(lab_mat))
-    for d in range(dim):
-        ln_sq = ln_sq + lab_mat[:, d] * lab_mat[:, d]
-    lab_norm = np.sqrt(ln_sq)
-    bc = spark.sparkContext.broadcast((lab_mat, lab_norm, lab_labels))
-    round_m = float(10**ROUND)
+    bc = spark.sparkContext.broadcast((*_matrix(lab_pdf["embedding"]), lab_pdf["label"].to_numpy(np.int64)))
     kk = int(k)
 
     def _classify(batches):
-        L, ln, labels = bc.value
-        n_lab, d_ = L.shape
+        index = bc.value
         for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            U = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            qn_sq = np.zeros(len(U))
-            for d in range(d_):
-                qn_sq = qn_sq + U[:, d] * U[:, d]
-            qn = np.sqrt(qn_sq)
-            # dot products with strict dim-order accumulation; labeled
-            # axis chunked so the accumulator stays cache-resident
-            sims = np.empty((len(U), n_lab))
-            for s in range(0, n_lab, 4096):
-                e = min(s + 4096, n_lab)
-                acc = np.zeros((len(U), e - s))
-                for d in range(d_):
-                    acc += U[:, d : d + 1] * L[s:e, d][None, :]
-                sims[:, s:e] = acc
-            sims = sims / (qn[:, None] * ln[None, :])
-            sims = np.floor(sims * round_m + 0.5) / round_m + 0.0
-            out_ids = np.empty(len(U), dtype=np.int64)
-            out_lab = np.empty(len(U), dtype=np.int64)
-            out_votes = np.empty(len(U), dtype=np.int64)
-            qids = pdf["vec_id"].to_numpy().astype(np.int64)
-            for i in range(len(U)):
-                row = sims[i]
-                if n_lab <= kk:
-                    top_idx = np.arange(n_lab)
-                else:
-                    kth = np.partition(row, n_lab - kk)[n_lab - kk]
-                    gt = np.flatnonzero(row > kth)  # ≤ k-1 of these
-                    eq = np.flatnonzero(row == kth)  # ascending vec_id order
-                    top_idx = np.concatenate([gt, eq[: kk - len(gt)]])
-                top_labels = labels[top_idx]
-                uniq, counts = np.unique(top_labels, return_counts=True)
-                best = int(np.argmax(counts))  # first max → smallest label
-                out_ids[i] = qids[i]
-                out_lab[i] = uniq[best]
-                out_votes[i] = counts[best]
-            yield pd.DataFrame(
-                {"vec_id": out_ids, "pred_label": out_lab, "n_votes": out_votes}
-            )
+            if len(pdf):
+                yield _classify_batch(pdf, *index, kk)
 
     unl = spread(
         embeddings.where(F.col("vec_id") % mod == 0).select(

@@ -366,14 +366,12 @@ def _hex_string(s: str) -> str:
     return bytes.fromhex(hexs).decode("latin-1")
 
 
-def decode_pdf_texts(blob: bytes) -> list[str]:
-    """Per-page text of a PDF: decode each content stream through its
+def _page_contents(blob: bytes) -> list[str]:
+    """Decoded content stream per page: each stream runs through its
     declared filter chain (Flate / LZW / ASCIIHex / ASCII85 /
-    RunLength, in array order; direct or indirect /Length), evaluate
-    Tj and TJ showing operators in order. Raises
+    RunLength, in array order; direct or indirect /Length). Raises
     ``UnsupportedPdfError`` (never returns silently-empty text) for
-    encrypted PDFs or image-codec stream filters — route those through
-    the rasterizer branch (sources/reader.py does this automatically)."""
+    encrypted PDFs, image-codec stream filters and CID fonts."""
     reason = pdf_unsupported_reason(blob)
     if reason is not None:
         raise UnsupportedPdfError(
@@ -389,29 +387,38 @@ def decode_pdf_texts(blob: bytes) -> list[str]:
         raw = blob[start : start + length]
         filters = _stream_filters(header)
         if filters:
-            content = _apply_filters(raw, filters).decode("latin-1")
+            data = _apply_filters(raw, filters)
         else:
             # no /Filter key: historical fixtures store either deflated
             # or plain bytes — try inflate, fall back to raw
             try:
-                content = zlib.decompress(raw).decode("latin-1")
+                data = zlib.decompress(raw)
             except zlib.error:
-                content = raw.decode("latin-1")
-        parts: list[str] = []
-        for sm in _SHOW_RE.finditer(content):
-            if sm.group(1) is not None:
-                parts.append(_unescape_pdf_string(sm.group(1)))
-            elif sm.group(2) is not None:
-                parts.append(_hex_string(sm.group(2)))
-            else:
-                for pm in _TJ_PART_RE.finditer(sm.group(3)):
-                    parts.append(
-                        _unescape_pdf_string(pm.group(1))
-                        if pm.group(1) is not None
-                        else _hex_string(pm.group(2))
-                    )
-        pages.append("".join(parts))
+                data = raw
+        pages.append(data.decode("latin-1"))
     return pages
+
+
+def _show_text(sm: "re.Match") -> str:
+    if sm.group(1) is not None:
+        return _unescape_pdf_string(sm.group(1))
+    if sm.group(2) is not None:
+        return _hex_string(sm.group(2))
+    parts = []
+    for pm in _TJ_PART_RE.finditer(sm.group(3)):
+        parts.append(
+            _unescape_pdf_string(pm.group(1)) if pm.group(1) is not None else _hex_string(pm.group(2))
+        )
+    return "".join(parts)
+
+
+def decode_pdf_texts(blob: bytes) -> list[str]:
+    """Per-page text of a PDF in stream order: the Tj / ' / " and TJ
+    showing operators of each decoded content stream (``_page_contents``),
+    in order. Unsupported documents raise ``UnsupportedPdfError`` —
+    route those through the rasterizer branch (sources/reader.py does
+    this automatically)."""
+    return ["".join(_show_text(sm) for sm in _SHOW_RE.finditer(c)) for c in _page_contents(blob)]
 
 
 PDF_SCHEMA = "doc_id string, pdf binary"
@@ -518,47 +525,17 @@ def encode_pdf_columns(text: str, words_per_line: int = LAYOUT_WORDS_PER_LINE) -
     return _assemble_pdf([zlib.compress(body.encode("latin-1"), 6)])
 
 
-def _show_text(sm: "re.Match") -> str:
-    if sm.group(1) is not None:
-        return _unescape_pdf_string(sm.group(1))
-    if sm.group(2) is not None:
-        return _hex_string(sm.group(2))
-    parts = []
-    for pm in _TJ_PART_RE.finditer(sm.group(3)):
-        parts.append(
-            _unescape_pdf_string(pm.group(1)) if pm.group(1) is not None else _hex_string(pm.group(2))
-        )
-    return "".join(parts)
-
-
 def decode_pdf_layout(blob: bytes) -> list[str]:
     """Per-page text in READING order: track the text-space origin
     through translation-only Tm and relative Td/TD operators, attach
     (x, y) to every show operator, split spans into columns when the
     x spread says there are two (boundary = x midrange), and emit
     column-major top-down. Single-column pages (no x spread) reduce to
-    a pure top-down sort — stream order is never trusted. Shares the
-    stream iterator + filter-chain decode with ``decode_pdf_texts``
-    (same UnsupportedPdfError gates)."""
-    reason = pdf_unsupported_reason(blob)
-    if reason is not None:
-        raise UnsupportedPdfError(
-            f"PDF uses an unsupported feature ({reason}); see decode_pdf_texts"
-        )
+    a pure top-down sort — stream order is never trusted. Reads the
+    same decoded streams as ``decode_pdf_texts`` (``_page_contents``,
+    with its UnsupportedPdfError gate)."""
     pages: list[str] = []
-    for header, start in _iter_streams(blob):
-        length = _stream_length(header, blob)
-        if length is None:
-            continue
-        raw = blob[start : start + length]
-        filters = _stream_filters(header)
-        if filters:
-            content = _apply_filters(raw, filters).decode("latin-1")
-        else:
-            try:
-                content = zlib.decompress(raw).decode("latin-1")
-            except zlib.error:
-                content = raw.decode("latin-1")
+    for content in _page_contents(blob):
         events: list[tuple[int, str, object]] = []
         for m in _TM_RE.finditer(content):
             events.append((m.start(), "tm", (float(m.group(5)), float(m.group(6)))))

@@ -303,6 +303,16 @@ def test_unsupported_pdf_gate_raises_named_error():
         P.decode_pdf_texts(ENCRYPTED_PDF)
 
 
+def test_layout_decoder_shares_the_unsupported_gate():
+    """decode_pdf_layout reads the same gated streams: it raises on the
+    same fixtures instead of returning blank reading-order text."""
+    with pytest.raises(P.UnsupportedPdfError, match="DCTDecode"):
+        P.decode_pdf_layout(DCT_PDF)
+    with pytest.raises(P.UnsupportedPdfError, match="encrypted"):
+        P.decode_pdf_layout(ENCRYPTED_PDF)
+    assert P.decode_pdf_layout(P.encode_pdf(["plain text"])) == ["plain text"]
+
+
 class TolerantRasterizer:
     """Test stand-in for a REAL pypdfium2: renders any PDF (even ones
     the content-stream parser rejects) as one fixed page."""

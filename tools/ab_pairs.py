@@ -1,0 +1,142 @@
+#!/usr/bin/env python3
+"""Interleaved A/B of two checkouts on one perfbench workload.
+
+    python3 tools/ab_pairs.py --parent ../parent --change . \\
+        --workload embed_dedup --seeds 41 42 43 44 45 46 \\
+        --out plans/r11/ab_embed_dedup.jsonl
+
+Each seed is one pair: ``perfbench/run.py`` runs once in each tree, one
+after the other, and the side that runs first alternates from pair to
+pair (parent first in pair 0). Every run appends one JSON line to
+``--out`` with the host's steal share and CPU probe from the run's
+``# host:`` line. At the end, and with ``--summary FILE`` for records
+already written, it prints per end-to-end metric the median and
+quartiles of each side, the change/parent ratio of the medians, the
+pairs the change won and whether the ratio stays inside the metric's
+``BENCHMARK.json`` bound. ``worker_peak_rss_mb`` is also printed as its
+modes (runs more than 5 MB apart start a new mode) with run counts,
+since one tree's peak RSS can step between modes from run to run.
+"""
+
+from __future__ import annotations
+
+import argparse
+import json
+import os
+import re
+import statistics
+import subprocess
+import sys
+import time
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+RSS_GAP_MB = 5.0
+HOST_RE = re.compile(r"# host: steal_share=(\S+) cpu_probe_s before=(\S+) after=(\S+)")
+
+
+def run_one(tree: str, workload: str, seed: int, seconds: float) -> dict:
+    """One untraced perfbench run in ``tree``: its result line and host window."""
+    cmd = [sys.executable, "perfbench/run.py", "--workload", workload, "--seed", str(seed),
+           "--seconds", str(seconds), "--trace", "0"]
+    t0 = time.time()
+    proc = subprocess.run(cmd, cwd=tree, capture_output=True, text=True)
+    rec = {"rc": proc.returncode, "wall": round(time.time() - t0, 1)}
+    host = HOST_RE.search(proc.stdout)
+    if host:
+        rec["steal_share"] = float(host.group(1))
+        rec["cpu_probe_s"] = [float(host.group(2)), float(host.group(3))]
+    lines = [ln for ln in proc.stdout.splitlines() if ln.startswith("{")]
+    if lines:
+        rec.update(json.loads(lines[-1]))
+    else:
+        rec["stderr_tail"] = proc.stderr[-2000:]
+    return rec
+
+
+def quartiles(vals: list[float]) -> tuple[float, float, float]:
+    if len(vals) < 2:
+        return vals[0], vals[0], vals[0]
+    q1, q2, q3 = statistics.quantiles(vals, n=4, method="inclusive")
+    return q1, q2, q3
+
+
+def modes(vals: list[float], gap: float = RSS_GAP_MB) -> list[tuple[float, float, int]]:
+    """(low, high, runs) per cluster of the sorted values; a step larger
+    than ``gap`` starts a new cluster."""
+    out: list[list[float]] = []
+    for v in sorted(vals):
+        if out and v - out[-1][-1] <= gap:
+            out[-1].append(v)
+        else:
+            out.append([v])
+    return [(c[0], c[-1], len(c)) for c in out]
+
+
+def summarize(records: list[dict]) -> str:
+    with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
+        bench = json.load(f)
+    pairs: dict[tuple[str, int, int], dict[str, dict]] = {}
+    for r in records:  # a file may hold several sessions, each from pair 0
+        pairs.setdefault((r["workload"], r["seed"], r["pair"]), {})[r["side"]] = r
+    lines = []
+    for workload in sorted({key[0] for key in pairs}):
+        full = [p for key, p in sorted(pairs.items()) if key[0] == workload and len(p) == 2]
+        ok = [p for p in full if all(r.get("rc") == 0 and "metrics" in r for r in p.values())]
+        lines.append(f"{workload}: {len(ok)} complete pairs ({len(full) - len(ok)} with a failed run)")
+        lines.append("metric | parent median [q1, q3] | change median [q1, q3] | ratio | wins | bound")
+        for m in bench["end_to_end"]:
+            name, better, bound = m["name"], m["better"], m["bound"]
+            side = {s: [p[s]["metrics"][name]["value"] for p in ok] for s in ("parent", "change")}
+            if not side["parent"]:
+                continue
+            (p1, pm, p3), (c1, cm, c3) = quartiles(side["parent"]), quartiles(side["change"])
+            ratio = cm / pm if pm else float("nan")
+            sign = 1 if better == "higher" else -1
+            wins = sum(sign * (c - p) > 0 for p, c in zip(side["parent"], side["change"]))
+            inside = ratio >= 1 - bound if better == "higher" else ratio <= 1 + bound
+            lines.append(
+                f"{name} | {pm:.6g} [{p1:.6g}, {p3:.6g}] | {cm:.6g} [{c1:.6g}, {c3:.6g}] | "
+                f"{ratio:.3f} | {wins}/{len(ok)} | {'inside' if inside else 'OUTSIDE'} {bound}"
+            )
+            if name == "worker_peak_rss_mb":
+                for s in ("parent", "change"):
+                    desc = ", ".join(f"{lo:.1f}-{hi:.1f} MB x{n}" for lo, hi, n in modes(side[s]))
+                    lines.append(f"  {s} modes: {desc}")
+    return "\n".join(lines)
+
+
+def main() -> int:
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("--parent", help="checkout of the parent tree")
+    ap.add_argument("--change", help="checkout of the change tree")
+    ap.add_argument("--workload")
+    ap.add_argument("--seeds", type=int, nargs="+", help="one pair per seed")
+    ap.add_argument("--seconds", type=float, default=20)
+    ap.add_argument("--out", help="JSON lines file the runs are appended to")
+    ap.add_argument("--summary", help="only summarize this JSON lines file")
+    args = ap.parse_args()
+    if args.summary:
+        with open(args.summary) as f:
+            print(summarize([json.loads(ln) for ln in f if ln.strip()]))
+        return 0
+    if not (args.parent and args.change and args.workload and args.seeds and args.out):
+        ap.error("--parent, --change, --workload, --seeds and --out are required")
+    records = []
+    for pair, seed in enumerate(args.seeds):
+        sides = ("parent", "change") if pair % 2 == 0 else ("change", "parent")
+        for side in sides:
+            tree = args.parent if side == "parent" else args.change
+            rec = {"workload": args.workload, "seed": seed, "side": side, "pair": pair, "first": sides[0]}
+            rec.update(run_one(os.path.abspath(tree), args.workload, seed, args.seconds))
+            records.append(rec)
+            with open(args.out, "a") as f:
+                f.write(json.dumps(rec) + "\n")
+            items = rec.get("metrics", {}).get("items_per_s", {}).get("value")
+            print(f"pair {pair} seed {seed} {side}: rc={rec['rc']} items_per_s={items} "
+                  f"steal={rec.get('steal_share')}", flush=True)
+    print(summarize(records))
+    return 0
+
+
+if __name__ == "__main__":
+    sys.exit(main())

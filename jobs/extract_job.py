@@ -24,6 +24,7 @@ import argparse
 
 from onnxtr_spark.lineage import run_checkpointed
 from onnxtr_spark.session import get_spark
+from onnxtr_spark.stages.detect import DetectConfig
 from onnxtr_spark.streaming.extract_stream import stream_extract_available_now
 
 
@@ -55,20 +56,15 @@ def main() -> None:
         print(f"bucketed tables written: {spans_tbl}, {media_tbl}")
         spark.stop()
         return
+    det_cfg = DetectConfig(
+        straighten_pages=args.straighten_pages, assume_straight_pages=not args.rotated_boxes
+    )
     if args.streaming_dir:
         q = stream_extract_available_now(
-            spark, args.streaming_dir, media, args.out, f"{args.out}/_checkpoint"
+            spark, args.streaming_dir, media, args.out, f"{args.out}/_checkpoint", det_cfg=det_cfg
         )
         q.awaitTermination()
     else:
-        from onnxtr_spark.stages.detect import DetectConfig
-
-        det_cfg = None
-        if args.straighten_pages or args.rotated_boxes:
-            det_cfg = DetectConfig(
-                straighten_pages=args.straighten_pages,
-                assume_straight_pages=not args.rotated_boxes,
-            )
         docs = spark.read.parquet(args.docs)
         done = run_checkpointed(
             spark, docs, media, args.out, n_groups=args.groups, det_cfg=det_cfg

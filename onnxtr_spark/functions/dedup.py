@@ -1,4 +1,4 @@
-"""Deduplication operators: exact, MinHash+LSH, SimHash, token Jaccard.
+"""Deduplication operators: exact, MinHash+LSH, SimHash, set-similarity joins.
 
 Spark-first shapes:
 
@@ -9,12 +9,15 @@ Spark-first shapes:
   LSH candidates come from a self-join on (band, band_key) — at scale
   the banded table is bucketed on band_key so the join is co-located.
 - SimHash: explode tokens once, 16 conditional sums in one groupBy.
-- token Jaccard: prefix-filtered inverted-index self-join (exact at
-  the threshold, SSJoin-style): only each doc's ⌊(1-t)·|X|⌋+1
-  rarest-by-global-DF tokens are indexed, so high-DF stopwords never
-  fan out d²; intersections are verified per candidate pair via
-  array_intersect. MinHash-LSH above is the subquadratic
-  approximation when even the candidate set must shrink.
+- token Jaccard, character-n-gram Jaccard and directional containment:
+  one prefix-filtered set join (SSJoin, Chaudhuri et al., ICDE 2006),
+  exact at the threshold. ``_prefix`` indexes only each doc's
+  n − ⌈t·n⌉ + 1 rarest-by-global-df elements, so high-df stopwords
+  never fan out d²; the Jaccard queries join prefix to prefix, the
+  containment query probes every element with the contained side's
+  prefix, and ``_verified`` counts each candidate pair's exact
+  intersection with one array_intersect. MinHash-LSH above is the
+  subquadratic approximation when even the candidate set must shrink.
 
 All JVM-side; md5-based hashing for cross-engine oracles (hashing.py).
 """
@@ -26,7 +29,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from onnxtr_spark.functions.hashing import hash64, hash64_sql
+from onnxtr_spark.functions.hashing import hash64, hash64_sql, round_half_up
 from onnxtr_spark.functions.text import _TOKENS_SQL, _shingles_sql, shingles, tokens
 from onnxtr_spark.partitioning import spread
 
@@ -124,92 +127,106 @@ def lsh_candidate_pairs(documents: DataFrame) -> DataFrame:
     )
 
 
-def prefix_tokens(documents: DataFrame, threshold: float) -> DataFrame:
-    """Prefix-filtered inverted-index tokens: (doc_id, tok, n).
+def _num(threshold: float) -> int:
+    """The threshold as an integer num = round(t·10⁴). Every test runs in
+    integers over it: ceil(t·n) as ⌈num·n/10⁴⌉, where the double
+    num·n/10⁴ is an exact integer or ≥ 1e-4 from one (naive ceil(0.9·10)
+    is 10 in IEEE and would over-shrink the prefix, silently dropping
+    boundary pairs with J exactly = t), and the final filters as
+    10⁴·inter ≥ num·denominator, so rounding stays display-only."""
+    return int(round(threshold * 10000))
 
-    Exact prefix filtering (SSJoin/PPJoin family): order each doc's
-    distinct tokens by GLOBAL document frequency ascending (rarest
-    first, ties by token string — a total order), and index only the
-    first ``|X| - ceil(t·|X|) + 1`` tokens. Two docs with Jaccard ≥ t
-    share ≥ ceil(t·max(|A|,|B|)) tokens, so their prefixes must
-    intersect — no qualifying pair is lost. A stopword like "the" sits
-    LAST in every ordering and is indexed only by docs that are almost
-    entirely stopwords, so the d² blowup on high-DF tokens is gone:
-    the index size per doc is ≤ ⌊(1-t)·|X|⌋+1 (10% + 1 at t=0.9).
-    """
-    toks = documents.select(
-        F.col("doc_id").cast("long").alias("doc_id"), F.explode(F.array_distinct(tokens())).alias("tok")
-    )
-    df_counts = toks.groupBy("tok").agg(F.count("*").alias("df"))
-    wdoc = Window.partitionBy("doc_id").orderBy("df", "tok")
-    wn = Window.partitionBy("doc_id")
-    # ceil(t·n) in exact arithmetic: t quantized to 4 decimals so the
-    # double division num·n/10⁴ is either an exact integer or ≥ 1e-4
-    # from one — naive ceil(0.9·10) is 10 in IEEE and would over-shrink
-    # the prefix, silently dropping boundary pairs with J exactly = t.
-    num = int(round(threshold * 10000))
-    alpha = F.ceil((F.lit(num) * F.col("n")).cast("double") / F.lit(10000.0))
+
+def _prefix(sets: DataFrame, num: int) -> DataFrame:
+    """SSJoin prefix index (Chaudhuri et al., ICDE 2006): ``sets``
+    (doc_id, xs, n = |xs|) → (doc_id, x, n) for each doc's first
+    n − ⌈num·n/10⁴⌉ + 1 elements in the total order (global df, x),
+    rarest first. A pair that shares ≥ ⌈t·n⌉ of a side's elements must
+    meet that side's prefix, so no qualifying pair is lost, and a
+    stopword-like element sits LAST in every order: it is indexed only
+    by docs made almost entirely of it, so high-df keys never fan out
+    d². The per-doc order is one ``array_sort`` + ``slice`` of the
+    collected (df, x) structs, not a window re-sorting every element."""
+    elems = sets.select("doc_id", "n", F.explode("xs").alias("x"))
+    dfc = elems.groupBy("x").agg(F.count("*").alias("df"))
+    plen = F.col("n") - F.ceil((F.lit(num) * F.col("n")).cast("double") / F.lit(10000.0)) + 1
     return (
-        toks.join(df_counts, "tok")
-        .withColumn("pos", F.row_number().over(wdoc))
-        .withColumn("n", F.count("*").over(wn).cast("long"))
-        .where(F.col("pos") <= F.col("n") - alpha + 1)
-        .select("doc_id", "tok", "n")
+        elems.join(dfc, "x")
+        .groupBy("doc_id", "n")
+        .agg(F.array_sort(F.collect_list(F.struct("df", "x"))).alias("dx"))
+        .select("doc_id", "n", F.explode(F.slice("dx", F.lit(1), plen.cast("int"))).alias("s"))
+        .select("doc_id", F.col("s.x").alias("x"), "n")
     )
 
 
-def token_jaccard_pairs(documents: DataFrame, threshold: float = 0.9) -> DataFrame:
-    """Exact token-set Jaccard near-dup pairs: (doc_a, doc_b, jaccard)
-    with jaccard >= threshold, rounded to 4.
-
-    Candidate generation is a self-join on the PREFIX index only (see
-    ``prefix_tokens`` — bounded per-doc fanout, exact at the
-    threshold); the exact |A∩B| is then computed per candidate pair
-    from per-doc sorted token arrays (``array_intersect``), so the
-    verify cost is per candidate, never per shared-token occurrence.
-    Output is identical to the unbounded inverted-index formulation —
-    the DuckDB oracle is unchanged."""
-    documents = spread(documents)
-    toks = documents.select(
-        F.col("doc_id").cast("long").alias("doc_id"), F.explode(F.array_distinct(tokens())).alias("tok")
+def _verified(cands: DataFrame, sets: DataFrame) -> DataFrame:
+    """Candidate pairs (doc_a, doc_b, …) plus the exact inter = |A ∩ B|
+    from the two docs' element arrays: the verify cost is per candidate
+    pair, never per shared-element occurrence."""
+    xs = sets.select("doc_id", "xs")
+    return (
+        cands.join(xs.toDF("doc_a", "xa"), "doc_a")
+        .join(xs.toDF("doc_b", "xb"), "doc_b")
+        .withColumn("inter", F.size(F.array_intersect("xa", "xb")).cast("long"))
     )
-    prefix = prefix_tokens(documents, threshold)
+
+
+def _jaccard_pairs(sets: DataFrame, threshold: float) -> DataFrame:
+    """(doc_a < doc_b, jaccard ≥ threshold rounded to 4) over ``sets``:
+    the prefix joins itself, and the size bound implied by the final
+    test (inter ≤ min, union ≥ max ⇒ 10⁴·min ≥ num·max) prunes
+    candidates before the distinct and the verify."""
+    num = _num(threshold)
+    # AQE coalesces the few-MB prefix shuffle into one partition, and the
+    # broadcast self-join, distinct and verify downstream of it then run
+    # in one task; an explicit keyed repartition is exempt from that.
+    prefix = spread(_prefix(sets, num), "doc_id")
     cands = (
         prefix.alias("a")
-        .join(prefix.alias("b"), "tok")
+        .join(prefix.alias("b"), "x")
         .where(F.col("a.doc_id") < F.col("b.doc_id"))
         .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.n").alias("na"),
-            F.col("b.n").alias("nb"),
+            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"),
+            F.col("a.n").alias("na"), F.col("b.n").alias("nb"),
         )
-        # exact size bound implied by the final test (inter <= min,
-        # uni >= max => 10^4*min >= num*max): prunes candidates BEFORE
-        # the distinct+verify without losing any qualifying pair
-        .where(
-            F.lit(10000) * F.least("na", "nb") >= F.lit(int(round(threshold * 10000))) * F.greatest("na", "nb")
-        )
+        .where(F.lit(10000) * F.least("na", "nb") >= F.lit(num) * F.greatest("na", "nb"))
         .distinct()
     )
-    docsets = toks.groupBy("doc_id").agg(F.sort_array(F.collect_list("tok")).alias("toks"))
-    from onnxtr_spark.functions.hashing import round_half_up
-
-    # Threshold filter in exact integer arithmetic (10⁴·inter ≥ num·union):
-    # the prefix filter guarantees candidates only for TRUE jaccard ≥ t,
-    # so filtering on the ROUNDED value would admit pairs in [t-5e-5, t)
-    # that the prefix index may legitimately have dropped — an oracle
-    # mismatch waiting to happen. Rounding is display-only, half-up in
-    # both engines.
-    num = int(round(threshold * 10000))
     return (
-        cands.join(docsets.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("toks", "ta"), "doc_a")
-        .join(docsets.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("toks", "tb"), "doc_b")
-        .withColumn("inter", F.size(F.array_intersect("ta", "tb")).cast("long"))
+        _verified(cands, sets)
         .withColumn("uni", F.col("na") + F.col("nb") - F.col("inter"))
         .where(F.lit(10000) * F.col("inter") >= F.lit(num) * F.col("uni"))
         .select("doc_a", "doc_b", round_half_up(F.col("inter") / F.col("uni"), 4).alias("jaccard"))
     )
+
+
+def _sets(rows: DataFrame) -> DataFrame:
+    """(doc_id, x) rows → per-doc sets (doc_id, xs, n = |xs|). Equal x
+    rows of one doc (hash collisions) stay in xs and count in n."""
+    return (
+        rows.groupBy(F.col("doc_id").cast("long").alias("doc_id"))
+        .agg(F.collect_list("x").alias("xs"))
+        .withColumn("n", F.size("xs").cast("long"))
+    )
+
+
+def _token_sets(documents: DataFrame) -> DataFrame:
+    return _sets(documents.select("doc_id", F.explode(F.array_distinct(tokens())).alias("x")))
+
+
+def prefix_tokens(documents: DataFrame, threshold: float) -> DataFrame:
+    """The token-set prefix index: (doc_id, x, n), at most
+    ⌊(1-t)·n⌋+1 tokens per doc (10% + 1 at t=0.9)."""
+    return _prefix(_token_sets(documents), _num(threshold))
+
+
+def token_jaccard_pairs(documents: DataFrame, threshold: float = 0.9) -> DataFrame:
+    """Exact token-set Jaccard near-dup pairs: (doc_a, doc_b, jaccard)
+    with jaccard >= threshold, rounded to 4 — the prefix-filtered set
+    join ``_jaccard_pairs`` over each doc's distinct tokens. Output is
+    identical to the unbounded inverted-index formulation of the DuckDB
+    oracle."""
+    return _jaccard_pairs(_token_sets(spread(documents)), threshold)
 
 
 def token_jaccard_pairs_sql(threshold: float = 0.9) -> str:
@@ -469,71 +486,24 @@ def ngram_jaccard_pairs(
     (doc_a, doc_b, jaccard ≥ threshold, rounded to 4) — the
     word-robust sibling of ``token_jaccard_pairs`` (n-grams survive
     word-boundary edits and agglutinative text where token sets
-    don't). Same SSJoin discipline: global-DF-ascending prefix index
-    (≤ ⌊(1-t)·|X|⌋+1 grams per doc — no qualifying pair lost, no d²
-    blowup on frequent grams), candidate equi-join on prefix grams
-    only, exact array_intersect verify per candidate pair.
+    don't). It is the same prefix-filtered set join as the token
+    variant, ``_jaccard_pairs``, over each doc's distinct grams.
 
-    Cost shape for scale: grams are xxhash64'd to int64 BEFORE any
-    shuffle (equality joins and set intersection only, so hashing
-    preserves exactness up to 64-bit collisions; the oracle, a
-    different engine, hashes with its own function — hashes never
-    cross engines or reach the output). The hashed doc→gram-set
-    relation is materialized once (localCheckpoint) and feeds the DF
-    count, the prefix index, and both verify sides; the per-doc
-    global-DF prefix is an ``array_sort``+``slice`` over collected
-    (df, gram) structs — no row_number window re-sorting every gram
-    occurrence. The threshold filter is exact integer arithmetic
-    (10⁴·inter ≥ num·union with num = round(t·10⁴)) so no pair at the
-    boundary is lost to display rounding in either engine."""
-    from onnxtr_spark.functions.hashing import round_half_up
-
-    num = int(round(threshold * 10000))  # exact-ceil quantization (see prefix_tokens)
-    docsets = (
+    Grams are xxhash64'd to int64 BEFORE any shuffle (equality joins and
+    set intersection only, so hashing preserves exactness up to 64-bit
+    collisions, and a colliding pair still counts twice in n; the
+    oracle, a different engine, hashes with its own function — hashes
+    never cross engines or reach the output). The hashed doc→gram-set
+    relation is materialized once (localCheckpoint) and feeds the df
+    count, the prefix index and both verify sides."""
+    sets = (
         spread(documents)
         .select(F.col("doc_id").cast("long").alias("doc_id"), _norm_text().alias("norm"))
-        .select(
-            "doc_id",
-            F.array_sort(
-                F.transform(_char_ngrams(n, F.col("norm")), lambda g: F.xxhash64(g))
-            ).alias("gs"),
-        )
-        .withColumn("ng", F.size("gs").cast("long"))
+        .select("doc_id", F.transform(_char_ngrams(n, F.col("norm")), lambda g: F.xxhash64(g)).alias("xs"))
+        .withColumn("n", F.size("xs").cast("long"))
         .localCheckpoint(eager=False)
     )
-    grams = docsets.select("doc_id", "ng", F.explode("gs").alias("g"))
-    df_counts = grams.groupBy("g").agg(F.count("*").alias("df"))
-    alpha = F.ceil((F.lit(num) * F.col("ng")).cast("double") / F.lit(10000.0))
-    plen = (F.col("ng") - alpha + 1).cast("int")
-    prefix = (
-        grams.join(df_counts, "g")
-        .groupBy("doc_id", "ng")
-        .agg(F.array_sort(F.collect_list(F.struct("df", "g"))).alias("dg"))
-        .select("doc_id", "ng", F.explode(F.slice("dg", F.lit(1), plen)).alias("s"))
-        .select("doc_id", F.col("s.g").alias("g"), "ng")
-    )
-    cands = (
-        prefix.alias("a")
-        .join(prefix.alias("b"), "g")
-        .where(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"),
-            F.col("a.ng").alias("na"), F.col("b.ng").alias("nb"),
-        )
-        # exact size bound implied by the final test (inter <= min,
-        # uni >= max => 10^4*min >= num*max): prunes candidates BEFORE
-        # the distinct+verify without losing any qualifying pair
-        .where(F.lit(10000) * F.least("na", "nb") >= F.lit(num) * F.greatest("na", "nb"))
-        .distinct()
-    )
-    return (
-        cands.join(docsets.select(F.col("doc_id").alias("doc_a"), F.col("gs").alias("ga")), "doc_a")
-        .join(docsets.select(F.col("doc_id").alias("doc_b"), F.col("gs").alias("gb")), "doc_b")
-        .withColumn("inter", F.size(F.array_intersect("ga", "gb")).cast("long"))
-        .withColumn("uni", F.col("na") + F.col("nb") - F.col("inter"))
-        .where(F.lit(10000) * F.col("inter") >= F.lit(num) * F.col("uni"))
-        .select("doc_a", "doc_b", round_half_up(F.col("inter") / F.col("uni"), 4).alias("jaccard"))
-    )
+    return _jaccard_pairs(sets, threshold)
 
 
 def ngram_jaccard_pairs_sql(n: int = NGRAM_N, threshold: float = NGRAM_THRESHOLD) -> str:
@@ -589,52 +559,32 @@ def containment_pairs(
     containment is vacuous on small vocabularies.
 
     Exactness with a bounded index: a pair with C(A→B) ≥ t shares
-    ≥ ceil(t·|A|) shingles, so A's prefix (its |A|-ceil(t·|A|)+1
-    rarest-by-global-DF shingles) must hit SOME shingle of B. Only the
-    CONTAINED side is prefix-pruned; the container side indexes all
-    distinct shingles, and per-key fanout stays bounded because a
-    boilerplate shingle enters a prefix only for docs that are almost
-    entirely boilerplate. Shingles shuffle as int64 hashes (same
-    md5-derived hash in the oracle, so any collision is shared and the
-    row stays hash-exact). Threshold test in exact integer arithmetic
-    (10⁴·inter ≥ num·|A|); rounding is display-only."""
-    sh = shingles(documents, k).select(
-        F.col("doc_id").cast("long").alias("doc_id"), hash64(F.col("shingle"), 29).alias("h")
-    )
-    dfc = sh.groupBy("h").agg(F.count("*").alias("df"))
-    wdoc = Window.partitionBy("doc_id").orderBy("df", "h")
-    wn = Window.partitionBy("doc_id")
-    num = int(round(threshold * 10000))
-    alpha = F.ceil((F.lit(num) * F.col("n")).cast("double") / F.lit(10000.0))
-    prefix = (
-        sh.join(dfc, "h")
-        .withColumn("pos", F.row_number().over(wdoc))
-        .withColumn("n", F.count("*").over(wn).cast("long"))
-        .where(F.col("pos") <= F.col("n") - alpha + 1)
-        .select("doc_id", "h", "n")
-    )
+    ≥ ceil(t·|A|) shingles, so A's ``_prefix`` must hit SOME shingle of
+    B. Only the CONTAINED side is prefix-pruned; the prefix probes
+    every shingle of the container side, and per-key fanout stays
+    bounded because a boilerplate shingle enters a prefix only for docs
+    that are almost entirely boilerplate. Shingles shuffle as int64
+    hashes (same md5-derived hash in the oracle, so a collision is
+    shared, counts in |A| in both engines, and the row stays
+    hash-exact). The verify is ``_verified``, the same
+    ``array_intersect`` as the Jaccard joins."""
+    sets = _sets(shingles(documents, k).select("doc_id", hash64(F.col("shingle"), 29).alias("x")))
+    num = _num(threshold)
+    every = sets.select("doc_id", "n", F.explode("xs").alias("x"))
     cands = (
-        prefix.alias("a")
-        .join(sh.alias("b"), "h")
+        _prefix(sets, num).alias("a")
+        .join(every.alias("b"), "x")
         .where(F.col("a.doc_id") != F.col("b.doc_id"))
         .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.n").alias("na"),
+            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"),
+            F.col("a.n").alias("na"), F.col("b.n").alias("nb"),
         )
+        # directional size bound implied by the final test (inter ≤ nb)
+        .where(F.lit(10000) * F.col("nb") >= F.lit(num) * F.col("na"))
         .distinct()
     )
-    docsets = sh.groupBy("doc_id").agg(F.sort_array(F.collect_list("h")).alias("hs"))
-    from onnxtr_spark.functions.hashing import round_half_up
-
     return (
-        cands.join(docsets.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("hs", "ha"), "doc_a")
-        .join(docsets.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("hs", "hb"), "doc_b")
-        # directional size bound implied by the final test (inter <= |B|,
-        # so num*na <= 10^4*inter requires num*na <= 10^4*|B|): skips the
-        # array_intersect for container sides too small to qualify
-        .where(F.lit(10000) * F.size("hb") >= F.lit(num) * F.col("na"))
-        .withColumn("inter", F.size(F.array_intersect("ha", "hb")).cast("long"))
+        _verified(cands, sets)
         .where(F.lit(10000) * F.col("inter") >= F.lit(num) * F.col("na"))
         .select("doc_a", "doc_b", round_half_up(F.col("inter") / F.col("na"), 4).alias("containment"))
     )
@@ -762,8 +712,6 @@ def substring_dup_coverage(documents: DataFrame, length: int = SUBSTR_L) -> Data
         .cast("long")
         .alias("covered_chars"),
     )
-    from onnxtr_spark.functions.hashing import round_half_up
-
     base = documents.select(
         F.col("doc_id").cast("long").alias("doc_id"),
         F.length("text").alias("n"),

@@ -39,7 +39,6 @@ import numpy as np
 
 from onnxtr_spark.vocabs import DEFAULT_VOCAB
 
-MAGIC = b"NPIM1"  # legacy uncompressed RGB frames (still decodable)
 MAGIC_Z = b"NPIMZ"  # zlib-compressed RGB frames (PNG is zlib too)
 MAGIC_S = b"NPIMS"  # grayscale frame stored at 1/f scale + integer
 #                     upscale factor (nearest/pixel-replication, the
@@ -144,20 +143,44 @@ def encode_image_gray_scaled(ch: np.ndarray, factor: int) -> bytes:
     )
 
 
+def _header_len(magic: bytes) -> int:
+    return 17 if magic == MAGIC_S else 13
+
+
 def peek_dims(blob: bytes) -> tuple[int, int]:
     """Full-resolution (height, width) from a frame's codec header,
     without inflating the pixels. The magic and the header length are
     checked first: anything that is not a complete header of a known
     frame kind raises ``ValueError("bad image magic")``."""
     magic = blob[:5]
-    if magic not in (MAGIC, MAGIC_Z, MAGIC_S, MAGIC_G) or len(blob) < (17 if magic == MAGIC_S else 13):
+    if magic not in (MAGIC_Z, MAGIC_S, MAGIC_G) or len(blob) < _header_len(magic):
         raise ValueError("bad image magic")
     h, w = struct.unpack("<II", blob[5:13])
     return h, w
 
 
+def header_dims(blob):
+    """``peek_dims`` as JVM Column expressions over a binary Column:
+    (height, width) read from the header bytes, no Python pass. A blob
+    that is not a complete header of a known frame kind fails the query
+    with the same ``bad image magic`` message."""
+    from pyspark.sql import functions as F
+
+    magic = F.substring(blob, 1, 5)
+    known = F.lit(False)
+    for m in (MAGIC_Z, MAGIC_S, MAGIC_G):
+        known = known | ((magic == F.lit(m)) & (F.octet_length(blob) >= _header_len(m)))
+
+    def u32(pos: int):
+        le = F.conv(F.hex(F.reverse(F.substring(blob, pos, 4))), 16, 10).cast("int")
+        return F.when(known, le).otherwise(F.raise_error(F.lit("bad image magic")))
+
+    return u32(6), u32(10)
+
+
 def decode_image(blob: bytes) -> np.ndarray:
-    """Deserialize bytes produced by ``encode_image`` (either frame kind)."""
+    """Deserialize bytes produced by ``encode_image`` or
+    ``encode_image_gray_scaled`` (any frame kind)."""
     h, w = peek_dims(blob)
     magic = blob[:5]
     if magic == MAGIC_G:
@@ -170,9 +193,7 @@ def decode_image(blob: bytes) -> np.ndarray:
         # the exact np.repeat upscale the encoder elided
         ch = np.repeat(np.repeat(small, f, axis=0), f, axis=1)
         return np.broadcast_to(ch[:, :, None], (h, w, 3))
-    # MAGIC_Z, or the legacy uncompressed MAGIC
-    raw = zlib.decompress(blob[13:]) if magic == MAGIC_Z else blob[13:]
-    return np.frombuffer(raw, dtype=np.uint8).reshape(h, w, 3)
+    return np.frombuffer(zlib.decompress(blob[13:]), dtype=np.uint8).reshape(h, w, 3)
 
 
 def word_width(word: str, cell_w: int = CELL_W, gap_w: int = GAP_W) -> int:

@@ -36,6 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from onnxtr_spark import imaging
 from onnxtr_spark.corpus import WORDS_PER_LINE, WORDS_PER_PAGE
 from onnxtr_spark.sources.html import html_main_text, synthesize_html
 from onnxtr_spark.sources.pdf import UNSUPPORTED_PDF_TOKENS, pdf_pages_text
@@ -309,7 +310,9 @@ class DocumentFile:
     def from_images(cls, images: DataFrame) -> DataFrame:
         """(doc_id, page, png [, height, width]) → the pages contract
         (reference from_images, io/image.py decode). Width/height are
-        decoded from the image header when absent."""
+        read JVM-side from the frame header when absent
+        (``imaging.header_dims``); a blob that is not a frame fails the
+        query with ``bad image magic``."""
         cols = set(images.columns)
         if "offset" not in cols:
             images = images.withColumn("offset", F.coalesce(F.col("page"), F.lit(0)).cast("int"))
@@ -318,12 +321,8 @@ class DocumentFile:
                 "media_ref", F.concat_ws("-", F.lit("m"), F.col("doc_id"), F.col("offset"))
             )
         if "height" not in cols or "width" not in cols:
-            # imaging codec header: magic(5) + H,W little-endian int32
-            images = images.withColumn(
-                "height", F.conv(F.hex(F.reverse(F.substring(F.col("png"), 6, 4))), 16, 10).cast("int")
-            ).withColumn(
-                "width", F.conv(F.hex(F.reverse(F.substring(F.col("png"), 10, 4))), 16, 10).cast("int")
-            )
+            height, width = imaging.header_dims(F.col("png"))
+            images = images.withColumn("height", height).withColumn("width", width)
         return images.select("doc_id", "offset", "media_ref", "png", "height", "width")
 
     @classmethod

@@ -31,9 +31,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from onnxtr_spark.stages.build import assemble_spans, to_doc_spans
-from onnxtr_spark.stages.detect import DetectConfig, detect_pages
+from onnxtr_spark.stages.detect import DetectConfig
+from onnxtr_spark.stages.fused import detect_recognize_pages
 from onnxtr_spark.stages.ingest import docs_from_documents, load_documents, media_from_documents
-from onnxtr_spark.stages.recognize import RecognizeConfig, recognize_pages
+from onnxtr_spark.stages.recognize import RecognizeConfig
 from onnxtr_spark.partitioning import spread
 
 
@@ -70,23 +71,16 @@ def extract_spans(
     media: DataFrame,
     det_cfg: DetectConfig = DetectConfig(),
     reco_cfg: RecognizeConfig = RecognizeConfig(),
-    fused: bool = True,
     metrics_acc=None,
 ) -> DataFrame:
     """Full OCR extraction: flat span rows (doc_id, offset, kind, text, media_ref).
 
-    ``fused=True`` (default) runs detect+recognize in one mapInPandas so
-    page bytes cross the JVM↔Python boundary once (see stages/fused.py);
-    ``fused=False`` chains the standalone stages, which cut the same
-    layer sequence at the crop boundary (same rows — asserted in tests).
-    ``metrics_acc``: see fused.detect_recognize_pages."""
-    pages = media_pages(docs, media)
-    if fused:
-        from onnxtr_spark.stages.fused import detect_recognize_pages
-
-        words = detect_recognize_pages(pages, det_cfg, reco_cfg, metrics_acc=metrics_acc)
-    else:
-        words = recognize_pages(detect_pages(pages, det_cfg), reco_cfg)
+    Detect+recognize run in one mapInPandas so page bytes cross the
+    JVM↔Python boundary once (see stages/fused.py); chaining the
+    standalone ``detect_pages`` and ``recognize_pages`` gives the same
+    rows (asserted in tests). ``metrics_acc``: see
+    fused.detect_recognize_pages."""
+    words = detect_recognize_pages(media_pages(docs, media), det_cfg, reco_cfg, metrics_acc=metrics_acc)
     return assemble_spans(docs, words)
 
 

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from onnxtr_spark.stages.detect import DetectConfig
 from onnxtr_spark.stages.pipeline import extract_spans
 
 DOCS_SCHEMA_DDL = (
@@ -37,8 +38,10 @@ def stream_extract_available_now(
     out_dir: str,
     checkpoint_dir: str,
     max_files_per_trigger: int | None = None,
+    det_cfg: DetectConfig = DetectConfig(),
 ):
-    """Drain all unprocessed doc files through the OCR pipeline.
+    """Drain all unprocessed doc files through the OCR pipeline, each
+    micro-batch through ``extract_spans`` with ``det_cfg``.
 
     Returns the StreamingQuery (already started); callers typically
     ``awaitTermination()`` — AvailableNow stops by itself when caught up.
@@ -62,7 +65,7 @@ def stream_extract_available_now(
         if batch_docs.isEmpty():
             return
         (
-            extract_spans(batch_docs, media)
+            extract_spans(batch_docs, media, det_cfg)
             .withColumn("batch_id", F.lit(batch_id))
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")

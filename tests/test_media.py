@@ -58,13 +58,14 @@ def test_peek_dims_reads_every_frame_kind_and_rejects_bad_headers():
         imaging.encode_image(rgb),
         imaging.encode_image(gray),
         imaging.encode_image_gray_scaled(rgb[:, :, 0], 3),
-        imaging.MAGIC + (6).to_bytes(4, "little") + (9).to_bytes(4, "little") + rgb.tobytes(),
     ]
-    assert [b[:5] for b in blobs] == [imaging.MAGIC_Z, imaging.MAGIC_G, imaging.MAGIC_S, imaging.MAGIC]
+    assert [b[:5] for b in blobs] == [imaging.MAGIC_Z, imaging.MAGIC_G, imaging.MAGIC_S]
     for blob in blobs:
         assert imaging.peek_dims(blob) == imaging.decode_image(blob).shape[:2]
     wrong = b"PNG\r\n" + blobs[0][5:]
-    for bad in (wrong, blobs[0][:12], blobs[2][:16], b"NP"):
+    # the retired uncompressed NPIM1 frame is no longer a frame kind
+    npim1 = b"NPIM1" + (6).to_bytes(4, "little") + (9).to_bytes(4, "little") + rgb.tobytes()
+    for bad in (wrong, npim1, blobs[0][:12], blobs[2][:16], b"NP"):
         with pytest.raises(ValueError, match="bad image magic"):
             imaging.peek_dims(bad)
         with pytest.raises(ValueError, match="bad image magic"):

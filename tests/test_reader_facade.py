@@ -86,6 +86,20 @@ def test_documentfile_from_images_decodes_dims_and_runs(spark):
     assert detect_recognize_pages(pages).count() > 0
 
 
+def test_documentfile_from_images_rejects_blobs_that_are_not_frames(spark):
+    """A PNG-signature blob and a blob shorter than a frame header fail
+    the header read loudly instead of yielding garbage dimensions."""
+    import pytest
+
+    from onnxtr_spark.sources.reader import DocumentFile
+
+    png = b"\x89PNG\r\n\x1a\n" + b"\x00\x00\x00\rIHDR" + bytes(17)
+    for blob in (png, b"NPIMZ\x06\x00"):
+        images = spark.createDataFrame([("d", 0, blob)], "doc_id string, page int, png binary")
+        with pytest.raises(Exception, match="bad image magic"):
+            DocumentFile.from_images(images).collect()
+
+
 def test_documentfile_from_html_renders_to_pages(spark):
     from onnxtr_spark.sources.reader import DocumentFile
 

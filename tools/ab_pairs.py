@@ -1,9 +1,12 @@
 #!/usr/bin/env python3
-"""Interleaved A/B of two checkouts on one perfbench workload.
+"""Interleaved A/B of two checkouts on one perfbench workload or one query.
 
     python3 tools/ab_pairs.py --parent ../parent --change . \\
         --workload embed_dedup --seeds 41 42 43 44 45 46 \\
         --out plans/r11/ab_embed_dedup.jsonl
+    python3 tools/ab_pairs.py --parent ../parent --change . \\
+        --query dedup_containment --sf /data/sf0.1 --seeds 1 2 3 4 \\
+        --out plans/r11/ab_dedup_containment.jsonl
 
 Each seed is one pair: ``perfbench/run.py`` runs once in each tree, one
 after the other, and the side that runs first alternates from pair to
@@ -16,6 +19,13 @@ pairs the change won and whether the ratio stays inside the metric's
 ``BENCHMARK.json`` bound. ``worker_peak_rss_mb`` is also printed as its
 modes (runs more than 5 MB apart start a new mode) with run counts,
 since one tree's peak RSS can step between modes from run to run.
+
+``--query NAME`` times a declared query that no workload runs: each run
+is ``bench_extra.py --repeats 1 NAME`` (noop sink, one fresh session,
+``--sf`` when given), the seeds only label the pairs, and the summary
+prints each side's median [q1, q3] seconds, the change/parent ratio,
+the pairs the change won and whether the change median is slower than
+the parent's by more than the parent's interquartile range.
 """
 
 from __future__ import annotations
@@ -53,6 +63,20 @@ def run_one(tree: str, workload: str, seed: int, seconds: float) -> dict:
     return rec
 
 
+def run_query(tree: str, query: str, sf: str | None) -> dict:
+    """One ``bench_extra.py`` run of ``query`` in ``tree``: its seconds."""
+    cmd = [sys.executable, "bench_extra.py", "--repeats", "1", query] + (["--sf", sf] if sf else [])
+    t0 = time.time()
+    proc = subprocess.run(cmd, cwd=tree, capture_output=True, text=True)
+    rec = {"rc": proc.returncode, "wall": round(time.time() - t0, 1)}
+    lines = [ln for ln in proc.stdout.splitlines() if ln.startswith("{")]
+    if proc.returncode == 0 and lines:
+        rec["seconds"] = json.loads(lines[-1])["queries"][query]
+    else:
+        rec["stderr_tail"] = proc.stderr[-2000:]
+    return rec
+
+
 def quartiles(vals: list[float]) -> tuple[float, float, float]:
     if len(vals) < 2:
         return vals[0], vals[0], vals[0]
@@ -72,13 +96,41 @@ def modes(vals: list[float], gap: float = RSS_GAP_MB) -> list[tuple[float, float
     return [(c[0], c[-1], len(c)) for c in out]
 
 
+def summarize_queries(records: list[dict]) -> list[str]:
+    pairs: dict[tuple[str, str, int, int], dict[str, dict]] = {}
+    for r in records:
+        pairs.setdefault((r["query"], r["sf"], r["seed"], r["pair"]), {})[r["side"]] = r
+    lines = []
+    for query, sf in sorted({key[:2] for key in pairs}):
+        full = [p for key, p in sorted(pairs.items()) if key[:2] == (query, sf) and len(p) == 2]
+        ok = [p for p in full if all("seconds" in r for r in p.values())]
+        side = {s: [p[s]["seconds"] for p in ok] for s in ("parent", "change")}
+        lines.append(f"{query} @ {sf}: {len(ok)} complete pairs ({len(full) - len(ok)} with a failed run)")
+        for s in ("parent", "change"):
+            lines.append(f"  {s} runs: {', '.join(f'{v:.3f}' for v in side[s])}")
+        if not ok:
+            continue
+        (p1, pm, p3), (c1, cm, c3) = quartiles(side["parent"]), quartiles(side["change"])
+        wins = sum(c < p for p, c in zip(side["parent"], side["change"]))
+        slower = cm - pm
+        lines.append(
+            f"  seconds | parent {pm:.3f} [{p1:.3f}, {p3:.3f}] | change {cm:.3f} [{c1:.3f}, {c3:.3f}] | "
+            f"ratio {cm / pm:.3f} | wins {wins}/{len(ok)} | change - parent {slower:+.3f} s vs parent "
+            f"IQR {p3 - p1:.3f} s: {'inside' if slower <= p3 - p1 else 'OUTSIDE'}"
+        )
+    return lines
+
+
 def summarize(records: list[dict]) -> str:
+    lines = summarize_queries([r for r in records if "query" in r])
+    records = [r for r in records if "workload" in r]
+    if not records:
+        return "\n".join(lines)
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
         bench = json.load(f)
     pairs: dict[tuple[str, int, int], dict[str, dict]] = {}
     for r in records:  # a file may hold several sessions, each from pair 0
         pairs.setdefault((r["workload"], r["seed"], r["pair"]), {})[r["side"]] = r
-    lines = []
     for workload in sorted({key[0] for key in pairs}):
         full = [p for key, p in sorted(pairs.items()) if key[0] == workload and len(p) == 2]
         ok = [p for p in full if all(r.get("rc") == 0 and "metrics" in r for r in p.values())]
@@ -110,6 +162,8 @@ def main() -> int:
     ap.add_argument("--parent", help="checkout of the parent tree")
     ap.add_argument("--change", help="checkout of the change tree")
     ap.add_argument("--workload")
+    ap.add_argument("--query", help="time this query with bench_extra.py instead of a workload")
+    ap.add_argument("--sf", help="scale-factor directory for --query")
     ap.add_argument("--seeds", type=int, nargs="+", help="one pair per seed")
     ap.add_argument("--seconds", type=float, default=20)
     ap.add_argument("--out", help="JSON lines file the runs are appended to")
@@ -119,21 +173,28 @@ def main() -> int:
         with open(args.summary) as f:
             print(summarize([json.loads(ln) for ln in f if ln.strip()]))
         return 0
-    if not (args.parent and args.change and args.workload and args.seeds and args.out):
-        ap.error("--parent, --change, --workload, --seeds and --out are required")
+    if not (args.parent and args.change and (args.workload or args.query) and args.seeds and args.out):
+        ap.error("--parent, --change, --workload or --query, --seeds and --out are required")
     records = []
     for pair, seed in enumerate(args.seeds):
         sides = ("parent", "change") if pair % 2 == 0 else ("change", "parent")
         for side in sides:
-            tree = args.parent if side == "parent" else args.change
-            rec = {"workload": args.workload, "seed": seed, "side": side, "pair": pair, "first": sides[0]}
-            rec.update(run_one(os.path.abspath(tree), args.workload, seed, args.seconds))
+            tree = os.path.abspath(args.parent if side == "parent" else args.change)
+            rec = {"seed": seed, "side": side, "pair": pair, "first": sides[0]}
+            if args.query:
+                sf = os.path.basename(os.path.normpath(args.sf)) if args.sf else "default"
+                rec.update(query=args.query, sf=sf)
+                rec.update(run_query(tree, args.query, args.sf))
+                shown = f"seconds={rec.get('seconds')}"
+            else:
+                rec["workload"] = args.workload
+                rec.update(run_one(tree, args.workload, seed, args.seconds))
+                items = rec.get("metrics", {}).get("items_per_s", {}).get("value")
+                shown = f"items_per_s={items} steal={rec.get('steal_share')}"
             records.append(rec)
             with open(args.out, "a") as f:
                 f.write(json.dumps(rec) + "\n")
-            items = rec.get("metrics", {}).get("items_per_s", {}).get("value")
-            print(f"pair {pair} seed {seed} {side}: rc={rec['rc']} items_per_s={items} "
-                  f"steal={rec.get('steal_share')}", flush=True)
+            print(f"pair {pair} seed {seed} {side}: rc={rec['rc']} {shown}", flush=True)
     print(summarize(records))
     return 0
 

@@ -15,10 +15,18 @@ pipeline's end-to-end output has a DuckDB oracle):
 
 - words  = whitespace-split of trimmed text
 - header = one text span: ``"doc:" + doc_id``            (offset 0)
-- pages  = consecutive chunks of WORDS_PER_LINE*LINES_PER_PAGE words;
-  page p gets media_ref ``"m-" + doc_id + "-" + p`` and one media span
-  (offset p+1)
-- each page renders its words in reading order, WORDS_PER_LINE per line
+- pages  = ``pages(words)``: consecutive WORDS_PER_PAGE-word chunks, at
+  least one page per doc; page p gets media_ref ``"m-" + doc_id + "-" + p``
+  and one media span (offset p+1)
+- each page renders ``lines(page)`` in reading order, WORDS_PER_LINE
+  words per line (an empty page is a blank frame)
+
+``pages``/``lines`` (and ``pages_col``, the JVM twin of ``pages`` over an
+array<string> column) are the one layout rule: every synthesizer — the
+ingest stage, the PDF/HTML/video/mixed-kind sources and the stub
+renderer/rasterizer — paginates and breaks lines through them, and
+``render_pages`` renders a doc's frames. Only the DuckDB oracles keep
+their own (independent) pagination.
 
 The expected OCR output (the "golden spans" of FIXTURES.md §3) is then:
 header span, followed by every word as a text span carrying its source
@@ -27,13 +35,14 @@ page's media_ref, offsets dense from 0.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable
 
 import numpy as np
 import pandas as pd
+from pyspark.sql import Column
+from pyspark.sql import functions as F
 
 from onnxtr_spark import imaging
-from onnxtr_spark.vocabs import DEFAULT_VOCAB
 
 WORDS_PER_LINE = 5
 LINES_PER_PAGE = 6
@@ -50,45 +59,69 @@ def media_ref(doc_id: str, page: int) -> str:
     return f"m-{doc_id}-{page}"
 
 
+def pages(words: list[str]) -> list[list[str]]:
+    """The corpus page rule: consecutive WORDS_PER_PAGE-word chunks, and
+    at least one page per doc (``[[]]`` when there are no words)."""
+    return [words[i : i + WORDS_PER_PAGE] for i in range(0, len(words), WORDS_PER_PAGE)] or [[]]
+
+
+def lines(page: list[str]) -> list[list[str]]:
+    """The corpus line rule: WORDS_PER_LINE-word lines; an empty page is
+    ``[[]]``, which ``imaging.render_page`` draws as a blank frame."""
+    return [page[i : i + WORDS_PER_LINE] for i in range(0, len(page), WORDS_PER_LINE)] or [[]]
+
+
+def pages_col(words: Column) -> Column:
+    """JVM twin of ``pages``: array<string> → array<array<string>> of
+    WORDS_PER_PAGE-word slices, at least one (possibly empty) page."""
+    n_pages = F.greatest(F.lit(1), F.ceil(F.size(words) / WORDS_PER_PAGE)).cast("int")
+    return F.transform(
+        F.sequence(F.lit(0), n_pages - 1),
+        lambda p: F.slice(words, p * WORDS_PER_PAGE + 1, WORDS_PER_PAGE),
+    )
+
+
+def render_pages(words: list[str], **render_kwargs) -> list[np.ndarray]:
+    """One ``imaging.render_page`` frame per page of ``words``."""
+    return [imaging.render_page(lines(page), **render_kwargs) for page in pages(words)]
+
+
 def doc_spans(doc_id: str, text: str) -> list[dict]:
     """Input spans for one document (header text span + media spans)."""
-    words = doc_words(text)
-    n_pages = max(1, -(-len(words) // WORDS_PER_PAGE))
     spans = [{"kind": "text", "text": f"doc:{doc_id}", "media_ref": "", "offset": 0}]
-    for p in range(n_pages):
+    for p in range(len(pages(doc_words(text)))):
         spans.append({"kind": "media", "text": "", "media_ref": media_ref(doc_id, p), "offset": p + 1})
     return spans
 
 
-def page_lines(words: list[str], page: int) -> list[list[str]]:
-    """Words rendered on page ``page``, chunked into lines."""
-    chunk = words[page * WORDS_PER_PAGE : (page + 1) * WORDS_PER_PAGE]
-    return [chunk[i : i + WORDS_PER_LINE] for i in range(0, len(chunk), WORDS_PER_LINE)]
-
-
 def expected_spans(doc_id: str, text: str) -> list[dict]:
     """Golden output spans: header + per-word text spans in reading order."""
-    words = doc_words(text)
     out = [{"kind": "text", "text": f"doc:{doc_id}", "media_ref": "", "offset": 0}]
-    for i, w in enumerate(words):
-        out.append({
-            "kind": "text",
-            "text": w,
-            "media_ref": media_ref(doc_id, i // WORDS_PER_PAGE),
-            "offset": i + 1,
-        })
+    for p, page in enumerate(pages(doc_words(text))):
+        for w in page:
+            out.append({"kind": "text", "text": w, "media_ref": media_ref(doc_id, p), "offset": len(out)})
     return out
 
 
-def render_doc_pages(
-    doc_id: str, text: str, vocab: str = DEFAULT_VOCAB, **render_kwargs
-) -> Iterator[tuple[str, np.ndarray]]:
-    """Yield (media_ref, page_image) for each page of a document."""
-    words = doc_words(text)
-    n_pages = max(1, -(-len(words) // WORDS_PER_PAGE))
-    for p in range(n_pages):
-        lines = [ln for ln in page_lines(words, p) if ln] or [[]]
-        yield media_ref(doc_id, p), imaging.render_page(lines, vocab, **render_kwargs)
+def _corpus(
+    texts: list[tuple[str, str]], frame: Callable[[str, int, np.ndarray], np.ndarray], **render_kwargs
+) -> tuple[pd.DataFrame, pd.DataFrame]:
+    """(docs, media) pandas frames from (doc_id, text) pairs: each page
+    is rendered with ``render_kwargs``, then stored as
+    ``frame(doc_id, page, image)``."""
+    doc_rows = []
+    media_rows = []
+    for doc_id, text in texts:
+        doc_rows.append({"doc_id": doc_id, "spans": doc_spans(doc_id, text)})
+        for p, img in enumerate(render_pages(doc_words(text), **render_kwargs)):
+            img = frame(doc_id, p, img)
+            media_rows.append({
+                "media_ref": media_ref(doc_id, p),
+                "png": imaging.encode_image(img),
+                "height": img.shape[0],
+                "width": img.shape[1],
+            })
+    return pd.DataFrame(doc_rows), pd.DataFrame(media_rows)
 
 
 def build_corpus_pdfs(texts: list[tuple[str, str]]) -> tuple[pd.DataFrame, pd.DataFrame]:
@@ -97,18 +130,7 @@ def build_corpus_pdfs(texts: list[tuple[str, str]]) -> tuple[pd.DataFrame, pd.Da
     Driver-side helper for tests and small fixtures; the Spark path
     renders pages inside executors (stages/ingest.py) instead.
     """
-    doc_rows = []
-    media_rows = []
-    for doc_id, text in texts:
-        doc_rows.append({"doc_id": doc_id, "spans": doc_spans(doc_id, text)})
-        for ref, img in render_doc_pages(doc_id, text):
-            media_rows.append({
-                "media_ref": ref,
-                "png": imaging.encode_image(img),
-                "height": img.shape[0],
-                "width": img.shape[1],
-            })
-    return pd.DataFrame(doc_rows), pd.DataFrame(media_rows)
+    return _corpus(texts, lambda doc_id, p, img: img)
 
 
 # Hand-built fixture texts for pytest: exercise multi-line pages,
@@ -163,20 +185,11 @@ def build_rotated_words_corpus_pdfs(
     ``angle_for`` degrees, so detection must emit (N,4,2) polygons and
     recognition must crop along them. The double-width page keeps the
     pytest fixtures' 55-char word renderable at the wider cells."""
-    doc_rows = []
-    media_rows = []
-    for doc_id, text in texts:
-        doc_rows.append({"doc_id": doc_id, "spans": doc_spans(doc_id, text)})
-        pages = render_doc_pages(doc_id, text, cell_w=R_CELL_W, gap_w=R_GAP_W, page_w=page_w)
-        for p, (ref, img) in enumerate(pages):
-            rot = imaging.rotate_image_nearest(img, angle_for(doc_id, p))
-            media_rows.append({
-                "media_ref": ref,
-                "png": imaging.encode_image(rot),
-                "height": rot.shape[0],
-                "width": rot.shape[1],
-            })
-    return pd.DataFrame(doc_rows), pd.DataFrame(media_rows)
+    return _corpus(
+        texts,
+        lambda doc_id, p, img: imaging.rotate_image_nearest(img, angle_for(doc_id, p)),
+        cell_w=R_CELL_W, gap_w=R_GAP_W, page_w=page_w,
+    )
 
 
 # Artefact corpus rules (I6 path). Placement keeps blocks inside the
@@ -210,17 +223,9 @@ def rotation_for(doc_id: str, page: int) -> int:
 def build_rotated_corpus_pdfs(texts: list[tuple[str, str]]) -> tuple[pd.DataFrame, pd.DataFrame]:
     """Corpus variant exercising I5/G4: every page carries the
     orientation watermark and is stored rotated by ``rotation_for``."""
-    doc_rows = []
-    media_rows = []
-    for doc_id, text in texts:
-        doc_rows.append({"doc_id": doc_id, "spans": doc_spans(doc_id, text)})
-        for p, (ref, img) in enumerate(render_doc_pages(doc_id, text)):
-            marked = imaging.add_orientation_mark(img)
-            rotated = np.ascontiguousarray(np.rot90(marked, rotation_for(doc_id, p)))
-            media_rows.append({
-                "media_ref": ref,
-                "png": imaging.encode_image(rotated),
-                "height": rotated.shape[0],
-                "width": rotated.shape[1],
-            })
-    return pd.DataFrame(doc_rows), pd.DataFrame(media_rows)
+    return _corpus(
+        texts,
+        lambda doc_id, p, img: np.ascontiguousarray(
+            np.rot90(imaging.add_orientation_mark(img), rotation_for(doc_id, p))
+        ),
+    )

@@ -566,9 +566,13 @@ def containment_pairs(
     that are almost entirely boilerplate. Shingles shuffle as int64
     hashes (same md5-derived hash in the oracle, so a collision is
     shared, counts in |A| in both engines, and the row stays
-    hash-exact). The verify is ``_verified``, the same
+    hash-exact). The hashed doc→shingle-set relation is materialized
+    once (localCheckpoint) and feeds the prefix index, the probe side
+    and both verify sides. The verify is ``_verified``, the same
     ``array_intersect`` as the Jaccard joins."""
-    sets = _sets(shingles(documents, k).select("doc_id", hash64(F.col("shingle"), 29).alias("x")))
+    sets = _sets(
+        shingles(documents, k).select("doc_id", hash64(F.col("shingle"), 29).alias("x"))
+    ).localCheckpoint(eager=False)
     num = _num(threshold)
     every = sets.select("doc_id", "n", F.explode("xs").alias("x"))
     cands = (

@@ -245,8 +245,9 @@ def iter_video_frames(blob: bytes):
 def synthesize_videos(documents: DataFrame) -> DataFrame:
     """(doc_id, video binary, fps, n_frames): one video per doc whose
     frames are the doc's rendered pages in order (a doc IS one media
-    blob here — the realistic video-table shape)."""
-    from onnxtr_spark.corpus import WORDS_PER_LINE, WORDS_PER_PAGE
+    blob here — the realistic video-table shape): one
+    ``corpus.render_pages`` frame per corpus page."""
+    from onnxtr_spark.corpus import render_pages
 
     base = spread(documents.select(
         F.col("doc_id").cast("long").alias("doc_id"),
@@ -259,16 +260,10 @@ def synthesize_videos(documents: DataFrame) -> DataFrame:
                 continue
             rows = []
             for doc_id, words in zip(pdf["doc_id"], pdf["words"]):
-                words = [w for w in list(words) if w]
-                n_pages = max(1, -(-len(words) // WORDS_PER_PAGE))
-                frames = []
-                for p in range(n_pages):
-                    chunk = words[p * WORDS_PER_PAGE : (p + 1) * WORDS_PER_PAGE]
-                    lines = [chunk[i : i + WORDS_PER_LINE] for i in range(0, len(chunk), WORDS_PER_LINE)] or [[]]
-                    frames.append(imaging.render_page(lines))
+                frames = render_pages([w for w in list(words) if w])
                 rows.append({
                     "doc_id": int(doc_id), "video": encode_video(frames),
-                    "fps": VIDEO_FPS, "n_frames": n_pages,
+                    "fps": VIDEO_FPS, "n_frames": len(frames),
                 })
             yield pd.DataFrame(rows, columns=["doc_id", "video", "fps", "n_frames"])
 

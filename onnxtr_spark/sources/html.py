@@ -16,9 +16,10 @@ Heuristics (tag-level, the readability-family first stage):
   whitespace.
 
 ``synthesize_html`` builds a deterministic boilerplate-laden page from
-a document's text (content split into <p> blocks; decoy <p> junk inside
-nav/header/aside/footer so extraction order actually matters), giving
-the roundtrip oracle: main content == the document's normalized text.
+a document's text (one <p> block per corpus page, ``corpus.pages_col``;
+decoy <p> junk inside nav/header/aside/footer so extraction order
+actually matters), giving the roundtrip oracle: main content == the
+document's normalized text.
 """
 
 from __future__ import annotations
@@ -26,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from onnxtr_spark.corpus import WORDS_PER_PAGE
+from onnxtr_spark.corpus import pages_col
 
 # (pattern, replacement) chain; applied in order. RE2-safe: one rule per
 # tag instead of a backreferenced <(a|b)>...</\1>.
@@ -63,33 +64,31 @@ def html_main_text_sql(expr: str) -> str:
     return f"trim(regexp_replace({c}, '\\s+', ' ', 'g'))"
 
 
-def synthesize_html(documents: DataFrame) -> DataFrame:
-    """(doc_id, html): a deterministic boilerplate-laden page whose main
-    content is the document text, chunked into one <p> per
-    WORDS_PER_PAGE words. Pure JVM string building."""
-    base = documents.select(
-        F.col("doc_id").cast("string").alias("doc_id"),
-        F.split(F.trim("text"), r"\s+").alias("words"),
-    ).withColumn("n_chunks", F.greatest(F.lit(1), F.ceil(F.size("words") / WORDS_PER_PAGE)).cast("int"))
-    paras = F.array_join(
+def _paras(lead: str = "") -> Column:
+    """One escaped ``<p>`` per corpus page (``corpus.pages_col``) of the
+    ``text`` column's words, each preceded by the ``lead`` markup."""
+    return F.array_join(
         F.transform(
-            F.sequence(F.lit(0), F.col("n_chunks") - 1),
-            lambda p: F.concat(
-                F.lit("<p>"),
-                _escape(F.array_join(F.slice(F.col("words"), p * WORDS_PER_PAGE + 1, WORDS_PER_PAGE), " ")),
-                F.lit("</p>"),
-            ),
+            pages_col(F.split(F.trim("text"), r"\s+")),
+            lambda page: F.concat(F.lit(lead + "<p>"), _escape(F.array_join(page, " ")), F.lit("</p>")),
         ),
         "",
     )
-    return base.select(
-        "doc_id",
+
+
+def synthesize_html(documents: DataFrame) -> DataFrame:
+    """(doc_id, html): a deterministic boilerplate-laden page whose main
+    content is the document text, one <p> per corpus page (``_paras``).
+    Pure JVM string building."""
+    doc_id = F.col("doc_id").cast("string")
+    return documents.select(
+        doc_id.alias("doc_id"),
         F.concat(
-            F.lit("<html><head><title>junk title "), F.col("doc_id"),
+            F.lit("<html><head><title>junk title "), doc_id,
             F.lit("</title><style>body{margin:0}</style><script>var t=1&&2<3;</script></head><body>"),
             F.lit('<nav><ul><li><a href="/">home</a></li><li><p>nav junk paragraph</p></li></ul></nav>'),
             F.lit('<header><h1 class="site">SiteName &amp; Co</h1><p>tagline boilerplate</p></header>'),
-            F.lit("<main>"), paras, F.lit("</main>"),
+            F.lit("<main>"), _paras(), F.lit("</main>"),
             F.lit("<aside><p>related junk</p><p>more junk</p></aside>"),
             F.lit("<footer><p>&copy; 2026 SiteName</p></footer></body></html>"),
         ).alias("html"),
@@ -166,30 +165,15 @@ def synthesize_html_linked(documents: DataFrame) -> DataFrame:
     that survive every container rule and are only removable by
     block-level link-density scoring. Deterministic; the roundtrip
     oracle stays 'main content == the document's normalized text'."""
-    base = documents.select(
-        F.col("doc_id").cast("string").alias("doc_id"),
-        F.split(F.trim("text"), r"\s+").alias("words"),
-    ).withColumn("n_chunks", F.greatest(F.lit(1), F.ceil(F.size("words") / WORDS_PER_PAGE)).cast("int"))
-    paras = F.array_join(
-        F.transform(
-            F.sequence(F.lit(0), F.col("n_chunks") - 1),
-            lambda p: F.concat(
-                F.lit(_LINKFARM),
-                F.lit("<p>"),
-                _escape(F.array_join(F.slice(F.col("words"), p * WORDS_PER_PAGE + 1, WORDS_PER_PAGE), " ")),
-                F.lit("</p>"),
-            ),
-        ),
-        "",
-    )
-    return base.select(
-        "doc_id",
+    doc_id = F.col("doc_id").cast("string")
+    return documents.select(
+        doc_id.alias("doc_id"),
         F.concat(
-            F.lit("<html><head><title>junk "), F.col("doc_id"),
+            F.lit("<html><head><title>junk "), doc_id,
             F.lit("</title><script>if(1<2){}</script></head><body>"),
             F.lit('<nav><p><a href="/">home</a> menu</p></nav>'),
             F.lit('<header><p>SiteName masthead boilerplate text</p></header>'),
-            F.lit("<main>"), paras, F.lit(_LINKFARM), F.lit("</main>"),
+            F.lit("<main>"), _paras(_LINKFARM), F.lit(_LINKFARM), F.lit("</main>"),
             F.lit('<aside><p>promoted content teaser junk</p></aside>'),
             F.lit("<footer><p>copyright footer boilerplate</p></footer></body></html>"),
         ).alias("html"),

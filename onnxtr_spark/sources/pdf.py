@@ -8,7 +8,8 @@ PDF 1.4 parser for that path:
 
 - ``encode_pdf``: build a valid PDF (catalog → pages tree → one page +
   FlateDecode content stream per input text, xref table, trailer). Any
-  standard reader opens these files.
+  standard reader opens these files. ``encode_pdf_pages`` encodes a
+  word list with one PDF page per corpus page (``corpus.pages``).
 - ``decode_pdf_texts``: scan ``stream``/``endstream`` segments,
   zlib-inflate when compressed, and evaluate the text-showing operators
   ``(…) Tj`` and ``[(…) … (…)] TJ`` in order, unescaping PDF string
@@ -30,7 +31,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from onnxtr_spark.corpus import WORDS_PER_PAGE
+from onnxtr_spark.corpus import WORDS_PER_PAGE, pages
 from onnxtr_spark.partitioning import spread
 
 _ESC = {"n": "\n", "r": "\r", "t": "\t", "b": "\b", "f": "\f", "(": "(", ")": ")", "\\": "\\"}
@@ -379,7 +380,7 @@ def _page_contents(blob: bytes) -> list[str]:
             "parser decodes text-bearing filters only — route this document "
             "through the rasterizer branch (sources/rasterize.py)"
         )
-    pages: list[str] = []
+    contents: list[str] = []
     for header, start in _iter_streams(blob):
         length = _stream_length(header, blob)
         if length is None:
@@ -395,8 +396,8 @@ def _page_contents(blob: bytes) -> list[str]:
                 data = zlib.decompress(raw)
             except zlib.error:
                 data = raw
-        pages.append(data.decode("latin-1"))
-    return pages
+        contents.append(data.decode("latin-1"))
+    return contents
 
 
 def _show_text(sm: "re.Match") -> str:
@@ -425,9 +426,15 @@ PDF_SCHEMA = "doc_id string, pdf binary"
 PDF_TEXT_SCHEMA = "doc_id string, page int, page_text string"
 
 
+def encode_pdf_pages(words: list[str]) -> bytes:
+    """A real PDF with one page per corpus page of ``words``
+    (``corpus.pages``), each page's words joined by single spaces."""
+    return encode_pdf([" ".join(page) for page in pages(words)])
+
+
 def synthesize_pdfs(documents: DataFrame) -> DataFrame:
-    """(doc_id, pdf): a real PDF per document, one page per
-    WORDS_PER_PAGE-word chunk (same pagination as the OCR corpus)."""
+    """(doc_id, pdf): a real PDF per document, one page per corpus page
+    (``encode_pdf_pages``, the same pagination as the OCR corpus)."""
     base = documents.select(
         F.col("doc_id").cast("string").alias("doc_id"),
         F.split(F.trim("text"), r"\s+").alias("words"),
@@ -438,14 +445,10 @@ def synthesize_pdfs(documents: DataFrame) -> DataFrame:
         for pdf in batches:
             if pdf.empty:
                 continue
-            rows = []
-            for doc_id, words in zip(pdf["doc_id"], pdf["words"]):
-                words = [w for w in list(words) if w]
-                chunks = [
-                    " ".join(words[i : i + WORDS_PER_PAGE]) for i in range(0, len(words), WORDS_PER_PAGE)
-                ] or [""]
-                rows.append({"doc_id": doc_id, "pdf": encode_pdf(chunks)})
-            yield pd.DataFrame(rows, columns=["doc_id", "pdf"])
+            yield pd.DataFrame({
+                "doc_id": pdf["doc_id"],
+                "pdf": [encode_pdf_pages([w for w in list(words) if w]) for words in pdf["words"]],
+            })
 
     return base.mapInPandas(build, schema=PDF_SCHEMA)
 
@@ -534,7 +537,7 @@ def decode_pdf_layout(blob: bytes) -> list[str]:
     a pure top-down sort — stream order is never trusted. Reads the
     same decoded streams as ``decode_pdf_texts`` (``_page_contents``,
     with its UnsupportedPdfError gate)."""
-    pages: list[str] = []
+    texts: list[str] = []
     for content in _page_contents(blob):
         events: list[tuple[int, str, object]] = []
         for m in _TM_RE.finditer(content):
@@ -554,14 +557,14 @@ def decode_pdf_layout(blob: bytes) -> list[str]:
             else:
                 spans.append((x, y, _show_text(payload)))
         if not spans:
-            pages.append("")
+            texts.append("")
             continue
         xs = [s[0] for s in spans]
         two_col = max(xs) - min(xs) > 100
         boundary = (max(xs) + min(xs)) / 2 if two_col else float("inf")
         ordered = sorted(spans, key=lambda s: (s[0] >= boundary, -s[1], s[0]))
-        pages.append(" ".join(t for _, _, t in ordered if t))
-    return pages
+        texts.append(" ".join(t for _, _, t in ordered if t))
+    return texts
 
 
 PDF_LAYOUT_SCHEMA = "doc_id string, main_text string"

@@ -35,7 +35,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from onnxtr_spark.corpus import WORDS_PER_LINE
+from onnxtr_spark.corpus import lines
 from onnxtr_spark.partitioning import spread
 
 
@@ -87,17 +87,16 @@ class StubSynthRasterizer:
         self.factor = max(1, int(round(cfg.scale)))
 
     def _pages(self, blob: bytes) -> Iterator[np.ndarray]:
-        """The 1× page per PDF page: its content-stream text in lines of
-        ``WORDS_PER_LINE`` words, rendered by ``imaging.render_page``.
+        """The 1× page per PDF page: its content-stream text broken by the
+        corpus line rule (``corpus.lines``), rendered by
+        ``imaging.render_page``.
         Both render paths scale one grayscale plane, so a page that is
         not a stride-0 broadcast of one raises."""
         from onnxtr_spark import imaging
         from onnxtr_spark.sources.pdf import decode_pdf_texts
 
         for text in decode_pdf_texts(blob):
-            words = [w for w in text.split() if w]
-            lines = [words[i : i + WORDS_PER_LINE] for i in range(0, len(words), WORDS_PER_LINE)] or [[]]
-            img = imaging.render_page(lines)
+            img = imaging.render_page(lines(text.split()))
             if img.strides[2] != 0:
                 raise ValueError("render_page returned a page that is not a grayscale broadcast")
             yield img

@@ -37,9 +37,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from onnxtr_spark import imaging
-from onnxtr_spark.corpus import WORDS_PER_LINE, WORDS_PER_PAGE
+from onnxtr_spark.corpus import WORDS_PER_PAGE, render_pages
 from onnxtr_spark.sources.html import html_main_text, synthesize_html
-from onnxtr_spark.sources.pdf import UNSUPPORTED_PDF_TOKENS, pdf_pages_text
+from onnxtr_spark.sources.pdf import UNSUPPORTED_PDF_TOKENS, pdf_pages_text, synthesize_pdfs
 from onnxtr_spark.sources.rasterize import RasterizerConfig, rasterize_pdf_pages
 from onnxtr_spark.sources.render import HtmlRendererConfig, render_html_pdfs
 from onnxtr_spark.stages.fused import detect_recognize_pages
@@ -169,13 +169,14 @@ def mixed_corpus_from_documents(documents: DataFrame) -> DataFrame:
     """Deterministic mixed-kind corpus: doc i is html / pdf / image /
     pdf_scanned / warc by ``doc_id % 5`` — html as one boilerplate
     page, pdf (born-digital AND scanned payloads are the same bytes —
-    the KIND routes the decode path) as one file with
-    WORDS_PER_PAGE-word pages, image as one rendered page image per
-    chunk, warc as a single-record gzip crawl archive. Output:
-    (doc_id, kind, page, payload binary)."""
+    the KIND routes the decode path) as one ``synthesize_pdfs`` file
+    with a page per corpus page, image as one ``corpus.render_pages``
+    frame per corpus page, warc as a single-record gzip crawl archive.
+    Output: (doc_id, kind, page, payload binary)."""
+    k4 = F.col("doc_id").cast("long") % 5
     base = documents.select(
         F.col("doc_id").cast("string").alias("doc_id"),
-        (F.col("doc_id").cast("long") % 5).alias("k4"),
+        k4.alias("k4"),
         F.split(F.trim("text"), r"\s+").alias("words"),
     )
     html = (
@@ -187,47 +188,26 @@ def mixed_corpus_from_documents(documents: DataFrame) -> DataFrame:
         )
     )
 
+    # pdf and pdf_scanned docs: filter BEFORE encoding, so only the two
+    # kinds' documents pay for a PDF
+    pdfs = synthesize_pdfs(documents.where(k4.isin(1, 3))).select(
+        "doc_id",
+        F.when(k4 == 1, "pdf").otherwise("pdf_scanned").alias("kind"),
+        F.lit(0).alias("page"),
+        F.col("pdf").alias("payload"),
+    )
+
     from collections.abc import Iterator
 
     import pandas as pd
 
-
-    def build_pdf(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from onnxtr_spark.sources.pdf import encode_pdf
-
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            rows = []
-            for doc_id, kind, words in zip(pdf["doc_id"], pdf["kind"], pdf["words"]):
-                words = [w for w in list(words) if w]
-                chunks = [
-                    " ".join(words[i : i + WORDS_PER_PAGE]) for i in range(0, len(words), WORDS_PER_PAGE)
-                ] or [""]
-                rows.append({"doc_id": doc_id, "kind": kind, "page": 0, "payload": encode_pdf(chunks)})
-            yield pd.DataFrame(rows, columns=["doc_id", "kind", "page", "payload"])
-
-    pdfs = (
-        base.where(F.col("k4").isin(1, 3))
-        .withColumn("kind", F.when(F.col("k4") == 1, "pdf").otherwise("pdf_scanned"))
-        .transform(spread)
-        .mapInPandas(build_pdf, "doc_id string, kind string, page int, payload binary")
-    )
-
     def build_images(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from onnxtr_spark import imaging
-
         for pdf in batches:
             if pdf.empty:
                 continue
             rows = []
             for doc_id, words in zip(pdf["doc_id"], pdf["words"]):
-                words = [w for w in list(words) if w]
-                n_pages = max(1, -(-len(words) // WORDS_PER_PAGE))
-                for p in range(n_pages):
-                    chunk = words[p * WORDS_PER_PAGE : (p + 1) * WORDS_PER_PAGE]
-                    lines = [chunk[i : i + WORDS_PER_LINE] for i in range(0, len(chunk), WORDS_PER_LINE)] or [[]]
-                    img = imaging.render_page(lines)
+                for p, img in enumerate(render_pages([w for w in list(words) if w])):
                     rows.append({
                         "doc_id": doc_id, "kind": "image", "page": p,
                         "payload": imaging.encode_image(img),

@@ -15,10 +15,10 @@ resolved per Python worker:
   write_pdf shape;
 - the default ``stub_weasy`` renderer is deterministic: it strips the
   boilerplate with the SAME tag algebra as sources/html.py (a Python
-  mirror of the regexp chain), paginates the main content into
-  WORDS_PER_PAGE-word pages, and encodes a real PDF via
-  sources/pdf.encode_pdf — so the whole html→pdf→raster→OCR chain is
-  span-equal to the direct JVM strip and fully oracled.
+  mirror of the regexp chain) and encodes the main content as a real
+  PDF with one page per corpus page (sources/pdf.encode_pdf_pages) —
+  so the whole html→pdf→raster→OCR chain is span-equal to the direct
+  JVM strip and fully oracled.
 
 Spark surface: ``render_html_pdfs`` is Arrow-batched mapInPandas over
 an html string column, emitting (doc_id, pdf binary) — the exact input
@@ -35,7 +35,6 @@ from dataclasses import dataclass
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from onnxtr_spark.corpus import WORDS_PER_PAGE
 from onnxtr_spark.sources.html import _DROP_BLOCKS, _ENTITIES
 from onnxtr_spark.partitioning import spread
 
@@ -94,20 +93,16 @@ def strip_html_py(html: str) -> str:
 
 class StubWeasyRenderer:
     """Deterministic stand-in for weasyprint's write_pdf: main-content
-    strip → WORDS_PER_PAGE pagination (the corpus page rule) → a real
-    FlateDecode PDF (sources/pdf.encode_pdf)."""
+    strip → a real FlateDecode PDF with one page per corpus page
+    (sources/pdf.encode_pdf_pages)."""
 
     def __init__(self, cfg: HtmlRendererConfig):
         self.cfg = cfg
 
     def render(self, html: str) -> bytes:
-        from onnxtr_spark.sources.pdf import encode_pdf
+        from onnxtr_spark.sources.pdf import encode_pdf_pages
 
-        words = [w for w in strip_html_py(html).split(" ") if w]
-        chunks = [
-            " ".join(words[i : i + WORDS_PER_PAGE]) for i in range(0, len(words), WORDS_PER_PAGE)
-        ] or [""]
-        return encode_pdf(chunks)
+        return encode_pdf_pages([w for w in strip_html_py(html).split(" ") if w])
 
 
 register_html_renderer("stub_weasy", StubWeasyRenderer)

@@ -87,10 +87,6 @@ class DetectConfig:
     # the map geometry differs.
     preserve_aspect_ratio: bool = True
     symmetric_pad: bool = True
-    # Mirrors the reference signature (det batch size, models/zoo.py:22)
-    # and changes nothing: maps are per page and content-exact, so each
-    # page runs its own forward.
-    batch_size: int = 2
     # loc_preds hooks (reference OCRPredictor.add_hook,
     # models/predictor/base.py:77,204-210, applied predictor.py:112-113):
     # callables (N,5) -> (N,5) — (N,5,2) polygons on the rotated path —

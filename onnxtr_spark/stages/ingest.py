@@ -25,23 +25,24 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from onnxtr_spark import imaging
-from onnxtr_spark.corpus import WORDS_PER_LINE, WORDS_PER_PAGE
+from onnxtr_spark.corpus import lines, pages_col
 from onnxtr_spark.partitioning import spread
 
 MEDIA_SCHEMA = "media_ref string, png binary, height int, width int"
 
 
-def _with_words(documents: DataFrame) -> DataFrame:
+def _with_pages(documents: DataFrame) -> DataFrame:
+    """(doc_id string, pages array<array<string>>): each doc's words cut
+    by the corpus page rule (``corpus.pages_col``)."""
     return documents.select(
         F.col("doc_id").cast("string").alias("doc_id"),
-        F.split(F.trim(F.col("text")), r"\s+").alias("words"),
-    ).withColumn("n_pages", F.greatest(F.lit(1), F.ceil(F.size("words") / WORDS_PER_PAGE)).cast("int"))
+        pages_col(F.split(F.trim(F.col("text")), r"\s+")).alias("pages"),
+    )
 
 
 def docs_from_documents(documents: DataFrame) -> DataFrame:
     """documents(doc_id, text, ...) → docs(doc_id, spans) with a header
-    text span + one media span per page."""
-    base = _with_words(documents)
+    text span + one media span per corpus page."""
     header = F.struct(
         F.lit("text").alias("kind"),
         F.concat(F.lit("doc:"), F.col("doc_id")).alias("text"),
@@ -49,15 +50,15 @@ def docs_from_documents(documents: DataFrame) -> DataFrame:
         F.lit(0).cast("int").alias("offset"),
     )
     media_spans = F.transform(
-        F.sequence(F.lit(0), F.col("n_pages") - 1),
-        lambda p: F.struct(
+        F.col("pages"),
+        lambda _, p: F.struct(
             F.lit("media").alias("kind"),
             F.lit("").alias("text"),
             F.concat(F.lit("m-"), F.col("doc_id"), F.lit("-"), p.cast("string")).alias("media_ref"),
             (p + 1).cast("int").alias("offset"),
         ),
     )
-    return base.select("doc_id", F.concat(F.array(header), media_spans).alias("spans"))
+    return _with_pages(documents).select("doc_id", F.concat(F.array(header), media_spans).alias("spans"))
 
 
 def media_from_documents(
@@ -66,8 +67,9 @@ def media_from_documents(
 ) -> DataFrame:
     """documents(doc_id, text, ...) → media(media_ref, png, height, width).
 
-    Page word-lists are computed JVM-side (explode of per-page slices);
-    only the rendering itself runs in Python, Arrow-batched.
+    Page word-lists are computed JVM-side (posexplode of
+    ``corpus.pages_col``); only the rendering itself runs in Python,
+    Arrow-batched, one ``corpus.lines`` frame per page.
 
     ``rotate_words=True`` renders the rotated-words corpus variant:
     each page image is skewed in-plane by ``corpus.angle_for`` degrees
@@ -84,18 +86,10 @@ def media_from_documents(
     page margin (pixel values above the text-detection cutoff, so the
     text path is byte-identical) for the artefact-detection stage.
     """
-    base = _with_words(documents)
     # Rendering is CPU-bound Python: spread it across all cores even when
     # the source is a single small parquet file (1 input partition).
-    base = spread(base)
-    pages = base.select(
-        "doc_id",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.col("n_pages") - 1),
-                lambda p: F.slice(F.col("words"), p * WORDS_PER_PAGE + 1, WORDS_PER_PAGE),
-            )
-        ).alias("page", "page_words"),
+    pages = spread(_with_pages(documents)).select(
+        "doc_id", F.posexplode("pages").alias("page", "page_words")
     ).select(
         F.concat(F.lit("m-"), F.col("doc_id"), F.lit("-"), F.col("page").cast("string")).alias("media_ref"),
         "page_words",
@@ -110,11 +104,9 @@ def media_from_documents(
                 continue
             rows = []
             for media_ref, page_words in zip(pdf["media_ref"], pdf["page_words"]):
-                words = [w for w in list(page_words) if w]
                 # Empty page -> blank image: detection finds no boxes, so
                 # the doc contributes only its pass-through text spans.
-                lines = [words[i : i + WORDS_PER_LINE] for i in range(0, len(words), WORDS_PER_LINE)] or [[]]
-                img = imaging.render_page(lines, **render_kwargs)
+                img = imaging.render_page(lines([w for w in list(page_words) if w]), **render_kwargs)
                 if artefacts:
                     doc_id, page = media_ref[2:].rsplit("-", 1)
                     img = imaging.add_artefacts(img, artefacts_for(doc_id, int(page)))

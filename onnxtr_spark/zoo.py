@@ -18,8 +18,8 @@ Flag mapping (reference → this repo):
 - ``straighten_pages`` → DetectConfig.straighten_pages (I5 90°-multiple
   rectify + G4 arbitrary-angle estimate→rotate→re-detect).
 - ``disable_crop_orientation`` → same flag.
-- ``det_bs`` → DetectConfig.batch_size, which mirrors the reference and
-  has no effect (detection maps are per page); ``reco_bs`` →
+- ``det_bs``: accepted for parity and discarded (detection maps are
+  per page, so each page runs its own forward); ``reco_bs`` →
   RecognizeConfig.batch_size, the recognition model batch.
 - ``export_as_straight_boxes``: accepted for parity; the flat span
   schema always carries the B7 enclosing straight box columns, so True
@@ -231,6 +231,7 @@ def ocr_predictor(
     arch-derived — the registry factory then selects the 8-bit artifact
     (engine.py model_path_8_bit) or raises its loud gate."""
     _ = export_as_straight_boxes  # parity no-op: flat spans always carry B7 boxes
+    _ = det_bs  # parity no-op: detection runs one forward per page
     det_engine = det_engine_cfg or _engine_of(det_arch, "stub_fast")
     reco_engine = reco_engine_cfg or _engine_of(reco_arch, "stub_crnn")
     clf_engine = clf_engine_cfg
@@ -244,7 +245,7 @@ def ocr_predictor(
             # predictors unconditionally, predictor/base.py:64-69)
             clf_engine = EngineConfig(arch="stub_mobilenet_orient")
         clf_engine = replace(clf_engine, load_in_8_bit=True)
-    if isinstance(reco_arch, object) and hasattr(reco_arch, "param"):
+    if hasattr(reco_arch, "param"):
         vocab = reco_arch.param("vocab", vocab)  # hub models carry their vocab
     # per-arch postprocess thresholds (the reference's default_cfgs):
     # db_* binarizes at 0.3, fast_*/linknet_* at 0.1 — previously every
@@ -261,7 +262,6 @@ def ocr_predictor(
         assume_straight_pages=assume_straight_pages,
         straighten_pages=straighten_pages,
         disable_crop_orientation=disable_crop_orientation,
-        batch_size=det_bs,
         engine=det_engine,
         orient_engine=clf_engine,
     )
@@ -312,7 +312,9 @@ def detection_predictor(
     stage is straight-boxes-only (its output schema carries (N,5)
     straight boxes, like the reference's assume_straight_pages=True
     contract); the rotated polygon path runs through
-    ``ocr_predictor(assume_straight_pages=False)``."""
+    ``ocr_predictor(assume_straight_pages=False)``. ``batch_size`` is
+    accepted for parity and discarded: each page runs its own forward."""
+    _ = batch_size  # parity no-op: detection runs one forward per page
     if not assume_straight_pages:
         raise NotImplementedError(
             "the standalone detection stage emits straight boxes; use "
@@ -331,7 +333,6 @@ def detection_predictor(
             unclip_ratio=unclip_ratio,
             preserve_aspect_ratio=preserve_aspect_ratio,
             symmetric_pad=symmetric_pad,
-            batch_size=batch_size,
             engine=engine,
         )
     )
@@ -371,7 +372,7 @@ def recognition_predictor(
     engine = engine_cfg or _engine_of(arch, "stub_crnn")
     if load_in_8_bit:
         engine = replace(engine, load_in_8_bit=True)
-    if isinstance(arch, object) and hasattr(arch, "param"):
+    if hasattr(arch, "param"):
         vocab = arch.param("vocab", vocab)
     return RecognitionPredictorSpark(
         RecognizeConfig(batch_size=batch_size, vocab=vocab, engine=engine)

@@ -68,13 +68,13 @@ def test_documentfile_from_images_decodes_dims_and_runs(spark):
     import pandas as pd
 
     from onnxtr_spark import imaging
-    from onnxtr_spark.corpus import FIXTURE_TEXTS, render_doc_pages
+    from onnxtr_spark.corpus import FIXTURE_TEXTS, doc_words, render_pages
     from onnxtr_spark.sources.reader import DocumentFile
     from onnxtr_spark.stages.fused import detect_recognize_pages
 
     rows = []
     for doc_id, text in FIXTURE_TEXTS[:2]:
-        for p, (_, img) in enumerate(render_doc_pages(doc_id, text)):
+        for p, img in enumerate(render_pages(doc_words(text))):
             rows.append({"doc_id": doc_id, "page": p, "png": imaging.encode_image(img),
                          "h": img.shape[0], "w": img.shape[1]})
     images = spark.createDataFrame(pd.DataFrame(rows), "doc_id string, page int, png binary, h int, w int")

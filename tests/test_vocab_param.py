@@ -8,7 +8,7 @@ import pandas as pd
 import pytest
 
 from onnxtr_spark import imaging
-from onnxtr_spark.corpus import doc_spans, doc_words, expected_spans, page_lines
+from onnxtr_spark.corpus import doc_spans, doc_words, expected_spans, render_pages
 from onnxtr_spark.stages.pipeline import extract_spans
 from onnxtr_spark.stages.recognize import RecognizeConfig
 from onnxtr_spark.vocabs import VOCABS
@@ -26,9 +26,7 @@ def german_corpus(spark):
     doc_rows, media_rows = [], []
     for doc_id, text in GERMAN_TEXTS:
         doc_rows.append({"doc_id": doc_id, "spans": doc_spans(doc_id, text)})
-        words = doc_words(text)
-        lines = [ln for ln in page_lines(words, 0) if ln]
-        img = imaging.render_page(lines, vocab)
+        (img,) = render_pages(doc_words(text), vocab=vocab)
         media_rows.append({
             "media_ref": f"m-{doc_id}-0",
             "png": imaging.encode_image(img),

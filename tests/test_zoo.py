@@ -28,7 +28,7 @@ def test_flag_mapping():
     assert p.det_cfg.assume_straight_pages is False
     assert p.det_cfg.straighten_pages is True
     assert p.det_cfg.disable_crop_orientation is True
-    assert p.det_cfg.batch_size == 4 and p.reco_cfg.batch_size == 64
+    assert p.reco_cfg.batch_size == 64
     assert p.det_cfg.engine.arch == "stub_fast" and p.reco_cfg.engine.arch == "stub_crnn"
     # engine-config override wins wholesale (reference passes engine_cfg
     # into the predictors the same way)

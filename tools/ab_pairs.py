@@ -5,8 +5,8 @@
         --workload embed_dedup --seeds 41 42 43 44 45 46 \\
         --out plans/r11/ab_embed_dedup.jsonl
     python3 tools/ab_pairs.py --parent ../parent --change . \\
-        --query dedup_containment --sf /data/sf0.1 --seeds 1 2 3 4 \\
-        --out plans/r11/ab_dedup_containment.jsonl
+        --query dedup_containment pdf_extract_text --sf /data/sf0.1 \\
+        --seeds 1 2 3 4 --out plans/r13/ab_queries.jsonl
 
 Each seed is one pair: ``perfbench/run.py`` runs once in each tree, one
 after the other, and the side that runs first alternates from pair to
@@ -20,12 +20,14 @@ pairs the change won and whether the ratio stays inside the metric's
 modes (runs more than 5 MB apart start a new mode) with run counts,
 since one tree's peak RSS can step between modes from run to run.
 
-``--query NAME`` times a declared query that no workload runs: each run
-is ``bench_extra.py --repeats 1 NAME`` (noop sink, one fresh session,
-``--sf`` when given), the seeds only label the pairs, and the summary
-prints each side's median [q1, q3] seconds, the change/parent ratio,
-the pairs the change won and whether the change median is slower than
-the parent's by more than the parent's interquartile range.
+``--query NAME [NAME ...]`` times declared queries that no workload
+runs: each run is one ``bench_extra.py --repeats 1 NAME ...`` (noop
+sink, one fresh session for all the names, ``--sf`` when given) and
+appends one record per query; the seeds only label the pairs. The
+summary prints, per query, each side's median [q1, q3] seconds, the
+change/parent ratio, the pairs the change won and whether the change
+median is slower than the parent's by more than the parent's
+interquartile range.
 """
 
 from __future__ import annotations
@@ -63,18 +65,20 @@ def run_one(tree: str, workload: str, seed: int, seconds: float) -> dict:
     return rec
 
 
-def run_query(tree: str, query: str, sf: str | None) -> dict:
-    """One ``bench_extra.py`` run of ``query`` in ``tree``: its seconds."""
-    cmd = [sys.executable, "bench_extra.py", "--repeats", "1", query] + (["--sf", sf] if sf else [])
+def run_queries(tree: str, queries: list[str], sf: str | None) -> list[dict]:
+    """One ``bench_extra.py`` run of ``queries`` in ``tree``: one record
+    per query with its seconds (the run's rc and wall are shared)."""
+    cmd = [sys.executable, "bench_extra.py", "--repeats", "1", *queries] + (["--sf", sf] if sf else [])
     t0 = time.time()
     proc = subprocess.run(cmd, cwd=tree, capture_output=True, text=True)
-    rec = {"rc": proc.returncode, "wall": round(time.time() - t0, 1)}
+    run = {"rc": proc.returncode, "wall": round(time.time() - t0, 1)}
     lines = [ln for ln in proc.stdout.splitlines() if ln.startswith("{")]
-    if proc.returncode == 0 and lines:
-        rec["seconds"] = json.loads(lines[-1])["queries"][query]
-    else:
-        rec["stderr_tail"] = proc.stderr[-2000:]
-    return rec
+    seconds = json.loads(lines[-1])["queries"] if proc.returncode == 0 and lines else {}
+    return [
+        dict(run, query=q, seconds=seconds[q]) if q in seconds
+        else dict(run, query=q, stderr_tail=proc.stderr[-2000:])
+        for q in queries
+    ]
 
 
 def quartiles(vals: list[float]) -> tuple[float, float, float]:
@@ -162,7 +166,7 @@ def main() -> int:
     ap.add_argument("--parent", help="checkout of the parent tree")
     ap.add_argument("--change", help="checkout of the change tree")
     ap.add_argument("--workload")
-    ap.add_argument("--query", help="time this query with bench_extra.py instead of a workload")
+    ap.add_argument("--query", nargs="+", help="time these queries with bench_extra.py instead of a workload")
     ap.add_argument("--sf", help="scale-factor directory for --query")
     ap.add_argument("--seeds", type=int, nargs="+", help="one pair per seed")
     ap.add_argument("--seconds", type=float, default=20)
@@ -183,18 +187,18 @@ def main() -> int:
             rec = {"seed": seed, "side": side, "pair": pair, "first": sides[0]}
             if args.query:
                 sf = os.path.basename(os.path.normpath(args.sf)) if args.sf else "default"
-                rec.update(query=args.query, sf=sf)
-                rec.update(run_query(tree, args.query, args.sf))
-                shown = f"seconds={rec.get('seconds')}"
+                recs = [dict(rec, sf=sf, **r) for r in run_queries(tree, args.query, args.sf)]
+                shown = " ".join(f"{r['query']}={r.get('seconds')}" for r in recs)
             else:
                 rec["workload"] = args.workload
                 rec.update(run_one(tree, args.workload, seed, args.seconds))
+                recs = [rec]
                 items = rec.get("metrics", {}).get("items_per_s", {}).get("value")
                 shown = f"items_per_s={items} steal={rec.get('steal_share')}"
-            records.append(rec)
+            records.extend(recs)
             with open(args.out, "a") as f:
-                f.write(json.dumps(rec) + "\n")
-            print(f"pair {pair} seed {seed} {side}: rc={rec['rc']} {shown}", flush=True)
+                f.writelines(json.dumps(r) + "\n" for r in recs)
+            print(f"pair {pair} seed {seed} {side}: rc={recs[0]['rc']} {shown}", flush=True)
     print(summarize(records))
     return 0
 

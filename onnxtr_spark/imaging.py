@@ -218,7 +218,7 @@ def render_page(
     values.
 
     ``para_breaks``: set of (line_idx, word_idx) positions that get a
-    paragraph-sized gap *before* the word (exercises resolve_sub_lines).
+    paragraph-sized gap *before* the word (exercises the sub-line split).
     Word y-positions get a deterministic ±2 px jitter (exercises the
     running-mean line clustering) unless ``jitter=False``.
     """

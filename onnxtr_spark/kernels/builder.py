@@ -1,23 +1,42 @@
-"""Document-builder geometry kernels (reading order, line resolution).
+"""Document-builder reading order (B1/B2) and block clustering (B4).
 
 Re-derives the exact math of the reference's DocumentBuilder
-(reference: onnxtr/models/builder.py:42-146) for straight pages:
+(reference: onnxtr/models/builder.py:42-212) for every page of an Arrow
+chunk at once. Per page, the reference:
 
-- ``sort_boxes``      — builder.py:42-63: sort key
-  ``xmin + 2*ymax / median(heights)``, argsort.
-- ``resolve_sub_lines`` — builder.py:65-101: within a line sorted by xmin,
-  break when ``xmin_i - xmax_prev >= paragraph_break`` (default 0.035).
-- ``resolve_lines``   — builder.py:103-146: sequential scan over sorted
-  boxes; a new line starts when the box's y-center deviates from the
-  running line-mean y-center by >= median_height / 2.
+- sorts boxes by ``xmin + 2*ymax / median(heights)`` (builder.py:42-63);
+- scans them in that order, starting a new line when a box's y center
+  deviates from the running line-mean y center by >= median_height / 2
+  (builder.py:103-146);
+- splits each line, sorted by xmin, where ``xmin - previous xmax >=
+  paragraph_break`` (default 0.035, builder.py:65-101).
 
-These are deliberately per-page sequential algorithms (the running mean in
-``resolve_lines`` is order-dependent and cannot be a window function); in
-Spark they run inside a grouped ``applyInPandas`` over (doc_id, page) —
-bounded cardinality per group, embarrassingly parallel across pages.
+``reading_order`` does the same over a chunk of concatenated pages:
 
-Rotated-box handling (builder.py:55-62) is out of scope for v1
-(``assume_straight_pages=True`` default path, models/zoo.py:19-27).
+- Medians come from one sort of the padded (pages × boxes) heights,
+  pads last: ``(lo + hi) / 2`` of the middle pair is the value
+  ``np.median`` returns, and for an odd count lo is hi.
+- The line scan is order-dependent (a running mean), so it runs in
+  lockstep across pages: step j updates every page with more than j
+  boxes, pages held longest first so the active ones are a prefix.
+  Each page sees the scalar scan's float operations in the same order
+  and dtype: the first line sums in the boxes' dtype and later lines
+  in float64, because the scan restarts its sum from the int 0.
+- The sub-line split is one ``np.lexsort`` over (line, xmin) in scan
+  order; the gap test runs in float64, as a scalar comparison does.
+
+Ties: ``np.argsort`` is not stable here (its SIMD sorts reorder equal
+keys), and the reference sorts with it. A key vector with no tie has
+only one sorted order, so one chunk-wide sort serves every page and
+line without ties; a page whose sort key ties (or is NaN, as with a
+zero median height) and a line whose xmin ties call ``argsort`` on
+their own keys, which gives the scalar order exactly.
+
+Rotated pages (builder.py:55-62) reach the kernel through
+``rotated.straight_fit``; B4 (``resolve_blocks``) groups the kernel's
+lines per page. The scalar per-page chain is the oracle in
+``tests/builder_oracle.py``. ``word_order`` and ``word_order_blocks``
+(and ``rotated.word_order_rotated``) are one-page calls of the kernel.
 """
 
 from __future__ import annotations
@@ -27,75 +46,102 @@ import numpy as np
 PARAGRAPH_BREAK = 0.035  # reference: models/builder.py:34
 
 
-def sort_boxes(boxes: np.ndarray) -> np.ndarray:
-    """Return indices ordering straight boxes top-to-bottom, left-to-right.
+def _tied(keys: np.ndarray, same: np.ndarray) -> np.ndarray:
+    """Positions i >= 1 of a sorted key vector equal to key i-1 within
+    the same segment (``same[i-1]``), or NaN: where the sort is not unique."""
+    tie = np.zeros(len(keys), dtype=bool)
+    tie[1:] = (keys[1:] == keys[:-1]) & same
+    return tie | np.isnan(keys)
 
-    boxes: (N, 4) relative [xmin, ymin, xmax, ymax].
-    Key: ``xmin + 2 * ymax / median(heights)`` (builder.py:63).
+
+def reading_order(
+    boxes: np.ndarray, counts, paragraph_break: float = PARAGRAPH_BREAK
+) -> tuple[np.ndarray, np.ndarray]:
+    """(rank, line_id) of every box of a chunk of pages.
+
+    boxes: (N, 4) relative [xmin, ymin, xmax, ymax], the pages' boxes
+    concatenated in page order (one dtype: the pages of a chunk come
+    from one detector); counts: boxes per page. ``rank[i]`` is box i's
+    0-based reading-order position within its page and ``line_id[i]``
+    its page's 0-based line index, as the reference's per-page builder
+    gives them.
     """
-    heights = boxes[:, 3] - boxes[:, 1]
-    return (boxes[:, 0] + 2 * boxes[:, 3] / np.median(heights)).argsort()
+    counts = np.asarray(counts, dtype=np.int64)
+    n = boxes.shape[0]
+    rank = np.empty(n, dtype=np.int64)
+    line_id = np.empty(n, dtype=np.int64)
+    if n == 0:
+        return rank, line_id
+    pc = counts[counts > 0]
+    starts = np.cumsum(pc) - pc
+    n_pages, width = len(pc), int(pc.max())
+    pg = np.repeat(np.arange(n_pages), pc)
+    pos = np.arange(n) - starts[pg]
+    x0, y0, x1, y1 = boxes[:, 0], boxes[:, 1], boxes[:, 2], boxes[:, 3]
+
+    # median height per page: padded rows sorted with +inf pads last
+    heights = np.full((n_pages, width), np.inf, dtype=boxes.dtype)
+    heights[pg, pos] = y1 - y0
+    heights.sort(axis=1)
+    rows = np.arange(n_pages)
+    med = (heights[rows, (pc - 1) // 2] + heights[rows, pc // 2]) / 2
+    med[np.isnan(heights[:, -1])] = np.nan  # np.median of a NaN height
+
+    # B1 sort, chunk-wide; pages with a tied key sort on their own
+    key = x0 + 2 * y1 / med[pg]
+    order = np.lexsort((key, pg))
+    for p in np.unique(pg[_tied(key[order], pg[1:] == pg[:-1])]):
+        s = starts[p]
+        order[s : s + pc[p]] = s + key[s : s + pc[p]].argsort()
+
+    # B2 line scan in lockstep: (step, page) matrices, longest page first
+    by_len = np.argsort(-pc, kind="stable")
+    col = np.empty(n_pages, dtype=np.int64)
+    col[by_len] = rows
+    y_centers = boxes[:, [1, 3]].mean(axis=1)[order]
+    scan = np.zeros((width, n_pages), dtype=boxes.dtype)
+    scan[pos, col[pg]] = y_centers
+    active = np.count_nonzero(pc[by_len][None, :] > np.arange(width)[:, None], axis=1)
+    half_med = med[by_len].astype(np.float64) / 2
+    first = np.ones(n_pages, dtype=bool)  # still in the page's first line
+    sum_first = scan[0].copy()  # the first line's sum, in the boxes' dtype
+    sum_rest = np.zeros(n_pages)  # later lines' sums, float64
+    count = np.ones(n_pages)
+    breaks = np.zeros((width, n_pages), dtype=bool)
+    breaks[0] = True
+    for j in range(1, width):
+        k = active[j]
+        y = scan[j, :k]
+        y64 = y.astype(np.float64)
+        mean = np.where(first[:k], sum_first[:k], sum_rest[:k]) / count[:k]
+        brk = np.abs(y64 - mean) >= half_med[:k]
+        breaks[j, :k] = brk
+        first[:k] &= ~brk
+        sum_first[:k] += y
+        sum_rest[:k] = np.where(brk, y64, sum_rest[:k] + y64)
+        count[:k] = np.where(brk, 1, count[:k] + 1)
+    line = np.cumsum(breaks[pos, col[pg]])  # chunk-wide scan line, in scan order
+
+    # sub-lines: xmin order within each scan line; tied lines sort alone
+    xs = x0[order]
+    within = np.lexsort((xs, line))
+    same_line = line[1:] == line[:-1]
+    for ln in np.unique(line[_tied(xs[within], same_line)]):
+        s, e = np.searchsorted(line, (ln, ln + 1))
+        within[s:e] = s + xs[s:e].argsort()
+    final = order[within]
+    gap = x0[final[1:]] - x1[final[:-1]]
+    starts_line = np.ones(n, dtype=bool)
+    starts_line[1:] = ~same_line | (gap.astype(np.float64) >= paragraph_break)
+    lines = np.cumsum(starts_line)
+    rank[final] = pos
+    line_id[final] = lines - lines[starts][pg]
+    return rank, line_id
 
 
-def resolve_sub_lines(
-    boxes: np.ndarray, word_idcs: list[int], paragraph_break: float = PARAGRAPH_BREAK
-) -> list[list[int]]:
-    """Split one visual line into sub-lines at horizontal gaps >= paragraph_break.
-
-    Mirrors builder.py:65-101 exactly, including the sort by xmin within
-    the line and the "distance measured from previous box's xmax" rule.
-    """
-    lines: list[list[int]] = []
-    word_idcs = [word_idcs[idx] for idx in boxes[word_idcs, 0].argsort().tolist()]
-
-    if len(word_idcs) < 2:
-        lines.append(word_idcs)
-        return lines
-
-    sub_line = [word_idcs[0]]
-    for i in word_idcs[1:]:
-        prev_box = boxes[sub_line[-1]]
-        dist = boxes[i, 0] - prev_box[2]
-        if dist >= paragraph_break:
-            lines.append(sub_line)
-            sub_line = []
-        sub_line.append(i)
-    lines.append(sub_line)
-    return lines
-
-
-def resolve_lines(boxes: np.ndarray, paragraph_break: float = PARAGRAPH_BREAK) -> list[list[int]]:
-    """Group straight boxes into reading-order lines (builder.py:103-146).
-
-    Returns a nested list of original box indices, line by line.
-    """
-    idxs = sort_boxes(boxes)
-    y_med = np.median(boxes[:, 3] - boxes[:, 1])
-    # per-box y centers once, vectorized: mean(axis=1) over the two
-    # columns is the same float op sequence (and dtype) as the per-row
-    # boxes[idx][[1, 3]].mean() the scan used to repeat
-    y_centers = boxes[:, [1, 3]].mean(axis=1)
-
-    lines: list[list[int]] = []
-    words: list[int] = [idxs[0]]
-    y_center_sum = y_centers[idxs[0]]
-
-    for idx in idxs[1:]:
-        y_dist = abs(y_centers[idx] - y_center_sum / len(words))
-        if y_dist >= y_med / 2:
-            lines.extend(resolve_sub_lines(boxes, words, paragraph_break))
-            words = []
-            y_center_sum = 0
-        words.append(idx)
-        y_center_sum += y_centers[idx]
-
-    if words:
-        lines.extend(resolve_sub_lines(boxes, words, paragraph_break))
-    return lines
-
-
-def resolve_blocks(boxes: np.ndarray, lines: list[list[int]], t: float = 0.1) -> list[list[list[int]]]:
-    """Group lines into blocks (reference builder.py:148-212, straight path).
+def resolve_blocks(boxes: np.ndarray, lines: list[np.ndarray], t: float = 0.1) -> list[list[np.ndarray]]:
+    """Group one page's lines into blocks (reference builder.py:148-212,
+    straight path).
 
     The reference clusters 6 geometric features of each line's enclosing
     bbox with ``scipy.cluster.hierarchy.fclusterdata(t=0.1, depth=4,
@@ -156,46 +202,39 @@ def resolve_blocks(boxes: np.ndarray, lines: list[list[int]], t: float = 0.1) ->
     return [[lines[idx] for idx in group] for group in groups.values()]
 
 
-def word_order(boxes: np.ndarray, paragraph_break: float = PARAGRAPH_BREAK) -> tuple[np.ndarray, np.ndarray]:
-    """Flatten ``resolve_lines`` into per-word (rank, line_id) arrays.
+def reading_order_blocks(
+    boxes: np.ndarray, counts, paragraph_break: float = PARAGRAPH_BREAK, block_t: float = 0.1
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """``reading_order`` with B4 block clustering: per page, reading
+    order is block -> line -> word (blocks reorder lines exactly as the
+    reference's export does when resolve_blocks=True, builder.py:210).
+    Returns (rank, line_id, block_id)."""
+    rank, line_id = reading_order(boxes, counts, paragraph_break)
+    block_id = np.empty_like(rank)
+    start = 0
+    for c in np.asarray(counts, dtype=np.int64).tolist():
+        if c == 0:
+            continue
+        page = slice(start, start + c)
+        by_rank = np.argsort(rank[page])
+        lines = np.split(by_rank, np.flatnonzero(np.diff(line_id[page][by_rank])) + 1)
+        blocks = resolve_blocks(boxes[page], lines, block_t)
+        seq = [ln for block in blocks for ln in block]
+        idx = start + np.concatenate(seq)
+        rank[idx] = np.arange(c)
+        line_id[idx] = np.repeat(np.arange(len(seq)), [len(ln) for ln in seq])
+        block_id[idx] = np.repeat(np.arange(len(blocks)), [sum(len(ln) for ln in b) for b in blocks])
+        start += c
+    return rank, line_id, block_id
 
-    Returns (rank, line_id), both shaped (N,), aligned with the input box
-    order: ``rank[i]`` is the 0-based reading-order position of box i and
-    ``line_id[i]`` its 0-based line index. This is the Spark-friendly
-    output consumed by the build stage's ``collect_list`` assembly.
-    """
-    n = boxes.shape[0]
-    rank = np.empty(n, dtype=np.int64)
-    line_id = np.empty(n, dtype=np.int64)
-    pos = 0
-    for li, line in enumerate(resolve_lines(boxes, paragraph_break)):
-        for idx in line:
-            rank[idx] = pos
-            line_id[idx] = li
-            pos += 1
-    return rank, line_id
+
+def word_order(boxes: np.ndarray, paragraph_break: float = PARAGRAPH_BREAK) -> tuple[np.ndarray, np.ndarray]:
+    """``reading_order`` of one page: (rank, line_id) aligned with its boxes."""
+    return reading_order(boxes, [boxes.shape[0]], paragraph_break)
 
 
 def word_order_blocks(
     boxes: np.ndarray, paragraph_break: float = PARAGRAPH_BREAK, block_t: float = 0.1
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Like ``word_order`` but with B4 block clustering: reading order is
-    block -> line -> word (blocks reorder lines exactly as the
-    reference's export does when resolve_blocks=True, builder.py:210).
-    Returns (rank, line_id, block_id)."""
-    n = boxes.shape[0]
-    rank = np.empty(n, dtype=np.int64)
-    line_id = np.empty(n, dtype=np.int64)
-    block_id = np.empty(n, dtype=np.int64)
-    lines = resolve_lines(boxes, paragraph_break)
-    pos = 0
-    li_global = 0
-    for bi, block in enumerate(resolve_blocks(boxes, lines, block_t)):
-        for line in block:
-            for idx in line:
-                rank[idx] = pos
-                line_id[idx] = li_global
-                block_id[idx] = bi
-                pos += 1
-            li_global += 1
-    return rank, line_id, block_id
+    """``reading_order_blocks`` of one page: (rank, line_id, block_id)."""
+    return reading_order_blocks(boxes, [boxes.shape[0]], paragraph_break, block_t)

@@ -8,9 +8,10 @@ Exact re-derivations of the reference's rotated-box math:
   |angle| exceeds min_angle; optional remap to a padded target shape)
 - ``estimate_page_angle``  — utils/geometry.py:439-454 (median arctan of
   reading-direction left→right point pairs)
-- ``resolve_lines_rotated`` — models/builder.py:55-63 + 103-146:
-  straighten rotated boxes by -estimate_page_angle about a 1024² frame,
-  take min/max corners, then the standard straight sort and line scan.
+- ``straight_fit``         — models/builder.py:55-62: straighten rotated
+  boxes by -estimate_page_angle about a 1024² frame and take min/max
+  corners; the fits go through the straight reading-order kernel
+  (``builder.reading_order``).
 - ``extract_rcrops_nearest`` — G2 analog of utils/geometry.py:514-625:
   per-quadrilateral inverse-affine crop. The reference warps with
   cv2.warpPerspective/​warpAffine (bilinear); with no cv2 here we
@@ -23,7 +24,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from onnxtr_spark.kernels.builder import PARAGRAPH_BREAK, resolve_lines
+from onnxtr_spark.kernels.builder import PARAGRAPH_BREAK, reading_order
 
 
 def remap_boxes(loc_preds: np.ndarray, orig_shape: tuple[int, int], dest_shape: tuple[int, int]) -> np.ndarray:
@@ -82,19 +83,14 @@ def estimate_page_angle(polys: np.ndarray) -> float:
             return 0.0
 
 
-def _straight_fit(boxes: np.ndarray) -> np.ndarray:
-    """Straighten rotated (N,4,2) boxes by -estimate_page_angle about a
-    1024² frame and fit (N,4) straight boxes [xmin, ymin, xmax, ymax]."""
+def straight_fit(boxes: np.ndarray) -> np.ndarray:
+    """Straighten one page's rotated (N,4,2) boxes by -estimate_page_angle
+    about a 1024² frame and fit (N,4) straight boxes [xmin, ymin, xmax,
+    ymax]: the boxes the rotated builder sorts and scans."""
     straightened = rotate_boxes(
         loc_preds=boxes, angle=-estimate_page_angle(boxes), orig_shape=(1024, 1024), min_angle=5.0
     )
     return np.concatenate((straightened.min(1), straightened.max(1)), -1)
-
-
-def resolve_lines_rotated(boxes: np.ndarray, paragraph_break: float = PARAGRAPH_BREAK) -> list[list[int]]:
-    """resolve_lines for rotated (N,4,2) boxes (builder.py:103-146):
-    the standard sort and running-mean scan over the straightened fit."""
-    return resolve_lines(_straight_fit(boxes), paragraph_break)
 
 
 def rectify_crops(crops: list[np.ndarray], orientations: list[int]) -> list[np.ndarray]:
@@ -122,20 +118,9 @@ def rectify_loc_preds(page_loc_preds: np.ndarray, orientations: list[int]) -> np
 
 
 def word_order_rotated(polys: np.ndarray, paragraph_break: float = PARAGRAPH_BREAK) -> tuple[np.ndarray, np.ndarray]:
-    """Flatten ``resolve_lines_rotated`` into per-word (rank, line_id)
-    arrays aligned with the input (N,4,2) poly order — the rotated
-    counterpart of builder.word_order (same contract, consumed by the
-    fused stage's span assembly)."""
-    n = polys.shape[0]
-    rank = np.empty(n, dtype=np.int64)
-    line_id = np.empty(n, dtype=np.int64)
-    pos = 0
-    for li, line in enumerate(resolve_lines_rotated(polys, paragraph_break)):
-        for idx in line:
-            rank[idx] = pos
-            line_id[idx] = li
-            pos += 1
-    return rank, line_id
+    """Reading order of one page's rotated (N,4,2) polys: (rank,
+    line_id) of ``builder.reading_order`` over the page's straight fit."""
+    return reading_order(straight_fit(polys), [polys.shape[0]], paragraph_break)
 
 
 _FRAC_CACHE: dict[int, np.ndarray] = {}

@@ -63,6 +63,7 @@ import time
 import uuid
 
 from pyspark import AccumulatorParam
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
@@ -105,9 +106,17 @@ def _with_group(docs: DataFrame, n_groups: int) -> DataFrame:
 
 
 def completed_groups(spark: SparkSession, out_path: str) -> set[int]:
+    """Groups with a lineage row. A first run has no lineage directory:
+    that is checked through the session's Hadoop ``FileSystem`` rather
+    than by a failing read, which Spark's listener bus logs as an error
+    with a full stack trace once the session has used an ``Observation``."""
+    path = f"{out_path}/lineage"
+    jpath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
+    if not jpath.getFileSystem(spark._jsparkSession.sessionState().newHadoopConf()).exists(jpath):
+        return set()
     try:
-        rows = spark.read.parquet(f"{out_path}/lineage").select("group").distinct().collect()
-    except Exception:  # noqa: BLE001 — first run: no lineage yet
+        rows = spark.read.parquet(path).select("group").distinct().collect()
+    except AnalysisException:  # a directory with no parquet file yet (crashed first commit)
         return set()
     return {r["group"] for r in rows}
 

@@ -58,10 +58,11 @@ def _record(uri: str, html: str) -> bytes:
 
 def encode_warc(records: list[tuple[str, str]]) -> bytes:
     """One gzip member per record, concatenated — the standard WARC
-    layout (ISO 28500 annex; what Common Crawl ships)."""
+    layout (ISO 28500 annex; what Common Crawl ships). Each member's
+    header carries mtime 0, so the same records encode to the same bytes."""
     out = bytearray()
     for uri, html in records:
-        out += gzip.compress(_record(uri, html), 6)
+        out += gzip.compress(_record(uri, html), 6, mtime=0)
     return bytes(out)
 
 

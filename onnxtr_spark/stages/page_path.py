@@ -41,14 +41,14 @@ from onnxtr_spark.engine import (
     get_recognition_engine,
 )
 from onnxtr_spark.kernels import detect_post, preprocess, rotated_post, split_merge
-from onnxtr_spark.kernels.builder import word_order, word_order_blocks
+from onnxtr_spark.kernels.builder import reading_order, reading_order_blocks
 from onnxtr_spark.kernels.ctc import attention_decode, ctc_best_path
 from onnxtr_spark.kernels.geometry import extract_crops, resize_preserve, resize_stretch, resize_unpadded
 from onnxtr_spark.kernels.rotated import (
     extract_rcrops_nearest,
     rectify_crops,
     rectify_loc_preds,
-    word_order_rotated,
+    straight_fit,
 )
 from onnxtr_spark.kernels.straighten import estimate_orientation
 
@@ -289,32 +289,39 @@ class PagePath:
         return preds
 
     def rows(self, pages: list[dict], flat: list[np.ndarray]) -> pd.DataFrame:
-        """Recognize the chunk's splits, then per page: W2 merge and
-        B1-B4 reading order → one ``OUT_COLS`` row per word."""
+        """Recognize the chunk's splits, W2-merge them per page, then
+        B1-B4 reading order for every page of the chunk in one kernel
+        call → the ``OUT_COLS`` rows, built as columns. Rotated pages
+        are ordered by their straight fit; B4 is straight-only."""
         cfg = self.reco_cfg
         preds = self.recognize(flat)
-        out_rows: list[tuple] = []
-        for page in pages:
-            boxes = page["boxes"]
-            if boxes.shape[0] == 0:
-                continue
-            page_preds = preds[page["start"] : page["start"] + page["n_splits"]]
-            words = split_merge.remap_preds(page_preds, page["crop_map"], cfg.overlap_ratio)
-            if page["polys"] is not None:
-                # rotated B1/B2: straighten by -estimate_page_angle, then
-                # the standard sort/line scan; B4 is straight-only
-                rank, line_id = word_order_rotated(page["polys"])
-                block_id = np.zeros_like(rank)
-            elif cfg.resolve_blocks:
-                rank, line_id, block_id = word_order_blocks(boxes[:, :4])
-            else:
-                rank, line_id = word_order(boxes[:, :4])
-                block_id = np.zeros_like(rank)
-            doc_id, offset, media_ref = page["key"]
-            for wi, ((text, conf), box) in enumerate(zip(words, boxes)):
-                out_rows.append((
-                    doc_id, offset, media_ref, wi, int(rank[wi]), int(line_id[wi]), int(block_id[wi]),
-                    float(box[0]), float(box[1]), float(box[2]), float(box[3]),
-                    float(box[4]), text, float(conf),
-                ))
-        return pd.DataFrame(out_rows, columns=OUT_COLS)
+        pages = [page for page in pages if page["boxes"].shape[0]]
+        if not pages:
+            return pd.DataFrame([], columns=OUT_COLS)
+        texts, confs = zip(*(
+            word
+            for page in pages
+            for word in split_merge.remap_preds(
+                preds[page["start"] : page["start"] + page["n_splits"]], page["crop_map"], cfg.overlap_ratio
+            )
+        ))
+        counts = [page["boxes"].shape[0] for page in pages]
+        boxes = np.concatenate([page["boxes"] for page in pages])
+        rotated = pages[0]["polys"] is not None  # one detector config per chunk
+        if cfg.resolve_blocks and not rotated:
+            rank, line_id, block_id = reading_order_blocks(boxes[:, :4], counts)
+        else:
+            fits = np.concatenate([straight_fit(p["polys"]) for p in pages]) if rotated else boxes[:, :4]
+            rank, line_id = reading_order(fits, counts)
+            block_id = np.zeros_like(rank)
+        doc_id, offset, media_ref = zip(*(page["key"] for page in pages))
+        geo = boxes.astype(np.float64)
+        return pd.DataFrame({
+            "doc_id": np.repeat(np.array(doc_id, dtype=object), counts),
+            "offset": np.repeat(np.array(offset, dtype=np.int64), counts),
+            "media_ref": np.repeat(np.array(media_ref, dtype=object), counts),
+            "word_id": np.arange(len(rank)) - np.repeat(np.cumsum(counts) - counts, counts),
+            "rank": rank, "line_id": line_id, "block_id": block_id,
+            "xmin": geo[:, 0], "ymin": geo[:, 1], "xmax": geo[:, 2], "ymax": geo[:, 3],
+            "objectness": geo[:, 4], "text": list(texts), "conf": np.array(confs, dtype=np.float64),
+        })

@@ -15,9 +15,10 @@ document-builder's per-page geometry (models/builder.py:42-146):
     across pages the same way, models/predictor/predictor.py:132)
   → C1 CTC / C2 attention decode (the engine's DecodeContract)
   → W2 merge split predictions (Hamming best-overlap)
-  → B1-B4 reading-order rank, line and block ids (per page — fused here
-    because all of a page's boxes are already co-resident; saves the
-    extra shuffle an applyInPandas build stage would need).
+  → B1-B4 reading-order rank, line and block ids (one kernel call over
+    every page of the Arrow chunk — fused here because all of a page's
+    boxes are already co-resident; saves the extra shuffle an
+    applyInPandas build stage would need).
 
 The boxes are read back as float32: postprocess emits float32, so the
 round trip through the double column is lossless and the crops and

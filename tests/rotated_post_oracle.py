@@ -4,8 +4,7 @@
 a time), ``order_points`` and ``_runs_score_px`` are the scalar D3-D6
 geometry chain; ``box_points`` draws a rect's corners for the tests, and
 ``bitmap_to_polys`` and ``unclip_rotated`` are one-page and one-rect
-calls of the runtime group kernel, and ``sort_boxes_rotated`` is the
-builder's rotated sort over the straightened fit.
+calls of the runtime group kernel.
 
 ``postprocess_pixel_map_rotated`` / ``postprocess_prob_map_rotated``
 are the page-at-a-time D1-D6 chain ``kernels/rotated_post.py`` ran
@@ -26,9 +25,7 @@ import math
 
 import numpy as np
 
-from onnxtr_spark.kernels.builder import PARAGRAPH_BREAK, resolve_sub_lines, sort_boxes
 from onnxtr_spark.kernels.detect_post import BIN_THRESH, BOX_THRESH, UNCLIP_RATIO, _label_runs_packed, label_runs
-from onnxtr_spark.kernels.rotated import _straight_fit, estimate_page_angle, rotate_boxes
 from onnxtr_spark.kernels.rotated_post import _group_polys, _page_components, _unclip_quads
 from tests.detect_post_oracle import open_3x3_packed
 
@@ -302,35 +299,6 @@ def postprocess_prob_map_rotated(
     morph_open: bool = True,
 ) -> np.ndarray:
     return _postprocess(prob_map, False, prob_map >= bin_thresh, box_thresh, unclip_ratio, morph_open)
-
-
-def resolve_lines_rotated(boxes: np.ndarray, paragraph_break: float = PARAGRAPH_BREAK) -> list[list[int]]:
-    """The rotated line scan with each word's y center recomputed."""
-    straightened = rotate_boxes(boxes, -estimate_page_angle(boxes), (1024, 1024), min_angle=5.0)
-    straight = np.concatenate((straightened.min(1), straightened.max(1)), -1)
-    idxs = (straight[:, 0] + 2 * straight[:, 3] / np.median(straight[:, 3] - straight[:, 1])).argsort()
-    y_med = np.median(straight[:, 3] - straight[:, 1])
-    lines: list[list[int]] = []
-    words: list[int] = [idxs[0]]
-    y_center_sum = straight[idxs[0]][[1, 3]].mean()
-    for idx in idxs[1:]:
-        y_dist = abs(straight[idx][[1, 3]].mean() - y_center_sum / len(words))
-        if y_dist >= y_med / 2:
-            lines.extend(resolve_sub_lines(straight, words, paragraph_break))
-            words = []
-            y_center_sum = 0
-        words.append(idx)
-        y_center_sum += straight[idx][[1, 3]].mean()
-    if words:
-        lines.extend(resolve_sub_lines(straight, words, paragraph_break))
-    return lines
-
-
-def sort_boxes_rotated(boxes: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """Rotated branch of the builder's sort (models/builder.py:55-63):
-    straighten, fit straight boxes, return (order, straight_boxes)."""
-    straight = _straight_fit(boxes)
-    return sort_boxes(straight), straight
 
 
 def rectify_loc_preds(page_loc_preds: np.ndarray, orientations: list[int]) -> np.ndarray | None:

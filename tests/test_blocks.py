@@ -3,7 +3,8 @@ flat clusters at euclidean distance t over 6 line-bbox features."""
 
 import numpy as np
 
-from onnxtr_spark.kernels.builder import resolve_blocks, resolve_lines, word_order_blocks
+from onnxtr_spark.kernels.builder import resolve_blocks, word_order_blocks
+from tests.builder_oracle import resolve_lines
 
 
 def test_two_separated_paragraphs_cluster_apart():

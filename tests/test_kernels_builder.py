@@ -4,7 +4,8 @@
 import numpy as np
 import pytest
 
-from onnxtr_spark.kernels.builder import resolve_lines, resolve_sub_lines, sort_boxes, word_order
+from onnxtr_spark.kernels.builder import word_order
+from tests.builder_oracle import resolve_lines, resolve_sub_lines, sort_boxes
 
 
 @pytest.mark.parametrize(

@@ -17,8 +17,12 @@ import pathlib
 PACKAGE = pathlib.Path(__file__).resolve().parents[1] / "onnxtr_spark"
 KERNELS = PACKAGE / "kernels"
 PREFIX = "onnxtr_spark.kernels"
-# one-page calls of the group kernels: perfbench/tracer.py wraps them by name
+# one-page calls of the group and chunk kernels: perfbench/tracer.py
+# wraps them by name
 TRACER_WRAPPED = {
+    ("builder", "word_order"),
+    ("builder", "word_order_blocks"),
+    ("rotated", "word_order_rotated"),
     ("detect_post", "postprocess_pixel_map"),
     ("detect_post", "postprocess_prob_map"),
     ("rotated_post", "postprocess_pixel_map_rotated"),

@@ -218,3 +218,25 @@ def test_group_counters_and_job_count(spark, corpus, tmp_path, monkeypatch):
         assert {k: int(row[k]) for k in want} == want, g
         jobs = tracker.getJobIdsForGroup(f"{tag}-{g}")
         assert len(jobs) == (JOBS_GROUP if want["n_docs"] else JOBS_EMPTY_GROUP), (g, sorted(jobs))
+
+
+def test_completed_groups_checks_the_path_before_reading(spark, tmp_path, monkeypatch):
+    """A fresh out_path is answered by a FileSystem check, not by a
+    failing parquet read; a lineage directory holding no parquet file
+    yet (a crashed first commit) still reads as no completed group."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    reads = []
+    orig = DataFrameReader.parquet
+
+    def parquet(reader, *paths, **kwargs):
+        reads.append(paths)
+        return orig(reader, *paths, **kwargs)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", parquet)
+    out = tmp_path / "out"
+    assert completed_groups(spark, str(out)) == set()
+    assert reads == []
+    (out / "lineage").mkdir(parents=True)
+    assert completed_groups(spark, str(out)) == set()
+    assert reads == [(f"{out}/lineage",)]

@@ -94,7 +94,7 @@ def test_detect_pages_rejects_rotated_path(pages):
 ONE_USE = {
     "decode_image", "postprocess_pixel_maps", "postprocess_prob_maps", "remove_padding",
     "extract_crops", "split_crops", "remap_preds", "ctc_best_path", "attention_decode",
-    "word_order", "word_order_blocks", "word_order_rotated", "get_recognition_engine",
+    "reading_order", "reading_order_blocks", "straight_fit", "get_recognition_engine",
 }
 
 

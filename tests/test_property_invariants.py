@@ -9,7 +9,8 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from onnxtr_spark.corpus import expected_spans
-from onnxtr_spark.kernels.builder import resolve_lines, word_order
+from onnxtr_spark.kernels.builder import word_order
+from tests.builder_oracle import resolve_lines
 
 
 @settings(max_examples=60, deadline=None)

@@ -8,10 +8,9 @@ from onnxtr_spark.kernels.rotated import (
     estimate_page_angle,
     extract_rcrops_nearest,
     remap_boxes,
-    resolve_lines_rotated,
     rotate_boxes,
 )
-from tests.rotated_post_oracle import sort_boxes_rotated
+from tests.builder_oracle import resolve_lines_rotated, sort_boxes_rotated
 
 ROT_CASE = np.asarray([
     [[0.1, 0.1], [0.2, 0.2], [0.15, 0.25], [0.05, 0.15]],

@@ -76,3 +76,21 @@ def test_warc_domain_stats_aggregates_per_host(spark):
     assert (out["n_docs"] == 2).all()
     assert (out["text_chars"] > 0).all()
     assert set(out["host"]) == {f"site-{i}.example" for i in range(50)}
+
+
+def test_warc_encode_is_deterministic():
+    """Every gzip member's header stamps mtime 0 (bytes 4-8), so two
+    encodes of the same records are byte-identical."""
+    import zlib
+
+    recs = [("https://s.example/doc/1", "<p>one</p>"), ("https://s.example/doc/2", "<p>two</p>")]
+    blob = W.encode_warc(recs)
+    pos = members = 0
+    while pos < len(blob):
+        assert blob[pos : pos + 2] == b"\x1f\x8b" and blob[pos + 4 : pos + 8] == b"\0\0\0\0"
+        d = zlib.decompressobj(wbits=31)
+        d.decompress(blob[pos:])
+        pos = len(blob) - len(d.unused_data)
+        members += 1
+    assert members == len(recs)
+    assert W.encode_warc(recs) == blob

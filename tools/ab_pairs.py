@@ -16,7 +16,10 @@ pair (parent first in pair 0). Every run appends one JSON line to
 already written, it prints per end-to-end metric the median and
 quartiles of each side, the change/parent ratio of the medians, the
 pairs the change won and whether the ratio stays inside the metric's
-``BENCHMARK.json`` bound. ``worker_peak_rss_mb`` is also printed as its
+``BENCHMARK.json`` bound, and whether a gain on it could be claimed:
+the change wins at least 9 of 10 pairs and its median beats the
+parent's by more than the parent's interquartile range (both must
+hold; ``CLAIM_WIN_SHARE``). ``worker_peak_rss_mb`` is also printed as its
 modes (runs more than 5 MB apart start a new mode) with run counts,
 since one tree's peak RSS can step between modes from run to run.
 
@@ -27,7 +30,7 @@ appends one record per query; the seeds only label the pairs. The
 summary prints, per query, each side's median [q1, q3] seconds, the
 change/parent ratio, the pairs the change won and whether the change
 median is slower than the parent's by more than the parent's
-interquartile range.
+interquartile range, and the same claim verdict.
 """
 
 from __future__ import annotations
@@ -43,6 +46,7 @@ import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 RSS_GAP_MB = 5.0
+CLAIM_WIN_SHARE = 0.9  # a claimed gain wins at least 9 of 10 pairs
 HOST_RE = re.compile(r"# host: steal_share=(\S+) cpu_probe_s before=(\S+) after=(\S+)")
 
 
@@ -100,6 +104,18 @@ def modes(vals: list[float], gap: float = RSS_GAP_MB) -> list[tuple[float, float
     return [(c[0], c[-1], len(c)) for c in out]
 
 
+def claim(parent: list[float], change: list[float], better: str) -> str:
+    """The claim rule's verdict for one metric over paired runs: the
+    change wins at least ``CLAIM_WIN_SHARE`` of the pairs and its median
+    beats the parent's by more than the parent's interquartile range."""
+    sign = 1 if better == "higher" else -1
+    wins = sum(sign * (c - p) > 0 for p, c in zip(parent, change))
+    p1, pm, p3 = quartiles(parent)
+    gain = sign * (quartiles(change)[1] - pm)
+    ok = wins >= CLAIM_WIN_SHARE * len(parent) and gain > p3 - p1
+    return f"claim {'QUALIFIES' if ok else 'no'} (gain {gain:.6g} vs parent IQR {p3 - p1:.6g})"
+
+
 def summarize_queries(records: list[dict]) -> list[str]:
     pairs: dict[tuple[str, str, int, int], dict[str, dict]] = {}
     for r in records:
@@ -120,7 +136,8 @@ def summarize_queries(records: list[dict]) -> list[str]:
         lines.append(
             f"  seconds | parent {pm:.3f} [{p1:.3f}, {p3:.3f}] | change {cm:.3f} [{c1:.3f}, {c3:.3f}] | "
             f"ratio {cm / pm:.3f} | wins {wins}/{len(ok)} | change - parent {slower:+.3f} s vs parent "
-            f"IQR {p3 - p1:.3f} s: {'inside' if slower <= p3 - p1 else 'OUTSIDE'}"
+            f"IQR {p3 - p1:.3f} s: {'inside' if slower <= p3 - p1 else 'OUTSIDE'} | "
+            + claim(side["parent"], side["change"], "lower")
         )
     return lines
 
@@ -139,7 +156,7 @@ def summarize(records: list[dict]) -> str:
         full = [p for key, p in sorted(pairs.items()) if key[0] == workload and len(p) == 2]
         ok = [p for p in full if all(r.get("rc") == 0 and "metrics" in r for r in p.values())]
         lines.append(f"{workload}: {len(ok)} complete pairs ({len(full) - len(ok)} with a failed run)")
-        lines.append("metric | parent median [q1, q3] | change median [q1, q3] | ratio | wins | bound")
+        lines.append("metric | parent median [q1, q3] | change median [q1, q3] | ratio | wins | bound | claim")
         for m in bench["end_to_end"]:
             name, better, bound = m["name"], m["better"], m["bound"]
             side = {s: [p[s]["metrics"][name]["value"] for p in ok] for s in ("parent", "change")}
@@ -152,7 +169,8 @@ def summarize(records: list[dict]) -> str:
             inside = ratio >= 1 - bound if better == "higher" else ratio <= 1 + bound
             lines.append(
                 f"{name} | {pm:.6g} [{p1:.6g}, {p3:.6g}] | {cm:.6g} [{c1:.6g}, {c3:.6g}] | "
-                f"{ratio:.3f} | {wins}/{len(ok)} | {'inside' if inside else 'OUTSIDE'} {bound}"
+                f"{ratio:.3f} | {wins}/{len(ok)} | {'inside' if inside else 'OUTSIDE'} {bound} | "
+                + claim(side["parent"], side["change"], better)
             )
             if name == "worker_peak_rss_mb":
                 for s in ("parent", "change"):

@@ -4,10 +4,11 @@ Spark-first shapes:
 
 - exact: one hash-groupBy (map-side combine; the canonical-doc pick is
   a min aggregate, no window needed).
-- MinHash: explode shingles once, aggregate K mins in a single groupBy
-  (K agg exprs — one shuffle, not K); band keys derived by column math.
-  LSH candidates come from a self-join on (band, band_key) — at scale
-  the banded table is bucketed on band_key so the join is co-located.
+- MinHash: one md5 per shingle, then K array_min folds over each
+  doc's shingle array and one inline of the band structs — a narrow
+  map, no shuffle; ``band_keys`` serves the batch operator and the
+  streaming near-dup twin. LSH candidates are the docs that share a
+  (band, band_key) bucket.
 - SimHash: explode tokens once, 16 conditional sums in one groupBy.
 - token Jaccard, character-n-gram Jaccard and directional containment:
   one prefix-filtered set join (SSJoin, Chaudhuri et al., ICDE 2006),
@@ -30,7 +31,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from onnxtr_spark.functions.hashing import hash64, hash64_sql, round_half_up
-from onnxtr_spark.functions.text import _TOKENS_SQL, _shingles_sql, shingles, tokens
+from onnxtr_spark.functions.text import _TOKENS_SQL, _shingles_sql, shingle_array, shingles, tokens
 from onnxtr_spark.partitioning import spread
 
 MINHASH_K = 8  # signature length
@@ -68,29 +69,39 @@ MINHASH_P = 2_147_483_629  # largest prime < 2^31
 MINHASH_A = (1_103_515_245, 69_069, 1_664_525, 22_695_477, 134_775_813, 214_013, 16_807, 48_271)
 
 
-def minhash_signatures(documents: DataFrame, k: int = MINHASH_K) -> DataFrame:
-    """Per-doc MinHash signature: (doc_id, sig_0 .. sig_{k-1})."""
-    sh = shingles(documents).withColumn("base", F.pmod(hash64(F.col("shingle"), 0), F.lit(MINHASH_P)))
-    aggs = [
-        F.min(F.pmod(F.col("base") * F.lit(MINHASH_A[seed]), F.lit(MINHASH_P))).alias(f"sig_{seed}")
-        for seed in range(k)
+def band_keys(docs: DataFrame, k: int = MINHASH_K, bands: int = LSH_BANDS) -> DataFrame:
+    """LSH band keys (doc_id, band, band_key) of every (doc_id, text)
+    row, folded over the row's shingle array: the k signature mins are
+    ``array_min``s, so there is no explode, shuffle or groupBy, and a
+    stream runs it as a narrow map. ``doc_id`` passes through with its
+    type. A doc_id that repeats gets one band set per row, where the
+    oracle's GROUP BY doc_id merges the rows' shingles.
+
+    The md5 base hash sits in its own projection: inlined into the k
+    folds, the optimizer would evaluate it k times per shingle."""
+    r = k // bands
+    based = docs.select(
+        "doc_id",
+        F.transform(shingle_array(tokens()), lambda s: F.pmod(hash64(s, 0), F.lit(MINHASH_P))).alias("base"),
+    )
+    sigs = [
+        F.array_min(F.transform("base", lambda b: F.pmod(b * F.lit(a), F.lit(MINHASH_P))))
+        for a in MINHASH_A[:k]
     ]
-    return sh.groupBy("doc_id").agg(*aggs)
+    keys = [
+        F.struct(
+            F.lit(b).alias("band"),
+            F.md5(F.concat_ws("_", *[sigs[b * r + j].cast("string") for j in range(r)])).alias("band_key"),
+        )
+        for b in range(bands)
+    ]
+    return based.select("doc_id", F.inline(F.array(*keys)))
 
 
 def minhash_bands(documents: DataFrame, k: int = MINHASH_K, bands: int = LSH_BANDS) -> DataFrame:
     """LSH band keys: (doc_id, band, band_key) — the bucket-join keys."""
-    r = k // bands
-    sigs = minhash_signatures(documents, k)
-    rows = [
-        sigs.select(
-            "doc_id",
-            F.lit(b).alias("band"),
-            F.md5(F.concat_ws("_", *[F.col(f"sig_{b * r + j}").cast("string") for j in range(r)])).alias("band_key"),
-        )
-        for b in range(bands)
-    ]
-    return reduce(DataFrame.unionByName, rows)
+    docs = spread(documents).select(F.col("doc_id").cast("long").alias("doc_id"), "text")
+    return band_keys(docs, k, bands)
 
 
 def _minhash_sigs_sql(k: int = MINHASH_K) -> str:
@@ -112,19 +123,6 @@ def minhash_bands_sql(k: int = MINHASH_K, bands: int = LSH_BANDS) -> str:
         selects.append(f"SELECT doc_id, {b} AS band, md5({parts}) AS band_key FROM sigs")
     union = "\nUNION ALL\n".join(selects)
     return f"WITH sigs AS (\n  {_minhash_sigs_sql(k)}\n)\n{union}"
-
-
-def lsh_candidate_pairs(documents: DataFrame) -> DataFrame:
-    """Distinct candidate pairs sharing at least one LSH band bucket."""
-    b = minhash_bands(documents)
-    left = b.alias("l")
-    right = b.alias("r")
-    return (
-        left.join(right, ["band", "band_key"])
-        .where(F.col("l.doc_id") < F.col("r.doc_id"))
-        .select(F.col("l.doc_id").alias("doc_a"), F.col("r.doc_id").alias("doc_b"))
-        .distinct()
-    )
 
 
 def _num(threshold: float) -> int:

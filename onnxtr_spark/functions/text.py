@@ -610,18 +610,10 @@ FROM documents d LEFT JOIN best b USING (doc_id)
 LANG_ID_SQL = None  # resolved lazily via lang_id_sql() (profile literals)
 
 
-def shingles(documents: DataFrame, k: int = 3) -> DataFrame:
-    """(doc_id, shingle) rows: distinct k-word shingles; docs with fewer
-    than k tokens contribute their whole normalized text.
-
-    The input is spread across cores first: the documents table is a
-    single parquet row-group, and shingle hashing is CPU-bound — without
-    the repartition one task does all of it."""
-    documents = spread(documents)
-    toks = tokens()
-    sh = F.when(
-        F.size(toks) < k, F.array(F.array_join(toks, " "))
-    ).otherwise(
+def shingle_array(toks, k: int = 3):
+    """Lazy Column: the distinct k-word shingles of the token array
+    ``toks``; fewer than k tokens give their whole normalized text."""
+    return F.when(F.size(toks) < k, F.array(F.array_join(toks, " "))).otherwise(
         F.array_distinct(
             F.transform(
                 F.sequence(F.lit(0), F.size(toks) - k),
@@ -629,7 +621,17 @@ def shingles(documents: DataFrame, k: int = 3) -> DataFrame:
             )
         )
     )
-    return documents.select(F.col("doc_id").cast("long").alias("doc_id"), F.explode(sh).alias("shingle"))
+
+
+def shingles(documents: DataFrame, k: int = 3) -> DataFrame:
+    """(doc_id, shingle) rows: one per ``shingle_array`` element.
+
+    The input is spread across cores first: the documents table is a
+    single parquet row-group, and shingle hashing is CPU-bound — without
+    the repartition one task does all of it."""
+    return spread(documents).select(
+        F.col("doc_id").cast("long").alias("doc_id"), F.explode(shingle_array(tokens(), k)).alias("shingle")
+    )
 
 
 def _shingles_sql(k: int = 3) -> str:
@@ -644,11 +646,13 @@ def _shingles_sql(k: int = 3) -> str:
 
 def fingerprint(documents: DataFrame) -> DataFrame:
     """Winnowing-style document fingerprint: min 3-gram shingle hash
-    (rolling-hash fingerprinting, k-min sketch with k=1)."""
-    return (
-        shingles(documents)
-        .groupBy("doc_id")
-        .agg(F.min(hash64(F.col("shingle"), 0)).alias("fingerprint"))
+    (rolling-hash fingerprinting, k-min sketch with k=1), folded per
+    row over the doc's shingle array — no explode, no shuffle. A
+    repeated doc_id gives one row per occurrence, where the oracle's
+    GROUP BY merges them; the documents' ids are distinct."""
+    return spread(documents).select(
+        F.col("doc_id").cast("long").alias("doc_id"),
+        F.array_min(F.transform(shingle_array(tokens()), lambda s: hash64(s, 0))).alias("fingerprint"),
     )
 
 

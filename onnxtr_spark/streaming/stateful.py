@@ -23,6 +23,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import StructType
 
+from onnxtr_spark.functions.dedup import _norm_text, band_keys
+from onnxtr_spark.queries.relational import SESSION_GAP_MIN
+
 SPAN_INPUT_DDL = (
     "doc_id string, offset int, kind string, text string, media_ref string, n_total int"
 )
@@ -102,25 +105,26 @@ def windowed_event_counts(
 
 DEDUP_INPUT_DDL = "doc_id string, text string"
 DEDUP_OUTPUT_DDL = "doc_id string, fp string"
-_DEDUP_STATE_DDL = "seen boolean"
+_SEEN_STATE_DDL = "seen boolean"
 
 
-def _dedup_fn(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    first: str | None = None
-    for pdf in pdfs:
-        for doc_id in pdf["doc_id"]:
-            d = str(doc_id)
-            if first is None or d < first:
-                first = d
-    if state.exists or first is None:
-        # fingerprint already emitted in an earlier micro-batch (state
-        # survives restarts via the stream checkpoint) -> suppress
-        yield pd.DataFrame(columns=["doc_id", "fp"])
-    else:
-        state.update((True,))
-        yield pd.DataFrame({"doc_id": [first], "fp": [key[0]]})
+def _first_sighting(id_col: str, key_col: str):
+    """State function over groups keyed on ``key_col``: the group's
+    smallest ``id_col`` (lexical for strings, numeric for numbers) is
+    emitted once, in the micro-batch where the key first appears; the
+    state is then one boolean, and every later sighting — same batch,
+    later batch, or after a restart (state lives in the stream
+    checkpoint) — is suppressed."""
+
+    def fn(key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
+        ids = [pdf[id_col].min() for pdf in pdfs if len(pdf)]
+        if state.exists or not ids:
+            yield pd.DataFrame(columns=[id_col, key_col])
+        else:
+            state.update((True,))
+            yield pd.DataFrame({id_col: [min(ids)], key_col: [key[0]]})
+
+    return fn
 
 
 def dedup_stream(docs_stream: DataFrame) -> DataFrame:
@@ -136,14 +140,11 @@ def dedup_stream(docs_stream: DataFrame) -> DataFrame:
     State lives in the stream checkpoint: a restarted query keeps
     suppressing duplicates of everything emitted before the crash.
     """
-    with_fp = docs_stream.select(
-        "doc_id",
-        F.md5(F.regexp_replace(F.trim("text"), r"\s+", " ")).alias("fp"),
-    )
+    with_fp = docs_stream.select("doc_id", F.md5(_norm_text()).alias("fp"))
     return with_fp.groupBy("fp").applyInPandasWithState(
-        _dedup_fn,
+        _first_sighting("doc_id", "fp"),
         outputStructType=DEDUP_OUTPUT_DDL,
-        stateStructType=_DEDUP_STATE_DDL,
+        stateStructType=_SEEN_STATE_DDL,
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
@@ -214,44 +215,6 @@ NEARDUP_OUTPUT_DDL = "doc_id string, dup_of string, band int"
 _NEARDUP_STATE_DDL = "first string"
 
 
-def _stream_minhash_bands(docs_stream: DataFrame) -> DataFrame:
-    """Per-ROW MinHash band keys — the same signature math as the batch
-    operator (functions/dedup.minhash_signatures: one md5 per shingle,
-    multiplicative seeds mod P) but folded over the per-doc shingle
-    ARRAY instead of explode+groupBy: a streaming query gets exactly one
-    stateful operator (the bucket state below), everything upstream
-    stays narrow."""
-    from onnxtr_spark.functions.dedup import LSH_BANDS, MINHASH_A, MINHASH_K, MINHASH_P
-    from onnxtr_spark.functions.hashing import hash64
-
-    k = 3
-    toks = F.split(F.trim("text"), r"\s+")
-    sh = F.when(F.size(toks) < k, F.array(F.array_join(toks, " "))).otherwise(
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(0), F.size(toks) - k),
-                lambda i: F.concat_ws(" ", *[F.element_at(toks, i + j + 1) for j in range(k)]),
-            )
-        )
-    )
-    base = F.transform(sh, lambda s: F.pmod(hash64(s, 0), F.lit(MINHASH_P)))
-    sigs = [
-        F.array_min(F.transform(base, lambda b: F.pmod(b * F.lit(MINHASH_A[i]), F.lit(MINHASH_P))))
-        for i in range(MINHASH_K)
-    ]
-    r = MINHASH_K // LSH_BANDS
-    bands = F.array(*[
-        F.struct(
-            F.lit(b).alias("band"),
-            F.md5(F.concat_ws("_", *[sigs[b * r + j].cast("string") for j in range(r)])).alias("band_key"),
-        )
-        for b in range(LSH_BANDS)
-    ])
-    return docs_stream.select("doc_id", F.explode(bands).alias("bk")).select(
-        "doc_id", F.col("bk.band").alias("band"), F.col("bk.band_key").alias("band_key")
-    )
-
-
 def _neardup_fn(
     key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
 ) -> Iterator[pd.DataFrame]:
@@ -278,14 +241,15 @@ def neardup_stream(docs_stream: DataFrame) -> DataFrame:
     """Streaming MinHash-LSH near-dup: each (band, band_key) bucket
     remembers its FIRST document (one string of state per non-empty
     bucket); any later arrival in the same bucket — same micro-batch or
-    weeks later — emits (doc_id, dup_of, band). The ingest-time twin of
-    ``dedup.lsh_candidate_pairs``: a doc colliding in several bands
-    emits once per band, so downstream takes
-    ``distinct(doc_id, dup_of)`` exactly like the batch operator's
-    candidate distinct. State survives restarts via the stream
-    checkpoint; size is one row per OCCUPIED bucket, independent of
-    corpus length."""
-    return _stream_minhash_bands(docs_stream).groupBy("band", "band_key").applyInPandasWithState(
+    weeks later — emits (doc_id, dup_of, band). The band keys are
+    ``dedup.band_keys``, the fold behind the batch ``minhash_bands``,
+    so a stream and a batch run bucket a document alike. A doc
+    colliding in several bands emits once per band, so downstream
+    takes ``distinct(doc_id, dup_of)``. State survives restarts via
+    the stream checkpoint; size is one row per OCCUPIED bucket,
+    independent of corpus length."""
+    bands = band_keys(docs_stream.select("doc_id", "text"))
+    return bands.groupBy("band", "band_key").applyInPandasWithState(
         _neardup_fn,
         outputStructType=NEARDUP_OUTPUT_DDL,
         stateStructType=_NEARDUP_STATE_DDL,
@@ -299,7 +263,7 @@ def neardup_stream(docs_stream: DataFrame) -> DataFrame:
 SESSION_INPUT_DDL = "user_id long, ts timestamp"
 SESSION_OUTPUT_DDL = "user_id long, start_us long, end_us long, n_events long"
 _SESSION_STATE_DDL = "start long, last long, n long"
-SESSION_GAP_US = 30 * 60 * 1_000_000  # same 30-min gap as the batch operator
+SESSION_GAP_US = SESSION_GAP_MIN * 60 * 1_000_000
 
 
 def _session_fn(
@@ -408,23 +372,6 @@ def attributed_purchases_stream(
 
 FRONTIER_INPUT_DDL = "url_id long, raw_url string"
 FRONTIER_OUTPUT_DDL = "url_id long, canonical_url string"
-_FRONTIER_STATE_DDL = "seen boolean"
-
-
-def _frontier_fn(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    first = None
-    for pdf in pdfs:
-        for uid in pdf["url_id"]:
-            u = int(uid)
-            if first is None or u < first:
-                first = u
-    if state.exists or first is None:
-        yield pd.DataFrame(columns=["url_id", "canonical_url"])
-    else:
-        state.update((True,))
-        yield pd.DataFrame({"url_id": [first], "canonical_url": [key[0]]})
 
 
 def frontier_dedup_stream(url_stream: DataFrame) -> DataFrame:
@@ -447,9 +394,9 @@ def frontier_dedup_stream(url_stream: DataFrame) -> DataFrame:
         "url_id", canonicalize_url(F.col("raw_url")).alias("canonical_url")
     )
     return canon.groupBy("canonical_url").applyInPandasWithState(
-        _frontier_fn,
+        _first_sighting("url_id", "canonical_url"),
         outputStructType=FRONTIER_OUTPUT_DDL,
-        stateStructType=_FRONTIER_STATE_DDL,
+        stateStructType=_SEEN_STATE_DDL,
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )

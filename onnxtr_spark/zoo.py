@@ -119,16 +119,17 @@ ORIENT_DEGREES = (0, -90, 180, 90)  # class k -> page angle (reference
 # classification predictor label order, models/classification/zoo.py)
 
 
-def page_orientations(pages: DataFrame) -> DataFrame:
+def page_orientations(pages: DataFrame, engine: EngineConfig | None = None) -> DataFrame:
     """Per-page I5 orientation classification as a standalone stage:
     (media_ref, orientation_class, orientation_deg). One batched engine
-    call per Arrow chunk (engine.OrientationEngine.run)."""
+    call per Arrow chunk (engine.OrientationEngine.run) on the
+    classifier ``engine`` selects (the default stub when None)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from onnxtr_spark import imaging
         from onnxtr_spark.engine import get_orientation_engine
 
-        orient = get_orientation_engine()
+        orient = get_orientation_engine(engine)
         for pdf in batches:
             if pdf.empty:
                 continue
@@ -195,7 +196,7 @@ class OCRPredictorSpark:
                 langs.withColumnRenamed("doc_id", key), key, "left"
             ).withColumn("pred_lang", F.coalesce("pred_lang", F.lit("unknown")))
         if self.detect_orientation:
-            orients = page_orientations(media_pages(docs, media))
+            orients = page_orientations(media_pages(docs, media), self.det_cfg.orient_engine)
             out = out.join(orients, "media_ref", "left")
         return out
 
@@ -391,7 +392,7 @@ class OrientationPredictorSpark:
     engine: EngineConfig
 
     def __call__(self, images: DataFrame) -> DataFrame:
-        return page_orientations(images)
+        return page_orientations(images, self.engine)
 
 
 def crop_orientation_predictor(

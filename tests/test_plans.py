@@ -275,6 +275,24 @@ def test_containment_is_directional(spark):
     assert not any(3 in p for p in pairs)
 
 
+def test_minhash_bands_hash_once_no_shuffle_agg(spark):
+    """MinHash band keys are one per-row fold: the md5 base hash
+    (``concat(0:``, hash64's seed prefix) appears ONCE in the optimized
+    plan, not once per signature seed, and there is no groupBy and no
+    per-band union, for the batch operator and for the shared helper
+    the streaming near-dup twin runs on (doc_id, text) rows."""
+    from onnxtr_spark.functions import dedup
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    static = spark.createDataFrame(
+        [("a", "one two three four"), ("b", "two words")], "doc_id string, text string"
+    )
+    for df in (dedup.minhash_bands(docs), dedup.band_keys(static)):
+        p = df._jdf.queryExecution().optimizedPlan().toString()
+        assert p.count("concat(0:") == 1, p
+        assert "Union" not in p and "Aggregate" not in p, p
+
+
 def test_semi_anti_join_queries_shape(spark):
     """q4/q16/q22: EXISTS → LeftSemi, NOT-IN/NOT-EXISTS → LeftAnti,
     dims broadcast, one agg exchange each — never a row-duplicating

@@ -1,9 +1,11 @@
 """Zoo predictor factory (reference models/zoo.py ocr_predictor flag
 surface) assembled as a Spark pipeline object."""
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from onnxtr_spark import engine as eng
 from onnxtr_spark.corpus import FIXTURE_TEXTS, build_corpus_pdfs
 from onnxtr_spark.engine import EngineConfig
 from onnxtr_spark.zoo import ocr_predictor
@@ -332,3 +334,45 @@ def test_clf_engine_cfg_and_load_in_8_bit_flow(spark, corpus):
     a = base(docs, media).orderBy("doc_id", "offset").toPandas()
     b = with_clf(docs, media).orderBy("doc_id", "offset").toPandas()
     assert a.equals(b)
+
+
+class _ConstOrient:
+    """Orientation stub that gives every image one class."""
+
+    def __init__(self, k: int):
+        self.k = k
+
+    def run_one(self, img) -> int:
+        return self.k
+
+    def run(self, crops) -> np.ndarray:
+        return np.full(len(crops), self.k, dtype=np.int64)
+
+
+# module-level registration: executors resolve the arch by importing
+# factory_module (EngineConfig), which runs this line there too. The
+# 8-bit flag picks class 3, so a test can see that it reached the factory.
+eng.register_model("stub_orient_const", lambda cfg: _ConstOrient(3 if cfg.load_in_8_bit else 2))
+CONST_ORIENT = EngineConfig(arch="stub_orient_const", factory_module="tests.test_zoo")
+
+
+def test_orientation_predictors_run_their_engine(spark, corpus):
+    """The classifier that ``engine_cfg``, ``clf_engine_cfg`` and
+    ``load_in_8_bit`` name is the one that classifies: the standalone
+    crop/page predictors and ``detect_orientation=True`` report the
+    stub's class, not the default classifier's 0 on this straight
+    corpus."""
+    import onnxtr_spark as ox
+    from onnxtr_spark.stages.pipeline import media_pages
+
+    docs, media = corpus
+    pages = media_pages(docs, media)
+    for factory in (ox.crop_orientation_predictor, ox.page_orientation_predictor):
+        for load_in_8_bit, k, deg in ((False, 2, 180), (True, 3, 90)):
+            got = factory(engine_cfg=CONST_ORIENT, load_in_8_bit=load_in_8_bit)(pages).toPandas()
+            assert len(got) > 0
+            assert (got.orientation_class == k).all() and (got.orientation_deg == deg).all()
+    for load_in_8_bit, k in ((False, 2), (True, 3)):
+        p = ocr_predictor(detect_orientation=True, clf_engine_cfg=CONST_ORIENT, load_in_8_bit=load_in_8_bit)
+        got = p(docs, media).where(F.col("media_ref") != "").select("orientation_class").toPandas()
+        assert len(got) > 0 and (got.orientation_class == k).all()

@@ -12,8 +12,8 @@ Architecture (NOT a port — see SURVEY.md):
 - ``kernels/``   pure NumPy math that must match the reference bit-for-bit
                  (detection postprocess, CTC decode, wide-crop split/merge,
                  document-builder geometry).
-- ``stages/``    Spark stages: ``mapInPandas`` detect + recognize,
-                 ``applyInPandas`` build, SQL span assembly.
+- ``stages/``    Spark stages: ``mapInArrow`` render, detect +
+                 recognize, SQL span assembly.
 - ``functions/`` corpus-scale ops: dedup (exact/minhash/simhash/jaccard),
                  ANN similarity search, text quality/langid/tokens.
 - ``queries/``   relational benchmark queries over the TPC-H-ish testdata.

@@ -36,13 +36,16 @@ page's media_ref, offsets dense from 0.
 from __future__ import annotations
 
 from collections.abc import Callable
+from typing import TYPE_CHECKING
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from onnxtr_spark import imaging
+
+if TYPE_CHECKING:  # the driver-side fixture builders import pandas when they run
+    import pandas as pd
 
 WORDS_PER_LINE = 5
 LINES_PER_PAGE = 6
@@ -109,6 +112,8 @@ def _corpus(
     """(docs, media) pandas frames from (doc_id, text) pairs: each page
     is rendered with ``render_kwargs``, then stored as
     ``frame(doc_id, page, image)``."""
+    import pandas as pd
+
     doc_rows = []
     media_rows = []
     for doc_id, text in texts:

@@ -7,7 +7,7 @@ while every operator around them is real and tested:
 1. **Codec** (stands in for PNG encode/decode, reference io/image.py:16-53):
    ``encode_image``/``decode_image`` serialize an H×W×3 uint8 ndarray as
    a tiny self-describing binary blob. The Spark plumbing — BinaryType
-   columns, Arrow batches into ``mapInPandas``, per-batch np.stack — is
+   columns, Arrow batches into ``mapInArrow``, per-batch np.stack — is
    identical to what a real PNG codec would need.
 
 2. **Renderer** (stands in for the reference's PIL fixture renderer,

@@ -2,5 +2,5 @@
 
 Each module cites the reference implementation it re-derives
 (path:line into /root/reference). No Spark imports here — these run
-inside pandas UDFs on executors and in plain pytest.
+inside the Arrow stages on executors and in plain pytest.
 """

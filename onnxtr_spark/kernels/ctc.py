@@ -9,7 +9,7 @@ Re-derives the reference's CRNN postprocessor
 - word confidence = min over timesteps of the max softmax probability.
 
 Vectorized NumPy (shift-compare collapse) instead of itertools.groupby —
-same result, batch-friendly inside the recognize ``mapInPandas`` stage.
+same result, batch-friendly inside the recognize ``mapInArrow`` stage.
 """
 
 from __future__ import annotations

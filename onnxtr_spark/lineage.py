@@ -68,8 +68,6 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from onnxtr_spark.stages.pipeline import extract_spans
-
 LINEAGE_SCHEMA = (
     "run_id string, group int, n_docs long, n_pages long, n_words long, n_spans long, "
     "wall_ms double, completed_at_unix double"
@@ -83,7 +81,9 @@ PARTITION_METRICS_SCHEMA = (
 
 class _ListAccum(AccumulatorParam):
     """AccumulatorParam collecting lists of tuples (executor -> driver
-    side channel for per-partition metric rows)."""
+    side channel for per-partition metric rows). An executor imports
+    this module to unpickle it, so the module imports no stage at its
+    top: ``run_checkpointed`` imports the pipeline when it runs."""
 
     def zero(self, value):
         return []
@@ -135,8 +135,11 @@ def run_checkpointed(
     (test hook simulating a mid-job crash). After a group commits, its
     per-partition rows (pages decoded, boxes detected, words
     recognized, decode latency, wall time) are appended to
-    ``out/partition_metrics/``."""
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    ``out/partition_metrics/``. The spans write overwrites only its own
+    group (dynamic partition overwrite, set on the write, not on the
+    session)."""
+    from onnxtr_spark.stages.pipeline import extract_spans
+
     run_id = uuid.uuid4().hex[:12]
     done = completed_groups(spark, out_path)
     grouped = _with_group(docs, n_groups)
@@ -169,9 +172,9 @@ def run_checkpointed(
                 # OCR'd word spans carry their source page's media_ref
                 F.sum(F.when(F.col("media_ref") != "", 1).otherwise(0)).alias("words"),
             )
-            flat.withColumn("group", F.lit(g)).write.mode("overwrite").partitionBy("group").parquet(
-                f"{out_path}/spans"
-            )
+            flat.withColumn("group", F.lit(g)).write.mode("overwrite").option(
+                "partitionOverwriteMode", "dynamic"
+            ).partitionBy("group").parquet(f"{out_path}/spans")
             counts = obs.get
             n_spans = int(counts["spans"])
             n_words = int(counts["words"] or 0)

@@ -1,6 +1,6 @@
 """Detect stage: page images → relative word boxes.
 
-One ``mapInPandas`` pass: the page layer sequence (stages/page_path.py)
+One ``mapInArrow`` pass: the page layer sequence (stages/page_path.py)
 cut after the loc_preds hooks — the reference's detection predictor
 (onnxtr/models/detection/predictor/base.py:35-67): decode → straighten
 if configured → P1 map resize → P2-P4 + model run (or the stub's uint8
@@ -33,10 +33,10 @@ from collections.abc import Iterator
 from dataclasses import dataclass
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 
-from onnxtr_spark import imaging
+from onnxtr_spark import arrow_cols, imaging
 from onnxtr_spark.engine import EngineConfig
 from onnxtr_spark.kernels import detect_post
 from onnxtr_spark.stages.page_path import PagePath, check_contracts
@@ -45,6 +45,12 @@ DETECT_SCHEMA = (
     "doc_id string, offset int, media_ref string, png binary, height int, width int, "
     "boxes array<array<double>>"
 )
+# DETECT_SCHEMA's Arrow types (arrow_cols): passed-through columns are cast to them
+DETECT_TYPES = {
+    "doc_id": pa.string(), "offset": pa.int32(), "media_ref": pa.string(), "png": pa.binary(),
+    "height": pa.int32(), "width": pa.int32(),
+    "boxes": pa.list_(pa.field("element", pa.list_(pa.field("element", pa.float64())))),
+}
 
 
 # Per-architecture postprocess defaults, the reference's default_cfgs
@@ -135,21 +141,28 @@ def detect_pages(pages: DataFrame, cfg: DetectConfig = DetectConfig()) -> DataFr
         )
     check_contracts(cfg.engine)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         path = PagePath(cfg)
-        for pdf in batches:
-            if pdf.empty:
+        for batch in batches:
+            if not batch.num_rows:
                 continue
-            res = pdf[["doc_id", "offset", "media_ref", "png", "height", "width"]].copy()
-            pngs, boxes = res["png"].tolist(), []
-            for g, imgs, locs in path.detect(pngs):
+            pngs, locs = batch.column("png").to_pylist(), []
+            for g, imgs, group_locs in path.detect(pngs):
                 if cfg.straighten_pages:
                     pngs[g : g + len(imgs)] = [imaging.encode_image(img) for img in imgs]
-                boxes.extend(loc.astype(np.float64).tolist() for loc in locs)
+                locs.extend(group_locs)
+            out = {name: batch.column(name) for name in ("doc_id", "offset", "media_ref", "png", "height", "width")}
             if cfg.straighten_pages:
-                res["png"] = pngs
-                res["height"], res["width"] = zip(*(imaging.peek_dims(p) for p in pngs))
-            res["boxes"] = boxes
-            yield res
+                height, width = zip(*(imaging.peek_dims(p) for p in pngs))
+                out.update(png=arrow_cols.binary(pngs), height=arrow_cols.int32(height), width=arrow_cols.int32(width))
+            # one list of [xmin, ymin, xmax, ymax, score] per box, per page
+            out["boxes"] = arrow_cols.lists(
+                [loc.shape[0] for loc in locs],
+                arrow_cols.lists(
+                    [loc.shape[1] for loc in locs for _ in range(loc.shape[0])],
+                    arrow_cols.float64(np.concatenate([loc.astype(np.float64).ravel() for loc in locs])),
+                ),
+            )
+            yield arrow_cols.batch({name: arrow_cols.typed(col, DETECT_TYPES[name]) for name, col in out.items()})
 
-    return pages.mapInPandas(run, schema=DETECT_SCHEMA)
+    return pages.mapInArrow(run, schema=DETECT_SCHEMA)

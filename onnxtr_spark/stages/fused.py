@@ -1,6 +1,6 @@
 """Fused detect+recognize stage: page images → ordered word rows.
 
-One ``mapInPandas`` running the whole page layer sequence
+One ``mapInArrow`` running the whole page layer sequence
 (stages/page_path.py) — the operator-fusion decision the reference
 makes by running both models in one process
 (models/predictor/predictor.py:72-154). Rationale (measured, see
@@ -28,13 +28,18 @@ components' runs, and fits and unclips the group's polygons at once
 (kernels/rotated_post.py). The group's crops are cut, and its pages and
 maps dropped, before the next group starts. Rotated crops are
 classified (G3) in one batch per chunk.
+
+The stage reads and writes Arrow batches (onnxtr_spark/arrow_cols.py):
+a page's key is its row in the chunk, spread over its words with one
+``take``, and nothing it imports imports pandas, so a reused Python
+worker never holds it (importing it adds ~22 MB to a worker's RSS).
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 
 from onnxtr_spark.stages.detect import DetectConfig
@@ -62,26 +67,25 @@ def detect_recognize_pages(
     """
     check_contracts(det_cfg.engine, reco_cfg.engine)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from time import perf_counter
 
         path = PagePath(det_cfg, reco_cfg)
         t_part = perf_counter()
         m_pages = m_boxes = m_words = 0
 
-        for pdf in batches:
-            if pdf.empty:
+        for batch in batches:
+            if not batch.num_rows:
                 continue
             pages: list[dict] = []
             flat: list = []  # the chunk's resized splits, in page order
             pending: list[tuple[dict, list]] = []  # G3 crops awaiting the batched classify
-            keys = list(zip(pdf["doc_id"], pdf["offset"], pdf["media_ref"]))
-            for g, imgs, locs in path.detect(pdf["png"].tolist()):
+            for g, imgs, locs in path.detect(batch.column("png").to_pylist()):
                 m_pages += len(imgs)
-                for (doc_id, offset, media_ref), img, loc in zip(keys[g:], imgs, locs):
+                for key, (img, loc) in enumerate(zip(imgs, locs), g):
                     boxes, polys, crops = path.crop(img, loc)
                     m_boxes += int(boxes.shape[0])
-                    page = {"key": (doc_id, int(offset), media_ref), "boxes": boxes, "polys": polys}
+                    page = {"key": key, "boxes": boxes, "polys": polys}
                     pages.append(page)
                     if polys is not None and crops and not det_cfg.disable_crop_orientation:
                         pending.append((page, crops))  # classified across the chunk below
@@ -89,8 +93,8 @@ def detect_recognize_pages(
                         path.split(page, crops, flat)
             if pending:
                 path.orient(pending, flat)
-            out = path.rows(pages, flat)
-            m_words += len(out)
+            out = path.rows(pages, flat, batch.select(["doc_id", "offset", "media_ref"]))
+            m_words += out.num_rows
             yield out
 
         if metrics_acc is not None:
@@ -104,4 +108,4 @@ def detect_recognize_pages(
                 round((perf_counter() - t_part) * 1000.0, 3),
             )])
 
-    return pages.mapInPandas(run, schema=RECOGNIZE_SCHEMA)
+    return pages.mapInArrow(run, schema=RECOGNIZE_SCHEMA)

@@ -7,7 +7,7 @@ n_chars)`` table; these transforms derive the authoritative input shape
 - ``docs_from_documents``  — pure-SQL span construction (JVM-side,
   whole-stage codegen; no Python in the loop).
 - ``media_from_documents`` — renders each page's words into a page image
-  inside ``mapInPandas`` on executors (the PNG-encode stand-in; a real
+  inside ``mapInArrow`` on executors (the PNG-encode stand-in; a real
   deployment would already hold these bytes in an object store keyed by
   media_ref).
 
@@ -20,11 +20,11 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from onnxtr_spark import imaging
+from onnxtr_spark import arrow_cols, imaging
 from onnxtr_spark.corpus import lines, pages_col
 from onnxtr_spark.partitioning import spread
 
@@ -69,7 +69,8 @@ def media_from_documents(
 
     Page word-lists are computed JVM-side (posexplode of
     ``corpus.pages_col``); only the rendering itself runs in Python,
-    Arrow-batched, one ``corpus.lines`` frame per page.
+    one ``mapInArrow`` batch at a time (no pandas in the worker,
+    onnxtr_spark/arrow_cols.py), one ``corpus.lines`` frame per page.
 
     ``rotate_words=True`` renders the rotated-words corpus variant:
     each page image is skewed in-plane by ``corpus.angle_for`` degrees
@@ -95,18 +96,19 @@ def media_from_documents(
         "page_words",
     )
 
-    def render(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def render(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from onnxtr_spark.corpus import R_CELL_W, R_GAP_W, angle_for, artefacts_for, small_angle_for
 
         render_kwargs = {"cell_w": R_CELL_W, "gap_w": R_GAP_W} if (rotate_words or skew_pages) else {}
-        for pdf in batches:
-            if pdf.empty:
+        for batch in batches:
+            if not batch.num_rows:
                 continue
-            rows = []
-            for media_ref, page_words in zip(pdf["media_ref"], pdf["page_words"]):
+            pngs, heights, widths = [], [], []
+            media_refs = batch.column("media_ref")
+            for media_ref, page_words in zip(media_refs.to_pylist(), batch.column("page_words").to_pylist()):
                 # Empty page -> blank image: detection finds no boxes, so
                 # the doc contributes only its pass-through text spans.
-                img = imaging.render_page(lines([w for w in list(page_words) if w]), **render_kwargs)
+                img = imaging.render_page(lines([w for w in page_words if w]), **render_kwargs)
                 if artefacts:
                     doc_id, page = media_ref[2:].rsplit("-", 1)
                     img = imaging.add_artefacts(img, artefacts_for(doc_id, int(page)))
@@ -122,15 +124,17 @@ def media_from_documents(
                     )
                     rot0 = imaging.rotate_image_nearest(img[:, :, 0], deg)
                     img = np.broadcast_to(rot0[:, :, None], rot0.shape + (3,))
-                rows.append({
-                    "media_ref": media_ref,
-                    "png": imaging.encode_image(img),
-                    "height": img.shape[0],
-                    "width": img.shape[1],
-                })
-            yield pd.DataFrame(rows, columns=["media_ref", "png", "height", "width"])
+                pngs.append(imaging.encode_image(img))
+                heights.append(img.shape[0])
+                widths.append(img.shape[1])
+            yield arrow_cols.batch({
+                "media_ref": arrow_cols.typed(media_refs, pa.string()),
+                "png": arrow_cols.binary(pngs),
+                "height": arrow_cols.int32(heights),
+                "width": arrow_cols.int32(widths),
+            })
 
-    return pages.mapInPandas(render, schema=MEDIA_SCHEMA)
+    return pages.mapInArrow(render, schema=MEDIA_SCHEMA)
 
 
 def load_documents(spark: SparkSession, sf_dir: str) -> DataFrame:

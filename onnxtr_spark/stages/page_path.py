@@ -30,9 +30,9 @@ from collections.abc import Iterator
 from time import perf_counter
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 
-from onnxtr_spark import imaging
+from onnxtr_spark import arrow_cols, imaging
 from onnxtr_spark.engine import (
     CTC_CONTRACT,
     DetectionEngine,
@@ -288,40 +288,48 @@ class PagePath:
                 preds.extend(ctc_best_path(logits, cfg.vocab))
         return preds
 
-    def rows(self, pages: list[dict], flat: list[np.ndarray]) -> pd.DataFrame:
+    def rows(self, pages: list[dict], flat: list[np.ndarray], keys: pa.RecordBatch) -> pa.RecordBatch:
         """Recognize the chunk's splits, W2-merge them per page, then
         B1-B4 reading order for every page of the chunk in one kernel
-        call → the ``OUT_COLS`` rows, built as columns. Rotated pages
-        are ordered by their straight fit; B4 is straight-only."""
+        call → the ``OUT_COLS`` rows as one Arrow batch in the declared
+        types. A page's ``key`` is its row in ``keys`` (the chunk's
+        doc_id, offset, media_ref), spread over its words with one
+        ``take``. Rotated pages are ordered by their straight fit; B4 is
+        straight-only."""
         cfg = self.reco_cfg
         preds = self.recognize(flat)
         pages = [page for page in pages if page["boxes"].shape[0]]
-        if not pages:
-            return pd.DataFrame([], columns=OUT_COLS)
-        texts, confs = zip(*(
+        words = [
             word
             for page in pages
             for word in split_merge.remap_preds(
                 preds[page["start"] : page["start"] + page["n_splits"]], page["crop_map"], cfg.overlap_ratio
             )
-        ))
-        counts = [page["boxes"].shape[0] for page in pages]
-        boxes = np.concatenate([page["boxes"] for page in pages])
-        rotated = pages[0]["polys"] is not None  # one detector config per chunk
+        ]
+        counts = np.array([page["boxes"].shape[0] for page in pages], dtype=np.int64)
+        boxes = np.concatenate([page["boxes"] for page in pages] or [np.zeros((0, 5))])
+        rotated = bool(pages) and pages[0]["polys"] is not None  # one detector config per chunk
         if cfg.resolve_blocks and not rotated:
             rank, line_id, block_id = reading_order_blocks(boxes[:, :4], counts)
         else:
             fits = np.concatenate([straight_fit(p["polys"]) for p in pages]) if rotated else boxes[:, :4]
             rank, line_id = reading_order(fits, counts)
             block_id = np.zeros_like(rank)
-        doc_id, offset, media_ref = zip(*(page["key"] for page in pages))
+        spread = keys.take(arrow_cols.int32(np.repeat([page["key"] for page in pages], counts)))
         geo = boxes.astype(np.float64)
-        return pd.DataFrame({
-            "doc_id": np.repeat(np.array(doc_id, dtype=object), counts),
-            "offset": np.repeat(np.array(offset, dtype=np.int64), counts),
-            "media_ref": np.repeat(np.array(media_ref, dtype=object), counts),
-            "word_id": np.arange(len(rank)) - np.repeat(np.cumsum(counts) - counts, counts),
-            "rank": rank, "line_id": line_id, "block_id": block_id,
-            "xmin": geo[:, 0], "ymin": geo[:, 1], "xmax": geo[:, 2], "ymax": geo[:, 3],
-            "objectness": geo[:, 4], "text": list(texts), "conf": np.array(confs, dtype=np.float64),
+        return arrow_cols.batch({
+            "doc_id": arrow_cols.typed(spread.column("doc_id"), pa.string()),
+            "offset": arrow_cols.typed(spread.column("offset"), pa.int32()),
+            "media_ref": arrow_cols.typed(spread.column("media_ref"), pa.string()),
+            "word_id": arrow_cols.int32(np.arange(len(rank)) - np.repeat(np.cumsum(counts) - counts, counts)),
+            "rank": arrow_cols.int32(rank),
+            "line_id": arrow_cols.int32(line_id),
+            "block_id": arrow_cols.int32(block_id),
+            "xmin": arrow_cols.float64(geo[:, 0]),
+            "ymin": arrow_cols.float64(geo[:, 1]),
+            "xmax": arrow_cols.float64(geo[:, 2]),
+            "ymax": arrow_cols.float64(geo[:, 3]),
+            "objectness": arrow_cols.float64(geo[:, 4]),
+            "text": arrow_cols.string([text for text, _ in words]),
+            "conf": arrow_cols.float64([conf for _, conf in words]),
         })

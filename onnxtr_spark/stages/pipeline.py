@@ -9,7 +9,7 @@ Physical plan (SURVEY.md §4):
              pages scatter across all tasks — this IS the north_rule
              skew salt: parallel grain = page, never doc)
           │
-    detect+recognize (one mapInPandas: the page layer sequence of
+    detect+recognize (one mapInArrow: the page layer sequence of
           │           stages/page_path.py, decode→resize→model→
           │           postprocess→crop→split→model→decode→rank) (narrow)
     assemble (union text spans + window row_number by doc_id)
@@ -75,7 +75,7 @@ def extract_spans(
 ) -> DataFrame:
     """Full OCR extraction: flat span rows (doc_id, offset, kind, text, media_ref).
 
-    Detect+recognize run in one mapInPandas so page bytes cross the
+    Detect+recognize run in one mapInArrow so page bytes cross the
     JVM↔Python boundary once (see stages/fused.py); chaining the
     standalone ``detect_pages`` and ``recognize_pages`` gives the same
     rows (asserted in tests). ``metrics_acc``: see

@@ -1,6 +1,6 @@
 """Recognize stage: page images + boxes → ordered word predictions.
 
-One ``mapInPandas`` pass over the detect stage's output: the page layer
+One ``mapInArrow`` pass over the detect stage's output: the page layer
 sequence (stages/page_path.py) from decode, then crop through row
 building — the reference's recognition predictor
 (onnxtr/models/recognition/predictor/base.py:42-79) plus the
@@ -38,7 +38,7 @@ from collections.abc import Iterator
 from dataclasses import dataclass
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 
 from onnxtr_spark.engine import EngineConfig
@@ -78,22 +78,20 @@ def recognize_pages(detected: DataFrame, cfg: RecognizeConfig = RecognizeConfig(
     """Run recognition + per-page builder geometry over detect output."""
     check_contracts(cfg.engine)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         path = PagePath(reco_cfg=cfg)
-        for pdf in batches:
-            if pdf.empty:
+        for batch in batches:
+            if not batch.num_rows:
                 continue
             pages: list[dict] = []
             flat: list = []
-            for doc_id, offset, media_ref, png, raw in zip(
-                pdf["doc_id"], pdf["offset"], pdf["media_ref"], pdf["png"], pdf["boxes"]
-            ):
-                if raw is None or len(raw) == 0:
+            for key, (png, raw) in enumerate(zip(batch.column("png").to_pylist(), batch.column("boxes").to_pylist())):
+                if not raw:
                     continue  # a page without boxes has no words
-                boxes, _, crops = path.crop(decode(png), np.stack(list(raw)).astype(np.float32))
-                page = {"key": (doc_id, int(offset), media_ref), "boxes": boxes, "polys": None}
+                boxes, _, crops = path.crop(decode(png), np.array(raw, dtype=np.float32))
+                page = {"key": key, "boxes": boxes, "polys": None}
                 pages.append(page)
                 path.split(page, crops, flat)
-            yield path.rows(pages, flat)
+            yield path.rows(pages, flat, batch.select(["doc_id", "offset", "media_ref"]))
 
-    return detected.mapInPandas(run, schema=RECOGNIZE_SCHEMA)
+    return detected.mapInArrow(run, schema=RECOGNIZE_SCHEMA)

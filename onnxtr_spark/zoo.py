@@ -48,7 +48,7 @@ from __future__ import annotations
 from collections.abc import Iterator
 from dataclasses import dataclass, replace
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -123,25 +123,25 @@ def page_orientations(pages: DataFrame, engine: EngineConfig | None = None) -> D
     """Per-page I5 orientation classification as a standalone stage:
     (media_ref, orientation_class, orientation_deg). One batched engine
     call per Arrow chunk (engine.OrientationEngine.run) on the
-    classifier ``engine`` selects (the default stub when None)."""
+    classifier ``engine`` selects (the default stub when None). Runs on
+    ``mapInArrow`` with no pandas in the worker (arrow_cols.py)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from onnxtr_spark import imaging
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        from onnxtr_spark import arrow_cols, imaging
         from onnxtr_spark.engine import get_orientation_engine
 
         orient = get_orientation_engine(engine)
-        for pdf in batches:
-            if pdf.empty:
+        for batch in batches:
+            if not batch.num_rows:
                 continue
-            imgs = [imaging.decode_image(b) for b in pdf["png"]]
-            ks = orient.run(imgs)
-            yield pd.DataFrame({
-                "media_ref": pdf["media_ref"],
-                "orientation_class": [int(k) for k in ks],
-                "orientation_deg": [ORIENT_DEGREES[int(k)] for k in ks],
+            ks = [int(k) for k in orient.run([imaging.decode_image(b) for b in batch.column("png").to_pylist()])]
+            yield arrow_cols.batch({
+                "media_ref": arrow_cols.typed(batch.column("media_ref"), pa.string()),
+                "orientation_class": arrow_cols.int32(ks),
+                "orientation_deg": arrow_cols.int32([ORIENT_DEGREES[k] for k in ks]),
             })
 
-    return pages.mapInPandas(
+    return pages.mapInArrow(
         run, "media_ref string, orientation_class int, orientation_deg int"
     )
 

@@ -161,9 +161,10 @@ def word_order_blocks(
     return rank, line_id, block_id
 
 
-def page_rows(path, pages: list[dict], flat: list[np.ndarray]) -> pd.DataFrame:
+def page_rows(path, pages: list[dict], flat: list[np.ndarray], keys) -> pd.DataFrame:
     """``PagePath.rows`` one page at a time: W2 merge and B1-B4 per page,
-    then one ``OUT_COLS`` tuple per word."""
+    then one ``OUT_COLS`` tuple per word; a page's key is its row in the
+    ``keys`` batch."""
     cfg = path.reco_cfg
     preds = path.recognize(flat)
     out_rows: list[tuple] = []
@@ -181,7 +182,7 @@ def page_rows(path, pages: list[dict], flat: list[np.ndarray]) -> pd.DataFrame:
         else:
             rank, line_id = word_order(boxes[:, :4])
             block_id = np.zeros_like(rank)
-        doc_id, offset, media_ref = page["key"]
+        doc_id, offset, media_ref = (keys.column(c)[page["key"]].as_py() for c in OUT_COLS[:3])
         for wi, ((text, conf), box) in enumerate(zip(words, boxes)):
             out_rows.append((
                 doc_id, offset, media_ref, wi, int(rank[wi]), int(line_id[wi]), int(block_id[wi]),

@@ -32,3 +32,12 @@ def test_lower_is_better_metrics_gain_downwards():
     change = [p - 10 for p in PARENT]
     assert ab_pairs.claim(PARENT, change, "lower").startswith("claim QUALIFIES")
     assert ab_pairs.claim(PARENT, change, "higher").startswith("claim no")
+
+
+def test_each_query_gets_its_own_session():
+    cmds = ab_pairs.query_commands(["dedup_minhash_bands", "dedup_containment"], "/data/sf0.01")
+    assert [cmd[1:] for cmd in cmds] == [
+        ["bench_extra.py", "--repeats", "1", "dedup_minhash_bands", "--sf", "/data/sf0.01"],
+        ["bench_extra.py", "--repeats", "1", "dedup_containment", "--sf", "/data/sf0.01"],
+    ]
+    assert [cmd[1:] for cmd in ab_pairs.query_commands(["q"], None)] == [["bench_extra.py", "--repeats", "1", "q"]]

@@ -15,7 +15,10 @@ import math
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pytest
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 from onnxtr_spark.corpus import FIXTURE_TEXTS, build_corpus_pdfs, build_rotated_words_corpus_pdfs
 from onnxtr_spark.kernels.builder import (
@@ -31,7 +34,7 @@ from onnxtr_spark.stages.detect import DetectConfig
 from onnxtr_spark.stages.fused import detect_recognize_pages
 from onnxtr_spark.stages.page_path import PagePath
 from onnxtr_spark.stages.pipeline import media_pages
-from onnxtr_spark.stages.recognize import RecognizeConfig
+from onnxtr_spark.stages.recognize import RECOGNIZE_SCHEMA, RecognizeConfig
 from onnxtr_spark.zoo import ocr_predictor
 from tests import builder_oracle as oracle
 from tests.test_pipeline_e2e import DOCS_SCHEMA, MEDIA_SCHEMA
@@ -183,15 +186,16 @@ def test_chunk_kernel_accepts_empty_chunks():
 
 class _Capture:
     """Stands in for the pages DataFrame: returns the fused stage's
-    ``mapInPandas`` function so it runs in this process."""
+    ``mapInArrow`` function so it runs in this process."""
 
-    def mapInPandas(self, fn, schema):
+    def mapInArrow(self, fn, schema):
         return fn
 
 
-def _fused_rows(pdf: pd.DataFrame, det_cfg, reco_cfg) -> pd.DataFrame:
+def _fused_rows(pdf: pd.DataFrame, det_cfg, reco_cfg) -> pa.Table:
     run = detect_recognize_pages(_Capture(), det_cfg, reco_cfg)
-    return pd.concat(list(run(iter([pdf[i : i + 64] for i in range(0, len(pdf), 64)]))), ignore_index=True)
+    pages = pa.Table.from_pandas(pdf, preserve_index=False)
+    return pa.Table.from_batches(list(run(iter(pages.to_batches(max_chunksize=64)))))
 
 
 def _pages(spark, docs_pdf, media_pdf) -> pd.DataFrame:
@@ -226,11 +230,30 @@ CASES = {
 
 @pytest.mark.parametrize("case", list(CASES))
 def test_fused_rows_equal_per_page_oracle(corpora, monkeypatch, case):
-    """Every OUT_COLS column, its values and its dtype."""
+    """Every OUT_COLS column and its values, in the declared Arrow types;
+    the oracle's rows are cast to those types."""
+    out_schema = to_arrow_schema(StructType.fromDDL(RECOGNIZE_SCHEMA))
     corpus, det_cfg, reco_cfg = CASES[case]
     pdf = corpora[corpus]
     got = _fused_rows(pdf, det_cfg, reco_cfg)
-    monkeypatch.setattr(PagePath, "rows", oracle.page_rows)
+    monkeypatch.setattr(
+        PagePath,
+        "rows",
+        lambda path, pages, flat, keys: pa.RecordBatch.from_pandas(
+            oracle.page_rows(path, pages, flat, keys), schema=out_schema, preserve_index=False
+        ),
+    )
     want = _fused_rows(pdf, det_cfg, reco_cfg)
     assert len(got) > 100
-    pd.testing.assert_frame_equal(got, want, check_exact=True)
+    assert got.schema == out_schema
+    pd.testing.assert_frame_equal(got.to_pandas(), want.to_pandas(), check_exact=True)
+
+
+def test_rows_of_a_chunk_without_words_is_an_empty_typed_batch(spark):
+    keys = pa.RecordBatch.from_pydict(
+        {"doc_id": ["d"], "offset": pa.array([1], pa.int32()), "media_ref": ["m-d-0"]}
+    )
+    page = {"key": 0, "boxes": np.zeros((0, 5), np.float32), "polys": None, "start": 0, "n_splits": 0}
+    out = PagePath(reco_cfg=RecognizeConfig()).rows([page], [], keys)
+    assert out.num_rows == 0
+    assert out.schema == to_arrow_schema(StructType.fromDDL(RECOGNIZE_SCHEMA))

@@ -24,9 +24,10 @@ modes (runs more than 5 MB apart start a new mode) with run counts,
 since one tree's peak RSS can step between modes from run to run.
 
 ``--query NAME [NAME ...]`` times declared queries that no workload
-runs: each run is one ``bench_extra.py --repeats 1 NAME ...`` (noop
-sink, one fresh session for all the names, ``--sf`` when given) and
-appends one record per query; the seeds only label the pairs. The
+runs: each run is one ``bench_extra.py --repeats 1 NAME`` session per
+name (noop sink, ``--sf`` when given), so no query's time carries the
+JVM warm-up the queries before it left, and appends one record per
+query; the seeds only label the pairs. The
 summary prints, per query, each side's median [q1, q3] seconds, the
 change/parent ratio, the pairs the change won and whether the change
 median is slower than the parent's by more than the parent's
@@ -69,20 +70,25 @@ def run_one(tree: str, workload: str, seed: int, seconds: float) -> dict:
     return rec
 
 
-def run_queries(tree: str, queries: list[str], sf: str | None) -> list[dict]:
-    """One ``bench_extra.py`` run of ``queries`` in ``tree``: one record
-    per query with its seconds (the run's rc and wall are shared)."""
-    cmd = [sys.executable, "bench_extra.py", "--repeats", "1", *queries] + (["--sf", sf] if sf else [])
-    t0 = time.time()
-    proc = subprocess.run(cmd, cwd=tree, capture_output=True, text=True)
-    run = {"rc": proc.returncode, "wall": round(time.time() - t0, 1)}
-    lines = [ln for ln in proc.stdout.splitlines() if ln.startswith("{")]
-    seconds = json.loads(lines[-1])["queries"] if proc.returncode == 0 and lines else {}
+def query_commands(queries: list[str], sf: str | None) -> list[list[str]]:
+    """One ``bench_extra.py`` command per query: a fresh session each."""
     return [
-        dict(run, query=q, seconds=seconds[q]) if q in seconds
-        else dict(run, query=q, stderr_tail=proc.stderr[-2000:])
-        for q in queries
+        [sys.executable, "bench_extra.py", "--repeats", "1", q] + (["--sf", sf] if sf else []) for q in queries
     ]
+
+
+def run_queries(tree: str, queries: list[str], sf: str | None) -> list[dict]:
+    """One ``bench_extra.py`` session per query in ``tree``: one record
+    per query with its seconds, its session's rc and wall."""
+    records = []
+    for q, cmd in zip(queries, query_commands(queries, sf)):
+        t0 = time.time()
+        proc = subprocess.run(cmd, cwd=tree, capture_output=True, text=True)
+        rec = {"rc": proc.returncode, "wall": round(time.time() - t0, 1), "query": q}
+        lines = [ln for ln in proc.stdout.splitlines() if ln.startswith("{")]
+        seconds = json.loads(lines[-1])["queries"] if proc.returncode == 0 and lines else {}
+        records.append(dict(rec, seconds=seconds[q]) if q in seconds else dict(rec, stderr_tail=proc.stderr[-2000:]))
+    return records
 
 
 def quartiles(vals: list[float]) -> tuple[float, float, float]:
